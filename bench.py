@@ -295,6 +295,27 @@ def _suite_breakdown(spark) -> dict[str, list]:
     return out
 
 
+def _flops_bound() -> tuple[dict, str | None]:
+    """(row, error note) of the off-board realistic-FLOP row
+    (tools/flops_bench.py): det throughput with the mobile-width DB graph
+    (~2 GMACs at 640), so the round record bounds production neural
+    cost, not just the analytic byte-exact graphs'. Subprocess — the
+    32-proc pool + numpy conv must not inherit this session's JVM. The
+    row is optional: a hang, a failed launch or a garbled line gives
+    ({}, note) and never kills the one-JSON-line contract."""
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.join(REPO, "tools", "flops_bench.py"),
+             "320", str(CPUS), str(CPUS)],
+            capture_output=True, text=True, timeout=900,
+            env={**os.environ, "PYTHONPATH": REPO},
+        )
+        line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+        return (json.loads(line[-1]) if line else {}), None
+    except (subprocess.TimeoutExpired, OSError, json.JSONDecodeError) as exc:
+        return {}, f"{type(exc).__name__}: {exc}"[-500:]
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -632,24 +653,11 @@ def main() -> None:
         finally:
             shutil.rmtree(workdir, ignore_errors=True)
 
-    flops_bound = {}
+    flops_bound, flops_error = {}, None
     if not SCALING_ONLY and os.environ.get(
         "SPARK_GRAFT_SKIP_FLOPS", ""
     ) != "1":
-        # Off-board realistic-FLOP row (tools/flops_bench.py): det
-        # throughput with the mobile-width DB graph (~2 GMACs at 640),
-        # so the round record bounds production neural cost, not just
-        # the analytic byte-exact graphs'. Subprocess — the 32-proc
-        # pool + numpy conv must not inherit this session's JVM.
-        proc = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "flops_bench.py"),
-             "320", str(CPUS), str(CPUS)],
-            capture_output=True, text=True, timeout=900,
-            env={**os.environ, "PYTHONPATH": REPO},
-        )
-        line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-        if line:
-            flops_bound = json.loads(line[-1])
+        flops_bound, flops_error = _flops_bound()
 
     scaling = {}
     if not SKIP_SCALING:
@@ -684,6 +692,8 @@ def main() -> None:
         "flops_bound": flops_bound,
         "scaling": scaling,
     }
+    if flops_error:
+        out["flops_bound_error"] = flops_error
     print(json.dumps(out))
 
 

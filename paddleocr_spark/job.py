@@ -155,13 +155,17 @@ def main(argv: list[str] | None = None) -> int:
               file=sys.stderr)
         return 2
 
+    from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
     # getOrCreate() may hand us a pre-existing session (e.g. pytest's shared
     # fixture when main() runs in-process); stopping one we did not create
     # would kill that host's SparkContext for everything after us, so every
     # exit path goes through _stop() which only stops a session we built.
-    pre_existing = SparkSession.getActiveSession() is not None
+    # getActiveSession() is thread-local, so it misses the default session
+    # another thread built; getOrCreate() reuses any live SparkContext, so
+    # a live context is what makes the session pre-existing.
+    pre_existing = SparkContext._active_spark_context is not None
 
     builder = SparkSession.builder.appName("paddleocr-spark-extract")
     if args.master:
@@ -353,24 +357,11 @@ def main(argv: list[str] | None = None) -> int:
         # WAT metadata is parsed out of HTML payloads; the default
         # --sf-dir path renders PNG page images into the html column,
         # which would fail deep in an executor AFTER the whole
-        # extraction run. Sniff one payload up front and fail fast.
-        probe = pages.select("url", "warc_ts", "html").limit(1).collect()
-        payload = bytes(probe[0]["html"]) if probe else b""
-        # 8 KiB window: a legit page may open with a long XML prolog,
-        # comments, or conditional-comment soup before any <html>; only
-        # hard-fail on clearly binary payloads (image/audio magic) or a
-        # window with no HTML marker at all.
-        head = payload[:8192].lstrip().lower()
-        binary_magic = (
-            b"\x89png", b"\xff\xd8\xff", b"gif8", b"%pdf", b"riff",
-            b"ii*\x00", b"mm\x00*",
-        )
-        looks_binary = head.startswith(binary_magic)
-        looks_html = (
-            head.startswith(b"<!doctype") or head.startswith(b"<html")
-            or b"<html" in head or b"<head" in head or b"<body" in head
-        )
-        if probe and (looks_binary or not looks_html):
+        # extraction run. Route one payload up front and fail fast.
+        from paddleocr_spark.kernels.multipage import route
+
+        probe = pages.select("html").limit(1).collect()
+        if probe and route(bytes(probe[0]["html"]))[0] != "html":
             print(
                 "error: --wat needs HTML page payloads (use --warc or "
                 "--pages over an html-bearing table); the current source "

@@ -18,21 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .geometry import clip_box, convex_hull, min_area_rect, order_points_clockwise
-
-
-def _hull_of(pts: np.ndarray) -> np.ndarray:
-    """Component pixel set -> convex-hull polygon (pixel corners
-    expanded by (-0.25, +0.75) per axis so member centers are strictly
-    interior). Used for geometry, NOT for slow scoring: the reference's
-    slow score fills the component's ACTUAL outer contour
-    (db_postprocess.py:206-225 fillPoly), which a convex hull
-    over-covers on concave components — see _filled_component_score."""
-    p = np.asarray(pts, dtype=np.float64)
-    corners = np.concatenate(
-        [p + [dx, dy] for dx in (-0.25, 0.75) for dy in (-0.25, 0.75)]
-    )
-    return convex_hull(corners)
+from .geometry import clip_box, min_area_rect, order_points_clockwise
 
 
 def _filled_component_score(prob: np.ndarray, pts: np.ndarray) -> float:

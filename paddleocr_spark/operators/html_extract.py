@@ -104,14 +104,6 @@ def _node_text(node: _Node) -> str:
     return "".join(parts)
 
 
-def _link_text_len(node: _Node) -> int:
-    total = 0
-    for n in _iter_nodes(node):
-        if n.tag == "a":
-            total += len(_node_text(n))
-    return total
-
-
 def _is_negative(node: _Node) -> bool:
     if node.tag in _NEGATIVE_TAGS:
         return True

@@ -432,22 +432,6 @@ def justext_paragraphs(
     )
 
 
-def justext_rows(spark: SparkSession, sf_dir: str, pages=None) -> DataFrame:
-    """(op='justext', k=doc_id:para_idx, v=cf|final|len|md5|path)
-    suite row."""
-    return justext_paragraphs(spark, sf_dir, pages=pages).select(
-        F.lit("justext").alias("op"),
-        F.concat_ws(
-            ":", F.col("doc_id").cast("string"),
-            F.col("para_idx").cast("string"),
-        ).alias("k"),
-        F.concat_ws(
-            "|", "cf_class", "final_class", "n_chars", "text_md5",
-            "dom_path",
-        ).alias("v"),
-    )
-
-
 # Oracle (module docstring): the fixture pins the paragraph sequence
 # per layout — boilerplate texts are closed-form in doc_id, their
 # classes are constants, and the only data-dependent classes are the

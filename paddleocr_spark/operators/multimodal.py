@@ -13,7 +13,7 @@ Real here (the container has numpy + our PNG codec):
   payload header — no full decode, so the scan stays cheap.
 - `image_resize_feature`: decode + adaptive-pool to an 8x8 intensity
   grid (a perceptual-hash-style feature), via the kernel library.
-- `frame_sample`: explode a multi-frame container (kernels/multipage) to
+- `frame_sample`: explode a multi-page PDF (kernels/pdf) to
   one row per k-th frame — the video-frame-sampling plan shape
   (posexplode + modulo filter BEFORE the heavy per-frame work).
 
@@ -221,32 +221,17 @@ def frame_sample(spark: SparkSession, sf_dir: str, every: int = 2) -> DataFrame:
     pages = _pages(spark, sf_dir, multipage=True).select("url", "html")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.multipage import MAGIC
         from paddleocr_spark.kernels.pdf import pdf_page_dims
 
         rows = []
         for pdf in batches:
             for url, data in zip(pdf["url"], pdf["html"]):
-                data = bytes(data)
-                if data[:5] == b"%PDF-":
-                    # real PDF corpus: dims come from the object
-                    # DICTIONARIES (pdf_page_dims) — no image stream is
-                    # sliced or decompressed for skipped OR kept frames
-                    for idx, (w, h) in enumerate(pdf_page_dims(data)):
-                        if idx % every == 0:
-                            rows.append((url, idx, w, h))
-                    continue
-                assert data[:4] == MAGIC
-                (count,) = struct.unpack(">I", data[4:8])
-                pos = 8
-                for idx in range(count):
-                    (n,) = struct.unpack(">I", data[pos : pos + 4])
-                    png = data[pos + 4 : pos + 4 + n]
-                    pos += 4 + n
-                    if idx % every:
-                        continue
-                    w, h, _ = png_meta(png)
-                    rows.append((url, idx, w, h))
+                # dims come from the object DICTIONARIES (pdf_page_dims)
+                # — no image stream is sliced or decompressed for
+                # skipped OR kept frames
+                for idx, (w, h) in enumerate(pdf_page_dims(bytes(data))):
+                    if idx % every == 0:
+                        rows.append((url, idx, w, h))
         yield pd.DataFrame(
             rows, columns=["url", "frame_idx", "width", "height"]
         )

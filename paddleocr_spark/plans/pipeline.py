@@ -122,23 +122,12 @@ def _ocr_batches(
         _font.TEMPLATES = prev
 
 
-_BINARY_MAGIC = (
-    b"\x89PNG", b"\xff\xd8\xff", b"GIF8", b"%PDF", b"RIFF",
-    b"II*\x00", b"MM\x00*", b"MPNG",
-)
-
-
 def _sniff_html(payload: bytes) -> bool:
-    """Cheap per-payload content sniff: binary magic wins, else an HTML
-    marker in the first 8 KiB (long XML prologs / comment banners before
-    <html> are legitimate; see job.py's --wat fail-fast sniff)."""
-    if payload.startswith(_BINARY_MAGIC):
-        return False
-    head = payload[:8192].lstrip().lower()
-    return (
-        head.startswith(b"<!doctype") or head.startswith(b"<html")
-        or b"<html" in head or b"<head" in head or b"<body" in head
-    )
+    """True when the payload router sends `payload` to the DOM strip
+    (perfbench's solo replay routes through this name)."""
+    from paddleocr_spark.kernels.multipage import route
+
+    return route(payload)[0] == "html"
 
 
 def _ocr_batches_run(
@@ -147,7 +136,7 @@ def _ocr_batches_run(
     from paddleocr_spark.kernels.cls import orient_page
     from paddleocr_spark.kernels.det import detect_lines
     from paddleocr_spark.kernels.geometry import sorted_boxes
-    from paddleocr_spark.kernels.multipage import decode_payload
+    from paddleocr_spark.kernels.multipage import decode_pages, route
     from paddleocr_spark.kernels.ocr import get_rotate_crop_image
     from paddleocr_spark.kernels.pdf import pdf_text_pages
     from paddleocr_spark.kernels.rec import recognize_crops
@@ -160,56 +149,35 @@ def _ocr_batches_run(
         for url, payload in zip(pdf["url"], pdf["html"]):
             t0 = time.perf_counter()
             payload = bytes(payload)
-            if _sniff_html(payload):
-                # html-bearing page: DOM text-density main-content strip
-                # (north_star's boilerplate branch) instead of the OCR
-                # chain — one unified job handles Common-Crawl HTML and
-                # scanned PNG/PDF payloads side by side.
-                try:
-                    main = extract_main_text(
-                        payload.decode("utf-8", errors="replace")
-                    )
-                except Exception:
-                    main = ""
-                rows.append(
-                    dict(
-                        url=url, img_idx=0, spans=[],
-                        extracted_text=main, n_spans=0,
-                        decode_ms=(time.perf_counter() - t0) * 1000.0,
-                        det_ms=0.0, rec_ms=0.0,
-                    )
-                )
-                continue
-            if payload[:5] == b"%PDF-":
-                # born-digital triage (the reference's text-vs-scan
-                # router, kernels/pdf.pdf_text_pages): a PDF whose every
-                # page carries text-show operators extracts WITHOUT
-                # OCR — the cheapest correct path for the huge
-                # born-digital share of a web corpus. Any page without
-                # a text layer (or a malformed PDF) falls through to
-                # the scan path below; mixed documents pay OCR rather
-                # than silently dropping their scanned pages.
-                try:
-                    texts = pdf_text_pages(payload)
-                except Exception:
-                    texts = None
-                if texts and all(t is not None for t in texts):
-                    if page_limit:
-                        texts = texts[:page_limit]
-                    t1 = time.perf_counter()
-                    for idx, text in enumerate(texts):
-                        rows.append(
-                            dict(
-                                url=url, img_idx=idx, spans=[],
-                                extracted_text=text, n_spans=0,
-                                decode_ms=(t1 - t0) * 1000.0
-                                / max(len(texts), 1),
-                                det_ms=0.0, rec_ms=0.0,
-                            )
-                        )
-                    continue
+            kind, offset = route(payload)
+            texts = None
             try:
-                pages = decode_payload(payload, page_limit)
+                if kind == "html":
+                    # DOM text-density main-content strip (north_star's
+                    # boilerplate branch) instead of the OCR chain — one
+                    # job handles Common-Crawl HTML and scans side by side.
+                    texts = [
+                        extract_main_text(
+                            payload.decode("utf-8", errors="replace")
+                        )
+                    ]
+                elif kind == "pdf":
+                    # born-digital triage (the reference's text-vs-scan
+                    # router): a PDF whose every page carries text-show
+                    # operators extracts WITHOUT OCR. Any page without a
+                    # text layer (or a malformed PDF) falls through to the
+                    # scan path; mixed documents pay OCR rather than
+                    # silently dropping their scanned pages.
+                    try:
+                        texts = pdf_text_pages(payload[offset:])
+                    except Exception:
+                        texts = None
+                    if not texts or any(t is None for t in texts):
+                        texts = None
+                    elif page_limit:
+                        texts = texts[:page_limit]
+                if texts is None:
+                    pages = decode_pages(payload, kind, offset, page_limit)
             except Exception:
                 rows.append(
                     dict(
@@ -219,6 +187,17 @@ def _ocr_batches_run(
                 )
                 continue
             t1 = time.perf_counter()
+            if texts is not None:
+                for idx, text in enumerate(texts):
+                    rows.append(
+                        dict(
+                            url=url, img_idx=idx, spans=[],
+                            extracted_text=text, n_spans=0,
+                            decode_ms=(t1 - t0) * 1000.0 / len(texts),
+                            det_ms=0.0, rec_ms=0.0,
+                        )
+                    )
+                continue
             for idx, img in enumerate(pages):
                 d0 = time.perf_counter()
                 if orient:

@@ -44,7 +44,10 @@ def tmpfs_shuffle_dir(path: str = "/dev/shm/spark_graft_shuffle") -> str | None:
     except OSError:
         return None
     free = st.f_bavail * st.f_frsize
-    floor = int(os.environ.get("SPARK_GRAFT_TMPFS_MIN_FREE", MIN_FREE_BYTES))
+    try:
+        floor = int(os.environ.get("SPARK_GRAFT_TMPFS_MIN_FREE", MIN_FREE_BYTES))
+    except ValueError:  # a malformed override must not crash the builder
+        floor = MIN_FREE_BYTES
     if free < floor:
         return None
     return path

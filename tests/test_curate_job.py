@@ -229,6 +229,34 @@ def test_main_inprocess_never_stops_a_shared_session(spark, tmp_path):
     assert spark.range(3).count() == 3
 
 
+def test_main_in_another_thread_never_stops_the_shared_session(
+    spark, tmp_path
+):
+    """getActiveSession() is thread-local: main() run from a second
+    thread sees no active session there, yet getOrCreate() hands it the
+    fixture's. Its fail-fast exit must leave that session running."""
+    import sys
+    import threading
+
+    from paddleocr_spark.job import main
+
+    old = sys.argv
+    sys.argv = [
+        "job.py", "--sf-dir", "/root/testdata/sf0.001",
+        "--results", str(tmp_path / "r"), "--audit", str(tmp_path / "a"),
+        "--wat", str(tmp_path / "w"), "--page-limit", "1",
+    ]
+    rc = []
+    try:
+        t = threading.Thread(target=lambda: rc.append(main()))
+        t.start()
+        t.join(timeout=600)
+    finally:
+        sys.argv = old
+    assert not t.is_alive() and rc == [2]
+    assert spark.range(3).count() == 3  # the JVM handle is alive
+
+
 def test_wat_happy_path_over_html_warc(spark, tmp_path):
     """--warc of HTML response records + --wat: the sniff admits HTML,
     extraction routes payloads through the DOM main-content strip (not

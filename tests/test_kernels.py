@@ -25,8 +25,9 @@ from paddleocr_spark.kernels.imageops import (
     rotate180,
     warp_perspective,
 )
-from paddleocr_spark.kernels.multipage import decode_payload, encode_multipage
+from paddleocr_spark.kernels.multipage import decode_payload
 from paddleocr_spark.kernels.ocr import OcrEngine, get_rotate_crop_image
+from paddleocr_spark.kernels.pdf import pdf_encode_gray_pages
 from paddleocr_spark.kernels.png import decode_gray_png, encode_gray_png
 
 
@@ -104,14 +105,15 @@ class TestPng:
     def test_multipage_roundtrip(self):
         rng = np.random.default_rng(7)
         pages = [rng.integers(0, 256, size=(10 + i, 20), dtype=np.uint8) for i in range(3)]
-        out = decode_payload(encode_multipage(pages))
+        out = decode_payload(pdf_encode_gray_pages(pages))
         assert len(out) == 3
         for a, b in zip(pages, out):
             assert (a == b).all()
 
     def test_page_limit(self):
-        pages = [np.zeros((8, 8), np.uint8)] * 3
-        assert len(decode_payload(encode_multipage(pages), page_limit=2)) == 2
+        pages = [np.full((8, 8), i, np.uint8) for i in range(3)]
+        out = decode_payload(pdf_encode_gray_pages(pages), page_limit=2)
+        assert [int(img[0, 0]) for img in out] == [0, 1]
 
 
 class TestGeometry:

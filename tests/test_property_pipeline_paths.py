@@ -1,5 +1,5 @@
 """Property round-trips for the non-flagship kernel paths: multipage
-payloads (PDF analogue) and the rotation sweep. The flagship single-page
+PDF payloads and the rotation sweep. The flagship single-page
 path is covered by test_property_roundtrip.py; these pin the container
 explode order and the orientation search against the same random page
 space so a det/rec regression cannot hide behind the happy path.
@@ -12,8 +12,9 @@ from paddleocr_spark.kernels.cls import orient_page
 from paddleocr_spark.kernels.det import detect_lines
 from paddleocr_spark.kernels.font import CHARSET, render_page
 from paddleocr_spark.kernels.imageops import rot90k
-from paddleocr_spark.kernels.multipage import decode_payload, encode_multipage
+from paddleocr_spark.kernels.multipage import decode_payload
 from paddleocr_spark.kernels.ocr import OcrEngine, get_rotate_crop_image
+from paddleocr_spark.kernels.pdf import pdf_encode_gray_pages
 
 _ENGINE = OcrEngine()
 
@@ -24,7 +25,7 @@ _page = st.lists(_line, min_size=1, max_size=3)
 @settings(max_examples=25, deadline=None)
 @given(st.lists(_page, min_size=1, max_size=3))
 def test_multipage_payload_roundtrips_in_order(pages):
-    payload = encode_multipage([render_page(ls) for ls in pages])
+    payload = pdf_encode_gray_pages([render_page(ls) for ls in pages])
     decoded = decode_payload(payload)
     assert len(decoded) == len(pages)
     for ls, img in zip(pages, decoded):

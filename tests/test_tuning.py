@@ -41,3 +41,16 @@ def test_statvfs_failure_is_safe(monkeypatch):
 
 def test_default_floor_is_sane():
     assert MIN_FREE_BYTES >= 1 << 30  # never spill into a sub-GiB tmpfs
+
+
+def test_malformed_floor_falls_back_to_default(monkeypatch, tmp_path):
+    from types import SimpleNamespace
+
+    monkeypatch.setenv("SPARK_GRAFT_TMPFS_MIN_FREE", "4GiB")
+    path = str(tmp_path / "shuffle")
+    for free, want in ((MIN_FREE_BYTES - 1, None), (MIN_FREE_BYTES, path)):
+        monkeypatch.setattr(
+            os, "statvfs",
+            lambda _p, free=free: SimpleNamespace(f_bavail=free, f_frsize=1),
+        )
+        assert tmpfs_shuffle_dir(path) == want
