@@ -28,7 +28,7 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from paddleocr_spark.tuning import tmpfs_shuffle_dir  # noqa: E402
+from paddleocr_spark.tuning import driver_memory, tmpfs_shuffle_dir  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -323,7 +323,7 @@ def main() -> None:
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("bench")
         .config("spark.sql.shuffle.partitions", str(2 * CPUS))
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -3,9 +3,11 @@
 Resize semantics from the reference (tools/infer/predict_rec.py:205-258):
 target height 48; per-batch max width = ceil(48 * max_wh_ratio) computed
 over the aspect-sorted batch; each crop is width-scaled proportionally,
-capped at the batch width, zero-padded on the right. Batching sorts crops
-by aspect ratio and scatters results back by original index
-(predict_rec.py:580-600) — the reference's key throughput trick, kept.
+capped at the batch width, zero-padded on the right. `recognize_crops`
+sorts crops by aspect ratio and scatters results back by original index
+(predict_rec.py:580-600), but here that only fixes each batch's shared pad
+width: `RecModel.forward` still runs one crop at a time, so the
+reference's throughput gain from batching is not reproduced.
 
 The "model" is a deterministic CTC head: binarize the crop, split into
 glyph cells at low-ink columns, correlate each pooled 7x5 cell against the

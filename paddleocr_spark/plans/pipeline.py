@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.tuning import release_zip_importers
+
 RESULTS_SCHEMA = (
     "url string, img_idx int, "
     "spans array<struct<box: array<array<float>>, text: string, score: float>>, "
@@ -62,6 +64,22 @@ def _get_engine():
 
 
 def _ocr_batches(
+    batches: Iterator[pd.DataFrame],
+    page_limit: int,
+    orient: bool = False,
+    weights_bc=None,
+) -> Iterator[pd.DataFrame]:
+    """One extraction task. However it ends, release the worker's cached
+    zip importers on the way out, so the next task's per-task
+    importlib.invalidate_caches() has no archive to re-read
+    (tuning.release_zip_importers)."""
+    try:
+        yield from _ocr_batches_weighted(batches, page_limit, orient, weights_bc)
+    finally:
+        release_zip_importers()
+
+
+def _ocr_batches_weighted(
     batches: Iterator[pd.DataFrame],
     page_limit: int,
     orient: bool = False,

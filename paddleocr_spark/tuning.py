@@ -1,5 +1,5 @@
-"""Host-tuning probes shared by bench.py / tools/scaling_run.py /
-tools/submit_pyfiles.py.
+"""Host-tuning helpers shared by bench.py / tools/scaling_run.py /
+tools/submit_pyfiles.py and the extraction UDF.
 
 tmpfs shuffle dirs (spark.local.dir=/dev/shm/...) are a measured win on
 this host (32 concurrent shuffle writers stop contending on the root
@@ -7,11 +7,17 @@ disk; see tools/scaling_run.py), but RAM-backed storage is only safe
 when the tmpfs can actually hold the expected spill volume — on a
 memory-constrained container a large shuffle would fill /dev/shm and
 fail the job or trip the OOM killer. So the probe is gated on measured
-free space, with an env opt-out (round-4 advice item)."""
+free space, with an env opt-out (round-4 advice item).
+
+`driver_memory` sizes the local-mode driver heap from the host's RAM.
+`release_zip_importers` runs in the Python workers: it drops the cached
+zip finders a reused worker would otherwise re-read before every task."""
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 # Opt-out: any non-empty value disables the tmpfs shuffle dir entirely.
 NO_TMPFS_ENV = "SPARK_GRAFT_NO_TMPFS_SHUFFLE"
@@ -51,3 +57,64 @@ def tmpfs_shuffle_dir(path: str = "/dev/shm/spark_graft_shuffle") -> str | None:
     if free < floor:
         return None
     return path
+
+
+# spark.driver.memory ceiling for local-mode runs; the host's RAM may
+# lower it (driver_memory).
+DRIVER_MEMORY_CAP_MIB = 16 << 10
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """spark.driver.memory for a local-mode run: half the host's
+    MemTotal, capped at 16 GiB, so the heap never claims the whole host
+    (the executors' Python workers share its RAM). The cap when
+    MemTotal cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_mib = int(line.split()[1]) // 2048  # kB -> MiB / 2
+                    return f"{min(DRIVER_MEMORY_CAP_MIB, half_mib)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{DRIVER_MEMORY_CAP_MIB}m"
+
+
+def _spark_files_root() -> str | None:
+    """SparkFiles.getRootDirectory(), or None where it cannot be known
+    (no SparkContext on a driver, pyspark absent)."""
+    try:
+        from pyspark.core.files import SparkFiles
+
+        return SparkFiles.getRootDirectory()
+    except Exception:  # runs in a task's finally: never fail the task over it
+        return None
+
+
+def release_zip_importers() -> int:
+    """Drop every cached `zipimporter` from sys.path_importer_cache,
+    except those of archives under the SparkFiles root; return how many
+    were dropped.
+
+    pyspark's worker calls importlib.invalidate_caches() before every
+    task (worker_util.setup_spark_files), and on CPython < 3.13 each
+    cached zipimporter then re-reads its whole archive directory. A
+    reused worker caches one per package path it imported from: the
+    Spark core jar, pyspark.zip (once per subpackage) and py4j, about
+    200 ms of CPU per task on a 4-core host. Once the entries are gone
+    that call has nothing to re-read. Imports stay the same: PathFinder
+    rebuilds a dropped finder on demand from zipimport's own directory
+    cache, without reading the archive. Archives under the SparkFiles
+    root (addPyFile zips) keep their finders, so a re-shipped zip is
+    still refreshed."""
+    root = _spark_files_root()
+    prefix = os.path.join(root, "") if root else None
+    dropped = 0
+    for key, finder in list(sys.path_importer_cache.items()):
+        if not isinstance(finder, zipimport.zipimporter):
+            continue
+        if prefix and finder.archive.startswith(prefix):
+            continue
+        if sys.path_importer_cache.pop(key, None) is not None:
+            dropped += 1
+    return dropped

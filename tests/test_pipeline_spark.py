@@ -436,3 +436,53 @@ def test_pdf_text_triage_routes_without_ocr(spark):
     assert got[("pdf://textonly", 0)] == ("ONLYPAGEONE", 0)
     text, n = got[("pdf://scan", 0)]
     assert n > 0 and "HELLOSCANWORLD" in text.replace("\n", "")
+
+
+def test_reused_workers_import_after_zip_importer_release(spark):
+    """Every extraction task drops its worker's cached zip importers on
+    the way out (tuning.release_zip_importers). A rerun on the same,
+    reused workers must give identical rows, and a later task must still
+    import a pyspark submodule its worker has never loaded: PathFinder
+    rebuilds the dropped finder from zipimport's directory cache."""
+    pages = pages_from_documents(spark, SF_SMALL, limit=16)
+    cols = ["url", "img_idx", "extracted_text", "n_spans", "spans"]
+
+    def run():
+        return sorted(extract_pages(pages, num_partitions=8).select(*cols).collect())
+
+    first = run()
+    assert len(first) == 16
+    assert run() == first
+
+    def probe(batches):
+        import importlib
+        import sys
+
+        import pandas as pd
+        import pyspark
+
+        candidates = (
+            "pyspark.sql.avro.functions",
+            "pyspark.sql.protobuf.functions",
+            "pyspark.instrumentation_utils",
+            "pyspark.mllib.common",
+        )
+        name = next((m for m in candidates if m not in sys.modules), None)
+        origin = importlib.import_module(name).__file__ if name else None
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"name": [name] * len(pdf), "origin": [origin] * len(pdf),
+                 "pyspark": [pyspark.__file__] * len(pdf)}
+            )
+
+    rows = (
+        spark.range(0, 8, 1, 8)
+        .mapInPandas(probe, "name string, origin string, pyspark string")
+        .collect()
+    )
+    assert len(rows) == 8
+    for r in rows:
+        assert r.name is not None, "every candidate submodule already loaded"
+        assert r.origin.endswith(".py")
+        if ".zip" in r.pyspark:  # pyspark shipped as an archive
+            assert r.pyspark.split(".zip")[0] == r.origin.split(".zip")[0]

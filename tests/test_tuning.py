@@ -1,12 +1,24 @@
 """paddleocr_spark/tuning.py: the tmpfs shuffle-dir probe must be
 gated on free space and honor the opt-out (round-4 advice — a
-memory-tight container must never point shuffle spill at RAM)."""
+memory-tight container must never point shuffle spill at RAM); the
+zip-importer release must leave imports working and the next
+invalidate_caches() nothing to re-read."""
 
+import importlib
 import os
+import sys
+import uuid
+import zipfile
+import zipimport
+
+import pytest
 
 from paddleocr_spark.tuning import (
+    DRIVER_MEMORY_CAP_MIB,
     MIN_FREE_BYTES,
     NO_TMPFS_ENV,
+    driver_memory,
+    release_zip_importers,
     tmpfs_shuffle_dir,
 )
 
@@ -54,3 +66,124 @@ def test_malformed_floor_falls_back_to_default(monkeypatch, tmp_path):
             lambda _p, free=free: SimpleNamespace(f_bavail=free, f_frsize=1),
         )
         assert tmpfs_shuffle_dir(path) == want
+
+
+@pytest.mark.parametrize(
+    "meminfo, want",
+    [
+        ("MemTotal:       16479424 kB\nMemFree: 1 kB\n", "8046m"),  # 15.7 GiB host
+        ("MemTotal:       65536000 kB\n", f"{DRIVER_MEMORY_CAP_MIB}m"),
+        ("MemTotal: lots\n", f"{DRIVER_MEMORY_CAP_MIB}m"),
+        (None, f"{DRIVER_MEMORY_CAP_MIB}m"),
+    ],
+)
+def test_driver_memory_is_half_the_host_capped(tmp_path, meminfo, want):
+    path = tmp_path / "meminfo"
+    if meminfo is not None:
+        path.write_text(meminfo)
+    assert driver_memory(str(path)) == want
+
+
+@pytest.fixture
+def plant_zip(monkeypatch):
+    """plant(where, fake_root) -> (archive, (name_a, name_b)): writes a
+    two-module zip under `where`, puts it on sys.path and imports module
+    a, so the zip's finder sits in sys.path_importer_cache; the SparkFiles
+    root reads as `fake_root`."""
+
+    def plant(where, fake_root):
+        from pyspark.core.files import SparkFiles
+
+        monkeypatch.setattr(SparkFiles, "getRootDirectory", lambda: fake_root)
+        tag = uuid.uuid4().hex[:10]
+        names = (f"zmod_{tag}_a", f"zmod_{tag}_b")
+        where.mkdir(parents=True, exist_ok=True)
+        archive = str(where / f"pair_{tag}.zip")
+        with zipfile.ZipFile(archive, "w") as zf:
+            for name in names:
+                zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+        monkeypatch.syspath_prepend(archive)
+        importlib.import_module(names[0])
+        assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+        planted.extend(names)
+        return archive, names
+
+    planted = []
+    yield plant
+    for name in planted:
+        sys.modules.pop(name, None)
+
+
+def _count_directory_reads(monkeypatch):
+    reads = []
+    real = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return reads
+
+
+def test_release_drops_zip_finder_and_imports_still_resolve(
+    plant_zip, tmp_path, monkeypatch
+):
+    archive, (_, name_b) = plant_zip(tmp_path / "lib", str(tmp_path / "files"))
+    assert release_zip_importers() >= 1
+    assert archive not in sys.path_importer_cache
+    reads = _count_directory_reads(monkeypatch)
+    mod_b = importlib.import_module(name_b)
+    assert mod_b.NAME == name_b
+    assert mod_b.__file__.startswith(archive)
+    # the finder is rebuilt from zipimport's directory cache, not re-read
+    assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+    assert reads == []
+
+
+def test_next_invalidate_caches_reads_no_archive(plant_zip, tmp_path, monkeypatch):
+    archive, _ = plant_zip(tmp_path / "lib", None)
+    reads = _count_directory_reads(monkeypatch)
+    importlib.invalidate_caches()
+    assert archive in reads  # what every pyspark task pays without the release
+    reads.clear()
+    release_zip_importers()
+    importlib.invalidate_caches()
+    assert reads == []
+
+
+def test_spark_files_zip_keeps_its_finder(plant_zip, tmp_path, monkeypatch):
+    root = tmp_path / "files"
+    shipped, _ = plant_zip(root, str(root))
+    other, _ = plant_zip(tmp_path / "lib", str(root))
+    release_zip_importers()
+    assert isinstance(sys.path_importer_cache[shipped], zipimport.zipimporter)
+    assert other not in sys.path_importer_cache
+    # the kept finder is still refreshed by the per-task invalidation
+    reads = _count_directory_reads(monkeypatch)
+    importlib.invalidate_caches()
+    assert reads == [shipped]
+
+
+def test_ocr_batches_releases_on_success_close_and_error(monkeypatch):
+    from paddleocr_spark.plans import pipeline
+
+    calls = []
+    monkeypatch.setattr(pipeline, "release_zip_importers", lambda: calls.append(1))
+
+    def run(batches, page_limit, orient=False):
+        for batch in batches:
+            if batch == "boom":
+                raise RuntimeError("kernel failed")
+            yield batch
+
+    monkeypatch.setattr(pipeline, "_ocr_batches_run", run)
+    assert list(pipeline._ocr_batches(iter(["a", "b"]), 0)) == ["a", "b"]
+    assert calls == [1]
+    gen = pipeline._ocr_batches(iter(["a", "b"]), 0)
+    next(gen)
+    gen.close()  # the worker closes the output iterator after the task
+    assert calls == [1, 1]
+    with pytest.raises(RuntimeError, match="kernel failed"):
+        list(pipeline._ocr_batches(iter(["a", "boom"]), 0))
+    assert calls == [1, 1, 1]

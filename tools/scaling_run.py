@@ -59,7 +59,7 @@ def main() -> None:
     # this directly raises the local-mode scaling ceiling.
     # gated on free tmpfs space + SPARK_GRAFT_NO_TMPFS_SHUFFLE opt-out
     # (paddleocr_spark/tuning.py) — never spill into a tight RAM disk
-    from paddleocr_spark.tuning import tmpfs_shuffle_dir
+    from paddleocr_spark.tuning import driver_memory, tmpfs_shuffle_dir
 
     _shm = tmpfs_shuffle_dir()
     if _shm:
@@ -74,7 +74,7 @@ def main() -> None:
         )
     else:
         builder = builder.master(f"local[{cores}]").config(
-            "spark.driver.memory", "16g"
+            "spark.driver.memory", driver_memory()
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -115,10 +115,17 @@ def main() -> None:
         from paddleocr_spark.plans.pipeline import salted_repartition
 
         def pt(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {"url": pdf["url"], "n": [len(b) for b in pdf["html"]]}
-                )
+            # release zip importers as extraction tasks do, so this layer
+            # measures what an extract_pages task pays per task
+            from paddleocr_spark.tuning import release_zip_importers
+
+            try:
+                for pdf in batches:
+                    yield pd.DataFrame(
+                        {"url": pdf["url"], "n": [len(b) for b in pdf["html"]]}
+                    )
+            finally:
+                release_zip_importers()
 
         return salted_repartition(df, num_partitions).mapInPandas(
             pt, "url string, n long"
