@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line
+local[$SPARK_GRAFT_CPUS, else the host's cores] and prints ONE JSON line
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
 Also evidences the BASELINE.json north_rule (throughput scaling
@@ -28,10 +28,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-from paddleocr_spark.tuning import driver_memory, tmpfs_shuffle_dir  # noqa: E402
+from paddleocr_spark.tuning import cpus, local_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = cpus()
 SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
 # SCALING_ONLY: skip the headline queries and emit just the scaling
 # pairs (same JSON shape, queries={}) — for re-measuring the volatile
@@ -295,51 +295,37 @@ def _suite_breakdown(spark) -> dict[str, list]:
     return out
 
 
+def _tool_row(tool: str, *args, timeout: int, **env: str) -> tuple[dict, str | None]:
+    """(row, error note) of one measurement subprocess,
+    `python tools/<tool> args...`: the last stdout line that starts
+    with "{". Subprocess rows are extras to the headline, so a hang, a
+    failed launch, a garbled line or no JSON line at all gives
+    ({}, note) and never kills the one-JSON-line contract."""
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.join(REPO, "tools", tool), *map(str, args)],
+            capture_output=True, text=True, timeout=timeout,
+            env={**os.environ, "PYTHONPATH": REPO, **env},
+        )
+        lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
+        if not lines:
+            return {}, f"no JSON line (rc={proc.returncode}): {proc.stderr}"[-500:]
+        return json.loads(lines[-1]), None
+    except (subprocess.TimeoutExpired, OSError, json.JSONDecodeError) as exc:
+        return {}, f"{type(exc).__name__}: {exc}"[-500:]
+
+
 def _flops_bound() -> tuple[dict, str | None]:
     """(row, error note) of the off-board realistic-FLOP row
     (tools/flops_bench.py): det throughput with the mobile-width DB graph
     (~2 GMACs at 640), so the round record bounds production neural
     cost, not just the analytic byte-exact graphs'. Subprocess — the
-    32-proc pool + numpy conv must not inherit this session's JVM. The
-    row is optional: a hang, a failed launch or a garbled line gives
-    ({}, note) and never kills the one-JSON-line contract."""
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "flops_bench.py"),
-             "320", str(CPUS), str(CPUS)],
-            capture_output=True, text=True, timeout=900,
-            env={**os.environ, "PYTHONPATH": REPO},
-        )
-        line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-        return (json.loads(line[-1]) if line else {}), None
-    except (subprocess.TimeoutExpired, OSError, json.JSONDecodeError) as exc:
-        return {}, f"{type(exc).__name__}: {exc}"[-500:]
+    32-proc pool + numpy conv must not inherit this session's JVM."""
+    return _tool_row("flops_bench.py", 320, CPUS, CPUS, timeout=900)
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", str(2 * CPUS))
-        .config("spark.driver.memory", driver_memory())
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # PNG payloads are incompressible: shuffle compression is pure
-        # CPU burn on the dominant stage (measured +2.6% at 32 cores)
-        .config("spark.shuffle.compress", "false")
-        .config("spark.shuffle.spill.compress", "false")
-        .config("spark.shuffle.file.buffer", "1m")
-        # shuffle spill on tmpfs — cluster-node fast-local-dir analogue
-        # (see tools/scaling_run.py for the measured machinery effect);
-        # gated on free tmpfs space + SPARK_GRAFT_NO_TMPFS_SHUFFLE
-        # opt-out so a memory-tight container never spills into RAM
-        .config("spark.local.dir", tmpfs_shuffle_dir() or "/tmp")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(CPUS, "bench")
 
     import __spark_entry__ as entrymod
     from paddleocr_spark.plans.pipeline import extract_pages
@@ -425,29 +411,26 @@ def main() -> None:
             mem = time.time() - t0
         return alu, mem
 
-    def _scaling_pair_once(lo: int, hi: int, replicate: int, passes: int) -> dict:
-        """Same job + same input at local[lo] vs local[hi] (sequential
-        subprocesses), each run bracketed by host probes at its own
-        concurrency: probe(lo) run(lo) probe(lo) probe(hi) run(hi)
-        probe(hi). host efficiency uses the average of each run's two
-        adjacent probes, so job scaling and host-window effects separate
-        even when the window shifts mid-pair."""
+    def _scaling_pair_once(
+        lo: int, hi: int, replicate: int, passes: int
+    ) -> tuple[dict, str | None]:
+        """(pair, error note): same job + same input at local[lo] vs
+        local[hi] (sequential subprocesses), each run bracketed by host
+        probes at its own concurrency: probe(lo) run(lo) probe(lo)
+        probe(hi) run(hi) probe(hi). host efficiency uses the average of
+        each run's two adjacent probes, so job scaling and host-window
+        effects separate even when the window shifts mid-pair."""
         runs = {}
         probes: dict[int, list[tuple[float, float]]] = {lo: [], hi: []}
         for cores in (lo, hi):
             probes[cores].append(_probe_at(cores))
-            proc = subprocess.run(
-                [sys.executable, os.path.join(REPO, "tools", "scaling_run.py"),
-                 str(cores), pages_path, str(replicate), str(passes)],
-                capture_output=True, text=True, timeout=1800,
-                env={**os.environ, "PYTHONPATH": REPO},
+            runs[cores], err = _tool_row(
+                "scaling_run.py", cores, pages_path, replicate, passes,
+                timeout=1800,
             )
+            if err:
+                return {}, f"local[{cores}]: {err}"
             probes[cores].append(_probe_at(cores))
-            line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-            if line:
-                runs[cores] = json.loads(line[-1])
-        if lo not in runs or hi not in runs:
-            return {}
         tput_lo = runs[lo]["docs_per_sec"]
         tput_hi = runs[hi]["docs_per_sec"]
         eff = round(tput_hi / (tput_lo * (hi / lo)), 3)
@@ -468,12 +451,13 @@ def main() -> None:
             "host_alu_efficiency": alu,
             "host_mem_efficiency": mem,
             "efficiency_vs_host": round(min(eff / host, 1.0) if host else 0.0, 3),
-        }
+        }, None
 
     def _scaling_pair(
         lo: int, hi: int, replicate: int, passes: int, attempts: int = 1
-    ) -> dict:
-        """Best observed pair over up to `attempts` sequential tries.
+    ) -> tuple[dict, str | None]:
+        """(pair, error note of the last failed try): best observed pair
+        over up to `attempts` sequential tries.
         The shared host's deliverable capacity shifts minute-to-minute
         (adjacent ALU probes for 8->32 procs read anywhere from 0.58 to
         0.95 across windows), so a single try measures the window as
@@ -484,14 +468,15 @@ def main() -> None:
         bar."""
         best: dict = {}
         history = []
+        err = None
         for i in range(max(1, attempts)):
             # Probe-gate each try (round-4 advice): don't burn an
             # attempt on a window where the host can't deliver hi-way
             # CPU — wait (bounded) for quality >= PROBE_GATE at the hi
             # concurrency, and keep the probe next to the try's result.
             win = _await_quiet_window(hi, f"pair_{lo}_{hi}_try{i}")
-            res = _scaling_pair_once(lo, hi, replicate, passes)
-            if not res:
+            res, err = _scaling_pair_once(lo, hi, replicate, passes)
+            if err:
                 continue
             res["window"] = win
             history.append(
@@ -508,11 +493,13 @@ def main() -> None:
                 break
         if best and len(history) > 1:
             best["attempts"] = history
-        return best
+        return best, None if best else err
 
-    def _decomposition(lo: int, hi: int, replicate: int) -> dict:
-        """Embed the kernel/machinery decomposition in the round
-        artifact itself (it previously lived only in BENCH/BASELINE.md):
+    def _decomposition(
+        lo: int, hi: int, replicate: int
+    ) -> tuple[dict, str | None]:
+        """(decomposition, error note). Embeds the kernel/machinery
+        decomposition in the round artifact itself:
 
         - kernel_pool: the exact extraction chain in a bare
           multiprocessing pool (tools/decompose_run.py) — no Spark — at
@@ -535,31 +522,22 @@ def main() -> None:
         pool, pool_alu = {}, {}
         for procs in (lo, hi):
             p0 = _probe_at(procs)
-            proc = subprocess.run(
-                [sys.executable, os.path.join(REPO, "tools", "decompose_run.py"),
-                 str(procs), pages_path, str(replicate), "2"],
-                capture_output=True, text=True, timeout=1800,
-                env={**os.environ, "PYTHONPATH": REPO},
+            pool[procs], err = _tool_row(
+                "decompose_run.py", procs, pages_path, replicate, 2,
+                timeout=1800,
             )
+            if err:
+                return {}, f"kernel_pool {procs}: {err}"
             p1 = _probe_at(procs)
-            line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-            if line:
-                pool[procs] = json.loads(line[-1])
-                pool_alu[procs] = (p0[0] + p1[0]) / 2
+            pool_alu[procs] = (p0[0] + p1[0]) / 2
         pt = {}
         for procs in (lo, hi):
-            proc = subprocess.run(
-                [sys.executable, os.path.join(REPO, "tools", "scaling_run.py"),
-                 str(procs), pages_path, str(replicate), "2"],
-                capture_output=True, text=True, timeout=1800,
-                env={**os.environ, "PYTHONPATH": REPO,
-                     "SPARK_GRAFT_PASSTHROUGH": "1"},
+            pt[procs], err = _tool_row(
+                "scaling_run.py", procs, pages_path, replicate, 2,
+                timeout=1800, SPARK_GRAFT_PASSTHROUGH="1",
             )
-            line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-            if line:
-                pt[procs] = json.loads(line[-1])
-        if lo not in pool or hi not in pool or lo not in pt or hi not in pt:
-            return {}
+            if err:
+                return {}, f"passthrough local[{procs}]: {err}"
         k_lo, k_hi = pool[lo]["sec"], pool[hi]["sec"]
         m_lo, m_hi = pt[lo]["sec"], pt[hi]["sec"]
         return {
@@ -578,7 +556,7 @@ def main() -> None:
             "local_mode_ceiling": round(
                 (k_lo + m_lo) / (factor * (k_lo / factor + m_hi)), 3
             ),
-        }
+        }, None
 
     def _submit_pair(lo: int, hi: int) -> dict:
         """north_star deployment clause, exercised end-to-end: the SAME
@@ -659,22 +637,29 @@ def main() -> None:
     ) != "1":
         flops_bound, flops_error = _flops_bound()
 
-    scaling = {}
+    scaling: dict = {}
+
+    def _record(name: str, row_and_error: tuple[dict, str | None]) -> None:
+        scaling[name], err = row_and_error
+        if err:
+            scaling[f"{name}_error"] = err
+
     if not SKIP_SCALING:
         # Two pairs: 2->8 runs in the regime where the sandbox VM itself
         # scales near-linearly (pure-ALU probe: 0.92), so it evidences the
         # JOB's scaling; 8->32 is additionally capped by host CPU
         # oversubscription (pure-ALU probe: 0.75 on this VM) — see
         # BENCH/BASELINE.md for the full diagnosis.
-        scaling = {
-            "pair_2_to_8": _scaling_pair(2, 8, replicate=1, passes=2),
-            # replicate=8 (~40k docs at sf0.1): the 32-core run must be
-            # long enough to amortize the ~2.5 s fixed stage cost, or
-            # the pair under-reads steady-state efficiency by ~0.1.
-            "pair_8_to_32": _scaling_pair(8, 32, replicate=8, passes=3, attempts=3),
-        }
+        _record("pair_2_to_8", _scaling_pair(2, 8, replicate=1, passes=2))
+        # replicate=8 (~40k docs at sf0.1): the 32-core run must be
+        # long enough to amortize the ~2.5 s fixed stage cost, or
+        # the pair under-reads steady-state efficiency by ~0.1.
+        _record(
+            "pair_8_to_32",
+            _scaling_pair(8, 32, replicate=8, passes=3, attempts=3),
+        )
         if os.environ.get("SPARK_GRAFT_SKIP_DECOMP", "") != "1":
-            scaling["decomposition_8_to_32"] = _decomposition(8, 32, replicate=8)
+            _record("decomposition_8_to_32", _decomposition(8, 32, replicate=8))
         if os.environ.get("SPARK_GRAFT_SKIP_SUBMIT", "") != "1":
             scaling["submit_pyfiles_2_to_8"] = _submit_pair(2, 8)
 

@@ -158,6 +158,8 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
+    from paddleocr_spark.tuning import SESSION_CONF
+
     # getOrCreate() may hand us a pre-existing session (e.g. pytest's shared
     # fixture when main() runs in-process); stopping one we did not create
     # would kill that host's SparkContext for everything after us, so every
@@ -167,14 +169,15 @@ def main(argv: list[str] | None = None) -> int:
     # a live context is what makes the session pre-existing.
     pre_existing = SparkContext._active_spark_context is not None
 
-    builder = SparkSession.builder.appName("paddleocr-spark-extract")
+    # spark-submit (or --master) owns the master, the driver heap and
+    # spark.local.dir; on a live session getOrCreate() applies only the
+    # settings a running session can still change
+    builder = SparkSession.builder.appName("paddleocr-spark-extract").config(
+        map=SESSION_CONF
+    )
     if args.master:
         builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def _stop():

@@ -1,15 +1,22 @@
-"""Host-tuning helpers shared by bench.py / tools/scaling_run.py /
-tools/submit_pyfiles.py and the extraction UDF.
+"""Host tuning and the one Spark session recipe.
+
+`local_session` / `local_conf` build the local-mode session for
+bench.py, tools/check_oracle.py, tools/profile_suite.py,
+tools/scaling_run.py and tests/conftest.py, and tools/submit_pyfiles.py
+passes `local_conf` to spark-submit. job.py and the cluster branch of
+tools/scaling_run.py apply `SESSION_CONF` only: there spark-submit or
+the cluster owns the master, the driver heap and spark.local.dir.
 
 tmpfs shuffle dirs (spark.local.dir=/dev/shm/...) are a measured win on
 this host (32 concurrent shuffle writers stop contending on the root
-disk; see tools/scaling_run.py), but RAM-backed storage is only safe
+disk; see local_conf), but RAM-backed storage is only safe
 when the tmpfs can actually hold the expected spill volume — on a
 memory-constrained container a large shuffle would fill /dev/shm and
 fail the job or trip the OOM killer. So the probe is gated on measured
 free space, with an env opt-out (round-4 advice item).
 
-`driver_memory` sizes the local-mode driver heap from the host's RAM.
+`driver_memory` sizes the local-mode driver heap from the host's RAM,
+and `cpus` is the core count a local run uses.
 `release_zip_importers` runs in the Python workers: it drops the cached
 zip finders a reused worker would otherwise re-read before every task."""
 
@@ -78,6 +85,56 @@ def driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, ValueError, IndexError):
         pass
     return f"{DRIVER_MEMORY_CAP_MIB}m"
+
+
+def cpus() -> int:
+    """Cores for a local run: $SPARK_GRAFT_CPUS when set, otherwise the
+    CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+# Session settings that are safe on any master.
+SESSION_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.ui.enabled": "false",
+    # PNG payloads are incompressible: shuffle compression is pure CPU
+    # burn on the dominant stage (measured +2.6% at 32 cores)
+    "spark.shuffle.compress": "false",
+    "spark.shuffle.spill.compress": "false",
+    "spark.shuffle.file.buffer": "1m",
+}
+
+
+def local_conf(cores: int) -> dict[str, str]:
+    """SESSION_CONF plus the settings of a local[cores] run, whose
+    executors live on this host: the master, 2 shuffle partitions per
+    core, the driver heap and, when the tmpfs probe allows it, shuffle
+    spill on tmpfs (at 32 cores the passthrough plan's machinery share
+    fell 4.05 -> 2.99 s once 32 shuffle writers stopped contending on
+    the root disk)."""
+    conf = {
+        **SESSION_CONF,
+        "spark.master": f"local[{cores}]",
+        "spark.sql.shuffle.partitions": str(2 * cores),
+        "spark.driver.memory": driver_memory(),
+    }
+    shm = tmpfs_shuffle_dir()
+    if shm:
+        conf["spark.local.dir"] = shm
+    return conf
+
+
+def local_session(cores: int, app: str):
+    """The local[cores] SparkSession of `local_conf`, logging errors only."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.builder.appName(app).config(
+        map=local_conf(cores)
+    ).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def _spark_files_root() -> str | None:

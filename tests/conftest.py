@@ -13,18 +13,9 @@ SF_MID = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from paddleocr_spark.tuning import local_session
 
     os.environ.setdefault("PYTHONPATH", REPO)
-    s = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName("paddleocr_spark-tests")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
+    s = local_session(8, "paddleocr_spark-tests")
     yield s
     s.stop()

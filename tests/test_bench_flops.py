@@ -1,8 +1,11 @@
-"""bench.py's optional flops row: a failing tools/flops_bench.py run must
-give an empty row plus an error note, never an exception that would
-stop bench.py before it prints its one JSON line."""
+"""bench.py's measurement subprocesses (the flops row, the scaling pairs,
+the decomposition): a failing tools/ run must give an empty row plus an
+error note, never an exception that would stop bench.py before it
+prints its one JSON line."""
 
+import os
 import subprocess
+import sys
 from types import SimpleNamespace
 
 import pytest
@@ -22,12 +25,15 @@ def _prints(stdout):
     return lambda *_a, **_k: SimpleNamespace(stdout=stdout)
 
 
-@pytest.mark.parametrize(
+FAILURES = pytest.mark.parametrize(
     "run, note",
     [(_hang, "TimeoutExpired"), (_no_exec, "OSError"),
      (_prints('progress\n{"det_gmacs": 2.0, '), "JSONDecodeError")],
     ids=["timeout", "oserror", "truncated-line"],
 )
+
+
+@FAILURES
 def test_flops_failure_gives_empty_row_and_note(monkeypatch, run, note):
     monkeypatch.setattr(bench.subprocess, "run", run)
     row, err = bench._flops_bound()
@@ -39,3 +45,43 @@ def test_flops_last_json_line_wins(monkeypatch):
         bench.subprocess, "run", _prints('{"a": 1}\nnoise\n{"a": 2}\n')
     )
     assert bench._flops_bound() == ({"a": 2}, None)
+
+
+@FAILURES
+def test_tool_row_failure_gives_empty_row_and_note(monkeypatch, run, note):
+    monkeypatch.setattr(bench.subprocess, "run", run)
+    row, err = bench._tool_row("scaling_run.py", 2, "/pages", timeout=1)
+    assert row == {} and err.startswith(note)
+
+
+def test_tool_row_without_json_line_gives_note(monkeypatch):
+    monkeypatch.setattr(
+        bench.subprocess, "run",
+        lambda *_a, **_k: SimpleNamespace(
+            stdout="progress\n", stderr="MemoryError", returncode=1
+        ),
+    )
+    row, err = bench._tool_row("decompose_run.py", 2, timeout=1)
+    assert row == {} and err == "no JSON line (rc=1): MemoryError"
+
+
+def test_tool_row_last_json_line_wins_and_passes_args_and_env(monkeypatch):
+    seen = {}
+
+    def run(cmd, **kwargs):
+        seen.update(cmd=cmd, env=kwargs["env"], timeout=kwargs["timeout"])
+        return SimpleNamespace(stdout='{"a": 1}\nnoise\n{"a": 2}\n')
+
+    monkeypatch.setattr(bench.subprocess, "run", run)
+    row = bench._tool_row(
+        "scaling_run.py", 8, "/pages", 2, timeout=7,
+        SPARK_GRAFT_PASSTHROUGH="1",
+    )
+    assert row == ({"a": 2}, None)
+    assert seen["cmd"] == [
+        sys.executable, os.path.join(bench.REPO, "tools", "scaling_run.py"),
+        "8", "/pages", "2",
+    ]
+    assert seen["timeout"] == 7
+    assert seen["env"]["PYTHONPATH"] == bench.REPO
+    assert seen["env"]["SPARK_GRAFT_PASSTHROUGH"] == "1"

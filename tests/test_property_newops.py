@@ -107,22 +107,15 @@ def test_python_resolution_model_matches_urljoin(base_path, ref):
     assert resolve(base, ref) == urljoin(base, ref.split("#")[0])
 
 
-def test_empty_segments_preserved_strictly():
+def test_empty_segments_preserved_strictly(spark):
     """Strict RFC/WHATWG keeps interior empty path segments; stdlib
     urljoin collapses them. We pin the STRICT answers (what a browser
     resolves) — the same deviation class as the scheme-present
     dot-normalization pinned in test_urlresolve.py."""
-    import pytest as _pytest
-
-    pytest_spark = _pytest.importorskip("pyspark")
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from paddleocr_spark.functions.urlresolve import resolve_url
 
-    spark = SparkSession.getActiveSession() or SparkSession.builder.master(
-        "local[2]"
-    ).getOrCreate()
     cases = [
         ("https://h.test//", "a", "https://h.test//a"),
         ("https://h.test//x/", "a", "https://h.test//x/a"),

@@ -2,22 +2,29 @@
 gated on free space and honor the opt-out (round-4 advice — a
 memory-tight container must never point shuffle spill at RAM); the
 zip-importer release must leave imports working and the next
-invalidate_caches() nothing to re-read."""
+invalidate_caches() nothing to re-read; the session recipe must size a
+local run and leave deployment-owned settings out of SESSION_CONF."""
 
 import importlib
+import json
 import os
 import sys
 import uuid
 import zipfile
 import zipimport
+from types import SimpleNamespace
 
 import pytest
 
+from paddleocr_spark import tuning
 from paddleocr_spark.tuning import (
     DRIVER_MEMORY_CAP_MIB,
     MIN_FREE_BYTES,
     NO_TMPFS_ENV,
+    SESSION_CONF,
+    cpus,
     driver_memory,
+    local_conf,
     release_zip_importers,
     tmpfs_shuffle_dir,
 )
@@ -187,3 +194,59 @@ def test_ocr_batches_releases_on_success_close_and_error(monkeypatch):
     with pytest.raises(RuntimeError, match="kernel failed"):
         list(pipeline._ocr_batches(iter(["a", "boom"]), 0))
     assert calls == [1, 1, 1]
+
+
+def test_cpus_is_the_env_override_or_the_affinity_mask(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert cpus() == len(os.sched_getaffinity(0))
+
+
+def test_local_conf_sizes_a_local_run():
+    conf = local_conf(4)
+    assert conf["spark.master"] == "local[4]"
+    assert conf["spark.sql.shuffle.partitions"] == "8"
+    assert conf["spark.driver.memory"] == driver_memory()
+    assert conf.items() >= SESSION_CONF.items()
+
+
+@pytest.mark.parametrize("shm", [None, "/dev/shm/spark_graft_shuffle"])
+def test_local_conf_sets_local_dir_only_on_tmpfs(monkeypatch, shm):
+    monkeypatch.setattr(tuning, "tmpfs_shuffle_dir", lambda: shm)
+    conf = local_conf(4)
+    assert ("spark.local.dir" in conf) == (shm is not None)
+    assert conf.get("spark.local.dir") == shm
+
+
+def test_session_conf_leaves_master_heap_and_local_dir_to_the_deployment():
+    owned = {"spark.master", "spark.driver.memory", "spark.local.dir"}
+    assert not owned & SESSION_CONF.keys()
+
+
+def test_submit_extract_passes_exactly_local_conf(monkeypatch, tmp_path):
+    from tools import submit_pyfiles
+
+    monkeypatch.setattr(
+        tuning, "tmpfs_shuffle_dir", lambda: "/dev/shm/spark_graft_shuffle"
+    )
+    cmds = []
+
+    def run(cmd, **_kwargs):
+        cmds.append(cmd)
+        with open(cmd[cmd.index("--bench-json") + 1], "w") as fh:
+            json.dump({"docs": 0}, fh)
+        return SimpleNamespace(returncode=0, stdout="")
+
+    monkeypatch.setattr(submit_pyfiles.subprocess, "run", run)
+    submit_pyfiles.submit_extract(
+        3, "/sf", str(tmp_path), zip_path=str(tmp_path / "pkg.zip")
+    )
+    (cmd,) = cmds
+    flags = cmd[1:cmd.index("--py-files")]
+    named = {"--master": "spark.master", "--driver-memory": "spark.driver.memory"}
+    pairs = [
+        tuple(value.split("=", 1)) if flag == "--conf" else (named[flag], value)
+        for flag, value in zip(flags[::2], flags[1::2])
+    ]
+    assert len(pairs) == len(dict(pairs)) and dict(pairs) == local_conf(3)

@@ -17,23 +17,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from paddleocr_spark.tuning import cpus, local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("profile_suite")
-        .config("spark.sql.shuffle.partitions", str(2 * CPUS))
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session(cpus(), "profile_suite")
     spark.range(8).selectExpr("md5(string(id)) m").write.format("noop").mode(
         "overwrite"
     ).save()

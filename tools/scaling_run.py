@@ -31,53 +31,32 @@ def main() -> None:
     replicate = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     passes = int(sys.argv[4]) if len(sys.argv) > 4 else 2
 
-    from pyspark.sql import SparkSession
+    from paddleocr_spark.tuning import SESSION_CONF, local_session
 
     # SPARK_GRAFT_MASTER=spark://host:7077 switches from local[N] to a
     # standalone cluster: `cores` becomes spark.cores.max over fixed
     # 8-core executors, so cores=8 vs cores=32 is literally 1 executor
     # vs 4 executors — the north_rule's N vs 4N cluster sizes, each
     # executor a separate JVM with its own shuffle/Arrow/python workers.
+    # The cluster owns the driver heap and spark.local.dir there.
     master = os.environ.get("SPARK_GRAFT_MASTER", "")
-    builder = (
-        SparkSession.builder.appName(f"scaling-run-{cores}")
-        .config("spark.sql.shuffle.partitions", str(2 * cores))
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # PNG payloads are incompressible: shuffle compression is pure
-        # CPU burn on the dominant stage
-        .config("spark.shuffle.compress", "false")
-        .config("spark.shuffle.spill.compress", "false")
-        .config("spark.shuffle.file.buffer", "1m")
-    )
-    # Shuffle spill on fast local storage (tmpfs) — the cluster-node
-    # analogue of local NVMe shuffle dirs. Measured at 32 cores: the
-    # single-JVM machinery share (passthrough job) drops 4.05 -> 2.99 s
-    # because 32 concurrent shuffle writers stop contending on the
-    # root disk; at 8 cores the effect is small (3.97 -> 3.74 s), so
-    # this directly raises the local-mode scaling ceiling.
-    # gated on free tmpfs space + SPARK_GRAFT_NO_TMPFS_SHUFFLE opt-out
-    # (paddleocr_spark/tuning.py) — never spill into a tight RAM disk
-    from paddleocr_spark.tuning import driver_memory, tmpfs_shuffle_dir
-
-    _shm = tmpfs_shuffle_dir()
-    if _shm:
-        builder = builder.config("spark.local.dir", _shm)
     if master:
-        builder = (
-            builder.master(master)
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.appName(f"scaling-run-{cores}")
+            .config(map=SESSION_CONF)
+            .master(master)
+            .config("spark.sql.shuffle.partitions", str(2 * cores))
             .config("spark.executor.cores", "8")
             .config("spark.cores.max", str(cores))
             .config("spark.executor.memory", "20g")
             .config("spark.executorEnv.PYTHONPATH", _REPO)
+            .getOrCreate()
         )
+        spark.sparkContext.setLogLevel("ERROR")
     else:
-        builder = builder.master(f"local[{cores}]").config(
-            "spark.driver.memory", driver_memory()
-        )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+        spark = local_session(cores, f"scaling-run-{cores}")
 
     from paddleocr_spark.plans.pipeline import extract_pages
 

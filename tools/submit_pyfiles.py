@@ -33,6 +33,10 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+from paddleocr_spark.tuning import local_conf  # noqa: E402
 
 
 def find_spark_submit() -> str:
@@ -48,17 +52,6 @@ def find_spark_submit() -> str:
     if os.path.exists(cand):
         return cand
     return "spark-submit"  # PATH fallback (/opt/spark/bin)
-
-
-def _local_tmpfs_dir(cores: int) -> str | None:
-    """tmpfs shuffle dir for the submitted job. submit_extract always
-    runs --master local[cores] (this harness's executors live on the
-    submitting host), so the host-side free-space probe is authoritative
-    here; see the conf-site comment for the cluster-master caveat."""
-    sys.path.insert(0, REPO)
-    from paddleocr_spark.tuning import tmpfs_shuffle_dir
-
-    return tmpfs_shuffle_dir()
 
 
 def build_zip(zip_path: str) -> str:
@@ -117,30 +110,15 @@ def submit_extract(
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
 
+    # submit_extract always runs local[cores]: this host runs the
+    # executors, so the host-side probes in local_conf (driver heap,
+    # tmpfs spill dir) describe executor storage and memory
+    conf = local_conf(cores)
     cmd = [
         find_spark_submit(),
-        "--master", f"local[{cores}]",
-        "--driver-memory", "8g",
-        "--conf", f"spark.sql.shuffle.partitions={2 * cores}",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.ui.enabled=false",
-        # PNG payloads are incompressible (same rationale as
-        # tools/scaling_run.py): compression is pure CPU burn
-        "--conf", "spark.shuffle.compress=false",
-        "--conf", "spark.shuffle.spill.compress=false",
-        "--conf", "spark.shuffle.file.buffer=1m",
-        # shuffle spill on tmpfs (cluster fast-local-dir analogue; same
-        # measured machinery win as tools/scaling_run.py). Only for a
-        # local[*] master, where the submitting host IS the executor
-        # host and the free-space probe (paddleocr_spark/tuning.py)
-        # actually describes executor storage; on a real cluster master
-        # spark.local.dir stays with the cluster's own node config — a
-        # gateway-side statvfs says nothing about cluster nodes.
-        *(
-            ("--conf", f"spark.local.dir={_shm}")
-            if (_shm := _local_tmpfs_dir(cores))
-            else ()
-        ),
+        "--master", conf.pop("spark.master"),
+        "--driver-memory", conf.pop("spark.driver.memory"),
+        *(a for kv in conf.items() for a in ("--conf", "=".join(kv))),
         "--py-files", zip_path,
         entry,
         *(("--pages", pages) if pages else ("--sf-dir", sf_dir)),
