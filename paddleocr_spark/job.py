@@ -412,24 +412,21 @@ def main(argv: list[str] | None = None) -> int:
     from paddleocr_spark.plans.pipeline import run_job
 
     t0 = time.monotonic()
-    run_job(
+    n_committed = run_job(
         spark, pages, args.results, args.audit, num_partitions=parts,
         resume=not args.no_resume, page_limit=args.page_limit,
         orient=args.orient, weights=weights,
     )
     sec = time.monotonic() - t0
-    committed = spark.read.option("recursiveFileLookup", "true").parquet(
-        args.results
-    )
-    n_committed = committed.count()
-    # docs here = the whole committed sink; on a fresh sink (how the
-    # bench invokes it) that is exactly this run's increment
     _write_bench(args.bench_json, n_committed, sec)
     print(
         f"extraction complete: {n_committed} rows committed to "
         f"{args.results}"
     )
     if args.wet:
+        committed = spark.read.option("recursiveFileLookup", "true").parquet(
+            args.results
+        )
         _export_wet(committed, args.wet)
     if args.wat:
         _export_wat(pages, args.wat)

@@ -19,10 +19,15 @@ Scale notes (the parts that matter at 10^12 docs / 1000 executors):
   (tools/infer/utility.py create_predictor called once per process).
   With real ONNX weights this is where the broadcast bytes get
   materialized into a session.
-- Results carry per-row stage timings; `audit_rows` aggregates them per
-  partition for the lineage/audit table (north_star). Resume is an
-  anti-join of committed urls (Iceberg MERGE/snapshot in production;
-  parquet directory in the sandbox).
+- Results carry per-row stage timings. The batch writers (`run_job`,
+  snapshots.run_job_snapshot) take the lineage/audit rows (north_star)
+  from the extraction tasks themselves: each task tallies the frames it
+  yields, plus its own wall time, into a driver accumulator keyed by
+  partition, so no query reads back what was just written. Streaming
+  sinks, whose batches never pass a tallying task, aggregate their
+  batch with `audit_rows`. Resume is an anti-join of committed urls
+  (Iceberg MERGE/snapshot in production; parquet directory in the
+  sandbox).
 """
 
 from __future__ import annotations
@@ -31,8 +36,10 @@ import os
 import time
 import uuid
 from collections.abc import Iterator
+from datetime import datetime, timezone
 
 import pandas as pd
+from pyspark import Accumulator, AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,8 +57,48 @@ AUDIT_SCHEMA = (
     "ok_count long, err_count long, decode_ms double, det_ms double, "
     "rec_ms double, wall_ms double, ts timestamp"
 )
+_AUDIT_COLUMNS = [field.split()[0] for field in AUDIT_SCHEMA.split(", ")]
+_TALLIED = ["url", "img_idx", "decode_ms", "det_ms", "rec_ms"]
 
 _ENGINE = None  # per-python-worker singleton
+
+
+class _TaskAudit(AccumulatorParam):
+    """Driver accumulator of extraction-task audit rows,
+    {partition_id: row}. The merge is keyed and the last row wins, so a
+    retried or speculative attempt, or a second run of the same plan,
+    replaces its partition's row instead of adding to it. Module-level
+    so the workers unpickle it by import path."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value1: dict, value2: dict) -> dict:
+        value1.update(value2)
+        return value1
+
+
+def _tally_task(frames: list[pd.DataFrame], wall_ms: float) -> dict:
+    """{partition_id: audit row} of one finished extraction task from
+    the frames it yielded; {} when it yielded no page."""
+    done = pd.concat(frames) if frames else pd.DataFrame()
+    if done.empty:
+        return {}
+    pid = TaskContext.get().partitionId()
+    ok = int((done["img_idx"] >= 0).sum())
+    return {
+        pid: dict(
+            partition_id=pid,
+            url_count=int(done["url"].nunique()),
+            page_count=len(done),
+            ok_count=ok,
+            err_count=len(done) - ok,
+            decode_ms=float(done["decode_ms"].sum()),
+            det_ms=float(done["det_ms"].sum()),
+            rec_ms=float(done["rec_ms"].sum()),
+            wall_ms=wall_ms,
+        )
+    }
 
 
 def _get_engine():
@@ -68,13 +115,26 @@ def _ocr_batches(
     page_limit: int,
     orient: bool = False,
     weights_bc=None,
+    tally: Accumulator | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """One extraction task. However it ends, release the worker's cached
-    zip importers on the way out, so the next task's per-task
-    importlib.invalidate_caches() has no archive to re-read
-    (tuning.release_zip_importers)."""
+    """One extraction task. With a `tally` (from `task_audit`),
+    a task that runs to the end adds its audit row, keyed by its
+    partition; its wall_ms is the task's wall time in this worker.
+    However it ends, release the worker's cached zip importers on the
+    way out, so the next task's per-task importlib.invalidate_caches()
+    has no archive to re-read (tuning.release_zip_importers)."""
+    t0 = time.perf_counter()
+    counted: list[pd.DataFrame] = []
     try:
-        yield from _ocr_batches_weighted(batches, page_limit, orient, weights_bc)
+        for frame in _ocr_batches_weighted(
+            batches, page_limit, orient, weights_bc
+        ):
+            if tally is not None:
+                counted.append(frame[_TALLIED])
+            yield frame
+        if tally is not None:
+            wall_ms = (time.perf_counter() - t0) * 1000.0
+            tally.add(_tally_task(counted, wall_ms))
     finally:
         release_zip_importers()
 
@@ -282,6 +342,8 @@ def extract_pages(
     orient: bool = False,
     weights: bytes | None = None,
     backend: str = "stub",
+    *,
+    _tally: Accumulator | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> results DataFrame.
 
@@ -291,7 +353,10 @@ def extract_pages(
     kernels/onnx_models.build_onnx_bundle), installed per executor
     before inference — so a driver-side weight change genuinely
     propagates (tests/test_pipeline_spark.py pins this with perturbed
-    weights on BOTH backends)."""
+    weights on BOTH backends).
+
+    `_tally`, an accumulator from `task_audit`, collects each finished task's
+    audit row (run_job and snapshots.run_job_snapshot pass one)."""
     from paddleocr_spark.kernels.font import export_weights
 
     df = pages.select("url", "html")  # column prune before the shuffle
@@ -306,13 +371,38 @@ def extract_pages(
             weights = export_weights()
     bc = pages.sparkSession.sparkContext.broadcast(weights)
     return df.mapInPandas(
-        lambda it: _ocr_batches(it, page_limit, orient, bc),
+        lambda it: _ocr_batches(it, page_limit, orient, bc, _tally),
         schema=RESULTS_SCHEMA,
     )
 
 
+def task_audit(spark: SparkSession) -> Accumulator:
+    """A fresh accumulator of task audit rows for one extraction pass."""
+    return spark.sparkContext.accumulator({}, _TaskAudit())
+
+
+def tallied_audit(
+    spark: SparkSession, tally: Accumulator, run_id: str
+) -> DataFrame:
+    """The audit frame (AUDIT_SCHEMA) of the task rows in `tally`. Read
+    it only after the write action that ran the tasks has returned:
+    Spark merges a task's accumulator update when the task completes.
+    The frame is built from a pyarrow.Table, which runs no Python task
+    (a list of rows would)."""
+    import pyarrow as pa
+
+    ts = datetime.now(timezone.utc)
+    rows = [
+        dict(tally.value[p], run_id=run_id, ts=ts) for p in sorted(tally.value)
+    ]
+    table = pa.table({c: [r[c] for r in rows] for c in _AUDIT_COLUMNS})
+    return spark.createDataFrame(table, AUDIT_SCHEMA)
+
+
 def audit_rows(results: DataFrame, run_id: str | None = None) -> DataFrame:
-    """Per-partition lineage/metrics rows (FIXTURES.md §6)."""
+    """Per-partition lineage/metrics rows (FIXTURES.md §6) aggregated
+    over `results`: the streaming sinks' audit, whose batches never pass
+    a tallying task. wall_ms here is the sum of the stage timers."""
     rid = run_id or uuid.uuid4().hex
     return (
         results.withColumn("partition_id", F.spark_partition_id())
@@ -329,10 +419,7 @@ def audit_rows(results: DataFrame, run_id: str | None = None) -> DataFrame:
         )
         .withColumn("run_id", F.lit(rid))
         .withColumn("ts", F.current_timestamp())
-        .select(
-            "run_id", "partition_id", "url_count", "page_count", "ok_count",
-            "err_count", "decode_ms", "det_ms", "rec_ms", "wall_ms", "ts",
-        )
+        .select(*_AUDIT_COLUMNS)
     )
 
 
@@ -365,12 +452,14 @@ def resume_filter(pages: DataFrame, results_path: str) -> DataFrame:
     # layout generation (flat part-files, partitionBy dirs, or run_id=
     # subdir appends) — plain partition discovery would raise
     # 'Conflicting directory structures' on a mixed-layout sink and
-    # crash the resume contract instead of committing nothing.
+    # crash the resume contract instead of committing nothing. The fixed
+    # schema skips inference (a footer read per listing, and an error on
+    # a sink with no data file yet). No distinct: a left-anti join keeps
+    # the same rows whether or not the right side repeats a url.
     done = (
-        spark.read.option("recursiveFileLookup", "true")
+        spark.read.schema("url string")
+        .option("recursiveFileLookup", "true")
         .parquet(results_path)
-        .select("url")
-        .distinct()
     )
     return pages.join(done, "url", "left_anti")
 
@@ -384,34 +473,29 @@ def run_job(
     run_id: str | None = None,
     resume: bool = True,
     **extract_kwargs,
-) -> None:
-    """Full job: resume -> extract -> append results + audit.
-    `extract_kwargs` pass through to `extract_pages` (page_limit,
-    orient, weights)."""
+) -> int:
+    """Full job: resume -> extract -> append results + audit. Returns
+    the number of result rows this run committed. `extract_kwargs` pass
+    through to `extract_pages` (page_limit, orient, weights)."""
     rid = run_id or uuid.uuid4().hex
     todo = resume_filter(pages, results_path) if resume else pages
-    results = extract_pages(todo, num_partitions, **extract_kwargs).withColumn(
-        "run_id", F.lit(rid)
-    )
+    tally = task_audit(spark)
+    results = extract_pages(
+        todo, num_partitions, _tally=tally, **extract_kwargs
+    ).withColumn("run_id", F.lit(rid))
     # Append into an EXPLICIT run_id= subdirectory (not partitionBy):
     # same physical layout, but no partition discovery is involved at
-    # write time, and the audit read-back below addresses exactly this
-    # run's files by path — pruned by construction even if the sink root
-    # carries older layout generations (a pre-partitioning flat sink
-    # would make partition discovery raise 'Conflicting directory
-    # structures'). run_id stays IN the data files, so recursive reads
-    # of old and new generations both work.
+    # write time, even if the sink root carries older layout generations
+    # (a pre-partitioning flat sink would make partition discovery raise
+    # 'Conflicting directory structures'). run_id stays IN the data
+    # files, so recursive reads of old and new generations both work.
     run_dir = os.path.join(results_path, f"run_id={rid}")
     results.write.mode("append").parquet(run_dir)
-    # Audit THIS run's increment only — auditing the whole committed
-    # sink was a full-table scan per resume cycle at 10^12 docs AND
-    # double-counted prior runs' pages under the new run_id.
-    # (Aggregating the lazy `results` frame instead would re-execute
-    # the entire OCR stage just for the audit.)
-    committed_run = spark.read.parquet(run_dir)
-    audit_rows(committed_run.drop("run_id"), rid).write.mode("append").parquet(
-        audit_path
-    )
+    # The audit covers THIS run's increment only, from the rows the
+    # extraction tasks tallied while they wrote it: no read-back of the
+    # files, and no second run of the OCR stage.
+    tallied_audit(spark, tally, rid).write.mode("append").parquet(audit_path)
+    return sum(r["page_count"] for r in tally.value.values())
 
 
 def write_bucketed(

@@ -466,16 +466,14 @@ def run_job_snapshot(
     wm_row = todo.agg(F.max("warc_ts").cast("string").alias("wm")).collect()[0]
     if wm_row["wm"] is None:
         return {"version": current_version(root), "rows": 0, "run_id": rid}
+    tally = pipeline.task_audit(spark)
     results = pipeline.extract_pages(
-        todo, num_partitions, **extract_kwargs
+        todo, num_partitions, _tally=tally, **extract_kwargs
     ).withColumn("run_id", F.lit(rid))
     res_branch = _write_branch(results, root, "results")
-    # Audit aggregates the durable files just written (re-aggregating
-    # the lazy `results` plan would re-run the OCR stage).
-    committed = spark.read.schema(
-        StructType.fromJson(json.loads(res_branch[1]))
-    ).parquet(*[f["path"] for f in res_branch[0]])
-    audit = pipeline.audit_rows(committed.drop("run_id"), rid)
+    # Audit rows come from the extraction tasks that wrote the files
+    # (no read-back of the files, no second run of the OCR stage).
+    audit = pipeline.tallied_audit(spark, tally, rid)
     audit_branch = _write_branch(audit, root, "audit")
     rows = sum(f["rows"] for f in res_branch[0])
     version = commit(

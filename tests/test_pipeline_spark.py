@@ -14,6 +14,7 @@ from paddleocr_spark.plans.pipeline import (
     resume_filter,
     run_job,
     salted_repartition,
+    task_audit,
 )
 from paddleocr_spark.sources.pages import (
     html_pages_from_documents,
@@ -125,6 +126,86 @@ def test_run_job_audit_is_incremental(spark, tmp_path):
     total = rows.agg(F.sum("page_count")).first()[0]
     assert total == 8  # never double-counts committed pages
     pages.unpersist()
+
+
+def test_resume_over_sink_without_data_files(spark, tmp_path):
+    """A first run that died after creating its run_id= directory leaves
+    a sink with no data file: resume must return every page instead of
+    failing to infer a schema."""
+    results = tmp_path / "results"
+    (results / "run_id=crashed").mkdir(parents=True)
+    pages = pages_from_documents(spark, SF_SMALL, limit=6)
+    assert resume_filter(pages, str(results)).count() == 6
+
+
+def _pages_with_errors(spark):
+    """Multi-page scans plus two undecodable payloads: pages differ from
+    urls, and some rows are error rows."""
+    import pandas as pd
+
+    broken = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": ["https://x.test/broken1", "https://x.test/broken2"],
+                "html": [b"not a png at all", b"\x00\x01"],
+            }
+        )
+    )
+    pages = pages_from_documents(spark, SF_SMALL, multipage=True, limit=10)
+    return pages.select("url", "html").unionByName(broken)
+
+
+def _extraction_partitions(pages, n):
+    """Partition ids of the extraction stage that receive input rows."""
+    return {
+        r.pid
+        for r in salted_repartition(pages.select("url"), n)
+        .select(F.spark_partition_id().alias("pid"))
+        .distinct()
+        .collect()
+    }
+
+
+def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
+    """run_job's audit comes from the extraction tasks: per run it
+    agrees with `audit_rows` over the committed rows, has one row per
+    non-empty extraction partition, and each row's wall_ms is task wall
+    time, which covers its stage timers."""
+    results = str(tmp_path / "results")
+    audit = str(tmp_path / "audit")
+    pages = _pages_with_errors(spark).cache()
+    n = run_job(spark, pages, results, audit, num_partitions=4, run_id="t1")
+    committed = spark.read.parquet(results).drop("run_id")
+    assert n == committed.count()
+
+    keys = ["url_count", "page_count", "ok_count", "err_count"]
+    tallied = spark.read.parquet(audit)
+    sums = [F.sum(k).alias(k) for k in keys]
+    want = audit_rows(committed, "t1").agg(*sums).first()
+    got = tallied.agg(*sums).first()
+    assert got == want
+    assert got.err_count == 2 and got.page_count > got.url_count
+
+    rows = tallied.collect()
+    pids = [r.partition_id for r in rows]
+    assert sorted(pids) == sorted(_extraction_partitions(pages, 4))
+    assert {r.run_id for r in rows} == {"t1"}
+    for r in rows:
+        assert r.wall_ms >= r.decode_ms + r.det_ms + r.rec_ms
+    pages.unpersist()
+
+
+def test_task_audit_keyed_across_reruns(spark):
+    """Running one results plan twice against one accumulator replaces
+    each partition's row: one entry per partition, pages counted once."""
+    pages = pages_from_documents(spark, SF_SMALL, limit=10)
+    tally = task_audit(spark)
+    res = extract_pages(pages, num_partitions=4, _tally=tally)
+    for _ in range(2):
+        res.write.format("noop").mode("overwrite").save()
+    assert set(tally.value) == _extraction_partitions(pages, 4)
+    assert all(pid == row["partition_id"] for pid, row in tally.value.items())
+    assert sum(row["page_count"] for row in tally.value.values()) == 10
 
 
 def test_audit_rows_cover_all_pages(spark):

@@ -10,6 +10,8 @@ pass every value oracle and still fall over at 10^12 docs. Pin them.
 - The extraction pipeline must contain exactly one Exchange (the salted
   repartition) — a second one would double the shuffle volume of the
   dominant stage.
+- A resumed run_job is at most four Spark jobs: nothing reads back
+  what the run just wrote.
 """
 
 import re
@@ -63,6 +65,33 @@ def test_extraction_pipeline_single_exchange(spark, tmp_path):
     # "Exchange (n)" is the tree-section form; the details section
     # prints "(n) Exchange" and must not double-count
     assert plan.count("Exchange (") == 1, plan
+
+
+def test_run_job_resumed_sink_job_count(spark, tmp_path):
+    """A run_job over a resumed sink is one extraction pass: the resume
+    side's broadcast, the salted shuffle, the results write and the
+    audit write. A read-back audit or schema inference over the sink
+    adds jobs and fails this pin."""
+    from paddleocr_spark.plans.pipeline import run_job
+    from paddleocr_spark.sources.pages import pages_from_documents
+
+    path = str(tmp_path / "pages.parquet")
+    pages_from_documents(spark, SF_SMALL, limit=24).write.parquet(path)
+    pages = spark.read.parquet(path)
+    results, audit = str(tmp_path / "results"), str(tmp_path / "audit")
+    seed = pages.limit(8)
+    run_job(spark, seed, results, audit, num_partitions=2, run_id="r1")
+    sc = spark.sparkContext
+    sc.setJobGroup("run-job-shape", "run_job over a resumed sink")
+    try:
+        n = run_job(
+            spark, pages, results, audit, num_partitions=4, run_id="r2"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("run-job-shape")
+    assert 0 < len(jobs) <= 4, jobs
+    assert n == 16
 
 
 def test_bucketed_join_has_no_exchange(spark):
