@@ -1,11 +1,10 @@
 """Host tuning and the one Spark session recipe.
 
 `local_session` / `local_conf` build the local-mode session for
-bench.py, tools/check_oracle.py, tools/profile_suite.py,
-tools/scaling_run.py and tests/conftest.py, and tools/submit_pyfiles.py
-passes `local_conf` to spark-submit. job.py and the cluster branch of
-tools/scaling_run.py apply `SESSION_CONF` only: there spark-submit or
-the cluster owns the master, the driver heap and spark.local.dir.
+bench.py, tools/check_oracle.py, tools/profile_suite.py and
+tests/conftest.py, and tools/submit_pyfiles.py passes `local_conf` to
+spark-submit. job.py applies `SESSION_CONF` only: there spark-submit
+owns the master, the driver heap and spark.local.dir.
 
 tmpfs shuffle dirs (spark.local.dir=/dev/shm/...) are a measured win on
 this host (32 concurrent shuffle writers stop contending on the root
@@ -88,10 +87,15 @@ def driver_memory(meminfo: str = "/proc/meminfo") -> str:
 
 
 def cpus() -> int:
-    """Cores for a local run: $SPARK_GRAFT_CPUS when set, otherwise the
-    CPUs this process may run on."""
-    env = os.environ.get("SPARK_GRAFT_CPUS")
-    return int(env) if env else len(os.sched_getaffinity(0))
+    """Cores for a local run: $SPARK_GRAFT_CPUS when it is a positive
+    integer, otherwise the CPUs this process may run on (a malformed or
+    non-positive override must not crash bench.py at import, nor reach
+    Spark as local[0])."""
+    try:
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        n = 0
+    return n if n > 0 else len(os.sched_getaffinity(0))
 
 
 # Session settings that are safe on any master.

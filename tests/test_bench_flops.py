@@ -1,7 +1,8 @@
-"""bench.py's measurement subprocesses (the flops row, the scaling pairs,
-the decomposition): a failing tools/ run must give an empty row plus an
-error note, never an exception that would stop bench.py before it
-prints its one JSON line."""
+"""bench.py's helpers. Its measurement subprocesses (the flops row and
+the perfbench scaling row): a failing script run must give an empty row
+plus an error note, never an exception that would stop bench.py before
+it prints its one JSON line. And the spread warning over timed
+attempts."""
 
 import os
 import subprocess
@@ -50,7 +51,7 @@ def test_flops_last_json_line_wins(monkeypatch):
 @FAILURES
 def test_tool_row_failure_gives_empty_row_and_note(monkeypatch, run, note):
     monkeypatch.setattr(bench.subprocess, "run", run)
-    row, err = bench._tool_row("scaling_run.py", 2, "/pages", timeout=1)
+    row, err = bench._tool_row("perfbench/run.py", "--seed", 1, timeout=1)
     assert row == {} and err.startswith(note)
 
 
@@ -61,7 +62,7 @@ def test_tool_row_without_json_line_gives_note(monkeypatch):
             stdout="progress\n", stderr="MemoryError", returncode=1
         ),
     )
-    row, err = bench._tool_row("decompose_run.py", 2, timeout=1)
+    row, err = bench._tool_row("perfbench/run.py", "--trace", 1, timeout=1)
     assert row == {} and err == "no JSON line (rc=1): MemoryError"
 
 
@@ -73,15 +74,24 @@ def test_tool_row_last_json_line_wins_and_passes_args_and_env(monkeypatch):
         return SimpleNamespace(stdout='{"a": 1}\nnoise\n{"a": 2}\n')
 
     monkeypatch.setattr(bench.subprocess, "run", run)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/sf")
     row = bench._tool_row(
-        "scaling_run.py", 8, "/pages", 2, timeout=7,
-        SPARK_GRAFT_PASSTHROUGH="1",
+        "perfbench/run.py", "--workload", "all", "--seed", 1, timeout=7,
     )
     assert row == ({"a": 2}, None)
     assert seen["cmd"] == [
-        sys.executable, os.path.join(bench.REPO, "tools", "scaling_run.py"),
-        "8", "/pages", "2",
+        sys.executable, os.path.join(bench.REPO, "perfbench", "run.py"),
+        "--workload", "all", "--seed", "1",
     ]
     assert seen["timeout"] == 7
     assert seen["env"]["PYTHONPATH"] == bench.REPO
-    assert seen["env"]["SPARK_GRAFT_PASSTHROUGH"] == "1"
+    assert seen["env"]["SPARK_GRAFT_SF_DIR"] == "/sf"
+
+
+@pytest.mark.parametrize(
+    "attempts, flagged",
+    [([1.0, 1.6], True), ([1.0, 1.4], False), ([1.0], False)],
+    ids=["apart", "close", "single"],
+)
+def test_spread_warnings_flag_attempts_over_1_5x(attempts, flagged):
+    assert bench._spread_warnings({"q": attempts}) == (["q"] if flagged else [])

@@ -199,6 +199,10 @@ def test_ocr_batches_releases_on_success_close_and_error(monkeypatch):
 def test_cpus_is_the_env_override_or_the_affinity_mask(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert cpus() == 3
+    # not a positive integer: the affinity mask, never local[0] or a crash
+    for bad in ("abc", "0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        assert cpus() == len(os.sched_getaffinity(0))
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
     assert cpus() == len(os.sched_getaffinity(0))
 

@@ -15,10 +15,11 @@ Consumers:
   - tests/test_spark_submit.py — byte-identity of the deployed
     artifact's extracted text vs the closed-form oracle, plus the
     per-partition lineage audit contract.
-  - bench.py `spark_submit` section — the same submitted job at N and
-    4N cores on the same input: the north_rule's two-cluster-size
-    scaling criterion exercised through the deployment entry point
-    itself, not an in-process session.
+  - bench.py `_submit_pair` (the `scaling.submit_pyfiles_<n>_to_<4n>`
+    row) — the same submitted job at N and 4N cores on the same input:
+    the north_rule's two-cluster-size scaling criterion exercised
+    through the deployment entry point itself, not an in-process
+    session.
 
 Also runnable standalone:
     python tools/submit_pyfiles.py <cores> <sf_dir> <workdir>
@@ -85,8 +86,7 @@ def submit_extract(
 
     Returns {"cores", "docs", "sec", "docs_per_sec", "results",
     "audit"} where sec times the extraction action only (job.py
-    --bench-json; JVM/session startup excluded, same convention as
-    tools/scaling_run.py).
+    --bench-json; JVM/session startup excluded).
     """
     os.makedirs(workdir, exist_ok=True)
     if zip_path is None:
@@ -125,7 +125,7 @@ def submit_extract(
         "--results", results,
         "--audit", audit,
         # fixed partition count at every cluster size (sized by the
-        # data, as on a real cluster — tools/scaling_run.py rationale);
+        # data, as on a real cluster, so only the core count varies);
         # default 2x cores for the plain smoke-test use
         "--partitions", str(partitions or 2 * cores),
         "--bench-json", bench_json,
