@@ -23,11 +23,13 @@ Scale notes (the parts that matter at 10^12 docs / 1000 executors):
   snapshots.run_job_snapshot) take the lineage/audit rows (north_star)
   from the extraction tasks themselves: each task tallies the frames it
   yields, plus its own wall time, into a driver accumulator keyed by
-  partition, so no query reads back what was just written. Streaming
-  sinks, whose batches never pass a tallying task, aggregate their
-  batch with `audit_rows`. Resume is an anti-join of committed urls
-  (Iceberg MERGE/snapshot in production; parquet directory in the
-  sandbox).
+  partition, so no query reads back what was just written. Once the
+  results write returns, the driver writes those rows to one parquet
+  file per run (`write_task_audit`): the audit starts no Spark job.
+  Streaming sinks, whose batches never pass a tallying task, aggregate
+  their batch with `audit_rows`. Resume is an anti-join of committed
+  urls (Iceberg MERGE/snapshot in production; parquet directory in the
+  sandbox). Sink and audit paths may be plain paths or file:// URIs.
 """
 
 from __future__ import annotations
@@ -381,22 +383,45 @@ def task_audit(spark: SparkSession) -> Accumulator:
     return spark.sparkContext.accumulator({}, _TaskAudit())
 
 
-def tallied_audit(
-    spark: SparkSession, tally: Accumulator, run_id: str
-) -> DataFrame:
-    """The audit frame (AUDIT_SCHEMA) of the task rows in `tally`. Read
+def _filesystem(path: str):
+    """(pyarrow FileSystem, path inside it) for a plain path or a URI
+    such as file:///..., so the driver-side checks and writes here reach
+    the same files Spark does."""
+    from pyarrow import fs
+
+    if "://" not in path:
+        path = os.path.abspath(path)
+    return fs.FileSystem.from_uri(path)
+
+
+def write_task_audit(tally: Accumulator, run_id: str, audit_dir: str) -> str:
+    """Write the task rows in `tally` (AUDIT_SCHEMA) to one parquet file,
+    `part-<run_id>.parquet` under `audit_dir`, and return its path. Call
     it only after the write action that ran the tasks has returned:
     Spark merges a task's accumulator update when the task completes.
-    The frame is built from a pyarrow.Table, which runs no Python task
-    (a list of rows would)."""
-    import pyarrow as pa
 
+    The driver writes the file itself, so the audit costs no Spark job.
+    It is written under a `.`-prefixed name and renamed into place, so
+    no reader sees a partial file (Spark and pyarrow skip dot files). A
+    rerun under the same run_id replaces the file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(AUDIT_SCHEMA))
     ts = datetime.now(timezone.utc)
     rows = [
         dict(tally.value[p], run_id=run_id, ts=ts) for p in sorted(tally.value)
     ]
-    table = pa.table({c: [r[c] for r in rows] for c in _AUDIT_COLUMNS})
-    return spark.createDataFrame(table, AUDIT_SCHEMA)
+    table = pa.Table.from_pylist(rows, schema=schema)
+    fs, root = _filesystem(audit_dir)
+    fs.create_dir(root, recursive=True)
+    name = f"part-{run_id}.parquet"
+    tmp = f"{root}/.{name}"
+    pq.write_table(table, tmp, filesystem=fs)
+    fs.move(tmp, f"{root}/{name}")
+    return f"{audit_dir.rstrip('/')}/{name}"
 
 
 def audit_rows(results: DataFrame, run_id: str | None = None) -> DataFrame:
@@ -445,8 +470,10 @@ def tsv_lines(results: DataFrame) -> DataFrame:
 def resume_filter(pages: DataFrame, results_path: str) -> DataFrame:
     """Idempotent resume: anti-join urls already committed to the results
     sink (Iceberg snapshot anti-join / MERGE INTO in production)."""
-    spark = pages.sparkSession
-    if not os.path.exists(results_path):
+    from pyarrow.fs import FileType
+
+    fs, path = _filesystem(results_path)
+    if fs.get_file_info(path).type == FileType.NotFound:
         return pages
     # recursiveFileLookup reads every committed file regardless of sink
     # layout generation (flat part-files, partitionBy dirs, or run_id=
@@ -457,7 +484,7 @@ def resume_filter(pages: DataFrame, results_path: str) -> DataFrame:
     # a sink with no data file yet). No distinct: a left-anti join keeps
     # the same rows whether or not the right side repeats a url.
     done = (
-        spark.read.schema("url string")
+        pages.sparkSession.read.schema("url string")
         .option("recursiveFileLookup", "true")
         .parquet(results_path)
     )
@@ -493,8 +520,8 @@ def run_job(
     results.write.mode("append").parquet(run_dir)
     # The audit covers THIS run's increment only, from the rows the
     # extraction tasks tallied while they wrote it: no read-back of the
-    # files, and no second run of the OCR stage.
-    tallied_audit(spark, tally, rid).write.mode("append").parquet(audit_path)
+    # files, no second run of the OCR stage, and no Spark job.
+    write_task_audit(tally, rid, audit_path)
     return sum(r["page_count"] for r in tally.value.values())
 
 

@@ -472,9 +472,15 @@ def run_job_snapshot(
     ).withColumn("run_id", F.lit(rid))
     res_branch = _write_branch(results, root, "results")
     # Audit rows come from the extraction tasks that wrote the files
-    # (no read-back of the files, no second run of the OCR stage).
-    audit = pipeline.tallied_audit(spark, tally, rid)
-    audit_branch = _write_branch(audit, root, "audit")
+    # (no read-back of the files, no second run of the OCR stage); the
+    # driver writes them to one file, which starts no Spark job.
+    audit_file = pipeline.write_task_audit(
+        tally, rid, os.path.join(root, "data", f"audit-{uuid.uuid4().hex}")
+    )
+    audit_branch = (
+        [_file_stats(audit_file)],
+        StructType.fromDDL(pipeline.AUDIT_SCHEMA).json(),
+    )
     rows = sum(f["rows"] for f in res_branch[0])
     version = commit(
         root,

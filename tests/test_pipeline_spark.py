@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMALL
 
 from paddleocr_spark.plans.pipeline import (
+    AUDIT_SCHEMA,
     audit_rows,
     extract_pages,
     resume_filter,
@@ -84,19 +85,21 @@ def test_salted_repartition_balances(spark):
 
 
 def test_run_job_resume_idempotent(spark, tmp_path):
-    results = str(tmp_path / "results")
-    audit = str(tmp_path / "audit")
+    """Resume holds for plain sink paths and for file:// URIs alike."""
     pages = pages_from_documents(spark, SF_SMALL, limit=12).cache()
     half = pages.limit(6)
-    run_job(spark, half, results, audit, num_partitions=4, run_id="r1")
-    assert spark.read.parquet(results).count() == 6
-    # Second run over the full set must only process the remaining 6 urls.
-    todo = resume_filter(pages, results)
-    assert todo.count() == 6
-    run_job(spark, pages, results, audit, num_partitions=4, run_id="r2")
-    final = spark.read.parquet(results)
-    assert final.count() == 12
-    assert final.select("url").distinct().count() == 12
+    for root in (str(tmp_path / "plain"), (tmp_path / "uri").as_uri()):
+        results, audit = f"{root}/results", f"{root}/audit"
+        run_job(spark, half, results, audit, num_partitions=4, run_id="r1")
+        assert spark.read.parquet(results).count() == 6
+        # A second run over the full set processes only the other 6 urls.
+        todo = resume_filter(pages, results)
+        assert todo.count() == 6
+        n = run_job(spark, pages, results, audit, num_partitions=4, run_id="r2")
+        assert n == 6
+        final = spark.read.parquet(results)
+        assert final.count() == 12
+        assert final.select("url").distinct().count() == 12
     pages.unpersist()
 
 
@@ -170,7 +173,11 @@ def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
     """run_job's audit comes from the extraction tasks: per run it
     agrees with `audit_rows` over the committed rows, has one row per
     non-empty extraction partition, and each row's wall_ms is task wall
-    time, which covers its stage timers."""
+    time, which covers its stage timers. The driver writes it as one
+    file per run, which Spark reads back with AUDIT_SCHEMA's fields and
+    types, and leaves no temp file behind."""
+    from pyspark.sql.types import StructType
+
     results = str(tmp_path / "results")
     audit = str(tmp_path / "audit")
     pages = _pages_with_errors(spark).cache()
@@ -178,8 +185,13 @@ def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
     committed = spark.read.parquet(results).drop("run_id")
     assert n == committed.count()
 
-    keys = ["url_count", "page_count", "ok_count", "err_count"]
+    assert sorted(os.listdir(audit)) == ["part-t1.parquet"]
     tallied = spark.read.parquet(audit)
+    assert [(f.name, f.dataType) for f in tallied.schema] == [
+        (f.name, f.dataType) for f in StructType.fromDDL(AUDIT_SCHEMA)
+    ]
+
+    keys = ["url_count", "page_count", "ok_count", "err_count"]
     sums = [F.sum(k).alias(k) for k in keys]
     want = audit_rows(committed, "t1").agg(*sums).first()
     got = tallied.agg(*sums).first()

@@ -3,11 +3,14 @@ gated on free space and honor the opt-out (round-4 advice — a
 memory-tight container must never point shuffle spill at RAM); the
 zip-importer release must leave imports working and the next
 invalidate_caches() nothing to re-read; the session recipe must size a
-local run and leave deployment-owned settings out of SESSION_CONF."""
+local run and leave deployment-owned settings out of SESSION_CONF; a
+Python worker freezes its heap once, the driver never."""
 
+import gc
 import importlib
 import json
 import os
+import subprocess
 import sys
 import uuid
 import zipfile
@@ -15,6 +18,8 @@ import zipimport
 from types import SimpleNamespace
 
 import pytest
+
+from tests.conftest import REPO
 
 from paddleocr_spark import tuning
 from paddleocr_spark.tuning import (
@@ -194,6 +199,51 @@ def test_ocr_batches_releases_on_success_close_and_error(monkeypatch):
     with pytest.raises(RuntimeError, match="kernel failed"):
         list(pipeline._ocr_batches(iter(["a", "boom"]), 0))
     assert calls == [1, 1, 1]
+
+
+_FREEZE_PROBE = """
+import gc, json, os
+import pandas as pd
+from paddleocr_spark.tuning import local_session
+
+def probe(batches):
+    import paddleocr_spark  # the worker's first import of the package
+    for _ in batches:
+        yield pd.DataFrame({"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]})
+
+spark = local_session(1, "freeze-probe")
+rows = spark.range(0, 3, numPartitions=3).mapInPandas(probe, "pid long, frozen long").collect()
+spark.stop()
+print(json.dumps([[r.pid, r.frozen] for r in rows]))
+"""
+
+
+def test_worker_heap_frozen_once_per_worker_never_on_driver(tmp_path):
+    """At local[1] one reused worker runs every task: the task that
+    first imports the package freezes the heap, and later tasks find
+    the same permanent generation, not a second freeze on top of it.
+    A frozen object can still die, so the first task, which froze while
+    its own setup objects were alive, may read a higher count."""
+    env = dict(os.environ, PYTHONPATH=REPO)
+    out = subprocess.run(
+        [sys.executable, "-c", _FREEZE_PROBE],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    rows = json.loads(out.stdout.strip().splitlines()[-1])
+    pids = {pid for pid, _ in rows}
+    counts = [frozen for _, frozen in rows]
+    assert len(rows) == 3 and len(pids) == 1, rows
+    assert counts[1] > 0 and counts[1:] == [counts[1]] * 2, counts
+    assert counts[0] >= counts[1], counts
+
+    import pyspark  # noqa: F401  (loaded, as on a Spark driver)
+
+    import paddleocr_spark
+
+    before = gc.get_freeze_count()
+    importlib.reload(paddleocr_spark)  # re-runs the import-time hook
+    assert gc.get_freeze_count() == before
 
 
 def test_cpus_is_the_env_override_or_the_affinity_mask(monkeypatch):
