@@ -381,57 +381,6 @@ def justext_suite_rows(
     return combined.select("op", "k", "v").unionByName(mean_row)
 
 
-def justext_paragraphs(
-    spark: SparkSession, sf_dir: str, pages=None
-) -> DataFrame:
-    """(doc_id, para_idx, dom_path, cf_class, final_class, n_chars,
-    text_md5) per page paragraph."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ids, idxs, paths, cfs, fins, lens, md5s = (
-                [], [], [], [], [], [], [],
-            )
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = int(url.rsplit("/", 1)[1])
-                for i, (path, cf, fin, ln, h) in enumerate(
-                    justext_classify(bytes(blob).decode("utf-8"))
-                ):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    paths.append(path)
-                    cfs.append(cf)
-                    fins.append(fin)
-                    lens.append(ln)
-                    md5s.append(h)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "para_idx": pd.Series(idxs, dtype="int64"),
-                    "dom_path": paths,
-                    "cf_class": cfs,
-                    "final_class": fins,
-                    "n_chars": pd.Series(lens, dtype="int64"),
-                    "text_md5": md5s,
-                }
-            )
-
-    return pages.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, para_idx long, dom_path string, "
-            "cf_class string, final_class string, n_chars long, "
-            "text_md5 string"
-        ),
-    )
-
-
 # Oracle (module docstring): the fixture pins the paragraph sequence
 # per layout — boilerplate texts are closed-form in doc_id, their
 # classes are constants, and the only data-dependent classes are the

@@ -19,16 +19,16 @@ Scale notes (the parts that matter at 10^12 docs / 1000 executors):
   (tools/infer/utility.py create_predictor called once per process).
   With real ONNX weights this is where the broadcast bytes get
   materialized into a session.
-- Results carry per-row stage timings. The batch writers (`run_job`,
-  snapshots.run_job_snapshot) take the lineage/audit rows (north_star)
-  from the extraction tasks themselves: each task tallies the frames it
-  yields, plus its own wall time, into a driver accumulator keyed by
-  partition, so no query reads back what was just written. Once the
-  results write returns, the driver writes those rows to one parquet
-  file per run (`write_task_audit`): the audit starts no Spark job.
-  Streaming sinks, whose batches never pass a tallying task, aggregate
-  their batch with `audit_rows`. Resume is an anti-join of committed
-  urls (Iceberg MERGE/snapshot in production; parquet directory in the
+- Results carry per-row stage timings. Every extraction writer, batch
+  (`run_job`, snapshots.run_job_snapshot) or streaming (the
+  streaming/pipeline.py foreachBatch sinks), takes the lineage/audit
+  rows (north_star) from the extraction tasks themselves: each task
+  tallies the frames it yields, plus its own wall time, into a driver
+  accumulator keyed by partition, so no query reads back what was just
+  written. Once the results write returns, the driver writes those rows
+  to one parquet file per run or epoch (`write_task_audit`): the audit
+  starts no Spark job. Resume is an anti-join of committed urls
+  (Iceberg MERGE/snapshot in production; parquet directory in the
   sandbox). Sink and audit paths may be plain paths or file:// URIs.
 """
 
@@ -59,7 +59,6 @@ AUDIT_SCHEMA = (
     "ok_count long, err_count long, decode_ms double, det_ms double, "
     "rec_ms double, wall_ms double, ts timestamp"
 )
-_AUDIT_COLUMNS = [field.split()[0] for field in AUDIT_SCHEMA.split(", ")]
 _TALLIED = ["url", "img_idx", "decode_ms", "det_ms", "rec_ms"]
 
 _ENGINE = None  # per-python-worker singleton
@@ -358,7 +357,7 @@ def extract_pages(
     weights on BOTH backends).
 
     `_tally`, an accumulator from `task_audit`, collects each finished task's
-    audit row (run_job and snapshots.run_job_snapshot pass one)."""
+    audit row (every writer that records an audit passes one)."""
     from paddleocr_spark.kernels.font import export_weights
 
     df = pages.select("url", "html")  # column prune before the shuffle
@@ -379,7 +378,9 @@ def extract_pages(
 
 
 def task_audit(spark: SparkSession) -> Accumulator:
-    """A fresh accumulator of task audit rows for one extraction pass."""
+    """A fresh accumulator of task audit rows for one extraction pass.
+    A streaming query keeps one for its whole life and resets it
+    (`tally.value = {}`) on the driver when each epoch starts."""
     return spark.sparkContext.accumulator({}, _TaskAudit())
 
 
@@ -422,30 +423,6 @@ def write_task_audit(tally: Accumulator, run_id: str, audit_dir: str) -> str:
     pq.write_table(table, tmp, filesystem=fs)
     fs.move(tmp, f"{root}/{name}")
     return f"{audit_dir.rstrip('/')}/{name}"
-
-
-def audit_rows(results: DataFrame, run_id: str | None = None) -> DataFrame:
-    """Per-partition lineage/metrics rows (FIXTURES.md §6) aggregated
-    over `results`: the streaming sinks' audit, whose batches never pass
-    a tallying task. wall_ms here is the sum of the stage timers."""
-    rid = run_id or uuid.uuid4().hex
-    return (
-        results.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.countDistinct("url").alias("url_count"),
-            F.count(F.lit(1)).alias("page_count"),
-            F.sum(F.when(F.col("img_idx") >= 0, 1).otherwise(0)).alias("ok_count"),
-            F.sum(F.when(F.col("img_idx") < 0, 1).otherwise(0)).alias("err_count"),
-            F.sum("decode_ms").alias("decode_ms"),
-            F.sum("det_ms").alias("det_ms"),
-            F.sum("rec_ms").alias("rec_ms"),
-            (F.sum("decode_ms") + F.sum("det_ms") + F.sum("rec_ms")).alias("wall_ms"),
-        )
-        .withColumn("run_id", F.lit(rid))
-        .withColumn("ts", F.current_timestamp())
-        .select(*_AUDIT_COLUMNS)
-    )
 
 
 def tsv_lines(results: DataFrame) -> DataFrame:

@@ -7,7 +7,8 @@ so this module implements the part of Iceberg's table format that the
 resume/audit contract actually depends on, from scratch, on a plain
 filesystem:
 
-- A table is a directory: `data/<commit-uuid>/part-*.parquet` files plus
+- A table is a local directory, named by a plain path or a file:// URI
+  (`resolve_root`): `data/<commit-uuid>/part-*.parquet` files plus
   `metadata/snap-<version>.json` manifests. A manifest lists EVERY live
   data file (path, row count, byte size, min/max url pruning stats),
   the schema as JSON, the parent version, and a summary (run_id, rows
@@ -47,7 +48,10 @@ only the delta, rewrites are never re-seen), additive schema evolution
 (`_evolved_schema` — add columns, readers null-fill older files), file
 pruning from manifest stats (`prune_files`), snapshot expiry
 (`expire_snapshots`), and the exactly-once streaming sink built on the
-same atomic publish (`streaming/pipeline.snapshot_batch_sink`).
+same atomic publish (`streaming/pipeline.snapshot_batch_sink`). The
+batch job and that sink commit an extraction the same way
+(`commit_extraction`): results files plus the audit rows the
+extraction tasks tallied, in one snapshot.
 
 Sandbox-scale simplification, on purpose: ONE manifest carries the full
 live file list, so a commit rewrites O(live files) of metadata. Real
@@ -68,7 +72,10 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -76,8 +83,29 @@ from pyspark.sql.types import StructType
 _FMT_VERSION = 1
 
 
+def resolve_root(root: str) -> str:
+    """The local directory a table root names: a plain path as given, or
+    the path of a file:// URI. This module reaches its tables with os.*
+    calls, so any other scheme raises ValueError. Every path this module
+    derives from a root goes through `_meta_dir` or `_data_dir`, which
+    resolve it."""
+    if "://" not in root:
+        return root
+    parts = urlsplit(root)
+    if parts.scheme != "file" or parts.netloc not in ("", "localhost"):
+        raise ValueError(
+            f"snapshot table root {root!r}: only plain paths and "
+            "file:// URIs are supported"
+        )
+    return url2pathname(parts.path)
+
+
 def _meta_dir(root: str) -> str:
-    return os.path.join(root, "metadata")
+    return os.path.join(resolve_root(root), "metadata")
+
+
+def _data_dir(root: str) -> str:
+    return os.path.join(resolve_root(root), "data")
 
 
 def _snap_path(root: str, version: int) -> str:
@@ -154,7 +182,7 @@ def _write_branch(df: DataFrame, root: str, branch: str) -> tuple[list[dict], st
     """Write one branch's data files under data/<uuid>/ and return
     (file entries, schema json). Files are durable but INVISIBLE until
     a manifest referencing them is committed."""
-    dest = os.path.join(root, "data", f"{branch}-{uuid.uuid4().hex}")
+    dest = os.path.join(_data_dir(root), f"{branch}-{uuid.uuid4().hex}")
     df.write.mode("error").parquet(dest)
     stats = [_file_stats(p) for p in _list_parquet(dest)]
     # Zero-row part files (empty upstream partitions) carry no data:
@@ -437,6 +465,43 @@ def resume_filter_exact(pages: DataFrame, root: str) -> DataFrame:
     return pages.join(done, "url", "left_anti")
 
 
+def commit_extraction(
+    root: str,
+    results: DataFrame,
+    tally: Accumulator,
+    run_id: str,
+    summary: dict | None = None,
+) -> tuple[int | None, int]:
+    """Write an extraction's `results` (an `extract_pages` frame run with
+    `_tally=tally`) as results-branch files, then the audit rows its
+    tasks tallied while writing them as one audit-branch file, and
+    publish both in ONE snapshot. Returns (version, rows committed);
+    the version is None when the write produced no row, and then
+    nothing is committed.
+
+    The audit is never a read-back of the files or a second run of the
+    OCR stage: `pipeline.write_task_audit` writes it from the driver, so
+    the whole commit is the one Spark job of the results write."""
+    from paddleocr_spark.plans import pipeline
+
+    res_branch = _write_branch(results, root, "results")
+    rows = sum(f["rows"] for f in res_branch[0])
+    if not rows:
+        return None, 0
+    audit_dir = os.path.join(_data_dir(root), f"audit-{uuid.uuid4().hex}")
+    audit_file = pipeline.write_task_audit(tally, run_id, audit_dir)
+    audit_branch = (
+        [_file_stats(audit_file)],
+        StructType.fromDDL(pipeline.AUDIT_SCHEMA).json(),
+    )
+    version = commit(
+        root,
+        {"results": res_branch, "audit": audit_branch},
+        summary={"run_id": run_id, "added_rows": rows, **(summary or {})},
+    )
+    return version, rows
+
+
 def run_job_snapshot(
     spark: SparkSession,
     pages: DataFrame,
@@ -454,6 +519,7 @@ def run_job_snapshot(
     empty re-run does not create an empty snapshot)."""
     from paddleocr_spark.plans import pipeline
 
+    root = resolve_root(root)  # an unsupported scheme fails before any job
     rid = run_id or uuid.uuid4().hex
     if not resume:
         todo = pages
@@ -470,28 +536,11 @@ def run_job_snapshot(
     results = pipeline.extract_pages(
         todo, num_partitions, _tally=tally, **extract_kwargs
     ).withColumn("run_id", F.lit(rid))
-    res_branch = _write_branch(results, root, "results")
-    # Audit rows come from the extraction tasks that wrote the files
-    # (no read-back of the files, no second run of the OCR stage); the
-    # driver writes them to one file, which starts no Spark job.
-    audit_file = pipeline.write_task_audit(
-        tally, rid, os.path.join(root, "data", f"audit-{uuid.uuid4().hex}")
+    version, rows = commit_extraction(
+        root, results, tally, rid, {"max_warc_ts": wm_row["wm"]}
     )
-    audit_branch = (
-        [_file_stats(audit_file)],
-        StructType.fromDDL(pipeline.AUDIT_SCHEMA).json(),
-    )
-    rows = sum(f["rows"] for f in res_branch[0])
-    version = commit(
-        root,
-        {"results": res_branch, "audit": audit_branch},
-        summary={
-            "run_id": rid,
-            "added_rows": rows,
-            "max_warc_ts": wm_row["wm"],
-        },
-    )
-    return {"version": version, "rows": rows, "run_id": rid}
+    return {"version": version or current_version(root), "rows": rows,
+            "run_id": rid}
 
 
 def compact(
@@ -566,7 +615,7 @@ def expire_snapshots(root: str, keep_last: int = 2) -> list[str]:
             for b in snap["branches"].values():
                 live.update(f["path"] for f in b["files"])
     deleted = []
-    data_root = os.path.join(root, "data")
+    data_root = _data_dir(root)
     if os.path.isdir(data_root):
         for d in os.listdir(data_root):
             full = os.path.join(data_root, d)
@@ -587,60 +636,3 @@ def expire_snapshots(root: str, keep_last: int = 2) -> list[str]:
                 deleted.append(os.path.join(meta, name))
     return deleted
 
-
-def merge_latest(
-    spark: SparkSession,
-    df: DataFrame,
-    root: str,
-    branch: str = "results",
-    key: str = "url",
-    ts: str = "warc_ts",
-    summary: dict | None = None,
-) -> int:
-    """Copy-on-write MERGE INTO — the recrawl upsert: per `key`, the
-    row with the greatest `ts` wins between the committed branch and
-    the incoming frame; `ts` ties go to the INCOMING row (a re-fetch
-    at the same capture second supersedes). Brand-new keys insert,
-    untouched keys carry over byte-identically.
-
-    The winner is ONE max-of-struct aggregate (ts, origin-priority,
-    remaining columns) — the keep-best discipline: no window, per-key
-    state is a single struct however hot the key. The rewritten branch
-    commits with `replace` + `expect_files`, so a concurrent append
-    between the merge's read and its commit RAISES (Iceberg's
-    rewrite-conflict validation) instead of being silently dropped.
-
-    Scale note: copy-on-write rewrites the branch — correct and simple
-    at bench scale; at 10^12 rows production narrows the rewrite to
-    the partitions holding merged keys (partition-scoped COW) or flips
-    to merge-on-read deletes. The atomicity + conflict machinery here
-    is the part those variants share."""
-    snap = load_snapshot(root)
-    b = (snap or {}).get("branches", {}).get(branch)
-    if not b or not b["files"]:
-        return append(df, root, branch, summary)
-    consumed = [f["path"] for f in b["files"]]
-    committed = read(spark, root, branch)
-    cols = committed.columns
-    if set(df.columns) != set(cols):
-        raise ValueError(
-            f"merge frame columns {sorted(df.columns)} != branch "
-            f"columns {sorted(cols)}"
-        )
-    rest = [c for c in cols if c not in (key, ts)]
-    tagged = committed.select(*cols).withColumn(
-        "_pri", F.lit(0)
-    ).unionByName(df.select(*cols).withColumn("_pri", F.lit(1)))
-    winner = tagged.groupBy(key).agg(
-        F.max(F.struct(ts, "_pri", *rest)).alias("_w")
-    )
-    merged = winner.select(
-        key, f"_w.{ts}", *[f"_w.{c}" for c in rest]
-    ).select(*cols)
-    return commit(
-        root,
-        {branch: _write_branch(merged, root, branch)},
-        dict(summary or {}, op="merge", merge_key=key),
-        replace={branch},
-        expect_files={branch: consumed},
-    )

@@ -10,18 +10,27 @@ restarting after a crash re-processes only unfinished files, and
 `Trigger.AvailableNow` drains the backlog then stops (batch-like runs on
 a streaming ledger).
 
-The audit variant uses foreachBatch so each micro-batch writes results
-AND per-partition audit rows (plans/pipeline.audit_rows) in the same
-epoch — the lineage/metrics contract of the batch job, kept in
-streaming.
+The audit variants use foreachBatch so each micro-batch writes results
+AND per-partition audit rows in the same epoch — the lineage/metrics
+contract of the batch job, kept in streaming, and taken the same way:
+the query's extraction tasks tally their rows into one accumulator
+(plans/pipeline.task_audit), each epoch resets it on the driver when it
+starts, and once the epoch's results write returns the driver writes
+the epoch's rows (plans/pipeline.write_task_audit, run_id
+`epoch-<batch_id>`). The audit adds no Spark job to an epoch.
 """
 
 from __future__ import annotations
 
+from pyspark import Accumulator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from paddleocr_spark.plans.pipeline import audit_rows, extract_pages
+from paddleocr_spark.plans.pipeline import (
+    extract_pages,
+    task_audit,
+    write_task_audit,
+)
 from paddleocr_spark.sources.pages import PAGES_SCHEMA
 
 
@@ -76,22 +85,18 @@ def stream_extract_with_audit(
     weights: bytes | None = None,
 ) -> StreamingQuery:
     """foreachBatch variant: results + audit rows per micro-batch epoch
-    (batch_id recorded as the run_id for lineage)."""
+    (`epoch-<batch_id>` recorded as the run_id for lineage)."""
     pages = read_pages_stream(spark, source_dir)
+    tally = task_audit(spark)
     results = extract_pages(
         pages, num_partitions=num_partitions, page_limit=page_limit,
-        orient=orient, weights=weights,
+        orient=orient, weights=weights, _tally=tally,
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            batch_df.write.mode("append").parquet(results_path)
-            audit_rows(batch_df, run_id=f"epoch-{batch_id}").write.mode(
-                "append"
-            ).parquet(audit_path)
-        finally:
-            batch_df.unpersist()
+        tally.value = {}  # this epoch's tasks only
+        batch_df.write.mode("append").parquet(results_path)
+        write_task_audit(tally, f"epoch-{batch_id}", audit_path)
 
     return (
         results.writeStream.foreachBatch(sink)
@@ -160,59 +165,6 @@ def stream_stateful_dedup(
     )
 
 
-def stream_windowed_host_counts(
-    spark: SparkSession,
-    source_dir: str,
-    results_path: str,
-    checkpoint_dir: str,
-    window_secs: int = 600,
-    delay_secs: int = 1800,
-) -> StreamingQuery:
-    """Event-time tumbling-window aggregation with a WATERMARK — the
-    late-data-tolerant streaming shape the batch engine has no analogue
-    for: per (host, 10-min window) capture counts over `warc_ts`,
-    where captures arriving up to `delay_secs` late still land in their
-    event-time window, and state for closed windows is dropped (bounded
-    state at any stream length — the scale property; without the
-    watermark, window state grows forever).
-
-    Append mode emits a window exactly once, when the watermark passes
-    its end. Under AvailableNow the no-data final micro-batch
-    (spark.sql.streaming.noDataMicroBatches, default on) advances the
-    watermark to max(event_time) - delay, so the emitted set is exactly
-    {windows with end <= max(warc_ts) - delay} REGARDLESS of how the
-    file source sliced micro-batches — the invariant the strict pytest
-    oracle checks against the batch GROUP BY."""
-    from pyspark.sql import functions as F
-
-    pages = read_pages_stream(spark, source_dir).select(
-        F.expr("lower(element_at(split(element_at(split(url, '://'), 2), '/'), 1))").alias("host"),
-        "warc_ts",
-    )
-    agg = (
-        pages.withWatermark("warc_ts", f"{delay_secs} seconds")
-        .groupBy(
-            F.window("warc_ts", f"{window_secs} seconds").alias("w"),
-            "host",
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_caps"))
-        .select(
-            "host",
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "n_caps",
-        )
-    )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", results_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stateful_dedup_view(spark: SparkSession, results_path: str) -> DataFrame:
     """Collapse the emission ledger to the batch-split-invariant final
     state per key (see stream_stateful_dedup)."""
@@ -225,7 +177,7 @@ def stateful_dedup_view(spark: SparkSession, results_path: str) -> DataFrame:
     )
 
 
-def snapshot_batch_sink(table_root: str):
+def snapshot_batch_sink(table_root: str, tally: Accumulator):
     """foreachBatch body with EXACTLY-ONCE semantics over the
     snapshot table (plans/snapshots.py). Plain foreachBatch is
     at-least-once: a crash after the parquet append but before the
@@ -234,37 +186,22 @@ def snapshot_batch_sink(table_root: str):
     re-delivered batch whose id is already committed SKIPS — the
     transactional-sink pattern (Delta's txnAppId/txnVersion), built on
     the same atomic manifest publish the batch job uses. Results and
-    the epoch's audit rows land in ONE commit, so replay can never
-    split them."""
+    the epoch's audit rows, tallied into `tally` (a `task_audit`
+    accumulator the batch's extraction tasks add to), land in ONE
+    commit (snapshots.commit_extraction), so replay can never split
+    them."""
     from paddleocr_spark.plans import snapshots as snap
 
+    table_root = snap.resolve_root(table_root)
+
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        tally.value = {}  # this epoch's tasks only
         done = snap.watermark(table_root, key="batch_id")
         if done is not None and batch_id <= done:
             return  # replayed epoch: already committed, drop it
-        res_branch = snap._write_branch(batch_df, table_root, "results")
-        if not res_branch[0]:
-            return  # empty epoch: no files, no snapshot
-        import json as _json
-
-        from pyspark.sql.types import StructType as _St
-
-        committed = batch_df.sparkSession.read.schema(
-            _St.fromJson(_json.loads(res_branch[1]))
-        ).parquet(*[f["path"] for f in res_branch[0]])
-        audit_branch = snap._write_branch(
-            audit_rows(committed, run_id=f"epoch-{batch_id}"),
-            table_root,
-            "audit",
-        )
-        snap.commit(
-            table_root,
-            {"results": res_branch, "audit": audit_branch},
-            summary={
-                "batch_id": batch_id,
-                "run_id": f"epoch-{batch_id}",
-                "added_rows": sum(f["rows"] for f in res_branch[0]),
-            },
+        snap.commit_extraction(
+            table_root, batch_df, tally, f"epoch-{batch_id}",
+            {"batch_id": batch_id},
         )
 
     return sink
@@ -283,13 +220,14 @@ def stream_extract_snapshot(
     """stream_extract_with_audit, but the sink is the snapshot table:
     each micro-batch is one atomic results+audit commit, idempotent
     under foreachBatch replay (see snapshot_batch_sink)."""
-    pages = read_pages_stream(spark, source_dir)
+    tally = task_audit(spark)
+    sink = snapshot_batch_sink(table_root, tally)  # checks the root first
     results = extract_pages(
-        pages, num_partitions=num_partitions, page_limit=page_limit,
-        orient=orient, weights=weights,
+        read_pages_stream(spark, source_dir), num_partitions=num_partitions,
+        page_limit=page_limit, orient=orient, weights=weights, _tally=tally,
     )
     return (
-        results.writeStream.foreachBatch(snapshot_batch_sink(table_root))
+        results.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

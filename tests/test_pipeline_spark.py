@@ -10,7 +10,6 @@ from tests.conftest import SF_SMALL
 
 from paddleocr_spark.plans.pipeline import (
     AUDIT_SCHEMA,
-    audit_rows,
     extract_pages,
     resume_filter,
     run_job,
@@ -170,8 +169,8 @@ def _extraction_partitions(pages, n):
 
 
 def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
-    """run_job's audit comes from the extraction tasks: per run it
-    agrees with `audit_rows` over the committed rows, has one row per
+    """run_job's audit comes from the extraction tasks: per run its
+    url/page/ok/err sums equal the committed rows', it has one row per
     non-empty extraction partition, and each row's wall_ms is task wall
     time, which covers its stage timers. The driver writes it as one
     file per run, which Spark reads back with AUDIT_SCHEMA's fields and
@@ -191,10 +190,15 @@ def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
         (f.name, f.dataType) for f in StructType.fromDDL(AUDIT_SCHEMA)
     ]
 
-    keys = ["url_count", "page_count", "ok_count", "err_count"]
-    sums = [F.sum(k).alias(k) for k in keys]
-    want = audit_rows(committed, "t1").agg(*sums).first()
-    got = tallied.agg(*sums).first()
+    # One url's pages share a payload row, so they share a task: the
+    # per-task distinct-url counts sum to the run's distinct urls.
+    want = committed.agg(
+        F.countDistinct("url").alias("url_count"),
+        F.count(F.lit(1)).alias("page_count"),
+        F.count(F.when(F.col("img_idx") >= 0, 1)).alias("ok_count"),
+        F.count(F.when(F.col("img_idx") < 0, 1)).alias("err_count"),
+    ).first()
+    got = tallied.agg(*[F.sum(k).alias(k) for k in want.asDict()]).first()
     assert got == want
     assert got.err_count == 2 and got.page_count > got.url_count
 
@@ -218,19 +222,6 @@ def test_task_audit_keyed_across_reruns(spark):
     assert set(tally.value) == _extraction_partitions(pages, 4)
     assert all(pid == row["partition_id"] for pid, row in tally.value.items())
     assert sum(row["page_count"] for row in tally.value.values()) == 10
-
-
-def test_audit_rows_cover_all_pages(spark):
-    pages = pages_from_documents(spark, SF_SMALL, limit=10)
-    res = extract_pages(pages, num_partitions=4)
-    audit = audit_rows(res, run_id="t")
-    agg = audit.agg(
-        F.sum("page_count").alias("pages"), F.sum("err_count").alias("errs")
-    ).first()
-    assert agg.pages == 10
-    assert agg.errs == 0
-    cols = set(audit.columns)
-    assert {"run_id", "partition_id", "det_ms", "rec_ms", "wall_ms", "ts"} <= cols
 
 
 def test_html_extraction_byte_identical(spark):

@@ -10,8 +10,8 @@ pass every value oracle and still fall over at 10^12 docs. Pin them.
 - The extraction pipeline must contain exactly one Exchange (the salted
   repartition) — a second one would double the shuffle volume of the
   dominant stage.
-- A resumed run_job is at most four Spark jobs: nothing reads back
-  what the run just wrote.
+- A resumed run_job is at most three Spark jobs, and a snapshot
+  streaming epoch is one: nothing reads back what was just written.
 """
 
 import re
@@ -93,6 +93,43 @@ def test_run_job_resumed_sink_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("run-job-shape")
     assert 0 < len(jobs) <= 3, jobs
     assert n == 16
+
+
+def test_snapshot_stream_epoch_job_count(spark, tmp_path, monkeypatch):
+    """A stream_extract_snapshot epoch is one Spark job, the results
+    write: its audit rows come from the extraction tasks' tally and the
+    driver writes and commits them. A read-back of the epoch's files or
+    a Spark-side audit aggregation adds jobs and fails this pin."""
+    from paddleocr_spark.sources.pages import pages_from_documents
+    from paddleocr_spark.streaming import pipeline as streaming
+
+    src, root = str(tmp_path / "pages"), str(tmp_path / "tbl")
+    pages_from_documents(spark, SF_SMALL, limit=8).coalesce(1).write.parquet(src)
+    sc = spark.sparkContext
+    inner = streaming.snapshot_batch_sink
+    groups = []
+
+    def counted_sink(*args):
+        sink = inner(*args)
+
+        def run(batch_df, batch_id):
+            groups.append(f"snapshot-epoch-{batch_id}")
+            sc.setJobGroup(groups[-1], "one snapshot streaming epoch")
+            try:
+                sink(batch_df, batch_id)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+
+        return run
+
+    monkeypatch.setattr(streaming, "snapshot_batch_sink", counted_sink)
+    streaming.stream_extract_snapshot(
+        spark, src, root, str(tmp_path / "ckpt"), num_partitions=4
+    ).awaitTermination()
+    assert groups
+    for group in groups:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1, (group, jobs)
 
 
 def test_bucketed_join_has_no_exchange(spark):

@@ -66,29 +66,46 @@ def test_concurrent_commit_retries_metadata_only(spark, tmp_path):
 
 
 def test_run_job_snapshot_atomic_and_idempotent(spark, tmp_path):
-    root = str(tmp_path / "tbl")
+    """Holds for plain table roots and for file:// URIs alike; any other
+    scheme is refused before a Spark job starts."""
     pages = pages_from_documents(spark, SF_SMALL, limit=10).cache()
-    out1 = snap.run_job_snapshot(
-        spark, pages.limit(6), root, num_partitions=4, run_id="s1"
-    )
-    assert out1["version"] == 1 and out1["rows"] == 6
-    m = snap.load_snapshot(root)
-    # ONE commit published results AND audit together
-    assert set(m["branches"]) == {"results", "audit"}
-    assert snap.read(spark, root, "audit").count() >= 1
-    out2 = snap.run_job_snapshot(spark, pages, root, num_partitions=4, run_id="s2")
-    assert out2["rows"] == 4
-    res = snap.read(spark, root)
-    assert res.count() == 10
-    assert res.select("url").distinct().count() == 10
-    # audit is incremental: run s2's rows count only its own 4 pages
-    audit = snap.read(spark, root, "audit")
-    s2 = audit.filter("run_id = 's2'").agg({"page_count": "sum"}).collect()[0][0]
-    assert s2 == 4
-    # fully-committed input: no-op, no empty snapshot
-    out3 = snap.run_job_snapshot(spark, pages, root, num_partitions=4, run_id="s3")
-    assert out3 == {"version": 2, "rows": 0, "run_id": "s3"}
-    assert snap.current_version(root) == 2
+    for root in (str(tmp_path / "plain"), (tmp_path / "uri").as_uri()):
+        out1 = snap.run_job_snapshot(
+            spark, pages.limit(6), root, num_partitions=4, run_id="s1"
+        )
+        assert out1["version"] == 1 and out1["rows"] == 6
+        m = snap.load_snapshot(root)
+        # ONE commit published results AND audit together
+        assert set(m["branches"]) == {"results", "audit"}
+        assert snap.read(spark, root, "audit").count() >= 1
+        out2 = snap.run_job_snapshot(
+            spark, pages, root, num_partitions=4, run_id="s2"
+        )
+        assert out2["rows"] == 4
+        res = snap.read(spark, root)
+        assert res.count() == 10
+        assert res.select("url").distinct().count() == 10
+        # audit is incremental: run s2's rows count only its own 4 pages
+        audit = snap.read(spark, root, "audit")
+        s2 = audit.filter("run_id = 's2'").agg({"page_count": "sum"}).collect()[0][0]
+        assert s2 == 4
+        # fully-committed input: no-op, no empty snapshot
+        out3 = snap.run_job_snapshot(
+            spark, pages, root, num_partitions=4, run_id="s3"
+        )
+        assert out3 == {"version": 2, "rows": 0, "run_id": "s3"}
+        assert snap.current_version(root) == 2
+
+    import pytest as _pytest
+
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-bad-root", "run_job_snapshot on an s3:// root")
+    try:
+        with _pytest.raises(ValueError, match="file://"):
+            snap.run_job_snapshot(spark, pages, "s3://bucket/tbl", resume=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("snapshot-bad-root") == []
     pages.unpersist()
 
 
@@ -279,87 +296,3 @@ def test_dedup_incremental_against_committed(spark, tmp_path):
     assert [r.url for r in s2.collect()] == ["u4"]
     snap.append(s2, root)
     assert snap.read(spark, root).count() == 3
-
-
-def _cap(spark, rows):
-    return spark.createDataFrame(
-        rows, "url string, warc_ts long, text string"
-    )
-
-
-def test_merge_latest_upsert_semantics(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    v1 = snap.append(
-        _cap(spark, [("a", 10, "a-old"), ("b", 10, "b0"), ("c", 10, "c0")]),
-        root,
-    )
-    v2 = snap.merge_latest(
-        spark,
-        _cap(spark, [("a", 20, "a-new"), ("d", 5, "d0"), ("b", 3, "b-stale")]),
-        root,
-    )
-    assert v2 == v1 + 1
-    got = {
-        r["url"]: (r["warc_ts"], r["text"])
-        for r in snap.read(spark, root).collect()
-    }
-    assert got == {
-        "a": (20, "a-new"),   # newer capture wins
-        "b": (10, "b0"),      # stale incoming loses
-        "c": (10, "c0"),      # untouched carries over
-        "d": (5, "d0"),       # brand-new key inserts
-    }
-    # time travel still shows the pre-merge state
-    old = {
-        r["url"]: r["text"]
-        for r in snap.read(spark, root, version=v1).collect()
-    }
-    assert old == {"a": "a-old", "b": "b0", "c": "c0"}
-
-
-def test_merge_latest_tie_goes_to_incoming(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    snap.append(_cap(spark, [("a", 10, "old")]), root)
-    snap.merge_latest(spark, _cap(spark, [("a", 10, "refetch")]), root)
-    got = snap.read(spark, root).collect()
-    assert [(r["url"], r["text"]) for r in got] == [("a", "refetch")]
-
-
-def test_merge_latest_is_content_idempotent(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    snap.append(_cap(spark, [("a", 10, "x"), ("b", 11, "y")]), root)
-    batch = _cap(spark, [("a", 20, "x2")])
-    snap.merge_latest(spark, batch, root)
-    first = sorted(map(tuple, snap.read(spark, root).collect()))
-    snap.merge_latest(spark, batch, root)
-    second = sorted(map(tuple, snap.read(spark, root).collect()))
-    assert first == second
-
-
-def test_merge_latest_conflicts_with_concurrent_append(spark, tmp_path):
-    import pytest as _pytest
-
-    root = str(tmp_path / "tbl")
-    snap.append(_cap(spark, [("a", 10, "x")]), root)
-    # simulate a writer landing between the merge's read and commit:
-    # grab the file list the merge would consume, append, then commit
-    # the rewrite against the stale expectation
-    b = snap.load_snapshot(root)["branches"]["results"]
-    consumed = [f["path"] for f in b["files"]]
-    snap.append(_cap(spark, [("z", 1, "zz")]), root)
-    merged = _cap(spark, [("a", 20, "x2")])
-    with _pytest.raises(RuntimeError, match="rewrite conflict"):
-        snap.commit(
-            root,
-            {"results": snap._write_branch(merged, root, "results")},
-            {},
-            replace={"results"},
-            expect_files={"results": consumed},
-        )
-
-
-def test_merge_latest_empty_table_bootstraps(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    v = snap.merge_latest(spark, _cap(spark, [("a", 1, "x")]), root)
-    assert v == 1
-    assert [r["url"] for r in snap.read(spark, root).collect()] == ["a"]

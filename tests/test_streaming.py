@@ -1,6 +1,6 @@
 """Structured Streaming extraction: checkpointed incremental processing
 (only new files per run), text parity with the batch oracle, and the
-foreachBatch audit sink."""
+foreachBatch audit sinks."""
 
 import os
 
@@ -70,21 +70,33 @@ def test_stream_extract_incremental_checkpoint(spark, tmp_path):
 
 
 def test_stream_extract_with_audit(spark, tmp_path):
+    """Ten landing files drain in two epochs (maxFilesPerTrigger is 8).
+    Each epoch's audit comes from its own extraction tasks: at most one
+    row per extraction partition, none carried over from the epoch
+    before, the pages of all epochs sum to the committed rows, and
+    wall_ms is task wall time, which covers the stage timers."""
     src = str(tmp_path / "pages")
     out = str(tmp_path / "results")
     audit = str(tmp_path / "audit")
     ckpt = str(tmp_path / "ckpt")
 
-    n = _write_batch(spark, src, 0, 10)
+    n = sum(_write_batch(spark, src, lo, lo + 2) for lo in range(0, 20, 2))
     q = stream_extract_with_audit(spark, src, out, audit, ckpt, num_partitions=4)
     q.awaitTermination()
 
     assert spark.read.parquet(out).count() == n
-    audit_df = spark.read.parquet(audit)
-    rows = audit_df.collect()
-    assert rows, "audit rows written per epoch"
-    assert all(r.run_id.startswith("epoch-") for r in rows)
+    rows = spark.read.parquet(audit).collect()
+    epochs: dict[str, list] = {}
+    for r in rows:
+        epochs.setdefault(r.run_id, []).append(r)
+    assert len(epochs) >= 2, sorted(epochs)
+    assert all(run_id.startswith("epoch-") for run_id in epochs)
+    for epoch in epochs.values():
+        pids = [r.partition_id for r in epoch]
+        assert len(pids) <= 4 and len(set(pids)) == len(pids)
     assert sum(r.page_count for r in rows) == n
+    for r in rows:
+        assert r.wall_ms >= r.decode_ms + r.det_ms + r.rec_ms
 
 
 def test_stream_stateful_dedup_merges_state_across_batches(spark, tmp_path):
@@ -132,6 +144,7 @@ def test_snapshot_sink_exactly_once_on_replay(spark, tmp_path):
     a crash between sink and checkpoint cannot duplicate rows — and
     results+audit always land in the SAME snapshot version."""
     from paddleocr_spark.plans import snapshots as snap
+    from paddleocr_spark.plans.pipeline import task_audit
     from paddleocr_spark.streaming.pipeline import (
         snapshot_batch_sink,
         stream_extract_snapshot,
@@ -151,76 +164,13 @@ def test_snapshot_sink_exactly_once_on_replay(spark, tmp_path):
     # same epoch id, same rows, delivered again
     last_epoch = int(snap.watermark(root, key="batch_id"))
     replay = snap.read(spark, root)  # same rows the epoch committed
-    snapshot_batch_sink(root)(replay, last_epoch)
+    snapshot_batch_sink(root, task_audit(spark))(replay, last_epoch)
     assert snap.current_version(root) == v_drained  # no new snapshot
     assert snap.read(spark, root).count() == n1  # no duplicates
 
     # a genuinely NEW epoch still commits
-    snapshot_batch_sink(root)(replay.limit(3), last_epoch + 1)
+    snapshot_batch_sink(root, task_audit(spark))(
+        replay.limit(3), last_epoch + 1
+    )
     assert snap.current_version(root) == v_drained + 1
     assert snap.read(spark, root).count() == n1 + 3
-
-
-def test_stream_windowed_watermark_counts(spark, tmp_path):
-    """Watermarked tumbling-window agg: append-mode output == batch
-    GROUP BY restricted to windows the final watermark closed, and a
-    restart with more (later) data closes exactly the newly-passed
-    windows — no duplicates, no reopened windows."""
-    from paddleocr_spark.streaming.pipeline import (
-        stream_windowed_host_counts,
-    )
-
-    src = str(tmp_path / "pages")
-    out = str(tmp_path / "winres")
-    ckpt = str(tmp_path / "winckpt")
-    win, delay = 600, 1800
-
-    def expected(hi):
-        docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").filter(
-            F.col("doc_id") < hi
-        )
-        pg = docs.select(
-            F.expr("lower(concat(source, '.example.test'))").alias("host"),
-            F.expr(
-                "timestamp'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0, (doc_id*37) % 2592000)"
-            ).alias("warc_ts"),
-        )
-        cutoff = pg.agg(F.max("warc_ts")).collect()[0][0]
-        return {
-            (r.host, r.w_start, r.w_end): r.n_caps
-            for r in pg.groupBy(
-                F.window("warc_ts", f"{win} seconds").alias("w"), "host"
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n_caps"))
-            .select(
-                "host",
-                F.col("w.start").alias("w_start"),
-                F.col("w.end").alias("w_end"),
-                "n_caps",
-            )
-            .collect()
-            if (cutoff - r.w_end).total_seconds() >= delay
-        }
-
-    _write_batch(spark, src, 0, 200)
-    stream_windowed_host_counts(
-        spark, src, out, ckpt, window_secs=win, delay_secs=delay
-    ).awaitTermination()
-    got1 = {
-        (r.host, r.w_start, r.w_end): r.n_caps
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got1 == expected(200) and got1
-
-    # later captures restart the query from the checkpoint: watermark
-    # advances, strictly more windows close, earlier emissions stand
-    _write_batch(spark, src, 200, 400)
-    stream_windowed_host_counts(
-        spark, src, out, ckpt, window_secs=win, delay_secs=delay
-    ).awaitTermination()
-    got2 = {
-        (r.host, r.w_start, r.w_end): r.n_caps
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got2 == expected(400)
-    assert set(got1) <= set(got2)
