@@ -22,8 +22,9 @@ no onnxruntime/cv2); the Spark-side plumbing — Arrow batching, partitioning,
 schemas, session caching — is the real engine and is what scales to a
 cluster. Real ONNX weights are a drop-in behind the same interfaces.
 
-Imported inside a Spark task, the package freezes its Python worker's
-heap once (`_freeze_worker_heap`).
+Imported inside a Spark task, the package tunes its Python worker once
+(`_tune_worker`): it guards the worker's zip finders
+(`tuning.guard_zip_finders`) and freezes its heap.
 """
 
 import gc
@@ -32,23 +33,30 @@ import sys
 __version__ = "0.1.0"
 
 
-def _freeze_worker_heap() -> None:
-    """In a Python worker running a Spark task, collect once and move
-    every surviving object to the GC's permanent generation. pyspark's
-    daemon runs a full gc.collect() after each task of a reused worker,
-    and without the freeze every collect re-scans the worker's
-    import-time heap (tens of thousands of objects). Runs once per
-    process, because the package is imported once. A no-op on the
-    driver and in plain Python, and it never imports pyspark itself, so
-    the kernels stay importable without Spark."""
+def _tune_worker() -> None:
+    """In a Python worker running a Spark task, install the zip-finder
+    guard, then collect once and move every surviving object to the
+    GC's permanent generation.
+
+    pyspark's worker re-reads every cached zip archive before each task
+    unless the guard is in place, and its daemon runs a full
+    gc.collect() after each task of a reused worker; without the freeze
+    every collect re-scans the worker's import-time heap (tens of
+    thousands of objects). Runs once per process, because the package is
+    imported once (the guard also refuses to install twice). A no-op on
+    the driver and in plain Python, and it never imports pyspark itself,
+    so the kernels stay importable without Spark."""
     if "pyspark" not in sys.modules:
         return
     from pyspark import TaskContext
 
     if TaskContext.get() is None:
         return
+    from paddleocr_spark.tuning import guard_zip_finders
+
+    guard_zip_finders()
     gc.collect()
     gc.freeze()
 
 
-_freeze_worker_heap()
+_tune_worker()

@@ -985,70 +985,9 @@ def decontaminate_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def content_fingerprint(col):
     """md5 of lowercase alnum-collapsed text — the same normalization as
-    doc_fingerprints (functions/text.py), shared by the incremental
-    path."""
+    doc_fingerprints (functions/text.py) and CONTENT_FP_SQL."""
     return F.md5(
         F.trim(F.lower(F.regexp_replace(col, r"[^A-Za-z0-9]+", " ")))
-    )
-
-
-def dedup_incremental(
-    spark: SparkSession,
-    delta: DataFrame,
-    root: str,
-    branch: str = "results",
-    text_col: str = "extracted_text",
-    key_col: str = "url",
-    bloom_bits: int = 1 << 17,
-) -> DataFrame:
-    """Per-epoch incremental dedup — the composition an incremental
-    crawl actually runs: the new batch (`delta`) is deduplicated
-    (a) against everything already COMMITTED to the snapshot table at
-    `root` and (b) within itself (keep the smallest key). Returns the
-    surviving delta rows, ready to append as the next snapshot.
-
-    Shape: fingerprint both sides with the shared normalization ->
-    one groupBy within the delta (keep min key per fingerprint) ->
-    LEFT ANTI join against committed fingerprints. The committed side
-    is a projection of two columns off the snapshot read, so column
-    pruning reaches the parquet scan; at 10^12 committed docs the
-    anti-join is the shuffle, so a Bloom filter of the committed
-    fingerprints (`functions/bloom.py`, on by default) is probed on the
-    delta first: definite-new rows skip the exchange, and the bloom
-    build needs no distinct (bit_or is idempotent). Results are
-    byte-identical with the filter on or off (no false negatives); a
-    dedicated fingerprint branch in the table would additionally skip
-    re-reading text. Pairs with
-    `plans/snapshots.read_changes`: a resumed pipeline fingerprints
-    only the delta, never re-reads its own history per epoch."""
-    from paddleocr_spark.plans import snapshots as _snap
-
-    d = delta.withColumn("_fp", content_fingerprint(F.col(text_col)))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("_fp").orderBy(key_col)
-    d = (
-        d.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    if _snap.current_version(root) == 0:
-        return d.drop("_fp")  # first epoch: nothing committed yet
-    committed = _snap.read(spark, root, branch=branch)
-    if committed.isEmpty():
-        return d.drop("_fp")
-    seen = committed.select(
-        content_fingerprint(F.col(text_col)).alias("_seen_fp")
-    ).distinct()
-    if bloom_bits:
-        from paddleocr_spark.functions.bloom import bloom_pruned_anti_join
-
-        return bloom_pruned_anti_join(
-            d, "_fp", seen, "_seen_fp", bloom_bits
-        ).drop("_fp")
-    return (
-        d.join(seen, d["_fp"] == seen["_seen_fp"], "left_anti")
-        .drop("_fp")
     )
 
 
@@ -1189,106 +1128,6 @@ def paragraph_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("k"),
         F.concat_ws("|", "n_paras", "n_removed", "cleaned_text").alias("v"),
     )
-
-
-# --- incremental near-dup ingestion (committed band index) ---------------
-
-
-def doc_signatures(docs: DataFrame) -> DataFrame:
-    """MinHash signatures for an ARBITRARY (doc_id, text) frame — the
-    same hash family as minhash_signatures, which reads the corpus
-    table. The unit the incremental path signs new batches with."""
-    sh = _shingled(docs)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"h{i}")
-        for i in range(NUM_HASHES)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
-def banded_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket, pfx): the LSH band keys of a signature
-    frame, plus the 2-hex bucket prefix used as the committed index's
-    partition column."""
-    n_bands = NUM_HASHES // BAND_ROWS
-    stack_args = ", ".join(
-        f"{b}, md5(concat_ws('|', "
-        + ", ".join(f"h{b * BAND_ROWS + r}" for r in range(BAND_ROWS))
-        + "))"
-        for b in range(n_bands)
-    )
-    return sig.selectExpr(
-        "doc_id", f"stack({n_bands}, {stack_args}) AS (band, bucket)"
-    ).withColumn("pfx", F.substring("bucket", 1, 2))
-
-
-def write_band_index(
-    spark: SparkSession, docs: DataFrame, out_path: str
-) -> int:
-    """Persist the banded LSH key index of `docs`, partitioned by the
-    2-hex bucket prefix — the committed artifact a crawl increment
-    probes. Returns the number of index rows written.
-
-    Partitioning rationale: `band` has only NUM_HASHES/BAND_ROWS
-    values (no pruning power); the bucket PREFIX has 256, and an
-    increment's distinct prefixes are bounded by batch_size x bands —
-    so the probe join reads only the matching 1/256 slices of a
-    10^12-row committed index (static partition pruning, pinned by
-    test via inputFiles)."""
-    banded_keys(doc_signatures(docs)).write.mode("overwrite").partitionBy(
-        "pfx"
-    ).parquet(out_path)
-    return spark.read.parquet(out_path).count()
-
-
-def incremental_neardup_pairs(
-    spark: SparkSession, new_docs: DataFrame, index_path: str
-) -> DataFrame:
-    """Candidate near-dup pairs for a NEW batch against a committed
-    corpus, without touching committed-vs-committed: (doc_id, dup_of,
-    src) where src='committed' pairs the new doc with an indexed doc
-    and src='batch' pairs two new docs (doc_id < dup_of). The daily
-    crawl-increment path: the committed side is NEVER re-signed — only
-    its index partitions matching the batch's bucket prefixes are
-    read.
-
-    Shape: sign the batch (batch-sized), collect its <=256 distinct
-    prefixes (bounded driver scalar), statically prune the committed
-    index scan to those partitions, one equi-join on (band, bucket) +
-    one within-batch self-join."""
-    nb = banded_keys(doc_signatures(new_docs)).localCheckpoint()
-    pfxs = [r["pfx"] for r in nb.select("pfx").distinct().collect()]
-    idx = spark.read.parquet(index_path).where(F.col("pfx").isin(pfxs))
-    cross = (
-        nb.alias("n")
-        .join(
-            idx.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.bucket") == F.col("c.bucket")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_id"),
-            F.col("c.doc_id").alias("dup_of"),
-            F.lit("committed").alias("src"),
-        )
-        .distinct()
-    )
-    within = (
-        nb.alias("l")
-        .join(
-            nb.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_id"),
-            F.col("r.doc_id").alias("dup_of"),
-            F.lit("batch").alias("src"),
-        )
-        .distinct()
-    )
-    return cross.unionByName(within)
 
 
 # ---------------------------------------------------------------------------

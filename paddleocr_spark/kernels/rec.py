@@ -63,6 +63,12 @@ class RecConfig:
     space_gap_w: int = 20
 
 
+# Width at rec height of a glyph cell with ink in all five font columns
+# (the dash is one) on a line holding full-height glyphs: the scale at
+# which space_gap_w holds.
+FULL_CELL_W = 16
+
+
 class RecModel:
     """Deterministic recognition head emitting CTC-style [T, C] probs."""
 
@@ -130,11 +136,17 @@ class RecModel:
             conf = np.where(flat, np.float32(0.95), conf).astype(np.float32)
         # one [frame, frame, blank] triple per emitted symbol; a gap wider
         # than space_gap_w between kept cells inserts a space triple
-        # (class 1) — how the decoded text recovers rendered word breaks
+        # (class 1) — how the decoded text recovers rendered word breaks.
+        # An all-flat line's crop is only the bar tall, so the resize
+        # magnifies its cells and gaps several times over: measure its
+        # gaps against its own cells, scaled to a full-height line's.
+        space_w = float(self.cfg.space_gap_w)
+        if flat.all():
+            space_w *= np.mean([c1 - c0 for c0, c1 in spans]) / FULL_CELL_W
         sym_class = [2 + int(best[0])]
         sym_conf = [conf[0]]
         for gi in range(1, k):
-            if spans[gi][0] - spans[gi - 1][1] >= self.cfg.space_gap_w:
+            if spans[gi][0] - spans[gi - 1][1] >= space_w:
                 sym_class.append(1)  # space class
                 sym_conf.append(np.float32(0.95))
             sym_class.append(2 + int(best[gi]))

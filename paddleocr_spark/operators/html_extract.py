@@ -660,45 +660,6 @@ def extract_image_pairs(html: str) -> list[tuple[str, str, str]]:
     return out
 
 
-def image_text_pairs(spark, sf_dir: str, pages=None):
-    """(doc_id, src, text, via) per usable image: the image-text pair
-    table a multimodal (CLIP-style) training pipeline downloads from.
-    text = alt when non-blank else the enclosing figcaption; images
-    with neither (trackers, spacer gifs, empty-alt thumbnails) are
-    dropped — the LAION harvesting rule. Narrow mapInPandas over the
-    shared pages frame (1 page -> N pair rows, zero shuffles); rides
-    the scan partitioning at any corpus size."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ids, srcs, txts, vias = [], [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                for src, alt, cap in extract_image_pairs(
-                    bytes(blob).decode("utf-8")
-                ):
-                    text = alt.strip() or cap.strip()
-                    if not text:
-                        continue
-                    ids.append(doc_id)
-                    srcs.append(src)
-                    txts.append(text)
-                    vias.append("alt" if alt.strip() else "figcaption")
-            yield pd.DataFrame(
-                {"doc_id": ids, "src": srcs, "text": txts, "via": vias}
-            )
-
-    return pages.mapInPandas(
-        run, schema="doc_id string, src string, text string, via string"
-    )
-
-
 def img_pairs_rows(spark, sf_dir: str, pages=None):
     """(op='img_pairs', k=doc_id, v=n_imgs|n_kept|sorted src~text pairs)
     suite row: per-doc image census (every <img src>) plus the kept

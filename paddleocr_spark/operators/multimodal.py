@@ -11,8 +11,8 @@ carries.
 Real here (the container has numpy + our PNG codec):
 - `image_meta`: parse PNG IHDR width/height/bit-depth straight from the
   payload header — no full decode, so the scan stays cheap.
-- `image_resize_feature`: decode + adaptive-pool to an 8x8 intensity
-  grid (a perceptual-hash-style feature), via the kernel library.
+- `image_resize_feature`: full decode to the image's dimensions and
+  exact mean intensity, via the kernel library.
 - `frame_sample`: explode a multi-page PDF (kernels/pdf) to
   one row per k-th frame — the video-frame-sampling plan shape
   (posexplode + modulo filter BEFORE the heavy per-frame work).
@@ -21,8 +21,6 @@ Uncompressed audio/video decode is REAL in operators/media.py (RIFF
 WAVE PCM + YUV4MPEG2 need no codec library); `_decode_media` below
 stays as the documented swap point for compressed codecs (mp3/h264 ->
 soundfile/PyAV), with a deterministic fake for plumbing tests.
-`media_feature_stub` is that plumbing's test harness and is no longer a
-queries() entry.
 """
 
 from __future__ import annotations
@@ -116,31 +114,6 @@ FROM documents
 """
 
 
-def image_grid_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode + 8x8 adaptive-pool intensity grid per image (the
-    perceptual-hash-style feature that feeds embedding dedup). Raw
-    array<double> surface — NOT a queries() entry (the driver's
-    canonicalizer cannot hash list cells); the gate-safe scalar twin is
-    `image_resize_feature` below, and the pool kernel itself is
-    pytest-verified against a naive reference."""
-    pages = _pages(spark, sf_dir).select("url", "html")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.imageops import adaptive_avg_pool
-        from paddleocr_spark.kernels.png import decode_gray_png
-
-        for pdf in batches:
-            urls, feats = [], []
-            for url, b in zip(pdf["url"], pdf["html"]):
-                img = decode_gray_png(bytes(b))
-                grid = adaptive_avg_pool(img.astype(np.float64), 8, 8)
-                urls.append(url)
-                feats.append([float(x) for x in grid.ravel()])
-            yield pd.DataFrame({"url": urls, "grid": feats})
-
-    return pages.mapInPandas(run, schema="url string, grid array<double>")
-
-
 def image_resize_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-decode feature scan with a STRICT oracle: per image the
     decoded dimensions and the exact global mean intensity. The mean
@@ -153,16 +126,12 @@ def image_resize_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _pages(spark, sf_dir).select("url", "html")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.imageops import adaptive_avg_pool
         from paddleocr_spark.kernels.png import decode_gray_png
 
         for pdf in batches:
             urls, ws, hs, means = [], [], [], []
             for url, b in zip(pdf["url"], pdf["html"]):
                 img = decode_gray_png(bytes(b))
-                # the pooled grid is computed on the same path (exercised
-                # per batch, consumed by image_grid_features / dedup)
-                adaptive_avg_pool(img.astype(np.float64), 8, 8)
                 h, w = img.shape
                 urls.append(url)
                 ws.append(int(w))
@@ -262,27 +231,6 @@ def _frame_sample_sql() -> str:
 
 _L300 = "length(upper(substring(regexp_replace(text, '[^a-zA-Z0-9]', '', 'g'), 1, 300)))"
 FRAME_SAMPLE_SQL = _frame_sample_sql()
-
-
-def media_feature_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio/video feature extraction with the deterministic fake decoder:
-    schema/batching/partitioning real, codec stubbed (rows-only check)."""
-    pages = _pages(spark, sf_dir).select("url", "html")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs = [_decode_media(bytes(b), "audio", fake=True) for b in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "rms": [float(np.sqrt((s ** 2).mean())) for s in sigs],
-                    "n_samples": [len(s) for s in sigs],
-                }
-            )
-
-    return pages.mapInPandas(
-        run, schema="url string, rms double, n_samples long"
-    )
 
 
 def _image_signatures(

@@ -18,7 +18,11 @@ Scale notes (the parts that matter at 10^12 docs / 1000 executors):
   worker — the reference caches predictors the same way
   (tools/infer/utility.py create_predictor called once per process).
   With real ONNX weights this is where the broadcast bytes get
-  materialized into a session.
+  materialized into a session. Each task installs the broadcast weights
+  and restores the worker's models when it ends (`_ocr_batches`); the
+  worker itself is tuned once, when a task first imports the package
+  (paddleocr_spark._tune_worker), so the stage carries no per-task
+  worker fix of its own.
 - Results carry per-row stage timings. Every extraction writer, batch
   (`run_job`, snapshots.run_job_snapshot) or streaming (the
   streaming/pipeline.py foreachBatch sinks), takes the lineage/audit
@@ -44,8 +48,6 @@ import pandas as pd
 from pyspark import Accumulator, AccumulatorParam, TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from paddleocr_spark.tuning import release_zip_importers
 
 RESULTS_SCHEMA = (
     "url string, img_idx int, "
@@ -114,22 +116,54 @@ def _get_engine():
 def _ocr_batches(
     batches: Iterator[pd.DataFrame],
     page_limit: int,
-    orient: bool = False,
-    weights_bc=None,
+    orient: bool,
+    weights_bc,
     tally: Accumulator | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """One extraction task. With a `tally` (from `task_audit`),
-    a task that runs to the end adds its audit row, keyed by its
-    partition; its wall_ms is the task's wall time in this worker.
-    However it ends, release the worker's cached zip importers on the
-    way out, so the next task's per-task importlib.invalidate_caches()
-    has no archive to re-read (tuning.release_zip_importers)."""
+    """One extraction task: install the broadcast model weights, run the
+    OCR loop, then restore the worker's models.
+
+    Install-and-restore (not install-forever): python workers are reused
+    across queries, and a task must not leak its weights into later
+    tasks that bypass extract_pages. This is the ship-weights-once
+    deployment pattern (north_star 'broadcast model weights'). An ONNX
+    bundle becomes per-process cached sessions (onnx_rt.session_for, the
+    create_predictor analogue) swapped into the worker's engine
+    singleton; any other blob is font templates.
+
+    With a `tally` (from `task_audit`), a task that runs to the end adds
+    its audit row, keyed by its partition; its wall_ms is the task's
+    wall time in this worker."""
+    from paddleocr_spark.kernels import font
+    from paddleocr_spark.kernels.onnx_models import (
+        OnnxClsModel,
+        is_onnx_bundle,
+        onnx_engine_models,
+        split_onnx_bundle,
+    )
+    from paddleocr_spark.kernels.onnx_rt import session_for
+
     t0 = time.perf_counter()
+    blob = weights_bc.value
+    engine = _get_engine()
+    saved = (
+        engine.det_model,
+        engine.rec_model,
+        getattr(engine, "cls_model", None),
+        font.TEMPLATES,
+    )
     counted: list[pd.DataFrame] = []
     try:
-        for frame in _ocr_batches_weighted(
-            batches, page_limit, orient, weights_bc
-        ):
+        if is_onnx_bundle(blob):
+            parts = split_onnx_bundle(blob)
+            engine.det_model, engine.rec_model = onnx_engine_models(
+                parts[0], parts[1], engine.cfg.det, engine.cfg.rec
+            )
+            if len(parts) > 2:  # three-model bundle: det + rec + cls
+                engine.cls_model = OnnxClsModel(session_for(parts[2]))
+        else:
+            font.load_weights(blob)
+        for frame in _ocr_batches_run(batches, page_limit, orient):
             if tally is not None:
                 counted.append(frame[_TALLIED])
             yield frame
@@ -137,68 +171,12 @@ def _ocr_batches(
             wall_ms = (time.perf_counter() - t0) * 1000.0
             tally.add(_tally_task(counted, wall_ms))
     finally:
-        release_zip_importers()
-
-
-def _ocr_batches_weighted(
-    batches: Iterator[pd.DataFrame],
-    page_limit: int,
-    orient: bool = False,
-    weights_bc=None,
-) -> Iterator[pd.DataFrame]:
-    """Install broadcast model weights for the duration of this task,
-    then run the OCR loop. Install-and-restore (not install-forever):
-    python workers are reused across queries, and a task must not leak
-    its weights into later tasks that bypass extract_pages. This is the
-    ship-weights-once deployment pattern (north_star 'broadcast model
-    weights'); with ONNX models the session would load the broadcast
-    bytes here."""
-    if weights_bc is None:
-        yield from _ocr_batches_run(batches, page_limit, orient)
-        return
-    blob = weights_bc.value
-    from paddleocr_spark.kernels.onnx_models import (
-        is_onnx_bundle,
-        onnx_engine_models,
-        split_onnx_bundle,
-    )
-
-    if is_onnx_bundle(blob):
-        # ONNX bundle: materialize per-process cached sessions from the
-        # broadcast bytes (onnx_rt.session_for — the create_predictor
-        # analogue) and swap them into the worker's engine singleton for
-        # the duration of this task; restore after, since workers are
-        # reused across queries.
-        from paddleocr_spark.kernels.onnx_rt import session_for
-
-        engine = _get_engine()
-        parts = split_onnx_bundle(blob)
-        det_b, rec_b = parts[0], parts[1]
-        prev_models = (
+        (
             engine.det_model,
             engine.rec_model,
-            getattr(engine, "cls_model", None),
-        )
-        engine.det_model, engine.rec_model = onnx_engine_models(
-            det_b, rec_b, engine.cfg.det, engine.cfg.rec
-        )
-        if len(parts) > 2:  # three-model bundle: det + rec + cls
-            from paddleocr_spark.kernels.onnx_models import OnnxClsModel
-
-            engine.cls_model = OnnxClsModel(session_for(parts[2]))
-        try:
-            yield from _ocr_batches_run(batches, page_limit, orient)
-        finally:
-            engine.det_model, engine.rec_model, engine.cls_model = prev_models
-        return
-    from paddleocr_spark.kernels import font as _font
-
-    prev = _font.TEMPLATES
-    _font.load_weights(blob)
-    try:
-        yield from _ocr_batches_run(batches, page_limit, orient)
-    finally:
-        _font.TEMPLATES = prev
+            engine.cls_model,
+            font.TEMPLATES,
+        ) = saved
 
 
 def _sniff_html(payload: bytes) -> bool:

@@ -5,8 +5,9 @@ pairs grouped by basename, streamed sequentially by dataloaders; the
 format LAION and DataComp ship in).
 
 This is the multimodal twin of `plans/curate.py`'s lang-partitioned
-parquet shards: after `image_text_pairs` mining + curation, a training
-run wants tars, not parquet — sequential reads, no row-group decode,
+parquet shards: after image-text pair mining
+(`html_extract.extract_image_pairs`) + curation, a training run wants
+tars, not parquet — sequential reads, no row-group decode,
 dataloader-native.
 
 Determinism contract (training shards must be reproducible builds):

@@ -16,8 +16,9 @@ free space, with an env opt-out (round-4 advice item).
 
 `driver_memory` sizes the local-mode driver heap from the host's RAM,
 and `cpus` is the core count a local run uses.
-`release_zip_importers` runs in the Python workers: it drops the cached
-zip finders a reused worker would otherwise re-read before every task."""
+`guard_zip_finders` runs once in each Python worker: it stops the
+worker re-reading Spark's and pyspark's zip archives before every
+task."""
 
 from __future__ import annotations
 
@@ -141,41 +142,33 @@ def local_session(cores: int, app: str):
     return spark
 
 
-def _spark_files_root() -> str | None:
-    """SparkFiles.getRootDirectory(), or None where it cannot be known
-    (no SparkContext on a driver, pyspark absent)."""
-    try:
-        from pyspark.core.files import SparkFiles
-
-        return SparkFiles.getRootDirectory()
-    except Exception:  # runs in a task's finally: never fail the task over it
-        return None
-
-
-def release_zip_importers() -> int:
-    """Drop every cached `zipimporter` from sys.path_importer_cache,
-    except those of archives under the SparkFiles root; return how many
-    were dropped.
+def guard_zip_finders() -> None:
+    """Make `zipimporter.invalidate_caches` re-read only archives under
+    the SparkFiles root; install once per process.
 
     pyspark's worker calls importlib.invalidate_caches() before every
     task (worker_util.setup_spark_files), and on CPython < 3.13 each
     cached zipimporter then re-reads its whole archive directory. A
     reused worker caches one per package path it imported from: the
     Spark core jar, pyspark.zip (once per subpackage) and py4j, about
-    200 ms of CPU per task on a 4-core host. Once the entries are gone
-    that call has nothing to re-read. Imports stay the same: PathFinder
-    rebuilds a dropped finder on demand from zipimport's own directory
-    cache, without reading the archive. Archives under the SparkFiles
-    root (addPyFile zips) keep their finders, so a re-shipped zip is
-    still refreshed."""
-    root = _spark_files_root()
-    prefix = os.path.join(root, "") if root else None
-    dropped = 0
-    for key, finder in list(sys.path_importer_cache.items()):
-        if not isinstance(finder, zipimport.zipimporter):
-            continue
-        if prefix and finder.archive.startswith(prefix):
-            continue
-        if sys.path_importer_cache.pop(key, None) is not None:
-            dropped += 1
-    return dropped
+    200 ms of CPU per task on a 4-core host, whatever the task's UDF.
+    Those archives do not change while the worker lives, so the guard
+    skips them; archives under the SparkFiles root (addPyFile zips) are
+    still refreshed. Imports are unchanged: the finders stay cached.
+    Called from the package's import-time hook inside a task (see
+    paddleocr_spark/__init__.py), never on a driver. CPython 3.13 made
+    the refresh lazy, so there it installs nothing."""
+    if sys.version_info >= (3, 13):
+        return
+    refresh = zipimport.zipimporter.invalidate_caches
+    if getattr(refresh, "spark_files_only", False):
+        return  # already guarded (a reload re-runs the hook)
+    from pyspark.core.files import SparkFiles
+
+    def invalidate_caches(self):
+        root = os.path.join(SparkFiles.getRootDirectory(), "")
+        if self.archive.startswith(root):
+            refresh(self)
+
+    invalidate_caches.spark_files_only = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

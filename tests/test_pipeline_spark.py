@@ -523,11 +523,12 @@ def test_pdf_text_triage_routes_without_ocr(spark):
 
 
 def test_reused_workers_import_after_zip_importer_release(spark):
-    """Every extraction task drops its worker's cached zip importers on
-    the way out (tuning.release_zip_importers). A rerun on the same,
-    reused workers must give identical rows, and a later task must still
-    import a pyspark submodule its worker has never loaded: PathFinder
-    rebuilds the dropped finder from zipimport's directory cache."""
+    """A worker that imports the package guards its zip finders
+    (tuning.guard_zip_finders): before each later task they are no
+    longer re-read. A rerun on the same, reused workers must give
+    identical rows, and a later task must still import a pyspark
+    submodule its worker has never loaded, from the finder's directory
+    read when the worker first imported from that archive."""
     pages = pages_from_documents(spark, SF_SMALL, limit=16)
     cols = ["url", "img_idx", "extracted_text", "n_spans", "spans"]
 

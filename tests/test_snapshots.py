@@ -268,31 +268,3 @@ def test_expire_snapshots_on_missing_table_is_noop(tmp_path):
     """--maintain --expire-keep on a mistyped/empty root must not crash
     (compact already tolerates it; expire must match)."""
     assert snap.expire_snapshots(str(tmp_path / "nope"), keep_last=2) == []
-
-
-def test_dedup_incremental_against_committed(spark, tmp_path):
-    """The per-epoch composition: a new batch is deduped within itself
-    (min url wins) and against every committed snapshot, so replayed or
-    recrawled content never lands twice."""
-    from paddleocr_spark.functions.dedup import dedup_incremental
-
-    root = str(tmp_path / "tbl")
-
-    def batch(rows):
-        return spark.createDataFrame(
-            rows, "url string, extracted_text string"
-        )
-
-    # epoch 1 on an EMPTY table: intra-batch dup collapses to min url
-    b1 = batch([("u2", "HELLO WORLD"), ("u1", "hello, world!"),
-                ("u3", "unique one")])
-    s1 = dedup_incremental(spark, b1, root)
-    assert sorted(r.url for r in s1.collect()) == ["u1", "u3"]
-    snap.append(s1, root)
-
-    # epoch 2: one replayed doc (same content, new url), one new
-    b2 = batch([("u9", "HELLO... world"), ("u4", "fresh content")])
-    s2 = dedup_incremental(spark, b2, root)
-    assert [r.url for r in s2.collect()] == ["u4"]
-    snap.append(s2, root)
-    assert snap.read(spark, root).count() == 3

@@ -1,10 +1,10 @@
 """paddleocr_spark/tuning.py: the tmpfs shuffle-dir probe must be
 gated on free space and honor the opt-out (round-4 advice — a
 memory-tight container must never point shuffle spill at RAM); the
-zip-importer release must leave imports working and the next
-invalidate_caches() nothing to re-read; the session recipe must size a
-local run and leave deployment-owned settings out of SESSION_CONF; a
-Python worker freezes its heap once, the driver never."""
+zip-finder guard must re-read only SparkFiles archives and leave
+imports working; the session recipe must size a local run and leave
+deployment-owned settings out of SESSION_CONF; a Python worker guards
+its zip finders and freezes its heap once, the driver never."""
 
 import gc
 import importlib
@@ -29,8 +29,8 @@ from paddleocr_spark.tuning import (
     SESSION_CONF,
     cpus,
     driver_memory,
+    guard_zip_finders,
     local_conf,
-    release_zip_importers,
     tmpfs_shuffle_dir,
 )
 
@@ -138,102 +138,124 @@ def _count_directory_reads(monkeypatch):
     return reads
 
 
+PRE_313 = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="CPython 3.13 refreshes zip finders lazily; no guard installed",
+)
+
+
+@pytest.fixture
+def guarded(monkeypatch):
+    """guard() installs the zip-finder guard and checks it is never
+    wrapped twice; the monkeypatch undoes it after the test."""
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+
+    def guard():
+        guard_zip_finders()
+        installed = zipimport.zipimporter.invalidate_caches
+        guard_zip_finders()
+        assert zipimport.zipimporter.invalidate_caches is installed
+
+    return guard
+
+
+@PRE_313
 def test_release_drops_zip_finder_and_imports_still_resolve(
-    plant_zip, tmp_path, monkeypatch
+    plant_zip, guarded, tmp_path, monkeypatch
 ):
-    archive, (_, name_b) = plant_zip(tmp_path / "lib", str(tmp_path / "files"))
-    assert release_zip_importers() >= 1
-    assert archive not in sys.path_importer_cache
+    """Under the guard every zip finder stays cached and still resolves
+    the archive's other module, without re-reading the archive."""
+    root = tmp_path / "files"
+    shipped, (_, shipped_b) = plant_zip(root, str(root))
+    other, (_, other_b) = plant_zip(tmp_path / "lib", str(root))
+    guarded()
     reads = _count_directory_reads(monkeypatch)
-    mod_b = importlib.import_module(name_b)
-    assert mod_b.NAME == name_b
-    assert mod_b.__file__.startswith(archive)
-    # the finder is rebuilt from zipimport's directory cache, not re-read
-    assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
+    for archive, name in ((shipped, shipped_b), (other, other_b)):
+        mod = importlib.import_module(name)
+        assert mod.NAME == name and mod.__file__.startswith(archive)
+        assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
     assert reads == []
 
 
-def test_next_invalidate_caches_reads_no_archive(plant_zip, tmp_path, monkeypatch):
-    archive, _ = plant_zip(tmp_path / "lib", None)
+@PRE_313
+def test_next_invalidate_caches_reads_no_archive(
+    plant_zip, guarded, tmp_path, monkeypatch
+):
+    archive, _ = plant_zip(tmp_path / "lib", str(tmp_path / "files"))
     reads = _count_directory_reads(monkeypatch)
     importlib.invalidate_caches()
-    assert archive in reads  # what every pyspark task pays without the release
+    assert archive in reads  # what every pyspark task pays without the guard
     reads.clear()
-    release_zip_importers()
+    guarded()
     importlib.invalidate_caches()
     assert reads == []
 
 
-def test_spark_files_zip_keeps_its_finder(plant_zip, tmp_path, monkeypatch):
+@PRE_313
+def test_spark_files_zip_keeps_its_finder(plant_zip, guarded, tmp_path, monkeypatch):
     root = tmp_path / "files"
     shipped, _ = plant_zip(root, str(root))
     other, _ = plant_zip(tmp_path / "lib", str(root))
-    release_zip_importers()
-    assert isinstance(sys.path_importer_cache[shipped], zipimport.zipimporter)
-    assert other not in sys.path_importer_cache
-    # the kept finder is still refreshed by the per-task invalidation
+    guarded()
+    # the shipped zip is still refreshed by the per-task invalidation
     reads = _count_directory_reads(monkeypatch)
     importlib.invalidate_caches()
     assert reads == [shipped]
+    for archive in (shipped, other):
+        assert isinstance(sys.path_importer_cache[archive], zipimport.zipimporter)
 
 
-def test_ocr_batches_releases_on_success_close_and_error(monkeypatch):
-    from paddleocr_spark.plans import pipeline
-
-    calls = []
-    monkeypatch.setattr(pipeline, "release_zip_importers", lambda: calls.append(1))
-
-    def run(batches, page_limit, orient=False):
-        for batch in batches:
-            if batch == "boom":
-                raise RuntimeError("kernel failed")
-            yield batch
-
-    monkeypatch.setattr(pipeline, "_ocr_batches_run", run)
-    assert list(pipeline._ocr_batches(iter(["a", "b"]), 0)) == ["a", "b"]
-    assert calls == [1]
-    gen = pipeline._ocr_batches(iter(["a", "b"]), 0)
-    next(gen)
-    gen.close()  # the worker closes the output iterator after the task
-    assert calls == [1, 1]
-    with pytest.raises(RuntimeError, match="kernel failed"):
-        list(pipeline._ocr_batches(iter(["a", "boom"]), 0))
-    assert calls == [1, 1, 1]
-
-
-_FREEZE_PROBE = """
-import gc, json, os
+_WORKER_PROBE = """
+import gc, json, os, zipimport
 import pandas as pd
 from paddleocr_spark.tuning import local_session
 
 def probe(batches):
     import paddleocr_spark  # the worker's first import of the package
+    refresh = zipimport.zipimporter.invalidate_caches
     for _ in batches:
-        yield pd.DataFrame({"pid": [os.getpid()], "frozen": [gc.get_freeze_count()]})
+        yield pd.DataFrame({
+            "pid": [os.getpid()], "frozen": [gc.get_freeze_count()],
+            "guard": [id(refresh)],
+            "guarded": [getattr(refresh, "spark_files_only", False)],
+        })
 
-spark = local_session(1, "freeze-probe")
-rows = spark.range(0, 3, numPartitions=3).mapInPandas(probe, "pid long, frozen long").collect()
+spark = local_session(1, "worker-probe")
+rows = spark.range(0, 3, numPartitions=3).mapInPandas(
+    probe, "pid long, frozen long, guard long, guarded boolean"
+).collect()
 spark.stop()
-print(json.dumps([[r.pid, r.frozen] for r in rows]))
+print(json.dumps([[r.pid, r.frozen, r.guard, r.guarded] for r in rows]))
 """
 
 
-def test_worker_heap_frozen_once_per_worker_never_on_driver(tmp_path):
-    """At local[1] one reused worker runs every task: the task that
-    first imports the package freezes the heap, and later tasks find
-    the same permanent generation, not a second freeze on top of it.
-    A frozen object can still die, so the first task, which froze while
-    its own setup objects were alive, may read a higher count."""
+@pytest.fixture(scope="module")
+def worker_probe(tmp_path_factory):
+    """[[pid, freeze count, id of zipimporter.invalidate_caches,
+    guarded]] of three tasks at local[1], where one reused worker runs
+    every task."""
     env = dict(os.environ, PYTHONPATH=REPO)
     out = subprocess.run(
-        [sys.executable, "-c", _FREEZE_PROBE],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+        [sys.executable, "-c", _WORKER_PROBE],
+        cwd=tmp_path_factory.mktemp("probe"), env=env,
+        capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     rows = json.loads(out.stdout.strip().splitlines()[-1])
-    pids = {pid for pid, _ in rows}
-    counts = [frozen for _, frozen in rows]
-    assert len(rows) == 3 and len(pids) == 1, rows
+    assert len(rows) == 3 and len({r[0] for r in rows}) == 1, rows
+    return rows
+
+
+def test_worker_heap_frozen_once_per_worker_never_on_driver(worker_probe):
+    """The task that first imports the package freezes the heap, and
+    later tasks find the same permanent generation, not a second freeze
+    on top of it. A frozen object can still die, so the first task,
+    which froze while its own setup objects were alive, may read a
+    higher count."""
+    counts = [frozen for _, frozen, _, _ in worker_probe]
     assert counts[1] > 0 and counts[1:] == [counts[1]] * 2, counts
     assert counts[0] >= counts[1], counts
 
@@ -244,6 +266,23 @@ def test_worker_heap_frozen_once_per_worker_never_on_driver(tmp_path):
     before = gc.get_freeze_count()
     importlib.reload(paddleocr_spark)  # re-runs the import-time hook
     assert gc.get_freeze_count() == before
+
+
+@PRE_313
+def test_zip_guard_installed_once_per_worker_never_on_driver(worker_probe):
+    """The first task's import installs the guard, and every later task
+    on that worker runs under the same function object."""
+    assert all(guarded for *_, guarded in worker_probe), worker_probe
+    assert len({guard for _, _, guard, _ in worker_probe}) == 1, worker_probe
+
+    import pyspark  # noqa: F401  (loaded, as on a Spark driver)
+
+    import paddleocr_spark
+
+    before = zipimport.zipimporter.invalidate_caches
+    importlib.reload(paddleocr_spark)  # re-runs the import-time hook
+    assert zipimport.zipimporter.invalidate_caches is before
+    assert not getattr(before, "spark_files_only", False)
 
 
 def test_cpus_is_the_env_override_or_the_affinity_mask(monkeypatch):

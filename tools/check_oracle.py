@@ -3,7 +3,10 @@ entry on Spark and its oracle_sql() twin on DuckDB over the same parquet
 tables; compare row count, column names, and an order-insensitive value
 hash. Usage:
 
-    PYTHONPATH=/root/repo python tools/check_oracle.py [sf_dir] [name ...]
+    PYTHONPATH=. python tools/check_oracle.py [sf_dir] [name ...]
+
+The last two lines are `failures: N` and `wall_s: S`, the run's wall
+time from session start to stop, so board runs compare across commits.
 """
 
 from __future__ import annotations
@@ -40,6 +43,7 @@ def canon(rows, cols):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    start = time.perf_counter()
 
     from paddleocr_spark.tuning import cpus, local_session
 
@@ -98,6 +102,7 @@ def main() -> int:
             print(f"PASS {name}: rows={len(srows)} [{time.time()-t0:.1f}s]")
     spark.stop()
     print("failures:", failures)
+    print(f"wall_s: {time.perf_counter() - start:.1f}")
     return 1 if failures else 0
 
 
