@@ -21,10 +21,8 @@ import re
 
 import numpy as np
 
-from .ctc import ctc_decode
-from .font import REC_CHARSET
 from .imageops import rot90k, rotate180
-from .rec import RecModel, rec_resize
+from .rec import RecModel, recognize_crops
 
 CLS_THRESH = 0.9
 
@@ -125,10 +123,7 @@ def orient_page_rubric(
 
 def _read_score(crop: np.ndarray, model: RecModel) -> float:
     """Mean CTC confidence of the crop under the rec model (0 if no text)."""
-    ratio = crop.shape[1] / float(crop.shape[0])
-    probs = model.forward([rec_resize(crop, max(ratio, 1.0))])[0]
-    _, conf = ctc_decode(probs, REC_CHARSET)
-    return conf
+    return recognize_crops([crop], model)[0][1]
 
 
 def classify(crop: np.ndarray, model: RecModel | None = None) -> tuple[str, float, np.ndarray]:
@@ -188,7 +183,10 @@ def orient_page(
     bundle), probes are scored by the classifier's p("0") instead of rec
     read confidence — the reference's dedicated text-direction net
     (predict_cls.py) doing the angle scoring, through the same
-    per-process ONNX session cache as det/rec."""
+    per-process ONNX session cache as det/rec.
+
+    The returned page is the very array the accepted angle's probe ran
+    `detect_fn` on, so a caller can reuse that probe's boxes."""
     if early_exit is None:
         early_exit = CLS_PROBE_EARLY_EXIT if cls_model is not None else 0.93
     rec_model = rec_model or RecModel()
@@ -201,8 +199,9 @@ def orient_page(
         axis, _ = estimate_rotation(img)
         priority = (0, 180, 90, 270) if axis == 0 else (90, 270, 0, 180)
     best_angle, best_score = priority[0], -1.0
+    probed = {}
     for angle in priority:
-        rotated = rot90k(img, angle // 90) if angle else img
+        rotated = probed[angle] = rot90k(img, angle // 90) if angle else img
         boxes, _ = detect_fn(rotated)
         if len(boxes) == 0:
             continue
@@ -216,5 +215,4 @@ def orient_page(
             return rotated, angle
         if score > best_score + 1e-9:
             best_angle, best_score = angle, score
-    rotated = rot90k(img, best_angle // 90) if best_angle else img
-    return rotated, best_angle
+    return probed[best_angle], best_angle

@@ -23,6 +23,7 @@ from .db_postprocess import (
     db_postprocess,
     db_postprocess_runs,
     dilate_runs,
+    threshold_runs,
 )
 from .geometry import filter_det_boxes
 from .imageops import dilate_horizontal, dilate_vertical, resize_bilinear
@@ -129,16 +130,21 @@ def detect_lines(
         )
         boxes, kept = filter_det_boxes(boxes, src_h, src_w)
         return boxes, [s for s, k in zip(scores, kept) if k]
-    # Run-space det: binarize the source once, then dilation, connected
-    # components, and the bbox-mean score all operate on run lists —
-    # bit-identical to dilating a map (max-filter of 0/1 == union of
-    # expanded runs) with no full-page pass after the binarize. No det
-    # resize either: the dilation window is calibrated for source-scale
-    # gaps (worst per-row space gap 60px, window 63). det_resize and the
-    # map-based db_postprocess stay exported for the reference
-    # DetResizeForTest semantics and real soft-prob-map models.
-    bit = img <= 178.5  # ink > cfg.thresh in 0..255 gray space
-    rows, starts, ends = bitmap_runs(bit)
+    # Run-space det: binarize the source once (only its inked rows), then
+    # dilation, connected components, and the bbox-mean score all operate
+    # on run lists — bit-identical to dilating a map (max-filter of 0/1
+    # == union of expanded runs) with no full-page pass after the
+    # binarize — and the boxes of a page are fitted, scored and unclipped
+    # together. No det resize either: the dilation window is calibrated
+    # for source-scale gaps (worst per-row space gap 60px, window 63).
+    # det_resize and the map-based db_postprocess stay exported for the
+    # reference DetResizeForTest semantics and real soft-prob-map models.
+    # ink > cfg.thresh in 0..255 gray space; on integer pixels "<= 178"
+    # is the same mask and skips the cast to float
+    if img.dtype.kind in "ui":
+        rows, starts, ends = threshold_runs(img, 178)
+    else:
+        rows, starts, ends = bitmap_runs(img <= 178.5)
     rows, starts, ends = dilate_runs(
         rows, starts, ends, cfg.h_dilate, cfg.v_dilate, src_h, src_w
     )

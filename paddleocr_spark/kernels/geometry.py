@@ -14,11 +14,7 @@ import numpy as np
 
 
 def convex_hull(points: np.ndarray) -> np.ndarray:
-    """Andrew monotone chain. points [N,2] float -> hull [M,2] CCW.
-
-    The turn test runs on Python floats (same float64 ops as np.cross on
-    2-vectors, ~40x less call overhead — this is the det-postprocess hot
-    loop)."""
+    """Andrew monotone chain. points [N,2] float -> hull [M,2] CCW."""
     pts = np.asarray(points, dtype=np.float64)
     if len(pts) == 0:
         return pts
@@ -33,6 +29,16 @@ def convex_hull(points: np.ndarray) -> np.ndarray:
     if len(pts) <= 2:
         return pts
     coords = [(float(x), float(y)) for x, y in pts]
+    return np.array(monotone_hull(coords), dtype=np.float64)
+
+
+def monotone_hull(coords: list[tuple[float, float]]) -> list[tuple[float, float]]:
+    """Andrew's monotone chain over distinct points sorted by (x, y): the
+    strict hull vertices, counter-clockwise from the first point. The
+    turn test runs on Python floats (same float64 ops as np.cross on
+    2-vectors, ~40x less call overhead)."""
+    if len(coords) <= 2:
+        return coords
 
     def half(seq):
         out: list[tuple[float, float]] = []
@@ -49,7 +55,7 @@ def convex_hull(points: np.ndarray) -> np.ndarray:
 
     lower = half(coords)
     upper = half(coords[::-1])
-    return np.array(lower[:-1] + upper[:-1], dtype=np.float64)
+    return lower[:-1] + upper[:-1]
 
 
 def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float]:
@@ -114,24 +120,30 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float]:
     return corners, float(min(du, dv))
 
 
+def vector_norms(e: np.ndarray) -> np.ndarray:
+    """Lengths of [N,2] vectors, each bit-identical to np.linalg.norm of
+    that row: a stacked row @ column matmul takes the same BLAS dot as
+    norm's `sqrt(x.dot(x))`, which need not round like `sqrt(x*x+y*y)`."""
+    e = np.ascontiguousarray(e, dtype=np.float64).reshape(-1, 2)
+    return np.sqrt(np.matmul(e[:, None, :], e[:, :, None])[:, 0, 0])
+
+
+def order_points_clockwise_batch(boxes: np.ndarray) -> np.ndarray:
+    """order_points_clockwise over [N,4,2] boxes at once (same per-box
+    sums, differences and first-occurrence arg-extremes)."""
+    b = np.asarray(boxes, dtype=np.float64)
+    s = b.sum(axis=2)
+    d = b[..., 1] - b[..., 0]  # np.diff along the (x, y) axis
+    pick = np.empty((len(b), 4), dtype=np.int64)
+    pick[:, 0], pick[:, 1] = s.argmin(1), d.argmin(1)
+    pick[:, 2], pick[:, 3] = s.argmax(1), d.argmax(1)
+    return b[np.arange(len(b))[:, None], pick]
+
+
 def order_points_clockwise(box: np.ndarray) -> np.ndarray:
     """Canonical TL,TR,BR,BL via coordinate sum/diff argmin/argmax
     (reference tools/infer/predict_det.py:182-191 semantics)."""
-    b = np.asarray(box, dtype=np.float64)
-    s = b.sum(axis=1)
-    d = np.diff(b, axis=1).ravel()  # y - x
-    tl = b[np.argmin(s)]
-    br = b[np.argmax(s)]
-    tr = b[np.argmin(d)]
-    bl = b[np.argmax(d)]
-    return np.array([tl, tr, br, bl])
-
-
-def clip_box(box: np.ndarray, h: int, w: int) -> np.ndarray:
-    out = np.asarray(box, dtype=np.float64).copy()
-    out[:, 0] = np.clip(out[:, 0], 0, w - 1)
-    out[:, 1] = np.clip(out[:, 1], 0, h - 1)
-    return out
+    return order_points_clockwise_batch(np.asarray(box, dtype=np.float64)[None])[0]
 
 
 def filter_det_boxes(boxes: np.ndarray, h: int, w: int):
@@ -139,19 +151,15 @@ def filter_det_boxes(boxes: np.ndarray, h: int, w: int):
     (reference filter_tag_det_res, tools/infer/predict_det.py:207-221).
     Returns (kept_boxes, kept_mask) — callers carrying parallel arrays
     (scores) must filter them with the same mask, never truncate."""
-    kept = []
-    mask = np.zeros(len(boxes), dtype=bool)
-    for i, box in enumerate(boxes):
-        b = clip_box(order_points_clockwise(box), h, w)
-        rect_w = int(np.linalg.norm(b[0] - b[1]))
-        rect_h = int(np.linalg.norm(b[0] - b[3]))
-        if rect_w <= 3 or rect_h <= 3:
-            continue
-        kept.append(b)
-        mask[i] = True
-    if not kept:
-        return np.zeros((0, 4, 2), dtype=np.float32), mask
-    return np.array(kept, dtype=np.float32), mask
+    if len(boxes) == 0:
+        return np.zeros((0, 4, 2), dtype=np.float32), np.zeros(0, dtype=bool)
+    b = order_points_clockwise_batch(boxes)
+    np.clip(b, 0, (w - 1, h - 1), out=b)
+    # int() of a length truncates, so "int(len) <= 3" is "len < 4"
+    rect_w = vector_norms(b[:, 0] - b[:, 1])
+    rect_h = vector_norms(b[:, 0] - b[:, 3])
+    mask = (rect_w >= 4) & (rect_h >= 4)
+    return b[mask].astype(np.float32), mask
 
 
 def sorted_boxes(dt_boxes: np.ndarray) -> list[np.ndarray]:

@@ -16,41 +16,71 @@ import functools
 import numpy as np
 
 
-def resize_bilinear(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Bilinear resize with pixel-center alignment (cv2-style mapping)."""
+def resize_bilinear(
+    img: np.ndarray, out_h: int, out_w: int, out: np.ndarray | None = None
+) -> np.ndarray:
+    """Bilinear resize with pixel-center alignment (cv2-style mapping).
+    With `out` (a float32 [out_h, out_w] view), the result is written
+    there instead of a new array."""
     h, w = img.shape[:2]
     out_h, out_w = max(1, int(out_h)), max(1, int(out_w))
     if (out_h, out_w) == (h, w):
-        return img.astype(np.float32, copy=True)
-    ys = (np.arange(out_h, dtype=np.float64) + 0.5) * (h / out_h) - 0.5
-    xs = (np.arange(out_w, dtype=np.float64) + 0.5) * (w / out_w) - 0.5
-    ys = np.clip(ys, 0, h - 1)
-    xs = np.clip(xs, 0, w - 1)
-    y0 = np.floor(ys).astype(np.int64)
-    x0 = np.floor(xs).astype(np.int64)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = (ys - y0).astype(np.float32)[:, None]
-    wx = (xs - x0).astype(np.float32)[None, :]
+        if out is None:
+            return img.astype(np.float32, copy=True)
+        out[...] = img
+        return out
+    rows, cols = _axis_map(h, out_h), _axis_map(w, out_w)
     # asarray: no-copy when already float32 (slice-cropped rec inputs)
     f = np.asarray(img, dtype=np.float32)
     # separable: blend one axis, then interpolate the other — half the
     # gathers/multiplies of the per-corner form. Order by intermediate
     # size: shrink the axis with the bigger reduction first.
     if out_h * w <= h * out_w:
-        mid = f[y0] * (1 - wy) + f[y1] * wy
-        return mid[:, x0] * (1 - wx) + mid[:, x1] * wx
-    mid = f[:, x0] * (1 - wx) + f[:, x1] * wx
-    return mid[y0] * (1 - wy) + mid[y1] * wy
+        return _blend(_blend(f, 0, *rows), 1, *cols, out=out)
+    return _blend(_blend(f, 1, *cols), 0, *rows, out=out)
+
+
+def _axis_map(n: int, out_n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(i0, i1, u) of one axis: output i samples source (i + 0.5) *
+    n / out_n - 0.5, clipped to [0, n - 1], between pixels i0 and i1 at
+    float32 weight u. The clipped position is non-negative, so the int
+    cast is its floor."""
+    s = (np.arange(out_n, dtype=np.float64) + 0.5) * (n / out_n) - 0.5
+    s = np.minimum(np.maximum(s, 0), n - 1)
+    i0 = s.astype(np.int64)
+    return i0, np.minimum(i0 + 1, n - 1), (s - i0).astype(np.float32)
+
+
+def _blend(src, axis, i0, i1, u, out=None):
+    """src[i0] * (1 - u) + src[i1] * u along `axis` (0 or 1), in place
+    on the two gathered copies (the same products and sum, without
+    temporaries)."""
+    if axis == 0:
+        a, b, u = src[i0], src[i1], u[:, None]
+    else:
+        a, b = src[:, i0], src[:, i1]
+    np.multiply(a, 1 - u, out=a)
+    np.multiply(b, u, out=b)
+    return np.add(a, b, out=a if out is None else out)
 
 
 @functools.lru_cache(maxsize=4096)
 def _pool_bins(n: int, out_n: int) -> tuple[np.ndarray, np.ndarray]:
-    """Cached bin edges: recognition pools thousands of same-shaped glyph
-    cells per page, so the linspace/round work is amortized to zero."""
-    b = np.linspace(0, n, out_n + 1).round().astype(np.int64)
-    hi = np.minimum(np.maximum(b[1:], b[:-1] + 1), n)
-    lo = np.where(hi > 0, np.minimum(b[:-1], hi - 1), 0)
+    """Bin edges (lo, hi) of an adaptive pool of n cells into out_n."""
+    lo, hi = pool_bins_batch(np.array([n]), out_n)
+    return lo[0], hi[0]
+
+
+def pool_bins_batch(ns: np.ndarray, out_n: int) -> tuple[np.ndarray, np.ndarray]:
+    """_pool_bins(n, out_n) of every n in `ns` at once, as [len(ns),
+    out_n] (lo, hi). The edges are np.linspace(0, n, out_n + 1)'s own
+    float ops: i * (n / out_n), with the last edge exactly n."""
+    ns = np.asarray(ns, dtype=np.int64)
+    b = np.arange(out_n + 1) * (ns / out_n)[:, None]
+    b[:, -1] = ns
+    b = b.round().astype(np.int64)
+    hi = np.minimum(np.maximum(b[:, 1:], b[:, :-1] + 1), ns[:, None])
+    lo = np.where(hi > 0, np.minimum(b[:, :-1], hi - 1), 0)
     return lo, hi
 
 
@@ -82,38 +112,6 @@ def adaptive_avg_pool(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     r0c, r1c = r0[:, None], r1[:, None]
     s = csum[r1c, c1] - csum[r0c, c1] - csum[r1c, c0] + csum[r0c, c0]
     return (s / np.maximum(area, 1)).astype(np.float32)
-
-
-def pool_cells(
-    band: np.ndarray, cells: list[tuple[int, int]], out_h: int, out_w: int
-) -> np.ndarray:
-    """adaptive_avg_pool of band[:, c0:c1] for every (c0, c1) cell, batched.
-
-    All cells share the band height, so the row binning is computed once;
-    a single column cumsum then resolves every cell's column bins as pure
-    gathers. Returns [K, out_h, out_w] — identical values (up to fp
-    summation order) to K independent adaptive_avg_pool calls, at ~1/K
-    the overhead. This is the recognition hot loop: ~12 glyph cells per
-    crop, thousands of crops per partition.
-    """
-    h, w = band.shape
-    k = len(cells)
-    if k == 0:
-        return np.zeros((0, out_h, out_w), dtype=np.float32)
-    r0, r1 = _pool_bins(h, out_h)
-    cs = band.cumsum(0, dtype=np.float64)
-    rows = cs[r1 - 1] - np.where(r0[:, None] > 0, cs[np.maximum(r0 - 1, 0)], 0.0)
-    csum = np.zeros((out_h, w + 1), dtype=np.float64)
-    np.cumsum(rows, axis=1, out=csum[:, 1:])
-    lo = np.empty((k, out_w), dtype=np.int64)
-    hi = np.empty((k, out_w), dtype=np.int64)
-    for i, (c0, c1) in enumerate(cells):
-        cl, ch = _pool_bins(c1 - c0, out_w)
-        lo[i] = cl + c0
-        hi[i] = ch + c0
-    s = csum[:, hi] - csum[:, lo]  # [out_h, K, out_w]
-    area = (r1 - r0)[None, :, None] * (hi - lo)[:, None, :]
-    return (s.transpose(1, 0, 2) / np.maximum(area, 1)).astype(np.float32)
 
 
 def _sliding_max(pad: np.ndarray, window: int, axis: int) -> np.ndarray:

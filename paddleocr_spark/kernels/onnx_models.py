@@ -23,7 +23,7 @@ proven float32 margins) to the deterministic stand-ins they replace:
   — six orders of magnitude under every decision margin (box_thresh
   gap >= 0.038).
 - rec.onnx  : center -> L2-normalize -> MatMul against the glyph
-  template matrix (the classifier of RecModel._forward_one as a graph:
+  template matrix (the classifier of RecModel.class_scores as a graph:
   ReduceMean/Sub/ReduceL2/Max/Div/MatMul). Identical float32 math on
   identical inputs; argmax margins are the template-correlation gaps
   (>= 0.05 across the charset), so decoded text is byte-identical.

@@ -261,14 +261,25 @@ def _ocr_batches_run(
                     # fork's prioritized rotation sweep (fastapi_app.py
                     # :304-455): try angles, score by rec confidence,
                     # early-exit — multiplies det cost, so opt-in only.
+                    # The page it returns is one it probed, so that
+                    # probe's det is the page's det.
+                    probes: list = []
+
+                    def probe(im, probes=probes):
+                        probes.append((im, detect_lines(im, engine.det_model)))
+                        return probes[-1][1]
+
                     img, _angle = orient_page(
                         img,
-                        lambda im: detect_lines(im, engine.det_model),
+                        probe,
                         get_rotate_crop_image,
                         engine.rec_model,
                         cls_model=getattr(engine, "cls_model", None),
                     )
-                boxes, _ = detect_lines(img, engine.det_model)
+                    hit = [det for im, det in probes if im is img]
+                    boxes = (hit[0] if hit else detect_lines(img, engine.det_model))[0]
+                else:
+                    boxes, _ = detect_lines(img, engine.det_model)
                 boxes = sorted_boxes(boxes)
                 crops = [get_rotate_crop_image(img, b) for b in boxes]
                 d1 = time.perf_counter()

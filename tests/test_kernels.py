@@ -21,6 +21,7 @@ from paddleocr_spark.kernels.geometry import (
     sorted_boxes,
 )
 from paddleocr_spark.kernels.imageops import (
+    pool_bins_batch,
     resize_bilinear,
     rotate180,
     warp_perspective,
@@ -148,6 +149,46 @@ class TestImageOps:
         img = np.arange(12, dtype=np.uint8).reshape(3, 4)
         out = resize_bilinear(img, 3, 4)
         assert np.allclose(out, img)
+
+    @staticmethod
+    def _resize_reference(img, out_h, out_w):
+        """The plain bilinear formula: clipped pixel-center maps, then the
+        same separable blend order as resize_bilinear."""
+        h, w = img.shape
+        ys = np.clip((np.arange(out_h) + 0.5) * (h / out_h) - 0.5, 0, h - 1)
+        xs = np.clip((np.arange(out_w) + 0.5) * (w / out_w) - 0.5, 0, w - 1)
+        y0, x0 = np.floor(ys).astype(np.int64), np.floor(xs).astype(np.int64)
+        y1, x1 = np.minimum(y0 + 1, h - 1), np.minimum(x0 + 1, w - 1)
+        wy = (ys - y0).astype(np.float32)[:, None]
+        wx = (xs - x0).astype(np.float32)[None, :]
+        f = img.astype(np.float32)
+        if out_h * w <= h * out_w:
+            mid = f[y0] * (1 - wy) + f[y1] * wy
+            return mid[:, x0] * (1 - wx) + mid[:, x1] * wx
+        mid = f[:, x0] * (1 - wx) + f[:, x1] * wx
+        return mid[y0] * (1 - wy) + mid[y1] * wy
+
+    def test_resize_matches_reference_formula_bit_for_bit(self):
+        rng = np.random.default_rng(11)
+        for _ in range(300):
+            h, w = rng.integers(1, 70, size=2)
+            out_h, out_w = rng.integers(1, 90, size=2)
+            img = rng.integers(0, 256, (h, w)).astype(np.uint8)
+            want = self._resize_reference(img, out_h, out_w)
+            assert resize_bilinear(img, out_h, out_w).tobytes() == want.tobytes()
+            into = np.zeros((out_h, out_w + 2), np.float32)
+            resize_bilinear(img, out_h, out_w, out=into[:, :out_w])
+            assert into[:, :out_w].tobytes() == want.tobytes()
+
+    def test_pool_bins_batch_matches_linspace_edges(self):
+        for out_n in (1, 5, 7, 9):
+            ns = np.arange(0, 3000)
+            lo, hi = pool_bins_batch(ns, out_n)
+            for n in (0, 1, 2, 3, 6, 7, 8, 33, 48, 999, 2999):
+                b = np.linspace(0, n, out_n + 1).round().astype(np.int64)
+                want_hi = np.minimum(np.maximum(b[1:], b[:-1] + 1), n)
+                want_lo = np.where(want_hi > 0, np.minimum(b[:-1], want_hi - 1), 0)
+                assert np.array_equal(hi[n], want_hi) and np.array_equal(lo[n], want_lo)
 
     def test_warp_identity_quad(self):
         img = np.arange(100, dtype=np.float32).reshape(10, 10)

@@ -53,6 +53,41 @@ def test_orient_page_recovers_all_four_rotations():
         assert eng.extract_text(upright) == "\n".join(LINES)
 
 
+def test_oriented_page_runs_det_once_per_probe(monkeypatch):
+    """The extraction task reuses the accepted orientation probe's det:
+    a 180-degree page costs one detect_lines call per probe, not
+    probes + 1."""
+    import pandas as pd
+
+    from paddleocr_spark.kernels import cls, det
+    from paddleocr_spark.kernels.imageops import rotate180
+    from paddleocr_spark.kernels.png import encode_gray_png
+    from paddleocr_spark.plans.pipeline import _ocr_batches_run
+
+    calls = {"det": 0, "probe": 0}
+    real_det, real_orient = det.detect_lines, cls.orient_page
+
+    def counting_det(*args, **kwargs):
+        calls["det"] += 1
+        return real_det(*args, **kwargs)
+
+    def counting_orient(img, detect_fn, *args, **kwargs):
+        def probe(im):
+            calls["probe"] += 1
+            return detect_fn(im)
+
+        return real_orient(img, probe, *args, **kwargs)
+
+    monkeypatch.setattr(det, "detect_lines", counting_det)
+    monkeypatch.setattr(cls, "orient_page", counting_orient)
+    page = rotate180(render_page(LINES))
+    batch = pd.DataFrame({"url": ["u"], "html": [encode_gray_png(page)]})
+    (out,) = list(_ocr_batches_run(iter([batch]), page_limit=0, orient=True))
+    assert out["extracted_text"][0] == "\n".join(LINES)
+    assert calls["probe"] == 2  # the upright probe fails, 180 is accepted
+    assert calls["det"] == calls["probe"]
+
+
 def test_reverse_rtl_segments_matches_reference_semantics():
     from paddleocr_spark.kernels.ctc import reverse_rtl_segments
 
