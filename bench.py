@@ -33,6 +33,7 @@ import re
 import subprocess
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -154,71 +155,68 @@ def _pages_cache(spark, sf_dir: str) -> str:
     return os.path.join(root, f"single_{label}.parquet")
 
 
-def _suite_breakdown(spark) -> dict[str, list]:
-    """(op, rows, sec) per suite branch — the round-3 verdict's triage
+def _suite_breakdown(spark, sf_dir: str) -> dict[str, list]:
+    """(op, rows, sec, jobs) per suite branch, and (op, sec, jobs) per
+    shared input of text_stats_suite — the round-3 verdict's triage
     ask: a future red suite row should name its branch from the BENCH
     artifact, not require a bisection session. Branches are timed via
     count() (one action yields time AND rows; the heavy subtrees —
     joins, shuffles, checkpoints, UDF decode — run identically, only
     the final string projection can prune, so branch cost ranking is
-    faithful; the headline suite number remains the noop-write union)."""
-    out: dict[str, list] = {}
-
-    from paddleocr_spark.functions import text
-    from paddleocr_spark.functions.dedup import minhash_lsh_pairs
+    faithful; the headline suite number remains the noop-write union).
+    `jobs` counts the Spark jobs each one submits, eager builder
+    actions included: deterministic where `sec` swings ±20%."""
     from paddleocr_spark.functions.kmeans import embedding_branch_builders
-    from paddleocr_spark.functions.psl import psl_domains
-    from paddleocr_spark.operators.html_extract import html_links
     from paddleocr_spark.operators.media import media_branch_builders
-    from paddleocr_spark.sources.pages import html_pages_from_documents
+
+    return {
+        "text_stats_suite": text_suite_breakdown(spark, sf_dir),
+        "embedding_ops_suite": _branch_rows(
+            spark, embedding_branch_builders(spark, sf_dir)),
+        "media_codec_suite": _branch_rows(
+            spark, media_branch_builders(spark, sf_dir)),
+    }
+
+
+def text_suite_breakdown(spark, sf_dir: str) -> list[dict]:
+    """text_stats_suite's shared inputs (`[shared] <name>`, built in
+    order from text.suite_input_builders), then its branches."""
+    from paddleocr_spark.functions import text
 
     rows: list = []
+    shared: dict = {}
+    for name, build in text.suite_input_builders(spark, sf_dir):
+        shared[name], cost = counted(spark, lambda: build(shared))
+        rows.append({"op": f"[shared] {name}", **cost})
+    return rows + _branch_rows(
+        spark, text.suite_branch_builders(spark, sf_dir, **shared))
 
-    def _shared(name, thunk):
-        t0 = time.time()
-        df = thunk()
-        rows.append({"op": f"[shared] {name}",
-                     "sec": round(time.time() - t0, 3)})
-        return df
 
-    _pages = _shared(
-        "html pages", lambda: html_pages_from_documents(
-            spark, SF_DIR).localCheckpoint())
-    _links = _shared(
-        "links walk", lambda: html_links(
-            spark, SF_DIR, pages=_pages).localCheckpoint())
-    _pairs = _shared(
-        "lsh pairs", lambda: minhash_lsh_pairs(
-            spark, SF_DIR).localCheckpoint())
-    _psl = _shared(
-        "psl domains", lambda: psl_domains(spark, SF_DIR).localCheckpoint())
-    _idx = _shared(
-        "inverted index", lambda: text.inverted_index(
-            spark, SF_DIR).localCheckpoint())
+def _branch_rows(spark, builders) -> list[dict]:
+    rows: list = []
+    for name, build in builders:
+        try:
+            n, cost = counted(spark, lambda: build().count())
+        except Exception as exc:  # noqa: BLE001
+            rows.append({"op": name, "error": str(exc)[:160]})
+            continue
+        rows.append({"op": name, "rows": int(n), **cost})
+    return rows
 
-    def _run(rows_list, builders):
-        for name, build in builders:
-            t0 = time.time()
-            try:
-                n = build().count()
-            except Exception as exc:  # noqa: BLE001
-                rows_list.append({"op": name, "error": str(exc)[:160]})
-                continue
-            rows_list.append({"op": name, "rows": int(n),
-                              "sec": round(time.time() - t0, 3)})
 
-    _run(rows, text.suite_branch_builders(
-        spark, SF_DIR, _pages, _links, _pairs, _psl, _idx))
-    out["text_stats_suite"] = rows
-
-    emb_rows: list = []
-    _run(emb_rows, embedding_branch_builders(spark, SF_DIR))
-    out["embedding_ops_suite"] = emb_rows
-
-    media_rows: list = []
-    _run(media_rows, media_branch_builders(spark, SF_DIR))
-    out["media_codec_suite"] = media_rows
-    return out
+def counted(spark, thunk) -> tuple[object, dict]:
+    """(thunk(), {"sec", "jobs"}): thunk run under a fresh Spark job
+    group, whose job ids the status tracker then counts."""
+    sc = spark.sparkContext
+    group = f"breakdown-{uuid.uuid4().hex}"
+    t0 = time.time()
+    sc.setJobGroup(group, group)
+    try:
+        out = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return out, {"sec": round(time.time() - t0, 3), "jobs": len(jobs)}
 
 
 def _spread_warnings(attempts: dict[str, list[float]]) -> list[str]:
@@ -364,7 +362,7 @@ def main() -> None:
         attempts_log[name] = att
     probe_after = probe()
 
-    breakdown = {} if SKIP_BREAKDOWN else _suite_breakdown(spark)
+    breakdown = {} if SKIP_BREAKDOWN else _suite_breakdown(spark, SF_DIR)
     spark.stop()
 
     # Every subprocess below starts its own Spark (or a pool) and runs

@@ -981,7 +981,7 @@ def inverted_index_rows(
 ) -> DataFrame:
     """(op='inverted_index', k=term, v=df|postings) suite row. `idx`
     lets the suite share one checkpointed index build with the
-    postings_vb branch (the _pages/_links discipline)."""
+    postings_vb branch (see suite_input_builders)."""
     if idx is None:
         idx = inverted_index(spark, sf_dir)
     return idx.select(
@@ -1564,65 +1564,90 @@ def text_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-units (bigint) so no float ever reaches the string compare.
     The standalone builders above remain the public API.
 
-    The three link-derived branches (doc_links / anchor_text /
-    crawl_frontier) share ONE eagerly-checkpointed DOM walk — without
-    it each union branch re-synthesizes and re-parses the whole HTML
-    corpus (localCheckpoint, not persist: the caller owns the returned
-    plan, same discipline as host_pagerank)."""
+    Inputs that several branches read (the HTML pages, the link walk,
+    the LSH pairs, the PSL domains, the inverted index and the host
+    graph) are built ONCE, eagerly checkpointed, from
+    `suite_input_builders` — without that each union branch would
+    re-synthesize and re-parse its input (localCheckpoint, not
+    persist: the caller owns the returned plan)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from paddleocr_spark.operators.html_extract import html_links
-    from paddleocr_spark.sources.pages import html_pages_from_documents
+    from pyspark import inheritable_thread_target
 
-    # one HTML synthesis feeds BOTH walks (links + metadata); the link
-    # frame is checkpointed again because three branches re-read it.
-    # The LSH candidate pairs are likewise computed ONCE for the two
-    # branches that consume them (dedup_keep_best's clustering and
-    # lsh_eval's precision side).
-    from paddleocr_spark.functions.dedup import minhash_lsh_pairs
-
-    from paddleocr_spark.functions.psl import psl_domains
-
-    _pages = html_pages_from_documents(spark, sf_dir).localCheckpoint()
-    _links = html_links(spark, sf_dir, pages=_pages).localCheckpoint()
-    _pairs = minhash_lsh_pairs(spark, sf_dir).localCheckpoint()
-    # the PSL registrable-domain join feeds TWO branches (psl, split)
-    _psl = psl_domains(spark, sf_dir).localCheckpoint()
-    # the index build (salted window shuffle) feeds TWO branches
-    # (inverted_index, postings_vb) — checkpoint once
-    _idx = inverted_index(spark, sf_dir).localCheckpoint()
-    builders = suite_branch_builders(
-        spark, sf_dir, _pages, _links, _pairs, _psl, _idx
-    )
+    shared: dict = {}
+    for name, build in suite_input_builders(spark, sf_dir):
+        shared[name] = build(shared)
+    builders = suite_branch_builders(spark, sf_dir, **shared)
 
     # Branch builders run on a thread pool: about two thirds of the
     # suite's wall time is CONSTRUCTION, not execution — eager
     # localCheckpoints, broadcast-side collects (bm25 scalar stats,
-    # decontaminate grams, Bloom bits), and bounded iteration rounds
-    # (PageRank, redirects) each submit small driver-blocking jobs.
+    # decontaminate grams, Bloom bits), and bounded redirect rounds
+    # each submit small driver-blocking jobs. The link-analysis
+    # branches only checkpoint their normalized edges over the shared
+    # host graph (PageRank also counts dangling hosts); their power
+    # steps (one groupBy shuffle plus one broadcast per round, no join
+    # back onto the nodes) run in the union's action.
     # Built serially those jobs leave the cluster mostly idle between
     # stages (measured 22.9 s build + 12.2 s execute at sf0.1);
     # concurrent submission from threads is the standard Spark
     # scheduler pattern for exactly this shape and needs no FAIR pool.
     # The union ORDER stays the literal list order (pool.map preserves
     # it), so the plan — and the oracle hash — are byte-identical to
-    # the serial build.
+    # the serial build. inheritable_thread_target hands each builder
+    # thread the caller's local properties and tags, so a caller's job
+    # group also holds the build-time jobs.
     with ThreadPoolExecutor(max_workers=8) as pool:
-        frames = list(pool.map(lambda b: b[1](), builders))
+        frames = list(pool.map(
+            inheritable_thread_target(spark)(lambda b: b[1]()), builders
+        ))
     out = frames[0]
     for frame in frames[1:]:
         out = out.unionByName(frame)
     return out
 
 
+def suite_input_builders(spark, sf_dir):
+    """The suite's shared inputs: ordered (name, build) pairs, where
+    `build(shared)` makes one input from the dict of those built before
+    it. Every name is a `suite_branch_builders` argument.
+    text_stats_suite, bench.py and tools/profile_suite.py all build
+    from this one list."""
+    from paddleocr_spark.functions.dedup import minhash_lsh_pairs
+    from paddleocr_spark.functions.psl import psl_domains
+    from paddleocr_spark.functions.webgraph import host_graph
+    from paddleocr_spark.operators.html_extract import html_links
+    from paddleocr_spark.sources.pages import html_pages_from_documents
+
+    return [
+        # one HTML synthesis feeds every DOM walk, the link walk too
+        ("pages", lambda s: html_pages_from_documents(
+            spark, sf_dir).localCheckpoint()),
+        # three link branches re-read the walk
+        ("links", lambda s: html_links(
+            spark, sf_dir, pages=s["pages"]).localCheckpoint()),
+        # dedup_keep_best's clustering and lsh_eval's precision side
+        ("pairs", lambda s: minhash_lsh_pairs(
+            spark, sf_dir).localCheckpoint()),
+        # the registrable-domain join feeds psl and split
+        ("psl", lambda s: psl_domains(spark, sf_dir).localCheckpoint()),
+        # the salted window shuffle feeds inverted_index and postings_vb
+        ("idx", lambda s: inverted_index(
+            spark, sf_dir).localCheckpoint()),
+        # the host census feeds host_pagerank, trustrank and hits
+        ("graph", lambda s: host_graph(spark, sf_dir)),
+    ]
+
+
 def suite_branch_builders(
-    spark, sf_dir, _pages, _links, _pairs=None, _psl=None, _idx=None
+    spark, sf_dir, pages, links, pairs, psl, idx, graph
 ):
     """The suite's branch registry: ordered (name, thunk) pairs, one
-    per (op, k, v) branch. text_stats_suite unions them in this literal
-    order; tools/profile_suite.py times the SAME list — a hand-copied
-    second list drifted within one session, so this is the single
-    source of truth."""
+    per (op, k, v) branch, over the shared inputs of
+    `suite_input_builders`. text_stats_suite unions them in this
+    literal order; bench.py and tools/profile_suite.py time the SAME
+    list — a hand-copied second list drifted within one session, so
+    this is the single source of truth."""
     df = _docs(spark, sf_dir)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     stop_hits = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
@@ -1690,11 +1715,11 @@ def suite_branch_builders(
         ("host_rollup", lambda: host_rollup_rows(spark, sf_dir)),
         ("latest_capture", lambda: latest_capture_rows(spark, sf_dir)),
         ("robots_filter", lambda: robots_filter_rows(spark, sf_dir)),
-        ("host_pagerank", lambda: host_pagerank_rows(spark, sf_dir)),
+        ("host_pagerank", lambda: host_pagerank_rows(graph)),
         ("boilerplate", lambda: boilerplate_gram_rows(spark, sf_dir)),
-        ("doc_links", lambda: doc_links_rows(spark, sf_dir, links=_links)),
+        ("doc_links", lambda: doc_links_rows(spark, sf_dir, links=links)),
         ("anchor_text",
-         lambda: anchor_text_rows(spark, sf_dir, links=_links)),
+         lambda: anchor_text_rows(spark, sf_dir, links=links)),
         ("substring_dedup", lambda: substring_dedup_rows(spark, sf_dir)),
         ("cdc_chunks", lambda: cdc_chunk_rows(spark, sf_dir)),
         ("cdc_dup", lambda: cdc_dup_rows(spark, sf_dir)),
@@ -1707,12 +1732,12 @@ def suite_branch_builders(
         ("seq_pack", lambda: seq_pack_rows(spark, sf_dir)),
         ("lm_bucket", lambda: lm_bucket_rows(spark, sf_dir)),
         ("crawl_frontier",
-         lambda: crawl_frontier_rows(spark, sf_dir, links=_links)),
+         lambda: crawl_frontier_rows(spark, sf_dir, links=links)),
         ("paragraph_dedup", lambda: paragraph_dedup_rows(spark, sf_dir)),
         ("url_filter", lambda: url_filter_rows(spark, sf_dir)),
         ("html_meta",
-         lambda: html_metadata_rows(spark, sf_dir, pages=_pages)),
-        ("wat", lambda: wat_rows(spark, sf_dir, pages=_pages)),
+         lambda: html_metadata_rows(spark, sf_dir, pages=pages)),
+        ("wat", lambda: wat_rows(spark, sf_dir, pages=pages)),
         ("homograph", lambda: homograph_rows(spark, sf_dir)),
         ("puny", lambda: puny_rows(spark, sf_dir)),
         ("meta_refresh", lambda: meta_refresh_rows(spark, sf_dir)),
@@ -1724,17 +1749,17 @@ def suite_branch_builders(
         ("mix_report", lambda: mix_report_rows(spark, sf_dir)),
         ("mix_resample", lambda: mix_resample_rows(spark, sf_dir)),
         ("charset_decode",
-         lambda: charset_decode_rows(spark, sf_dir, pages=_pages)),
+         lambda: charset_decode_rows(spark, sf_dir, pages=pages)),
         ("html_tables",
-         lambda: html_tables_rows(spark, sf_dir, pages=_pages)),
+         lambda: html_tables_rows(spark, sf_dir, pages=pages)),
         ("chunk_split", lambda: chunk_split_rows(spark, sf_dir)),
         ("redirects", lambda: redirect_rows(spark, sf_dir)),
         ("crawl_schedule", lambda: crawl_schedule_rows(spark, sf_dir)),
         ("sitemap", lambda: sitemap_rows(spark, sf_dir)),
         ("inverted_index",
-         lambda: inverted_index_rows(spark, sf_dir, idx=_idx)),
+         lambda: inverted_index_rows(spark, sf_dir, idx=idx)),
         ("postings_vb",
-         lambda: postings_vb_rows(spark, sf_dir, idx=_idx)),
+         lambda: postings_vb_rows(spark, sf_dir, idx=idx)),
         ("capture_diff", lambda: capture_diff_rows(spark, sf_dir)),
         ("robots_rfc", lambda: robots_rfc_rows(spark, sf_dir)),
         ("olap_rollup", lambda: olap_rollup_rows(spark, sf_dir)),
@@ -1742,13 +1767,13 @@ def suite_branch_builders(
         ("cm_heavy_hitters",
          lambda: cm_heavy_hitters_rows(spark, sf_dir)),
         ("structured_data",
-         lambda: structured_data_rows(spark, sf_dir, pages=_pages)),
+         lambda: structured_data_rows(spark, sf_dir, pages=pages)),
         ("dsir", lambda: dsir_rows(spark, sf_dir)),
         ("langid", lambda: langid_rows(spark, sf_dir)),
         ("feed", lambda: feed_rows(spark, sf_dir)),
         ("code_blocks",
-         lambda: code_blocks_rows(spark, sf_dir, pages=_pages)),
-        ("psl", lambda: psl_rows(spark, sf_dir, domains=_psl)),
+         lambda: code_blocks_rows(spark, sf_dir, pages=pages)),
+        ("psl", lambda: psl_rows(spark, sf_dir, domains=psl)),
         ("mojibake", lambda: mojibake_rows(spark, sf_dir)),
         ("c4_lines", lambda: c4_lines_rows(spark, sf_dir)),
         ("dehyphenate", lambda: dehyphenate_rows(spark, sf_dir)),
@@ -1763,36 +1788,36 @@ def suite_branch_builders(
         ("url_params", lambda: url_params_rows(spark, sf_dir)),
         ("pagination", lambda: pagination_rows(spark, sf_dir)),
         ("dom_template",
-         lambda: dom_template_rows(spark, sf_dir, pages=_pages)),
+         lambda: dom_template_rows(spark, sf_dir, pages=pages)),
         ("hreflang", lambda: hreflang_rows(spark, sf_dir)),
         ("html_spans",
-         lambda: html_spans_rows(spark, sf_dir, pages=_pages)),
+         lambda: html_spans_rows(spark, sf_dir, pages=pages)),
         ("gopher_repetition",
          lambda: gopher_repetition_rows(spark, sf_dir)),
         ("pub_date",
-         lambda: pub_date_rows(spark, sf_dir, pages=_pages)),
+         lambda: pub_date_rows(spark, sf_dir, pages=pages)),
         ("img_pairs",
-         lambda: img_pairs_rows(spark, sf_dir, pages=_pages)),
+         lambda: img_pairs_rows(spark, sf_dir, pages=pages)),
         ("dedup_keep_best",
-         lambda: dedup_keep_best_rows(spark, sf_dir, pairs=_pairs)),
+         lambda: dedup_keep_best_rows(spark, sf_dir, pairs=pairs)),
         ("lm_ppl", lambda: lm_ppl_rows(spark, sf_dir)),
-        ("lsh_eval", lambda: lsh_eval_rows(spark, sf_dir, pairs=_pairs)),
+        ("lsh_eval", lambda: lsh_eval_rows(spark, sf_dir, pairs=pairs)),
         ("lingstats", lambda: lingstats_rows(spark, sf_dir)),
         ("winnow", lambda: winnow_rows(spark, sf_dir)),
         ("meta_robots",
-         lambda: robots_meta_rows(spark, sf_dir, pages=_pages)),
+         lambda: robots_meta_rows(spark, sf_dir, pages=pages)),
         # one fused DOM pass emits BOTH the 'justext' paragraph board
         # and the 'extract_eval' quality rows (operators/justext.py)
         ("justext",
-         lambda: justext_suite_rows(spark, sf_dir, pages=_pages)),
+         lambda: justext_suite_rows(spark, sf_dir, pages=pages)),
         ("split",
-         lambda: split_rows(spark, sf_dir, pairs=_pairs, domains=_psl)),
+         lambda: split_rows(spark, sf_dir, pairs=pairs, domains=psl)),
         ("url_resolve", lambda: url_resolve_rows(spark, sf_dir)),
-        ("trustrank", lambda: trustrank_rows(spark, sf_dir)),
-        ("hits", lambda: hits_rows(spark, sf_dir)),
+        ("trustrank", lambda: trustrank_rows(graph)),
+        ("hits", lambda: hits_rows(graph)),
         ("ac_scan", lambda: ac_scan_rows(spark, sf_dir)),
         ("rag_chunk",
-         lambda: rag_chunk_rows(spark, sf_dir, pages=_pages)),
+         lambda: rag_chunk_rows(spark, sf_dir, pages=pages)),
         ("clf_eval", lambda: clf_eval_rows(spark, sf_dir)),
         ("clf_train", lambda: clf_train_rows(spark, sf_dir)),
         ("drift", lambda: drift_rows(spark, sf_dir)),

@@ -1,23 +1,25 @@
-"""Host-graph analytics: PageRank over the crawl's host->host link
-graph — the classic web-scale iterative DataFrame algorithm (Page et
-al. 1999; the Common-Crawl host-level ranking every crawl pipeline
-publishes). Third iterative algorithm in the repo next to
-`dedup_clusters` (label propagation) and `connected_components_star`.
+"""Host-graph analytics: PageRank, TrustRank and HITS over the
+crawl's host->host link graph — the classic web-scale iterative
+DataFrame algorithms (Page et al. 1999; the Common-Crawl host-level
+ranking every crawl pipeline publishes). The iterative algorithms next
+to `dedup_clusters` (label propagation) and `connected_components_star`.
 
-Graph fixture (deterministic in (doc_id, source), so the DuckDB twin
-reproduces it exactly): nodes are the corpus' distinct hosts ranked by
+Graph fixture (deterministic in (doc_id, source), so the DuckDB twins
+reproduce it exactly): nodes are the corpus' distinct hosts ranked by
 name (u = 1..N); each document contributes one outlink
 u -> (u*7 + doc_id) % N + 1; parallel edges keep their multiplicity as
 weight. Every host has documents, so out-degree >= 1 — no dangling-mass
 redistribution needed (asserted).
 
-Plan shape at 10^12 docs: the edge build is one map-side-combined
-groupBy; each power iteration is ONE shuffle (contrib groupBy on the
-destination) plus a broadcast of the (tiny) rank vector's join — ranks
-have one row per HOST (millions), not per document, so the iteration
-state is broadcast-sized. K iterations = K shuffles, plan depth grows
-linearly (K is small and fixed; for large K the dedup_clusters
-localCheckpoint discipline applies).
+Plan shape at 10^12 docs: ONE shared census (`host_graph`: one
+documents scan, a broadcast host-rank join and one map-side-combined
+groupBy, checkpointed with the host list) feeds all three algorithms.
+Every power step (`_propagate`) is ONE shuffle (the mass groupBy on the
+destination) plus a broadcast of the (tiny) state — one row per HOST
+(millions), not per document. Each node adds a zero term to that
+groupBy, so no step joins back onto the node list. K steps = K
+shuffles, plan depth grows linearly (K is small and fixed; for large K
+the dedup_clusters localCheckpoint discipline applies).
 
 Float discipline: ranks are doubles; Spark and DuckDB may sum
 contributions in different orders (~1e-15 relative drift), so the gate
@@ -30,42 +32,40 @@ unsafe: 0.1177875 * 1e6 sits exactly on a .5 boundary.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from paddleocr_spark.sources.scan import scan_parquet
 
 DAMPING = 0.85
 ITERATIONS = 3
 
+# (nodes, n, edges) of `host_graph`
+HostGraph = tuple[DataFrame, int, DataFrame]
 
-def host_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, u): hosts ranked 1..N by name (deterministic order both
-    engines)."""
-    return (
-        scan_parquet(spark, f"{sf_dir}/documents.parquet")
-        .select("source")
+
+def host_graph(spark: SparkSession, sf_dir: str) -> HostGraph:
+    """(nodes, n, edges), the host census the link-analysis branches
+    share: nodes (source, u) ranks the n hosts 1..n by name
+    (deterministic order both engines); edges (u, v, w) weighs the
+    per-doc outlink rule's host->host edges (w an integral double
+    count). One broadcast join (rank the host) + one groupBy (weights).
+
+    Both frames are localCheckpoint'ed (eagerly materialized, lineage
+    truncated) rather than persist()'ed: every branch references them
+    several times, and a persist would either leak (never unpersisted:
+    the caller owns the plan) or be dropped before the caller's action
+    runs. Checkpoint blocks are freed by the ContextCleaner when the
+    plans become unreachable. The documents scan runs ONCE, not once
+    per branch or iteration through the lineage."""
+    docs = scan_parquet(spark, f"{sf_dir}/documents.parquet")
+    nodes = (
+        docs.select("source")
         .distinct()
         .withColumn("u", F.row_number().over(Window.orderBy("source")))
+        .localCheckpoint()
     )
-
-
-def host_edges(
-    spark: SparkSession,
-    sf_dir: str,
-    nodes: DataFrame | None = None,
-    n: int | None = None,
-) -> DataFrame:
-    """(u, v, w): weighted host->host edges from the per-doc outlink
-    rule. One broadcast join (rank the host) + one groupBy (weights).
-    Pass nodes/n to share one host census across a larger plan."""
-    docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
-    if nodes is None:
-        nodes = host_nodes(spark, sf_dir)
-    if n is None:
-        n = nodes.count()  # tiny (distinct hosts); driver-side by design
-    return (
+    n = nodes.count()  # host cardinality: the one intended scalar
+    edges = (
         docs.join(F.broadcast(nodes), "source")
         .select(
             "u",
@@ -73,63 +73,87 @@ def host_edges(
         )
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
+        .localCheckpoint()
     )
+    return nodes, n, edges
 
 
-def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, rank) after ITERATIONS power steps at DAMPING.
-    rank_{k+1}(v) = (1-d)/N + d * sum_{u->v} rank_k(u) * w_uv / out_u.
-
-    State discipline: nodes and the normalized edges are
-    localCheckpoint'ed (eagerly materialized, lineage truncated) rather
-    than persist()'ed — the returned DataFrame references them 3+ times
-    and a persist would either leak (never unpersisted: the caller owns
-    the plan) or be dropped before the caller's action runs. Checkpoint
-    blocks are freed by the ContextCleaner when the plan becomes
-    unreachable. This also means the document scan runs ONCE, not once
-    per iteration through the lineage."""
-    nodes = host_nodes(spark, sf_dir).localCheckpoint()
-    n = nodes.count()  # host cardinality: the one intended scalar
-    edges = host_edges(spark, sf_dir, nodes, n).localCheckpoint()
+def _normalize(edges: DataFrame) -> DataFrame:
+    """(u, v, p): each edge's share p = w / out_w of its source's
+    out-weight, checkpointed because every power step re-reads it. The
+    (u, v) pairs stay unique."""
     out = edges.groupBy("u").agg(F.sum("w").alias("out_w"))
-    norm = (
+    return (
         edges.join(out, "u")
         .select("u", "v", (F.col("w") / F.col("out_w")).alias("p"))
         .localCheckpoint()
     )
-    # every node must emit links or dangling mass silently leaks
-    # (coalesce(mass, 0) would hide it): one anti-join scalar over the
+
+
+def _propagate(
+    nodes: DataFrame,
+    edges: DataFrame,
+    state: DataFrame,
+    weight: str,
+    src: str,
+    dst: str,
+    combine: list[Column],
+) -> DataFrame:
+    """One power step: for every value column c of `state` (u, c...),
+    the mass sum_{src->dst} c(src) * weight lands on dst, and the
+    step returns (u, *combine), where `combine` reads each mass under
+    its state column's name.
+
+    The state is host-sized, so it is broadcast into the edge join; the
+    mass is ONE groupBy shuffle on dst. Every node also adds one zero
+    term to that groupBy, so every node gets exactly one row, even one
+    that no edge points to, without a join back onto `nodes`. This is
+    exact: x + 0 == x, in doubles and in decimals."""
+    cols = state.columns[1:]
+    terms = edges.join(
+        F.broadcast(state.withColumnRenamed("u", src)), src
+    ).select(
+        F.col(dst).alias("u"),
+        *[(F.col(c) * F.col(weight)).alias(c) for c in cols],
+    )
+    zeros = nodes.select(
+        "u", *[F.lit(0).cast(t).alias(c) for c, t in terms.dtypes[1:]]
+    )
+    return (
+        terms.unionByName(zeros)
+        .groupBy("u")
+        .agg(*[F.sum(c).alias(c) for c in cols])
+        .select("u", *combine)
+    )
+
+
+def host_pagerank(graph: HostGraph) -> DataFrame:
+    """(source, rank) after ITERATIONS power steps at DAMPING over the
+    `host_graph` census.
+    rank_{k+1}(v) = (1-d)/N + d * sum_{u->v} rank_k(u) * w_uv / out_u."""
+    nodes, n, edges = graph
+    norm = _normalize(edges)
+    # every node must emit links or dangling mass silently leaks (the
+    # zero terms would hide it): one anti-join scalar over the
     # CHECKPOINTED norm, no rescan of documents
     dangling = nodes.join(norm.select("u"), "u", "left_anti").count()
     if dangling:
         raise ValueError(f"{dangling} dangling host(s) in pagerank fixture")
     ranks = nodes.select("u", F.lit(1.0 / n).alias("r"))
+    rank = F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * F.col("r")
     for _ in range(ITERATIONS):
-        contribs = (
-            norm.join(F.broadcast(ranks), "u")
-            .groupBy("v")
-            .agg(F.sum(F.col("r") * F.col("p")).alias("mass"))
-        )
-        ranks = (
-            nodes.select("u")
-            .join(contribs, nodes.u == contribs.v, "left")
-            .select(
-                "u",
-                (
-                    F.lit((1.0 - DAMPING) / n)
-                    + F.lit(DAMPING) * F.coalesce("mass", F.lit(0.0))
-                ).alias("r"),
-            )
+        ranks = _propagate(
+            nodes, norm, ranks, "p", "u", "v", [rank.alias("r")]
         )
     return nodes.join(ranks, "u").select(
         "source", F.col("r").alias("rank")
     )
 
 
-def host_pagerank_rows(spark, sf_dir: str):
+def host_pagerank_rows(graph: HostGraph):
     """(op='host_pagerank', k=source, v=round(rank*1e8)) for the gate
     suite (see module docstring for the scale choice)."""
-    return host_pagerank(spark, sf_dir).select(
+    return host_pagerank(graph).select(
         F.lit("host_pagerank").alias("op"),
         F.col("source").alias("k"),
         F.round(F.col("rank") * 100000000)
@@ -194,7 +218,7 @@ FROM nodes JOIN r3 ON nodes.u = r3.u
 TRUST_SEED_FRAC = 4  # seeds = the n//4 lexicographically-first hosts
 
 
-def host_trust_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def host_trust_signals(graph: HostGraph) -> DataFrame:
     """(source, seed, pr, tr, spam, n_out, n_recip): the classic
     webspam triad over the host graph —
 
@@ -210,15 +234,15 @@ def host_trust_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
       back. Integer counts, no float.
 
     ONE two-vector power iteration: the state frame carries (u, r_pr,
-    r_tr) and each of the ITERATIONS steps is a single contribs
+    r_tr) and each of the ITERATIONS steps is a single `_propagate`
     shuffle aggregating BOTH vectors — TrustRank rides PageRank's
     exchange for free (broadcast-sized state, scaled 1e8; the margin
     test pins rounding-boundary distance like host_pagerank's).
-    Reciprocity is one self-join of the distinct edge set on the
-    reversed key — bounded by the host-graph edge count, never
-    doc-scale.
+    Reciprocity is one self-join of the normalized edge set's (unique)
+    (u, v) pairs on the reversed key — bounded by the host-graph edge
+    count, never doc-scale.
 
-    Edge fixture: host_edges' per-doc rule is FUNCTIONAL here (source
+    Edge fixture: `host_graph`'s per-doc rule is FUNCTIONAL here (source
     classes fix doc_id mod n, so each host gets ONE functional
     target), which would leave reciprocity identically zero; the
     trust graph therefore adds a deterministic PAIRING edge
@@ -230,10 +254,8 @@ def host_trust_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack 2^9 under the teleport's 2^2 and push tr*1e8 onto an exact
     .5 boundary (observed: src8 split 2077187.5 across engines at the
     half-weight design)."""
-    nodes = host_nodes(spark, sf_dir).localCheckpoint()
-    n = nodes.count()
+    nodes, n, base = graph
     n_seeds = max(n // TRUST_SEED_FRAC, 1)
-    base = host_edges(spark, sf_dir, nodes, n)
     u = F.col("u")
     pair = (
         F.when((u % 2 == 1) & (u < n), u + 1)
@@ -245,50 +267,29 @@ def host_trust_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.sum("w") * 4).alias("w"))
         .select("u", pair.alias("v"), "w")
     )
-    edges = (
+    norm = _normalize(
         base.unionByName(pair_edges)
         .groupBy("u", "v")
         .agg(F.sum("w").alias("w"))
-        .localCheckpoint()
     )
-    out = edges.groupBy("u").agg(F.sum("w").alias("out_w"))
-    norm = (
-        edges.join(out, "u")
-        .select("u", "v", (F.col("w") / F.col("out_w")).alias("p"))
-        .localCheckpoint()
-    )
-    seed_col = (F.col("u") <= n_seeds).cast("int")
+    seed = (u <= n_seeds).cast("double")
     state = nodes.select(
         "u",
         F.lit(1.0 / n).alias("r_pr"),
-        (seed_col.cast("double") / n_seeds).alias("r_tr"),
+        (seed / n_seeds).alias("r_tr"),
     )
+    step = [
+        (
+            F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * F.col("r_pr")
+        ).alias("r_pr"),
+        (
+            seed * F.lit((1.0 - DAMPING) / n_seeds)
+            + F.lit(DAMPING) * F.col("r_tr")
+        ).alias("r_tr"),
+    ]
     for _ in range(ITERATIONS):
-        contribs = (
-            norm.join(F.broadcast(state), "u")
-            .groupBy("v")
-            .agg(
-                F.sum(F.col("r_pr") * F.col("p")).alias("m_pr"),
-                F.sum(F.col("r_tr") * F.col("p")).alias("m_tr"),
-            )
-        )
-        state = (
-            nodes.select("u")
-            .join(contribs, nodes.u == contribs.v, "left")
-            .select(
-                "u",
-                (
-                    F.lit((1.0 - DAMPING) / n)
-                    + F.lit(DAMPING) * F.coalesce("m_pr", F.lit(0.0))
-                ).alias("r_pr"),
-                (
-                    (F.col("u") <= n_seeds).cast("double")
-                    * F.lit((1.0 - DAMPING) / n_seeds)
-                    + F.lit(DAMPING) * F.coalesce("m_tr", F.lit(0.0))
-                ).alias("r_tr"),
-            )
-        )
-    dedges = edges.select("u", "v").distinct().localCheckpoint()
+        state = _propagate(nodes, norm, state, "p", "u", "v", step)
+    dedges = norm.select("u", "v")
     recip = (
         dedges.alias("a")
         .join(
@@ -315,10 +316,10 @@ def host_trust_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def trustrank_rows(spark, sf_dir: str):
+def trustrank_rows(graph: HostGraph):
     """(op='trustrank', k=source, v=seed|pr8|tr8|spam8|n_out|n_recip)."""
     s8 = lambda c: F.round(F.col(c) * 100000000).cast("long")  # noqa: E731
-    return host_trust_signals(spark, sf_dir).select(
+    return host_trust_signals(graph).select(
         F.lit("trustrank").alias("op"),
         F.col("source").alias("k"),
         F.concat_ws(
@@ -438,7 +439,7 @@ ORDER BY k
 HITS_ROUNDS = 2  # statically unrolled a/h pairs: a1,h1,a2,h2
 
 
-def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+def host_hits(graph: HostGraph) -> DataFrame:
     """(source, authority, hub) after HITS_ROUNDS unnormalized power
     rounds of Kleinberg's mutual reinforcement: a <- E^T h, h <- E a.
 
@@ -458,59 +459,21 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact, rank-preserving) is the documented rescale swap, the
     pca.py discipline.
 
-    Scale shape: the corpus-scale work is ONE documents scan into the
-    weighted host-edge census (broadcast host ranks, count groupBy);
-    every iterate is host-cardinality, joined via broadcast — the
-    pagerank/trustrank contract.
+    Scale shape: the corpus-scale work is the shared `host_graph`
+    census, its integral double weights cast EXACTLY to decimal(38,0)
+    (counts < 2^53); every round is two `_propagate` steps (authority
+    along u->v, hub along v->u), each one host-cardinality broadcast
+    plus one groupBy shuffle — the pagerank/trustrank contract.
     """
-    nodes = host_nodes(spark, sf_dir).localCheckpoint()
-    n = nodes.count()
-    docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
+    nodes, _, edges = graph
     dec = "decimal(38,0)"
-    edges = (
-        docs.join(F.broadcast(nodes), "source")
-        .select(
-            "u",
-            ((F.col("u") * 7 + F.col("doc_id")) % n + 1).alias("v"),
-        )
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast(dec).alias("w"))
-        .localCheckpoint()
-    )
+    edges = edges.select("u", "v", F.col("w").cast(dec).alias("w"))
     h = nodes.select("u", F.lit(1).cast(dec).alias("s"))
-    a = None
     for _ in range(HITS_ROUNDS):
         # authority: a(v) = sum_{u->v} w * h(u)
-        am = (
-            edges.join(F.broadcast(h), "u")
-            .groupBy("v")
-            .agg(F.sum(F.col("w") * F.col("s")).alias("m"))
-        )
-        a = (
-            nodes.select("u")
-            .join(am, F.col("u") == F.col("v"), "left")
-            .select(
-                "u",
-                F.coalesce("m", F.lit(0)).cast(dec).alias("s"),
-            )
-        )
+        a = _propagate(nodes, edges, h, "w", "u", "v", [F.col("s")])
         # hub: h(u) = sum_{u->v} w * a(v)
-        av = a.select(F.col("u").alias("v"), F.col("s").alias("t"))
-        hm = (
-            edges.join(F.broadcast(av), "v")
-            .groupBy("u")
-            .agg(F.sum(F.col("w") * F.col("t")).alias("m"))
-        )
-        h = (
-            nodes.select("u")
-            .join(hm, "u", "left")
-            .select(
-                "u",
-                F.coalesce("m", F.lit(0)).cast(dec).alias("s"),
-            )
-        )
+        h = _propagate(nodes, edges, a, "w", "v", "u", [F.col("s")])
     return (
         nodes.join(a.withColumnRenamed("s", "authority"), "u")
         .join(h.withColumnRenamed("s", "hub"), "u")
@@ -518,10 +481,10 @@ def host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hits_rows(spark, sf_dir: str):
+def hits_rows(graph: HostGraph):
     """(op='hits', k=source, v=authority|hub) — arbitrary-precision
     integers cross the gate as strings (pca.py convention)."""
-    return host_hits(spark, sf_dir).select(
+    return host_hits(graph).select(
         F.lit("hits").alias("op"),
         F.col("source").alias("k"),
         F.concat_ws(

@@ -12,6 +12,8 @@ pass every value oracle and still fall over at 10^12 docs. Pin them.
   dominant stage.
 - A resumed run_job is at most three Spark jobs, and a snapshot
   streaming epoch is one: nothing reads back what was just written.
+- The link-analysis branches (PageRank, TrustRank, HITS) share one host
+  graph, and each power step is one shuffle plus one broadcast.
 """
 
 import re
@@ -93,6 +95,31 @@ def test_run_job_resumed_sink_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("run-job-shape")
     assert 0 < len(jobs) <= 3, jobs
     assert n == 16
+
+
+def test_link_analysis_job_count(spark):
+    """One host_graph build plus the three link-analysis row builders
+    over it, collected, is at most 58 Spark jobs (measured 58 on
+    local[4] and local[8]; with one census per branch and a join back
+    onto the node list every round they took 91). A second census, an
+    extra checkpoint or a join back adds jobs and fails this pin."""
+    from paddleocr_spark.functions.webgraph import (
+        hits_rows,
+        host_graph,
+        host_pagerank_rows,
+        trustrank_rows,
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("link-analysis-shape", "host graph + three branches")
+    try:
+        graph = host_graph(spark, SF_SMALL)
+        for rows in (host_pagerank_rows, trustrank_rows, hits_rows):
+            assert len(rows(graph).collect()) == graph[1]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("link-analysis-shape")
+    assert 0 < len(jobs) <= 58, len(jobs)
 
 
 def test_snapshot_stream_epoch_job_count(spark, tmp_path, monkeypatch):

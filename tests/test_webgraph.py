@@ -1,5 +1,7 @@
-"""Host-graph PageRank (functions/webgraph.py): pure-python reference
-parity, rounding-boundary safety margin, oracle-fixture agreement."""
+"""Host-graph PageRank, TrustRank and HITS (functions/webgraph.py):
+pure-python reference parity, rounding-boundary safety margin,
+oracle-fixture agreement, and the shared power step on a hand-built
+graph."""
 
 import duckdb
 import pytest
@@ -23,6 +25,12 @@ def _reference_pagerank(sf_dir):
         u = rank_of[s]
         v = (u * 7 + doc_id) % n + 1
         edges[(u, v)] = edges.get((u, v), 0) + 1
+    r = _pagerank_dict(n, edges)
+    return {hosts[u - 1]: r[u] for u in r}
+
+
+def _pagerank_dict(n, edges):
+    """{u: rank} after ITERS power steps over {(u, v): w}, u = 1..n."""
     out = {}
     for (u, _), w in edges.items():
         out[u] = out.get(u, 0) + w
@@ -36,16 +44,16 @@ def _reference_pagerank(sf_dir):
             u: (1 - DAMPING) / n + DAMPING * mass[u]
             for u in range(1, n + 1)
         }
-    return {hosts[u - 1]: r[u] for u in r}
+    return r
 
 
 def test_spark_matches_reference_exactly_in_micro_units(spark):
-    from paddleocr_spark.functions.webgraph import host_pagerank
+    from paddleocr_spark.functions.webgraph import host_graph, host_pagerank
 
     ref = _reference_pagerank(SF_SMALL)
     got = {
         r["source"]: r["rank"]
-        for r in host_pagerank(spark, SF_SMALL).collect()
+        for r in host_pagerank(host_graph(spark, SF_SMALL)).collect()
     }
     assert set(got) == set(ref)
     for s in ref:
@@ -66,10 +74,11 @@ def test_micro_rounding_margin(sf_dir):
 
 
 def test_ranks_sum_to_one(spark):
-    from paddleocr_spark.functions.webgraph import host_pagerank
+    from paddleocr_spark.functions.webgraph import host_graph, host_pagerank
 
     total = sum(
-        r["rank"] for r in host_pagerank(spark, SF_SMALL).collect()
+        r["rank"]
+        for r in host_pagerank(host_graph(spark, SF_SMALL)).collect()
     )
     assert abs(total - 1.0) < 1e-9
 
@@ -126,10 +135,14 @@ def _reference_trust(sf_dir):
 
 
 def test_trust_signals_match_pure_python(spark):
-    from paddleocr_spark.functions.webgraph import host_trust_signals
+    from paddleocr_spark.functions.webgraph import (
+        host_graph,
+        host_trust_signals,
+    )
 
     hosts, s, rank_of, pr, tr, deg, recip = _reference_trust(SF_SMALL)
-    got = {r["source"]: r for r in host_trust_signals(spark, SF_SMALL).collect()}
+    graph = host_graph(spark, SF_SMALL)
+    got = {r["source"]: r for r in host_trust_signals(graph).collect()}
     assert set(got) == set(hosts)
     for h in hosts:
         u = rank_of[h]
@@ -148,10 +161,13 @@ def test_trust_signals_match_pure_python(spark):
 
 
 def test_trust_rounding_margin(spark):
-    from paddleocr_spark.functions.webgraph import host_trust_signals
+    from paddleocr_spark.functions.webgraph import (
+        host_graph,
+        host_trust_signals,
+    )
 
     for sf in (SF_SMALL, SF_MID):
-        for r in host_trust_signals(spark, sf).collect():
+        for r in host_trust_signals(host_graph(spark, sf)).collect():
             for col in ("r_pr", "r_tr"):
                 frac = abs((r[col] * 1e8) % 1.0 - 0.5)
                 assert frac > 0.4, (sf, r["source"], col, r[col])
@@ -160,6 +176,7 @@ def test_trust_rounding_margin(spark):
 def test_trustrank_rows_match_duckdb_oracle(spark):
     from paddleocr_spark.functions.webgraph import (
         TRUSTRANK_SQL,
+        host_graph,
         trustrank_rows,
     )
 
@@ -169,45 +186,50 @@ def test_trustrank_rows_match_duckdb_oracle(spark):
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
     oracle = {r[1]: r[2] for r in con.execute(TRUSTRANK_SQL).fetchall()}
-    mine = {r["k"]: r["v"] for r in trustrank_rows(spark, SF_SMALL).collect()}
+    rows = trustrank_rows(host_graph(spark, SF_SMALL)).collect()
+    mine = {r["k"]: r["v"] for r in rows}
     assert mine == oracle
+
+
+def _hits_dict(us, edges):
+    """({u: authority}, {u: hub}) after HITS_ROUNDS unnormalized
+    rounds over {(u, v): w}."""
+    from paddleocr_spark.functions.webgraph import HITS_ROUNDS
+
+    h = {u: 1 for u in us}
+    a = {}
+    for _ in range(HITS_ROUNDS):
+        a = {u: 0 for u in us}
+        for (u, v), w in edges.items():
+            a[v] += w * h[u]
+        h = {u: 0 for u in us}
+        for (u, v), w in edges.items():
+            h[u] += w * a[v]
+    return a, h
 
 
 def test_hits_matches_pure_python(spark):
     """Unnormalized integer HITS vs a dict-based reference over the
     same edge census."""
-    from paddleocr_spark.functions.webgraph import (
-        HITS_ROUNDS,
-        host_edges,
-        host_hits,
-        host_nodes,
-    )
+    from paddleocr_spark.functions.webgraph import host_graph, host_hits
 
-    nodes = {
-        r["source"]: r["u"]
-        for r in host_nodes(spark, SF_SMALL).collect()
-    }
-    edges = {}
-    for r in host_edges(spark, SF_SMALL).collect():
-        edges[(r["u"], r["v"])] = int(r["w"])
-    h = {u: 1 for u in nodes.values()}
-    a = {}
-    for _ in range(HITS_ROUNDS):
-        a = {u: 0 for u in nodes.values()}
-        for (u, v), w in edges.items():
-            a[v] += w * h[u]
-        h = {u: 0 for u in nodes.values()}
-        for (u, v), w in edges.items():
-            h[u] += w * a[v]
+    graph = host_graph(spark, SF_SMALL)
+    nodes = {r["source"]: r["u"] for r in graph[0].collect()}
+    edges = {(r["u"], r["v"]): int(r["w"]) for r in graph[2].collect()}
+    a, h = _hits_dict(nodes.values(), edges)
     got = {
         r["source"]: (int(r["authority"]), int(r["hub"]))
-        for r in host_hits(spark, SF_SMALL).collect()
+        for r in host_hits(graph).collect()
     }
     assert got == {s: (a[u], h[u]) for s, u in nodes.items()}
 
 
 def test_hits_rows_match_duckdb_oracle(spark):
-    from paddleocr_spark.functions.webgraph import HITS_SQL, hits_rows
+    from paddleocr_spark.functions.webgraph import (
+        HITS_SQL,
+        hits_rows,
+        host_graph,
+    )
 
     con = duckdb.connect()
     con.execute(
@@ -215,9 +237,49 @@ def test_hits_rows_match_duckdb_oracle(spark):
         f"read_parquet('{SF_SMALL}/documents.parquet')"
     )
     oracle = {r[1]: r[2] for r in con.execute(HITS_SQL).fetchall()}
-    mine = {r["k"]: r["v"] for r in hits_rows(spark, SF_SMALL).collect()}
+    rows = hits_rows(host_graph(spark, SF_SMALL)).collect()
+    mine = {r["k"]: r["v"] for r in rows}
     assert mine == oracle
     # mutual reinforcement is non-degenerate on the fixture: some host
     # must collect authority mass and every host emits hub mass
     assert any(int(v.split("|")[0]) > 0 for v in mine.values())
     assert all(int(v.split("|")[1]) > 0 for v in mine.values())
+
+
+def test_power_step_on_hand_built_graph(spark):
+    """The shared `_propagate` step on a 4-host graph the corpus
+    fixture may lack: host d has no in-link and host c links to itself.
+    The zero term each node adds to the mass groupBy must give d a row
+    with exactly no mass: PageRank (1 - d) / n, HITS authority 0. Every
+    host comes back exactly once, and all values equal the dict
+    references."""
+    from paddleocr_spark.functions.webgraph import (
+        DAMPING,
+        host_hits,
+        host_pagerank,
+    )
+
+    hosts = ["a", "b", "c", "d"]
+    edges = {(1, 2): 1, (2, 3): 2, (3, 3): 2, (3, 1): 1, (4, 1): 3}
+    nodes = spark.createDataFrame(
+        [(s, u) for u, s in enumerate(hosts, 1)], "source string, u int"
+    )
+    frame = spark.createDataFrame(
+        [(u, v, float(w)) for (u, v), w in edges.items()],
+        "u int, v int, w double",
+    )
+    graph = (nodes, len(hosts), frame)
+
+    ranks = host_pagerank(graph).collect()
+    assert sorted(r["source"] for r in ranks) == hosts
+    got = {r["source"]: r["rank"] for r in ranks}
+    assert got["d"] == (1.0 - DAMPING) / len(hosts)
+    ref = _pagerank_dict(len(hosts), edges)
+    assert got == {s: ref[u] for u, s in enumerate(hosts, 1)}
+
+    hits = host_hits(graph).collect()
+    assert sorted(r["source"] for r in hits) == hosts
+    got = {r["source"]: (int(r["authority"]), int(r["hub"])) for r in hits}
+    assert got["d"][0] == 0
+    a, h = _hits_dict(range(1, len(hosts) + 1), edges)
+    assert got == {s: (a[u], h[u]) for u, s in enumerate(hosts, 1)}
