@@ -30,9 +30,9 @@ Plan shape at 10^12 docs:
     extra exchange of the corpus-sized side beyond the (doc, bucket)
     combine in (1).
 The top-quartile cut uses the exact global ntile for the oracle, with
-the same threshold-swap story as lm_bucket_scaled: at production scale
-the quartile boundary comes from approxQuantile and the window
-disappears (see `dsir_weights_scaled`).
+the same threshold-swap story as `text.lm_bucket`: at production scale
+the quartile boundary would come from approxQuantile and the window
+would disappear.
 
 Reference parity: the reference has no data-selection layer (its corpus
 is a directory of images) — this module is part of the
@@ -147,46 +147,6 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_feats",
         "dsir_micro",
         (F.ntile(DSIR_KEEP).over(w) == 1).cast("int").alias("selected"),
-    )
-
-
-def dsir_weights_scaled(
-    spark: SparkSession, sf_dir: str, relative_error: float = 0.001
-) -> DataFrame:
-    """The 10^12-doc form: the quartile boundary comes from ONE
-    approxQuantile scalar (Greenwald-Khanna, bounded memory) and the
-    selection is a plain threshold — the global ntile window, the one
-    serializing node in the exact path, is deleted. Boundary ties round
-    INTO the kept set, so the kept fraction is only approximately
-    1/DSIR_KEEP — exactly the deployed DSIR behavior (its gumbel-top-k
-    is a threshold on perturbed weights, not an exact rank)."""
-    from pyspark.sql.window import Window
-
-    db = _doc_buckets(spark, sf_dir)
-    lr = dsir_log_ratios(db)
-    per_doc = (
-        db.join(F.broadcast(lr), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_feats"),
-            F.sum(F.col("cnt") * F.col("lr_micro"))
-            .cast("long")
-            .alias("dsir_micro"),
-        )
-    )
-    cuts = per_doc.stat.approxQuantile(
-        "dsir_micro", [1.0 - 1.0 / DSIR_KEEP], relative_error
-    )
-    if not cuts:
-        return per_doc.select(
-            "doc_id", "n_feats", "dsir_micro",
-            F.lit(1).cast("int").alias("selected"),
-        )
-    return per_doc.select(
-        "doc_id",
-        "n_feats",
-        "dsir_micro",
-        (F.col("dsir_micro") >= cuts[0]).cast("int").alias("selected"),
     )
 
 

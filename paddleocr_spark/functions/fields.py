@@ -32,14 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from paddleocr_spark.sources.scan import scan_parquet
-from paddleocr_spark.functions.corrections import (
-    RE_CORRECTIONS,
-    corrections_col_lines,
-)
-
-# Back-compat alias: the full ordered chain now lives in
-# functions/corrections.py (all ~78 rules of fastapi_app.py:494-573).
-OCR_CORRECTIONS = RE_CORRECTIONS
+from paddleocr_spark.functions.corrections import corrections_col_lines
 
 IC_RE = r"(\d{6}-\d{2}-\d{4})"
 POSTCODE_RE = r"\b(\d{5})\b"

@@ -163,37 +163,12 @@ def _train(
     return _update(assigned, dim), assigned
 
 
-def kmeans_train(
-    spark: SparkSession, sf_dir: str, iters: int = KM_ITERS
-) -> DataFrame:
-    """Trained centroids after `iters` Lloyd's iterations, unrolled to
-    (cent_id, pos, m, n) rows — m is the per-dimension centroid value at
-    scale QUANT^2, n the final cell population. Row-shaped (not arrays)
-    so the gate's value-hash covers every dimension."""
-    final, _ = _train(spark, sf_dir, iters)
-    return (
-        final.select(
-            F.col("cell").alias("cent_id"),
-            "n",
-            F.posexplode("m").alias("pos", "m"),
-        )
-        .select("cent_id", F.col("pos").cast("long").alias("pos"), "m", "n")
-        .orderBy("cent_id", "pos")
-    )
-
-
-def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _semdedup_from(assigned: DataFrame) -> DataFrame:
     """SemDeDup verdict per vector: (vec_id, cell, dropped). A vector is
     dropped when its final k-means cell contains a smaller-id vector
     with cosine >= TAU_NUM/TAU_DEN (integer-exact test, see module
     docstring). Equi-join on cell only."""
-    _, assigned = _train(spark, sf_dir)
-    assigned = assigned.localCheckpoint()  # referenced twice below
-    return _semdedup_from(assigned)
-
-
-def _semdedup_from(assigned: DataFrame) -> DataFrame:
-    other = assigned.select(
+    other =assigned.select(
         F.col("cell"),
         F.col("vec_id").alias("b_id"),
         F.col("qq").alias("b_qq"),
@@ -273,17 +248,8 @@ def _langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bitext_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone bitext-mining query (see _bitext_from)."""
-    _, assigned = _train(spark, sf_dir)
-    assigned = assigned.localCheckpoint()
-    return _bitext_from(assigned, _langs(spark, sf_dir)).orderBy(
-        "a_id", "b_id2"
-    )
-
-
 def embedding_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kmeans_train + semdedup (+ bitext, sq8, recall, pca, pq) as ONE
+    """k-means + SemDeDup (+ bitext, sq8, recall, pca, pq) as ONE
     union-tagged (op, k, v) gate row. kmeans/semdedup/bitext share a
     single training run; the final assignment is localCheckpoint'ed
     because the returned plan references it from several sides (same

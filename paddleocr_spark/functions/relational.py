@@ -29,22 +29,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def score_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """drop_score analogue: keep events with value >= 0.5, project ids.
-    The predicate + pruned columns push into the parquet scan."""
-    return (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("value") >= 0.5)
-        .select("event_id", "user_id", F.round("value", 6).alias("value"))
-    )
-
-
-SCORE_FILTER_SQL = """
-SELECT event_id, user_id, round(value, 6) AS value
-FROM events WHERE value >= 0.5
-"""
-
-
 def reading_order(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """sorted_boxes + page_num analogue: first k events per user in
     (ts, event_id) order with their rank."""
@@ -155,23 +139,6 @@ FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-def topk_candidates(spark: SparkSession, sf_dir: str, k: int = 1000) -> DataFrame:
-    """max_candidates cap analogue: global top-k events by value
-    (TakeOrdered — no full sort, no full shuffle)."""
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_id", F.round("value", 6).alias("value"))
-        .orderBy(F.desc("value"), F.asc("event_id"))
-        .limit(k)
-    )
-
-
-TOPK_CANDIDATES_SQL = """
-SELECT event_id, round(value, 6) AS value
-FROM events ORDER BY value DESC, event_id ASC LIMIT 1000
 """
 
 
@@ -323,9 +290,9 @@ def relational_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(dimension_lookup_join(spark, sf_dir), "dimension_lookup",
              ["region_name", "nation_name"],
              [F.col("customers"), as_cents(F.col("total_acctbal"))]),
-        # raw value (not the 6dp-rounded builder output): as_micro must
-        # see the same double the oracle rounds, or double-rounding at
-        # the .5 boundary diverges
+        # raw value (not rounded to 6dp first): as_micro must see the
+        # same double the oracle rounds, or double-rounding at the .5
+        # boundary diverges
         norm(
             _t(spark, sf_dir, "events")
             .select("event_id", "value")
@@ -361,8 +328,8 @@ def _sub(sql: str) -> str:
 
 # score_filter and topk_candidates stay inline ON PURPOSE: like the
 # Spark suite above, they re-derive from the RAW value column so the
-# micro-unit rounding sees the same double on both engines (the 6dp
-# builder output would double-round at the .5 boundary).
+# micro-unit rounding sees the same double on both engines (a 6dp
+# rounded value would double-round at the .5 boundary).
 RELATIONAL_OPS_SUITE_SQL = f"""
 SELECT 'score_filter' AS op, CAST(event_id AS string) AS k,
        concat_ws('|', user_id, CAST(round(value * 1000000) AS bigint)) AS v

@@ -309,7 +309,6 @@ LIMIT {TOP_K}
 
 # -- SQ8 scalar-quantized ANN --------------------------------------------------
 
-SQ8_LEVELS = 255  # 8-bit code range
 SQ8_QUANT = 1024  # integer lattice (power of two: exact IEEE), kmeans QUANT
 
 

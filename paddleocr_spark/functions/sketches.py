@@ -52,11 +52,11 @@ HLL_P = 8            # 2^8 = 256 registers
 HLL_M = 1 << HLL_P
 HLL_W = 40           # rank bits -> rho in 1..41
 HLL_ALPHA = 0.7213 / (1 + 1.079 / HLL_M)   # = 0.7182725932495458
-# alpha * m^2 * 2^41  (m^2 * 2^41 = 2^57, exactly representable)
-_HLL_NUM = "CAST(0.7182725932495458 AS DOUBLE) * 144115188075855872.0"
+# alpha * m^2 * 2^41  (m^2 * 2^41 = 2^57, exactly representable); repr
+# gives the shortest round-tripping literal, the same double on both engines
+_HLL_NUM = f"CAST({HLL_ALPHA!r} AS DOUBLE) * 144115188075855872.0"
 _HLL_TWO41 = 1 << (HLL_W + 1)
 
-CM_DEPTH = 2
 CM_WIDTH = 64
 CM_TERMS = ("the", "spark", "join", "vector", "customer", "zzzabsent")
 

@@ -49,36 +49,6 @@ FROM documents
 _STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 
 
-def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length / punctuation-ratio / stopword-ratio quality signals
-    (C4/Gopher-style rules, simplified)."""
-    df = _docs(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    stop_hits = F.size(
-        F.filter(toks, lambda t: t.isin(*_STOPWORDS))
-    )
-    punct = F.length(F.regexp_replace("text", r"[A-Za-z0-9\s]", ""))
-    return df.select(
-        "doc_id",
-        F.round(punct / F.greatest(F.length("text"), F.lit(1)), 6).alias("punct_ratio"),
-        F.round(stop_hits / F.greatest(F.size(toks), F.lit(1)), 6).alias("stop_ratio"),
-        (F.length("text") >= 200).cast("int").alias("len_ok"),
-    )
-
-
-QUALITY_SCORES_SQL = f"""
-SELECT doc_id,
-       round(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))
-             / greatest(length(text), 1), 6) AS punct_ratio,
-       round(len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                             t -> list_contains({list(_STOPWORDS)!r}, t)))
-             / greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1), 6)
-           AS stop_ratio,
-       CAST(length(text) >= 200 AS int) AS len_ok
-FROM documents
-""".replace("'", "'")
-
-
 # -- language signal ---------------------------------------------------------
 
 def lang_marker_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,8 +314,8 @@ def gopher_signal_cols() -> dict:
 
 def gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document keep/drop verdict with a reason bitmask — the
-    composed FILTER stage downstream of the raw signals
-    (`quality_scores`, `repetition_stats`): bit 1 word-count bounds,
+    composed FILTER stage downstream of the raw signals (the suite's
+    `quality_scores` op, `repetition_stats`): bit 1 word-count bounds,
     bit 2 mean-word-length bounds, bit 4 stopword floor, bit 8
     distinct-word floor. All ratios are exact integer `div` units so
     no float reaches the verdict.
@@ -583,7 +553,6 @@ def seq_pack_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- deterministic global training shuffle -------------------------------------
 
 SHUFFLE_SEED = 42
-_SHUFFLE_SHARDS = 256  # md5-hex prefix space; shard count is constant
 
 
 def global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,30 +626,6 @@ def global_shuffle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 LM_BUCKETS = 3  # head / middle / tail
 
 
-def _lm_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared LM-score subtree: corpus unigram LM (one groupBy) joined
-    back per token, per-doc mean corpus-frequency as the exact integer
-    pair (freq_q, freq_frac). Used by both the exact-ntile `lm_bucket`
-    and the approx-threshold `lm_bucket_scaled`."""
-    toks = _docs(spark, sf_dir).select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("t")
-    )
-    lm = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
-    return (
-        toks.join(F.broadcast(lm), "t")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum("c").alias("sum_freq"),
-        )
-        .withColumn("freq_q", F.expr("sum_freq div n_tokens"))
-        .withColumn(
-            "freq_frac",
-            F.expr("((sum_freq % n_tokens) * 1000000) div n_tokens"),
-        )
-    )
-
-
 def lm_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's perplexity bucketing with the corpus's own unigram LM as
     the model: score each document by the mean corpus-frequency of its
@@ -697,13 +642,28 @@ def lm_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: token explode -> one groupBy(token) builds the LM; the LM is
     a VOCABULARY-sized table (bounded, not corpus-sized) so it
     broadcast-joins back into a second narrow pass; per-doc agg. The
-    final ntile is a global window — at 10^12 docs `lm_bucket_scaled`
-    below swaps it for fixed thresholds from approx quantiles of the
-    score (the bucketing CCNet actually ships); ntile keeps the sandbox
-    oracle exact."""
+    final ntile is a global window — at 10^12 docs it gives way to
+    fixed thresholds from approx quantiles of the score (the bucketing
+    CCNet actually ships); ntile keeps the sandbox oracle exact."""
     from pyspark.sql.window import Window
 
-    per_doc = _lm_per_doc(spark, sf_dir)
+    toks = _docs(spark, sf_dir).select(
+        "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("t")
+    )
+    lm = toks.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
+    per_doc = (
+        toks.join(F.broadcast(lm), "t")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum("c").alias("sum_freq"),
+        )
+        .withColumn("freq_q", F.expr("sum_freq div n_tokens"))
+        .withColumn(
+            "freq_frac",
+            F.expr("((sum_freq % n_tokens) * 1000000) div n_tokens"),
+        )
+    )
     w = Window.orderBy(
         F.desc("freq_q"), F.desc("freq_frac"), F.asc("doc_id")
     )
@@ -747,53 +707,6 @@ def lm_bucket_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("lm_bucket").alias("op"),
         F.col("doc_id").cast("string").alias("k"),
         F.concat_ws("|", "n_tokens", "freq_q", "freq_frac", "bucket").alias("v"),
-    )
-
-
-def lm_bucket_scaled(
-    spark: SparkSession, sf_dir: str, relative_error: float = 0.001
-) -> DataFrame:
-    """The 10^12-doc form of `lm_bucket` — the bucketing CCNet actually
-    ships (Wenzek et al. 2020 cut their corpus at fixed head/middle/tail
-    perplexity thresholds, not an exact rank): same LM + per-doc score
-    subtree as `lm_bucket`, but bucket boundaries come from
-    `approxQuantile` (Greenwald-Khanna sketch — one pass, mergeable,
-    bounded memory per partition) and the assignment is a plain
-    threshold map. This DELETES the global ntile window, the one node
-    in the exact path whose final sort serializes the corpus order
-    through a single task; driver traffic is LM_BUCKETS-1 doubles.
-
-    Bucket semantics: 1 = head (score >= the (1 - 1/B) quantile), B =
-    tail; boundary ties round toward the better bucket, so bucket
-    populations are only approximately equal — exactly the deployed
-    behavior. Scores collapse to a double for the sketch (freq_q +
-    freq_frac/1e6); the exact integer pair still ships per row."""
-    per_doc = _lm_per_doc(spark, sf_dir).withColumn(
-        "_score", F.col("freq_q") + F.col("freq_frac") / 1e6
-    )
-    probs = [i / LM_BUCKETS for i in range(1, LM_BUCKETS)]  # ascending
-    cuts = per_doc.stat.approxQuantile("_score", probs, relative_error)
-    if not cuts:  # empty corpus: no thresholds, nothing to bucket
-        return per_doc.select(
-            "doc_id",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            "freq_q",
-            "freq_frac",
-            F.lit(1).cast("long").alias("bucket"),
-        )
-    # descending thresholds: bucket 1 gets score >= cuts_desc[0], then
-    # each lower threshold claims the next bucket (first match wins)
-    cuts_desc = list(reversed(cuts))
-    bucket = F.when(F.col("_score") >= cuts_desc[0], F.lit(1))
-    for i, thr in enumerate(cuts_desc[1:], start=2):
-        bucket = bucket.when(F.col("_score") >= thr, F.lit(i))
-    bucket = bucket.otherwise(F.lit(LM_BUCKETS))
-    return per_doc.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        "freq_q",
-        "freq_frac",
-        bucket.cast("long").alias("bucket"),
     )
 
 
@@ -2060,8 +1973,8 @@ from paddleocr_spark.functions.weburl import (  # noqa: E402
 
 
 # The quality branch stays inline ON PURPOSE: like the Spark suite, it
-# re-derives micro-unit ratios from the raw counts (the 6dp
-# QUALITY_SCORES_SQL output would double-round at the .5 boundary).
+# re-derives micro-unit ratios from the raw counts (a ratio rounded to
+# 6dp first would double-round at the .5 boundary).
 TEXT_STATS_SUITE_SQL = f"""
 SELECT 'token_counts' AS op, CAST(doc_id AS string) AS k,
        concat_ws('|', ws_tokens, bpe_proxy_tokens, char_len) AS v

@@ -319,14 +319,16 @@ WIN_GRAM = 3  # words per shingle
 WIN_W = 4     # winnowing window, in consecutive shingle hashes
 
 
-# word-3-gram md5 list of `text`, in position order — JVM higher-order
-# functions only (no Python in the hot path). The length-filter form is
-# the langid discipline: Spark's sequence(1, 0) counts DOWN, so short
-# docs floor the bound at 1 and drop under-width grams by size.
+# word-WIN_GRAM-gram md5 list of `text`, in position order — JVM
+# higher-order functions only (no Python in the hot path). The
+# length-filter form is the langid discipline: Spark's sequence(1, 0)
+# counts DOWN, so short docs floor the bound at 1 and drop under-width
+# grams by size.
 _GRAM_HASHES_SPARK = (
     "transform(filter(transform("
-    "sequence(1, greatest(size(split(trim(text), ' ')) - 2, 1)),"
-    " i -> slice(split(trim(text), ' '), i, 3)), a -> size(a) = 3),"
+    f"sequence(1, greatest(size(split(trim(text), ' ')) - {WIN_GRAM - 1}, 1)),"
+    f" i -> slice(split(trim(text), ' '), i, {WIN_GRAM})),"
+    f" a -> size(a) = {WIN_GRAM}),"
     " a -> md5(concat_ws(' ', a)))"
 )
 

@@ -420,9 +420,6 @@ def host_sample_rows(spark, sf_dir: str):
     )
 
 
-_SCHED_SHARDS = 16  # md5 hex-digit shards per host
-
-
 def crawl_schedule(spark, sf_dir: str):
     """Politeness scheduling: assign every url a per-host fetch SLOT
     (0, 1, 2, ...) so a crawler issuing one request per host per
@@ -434,7 +431,7 @@ def crawl_schedule(spark, sf_dir: str):
     by their first md5 hex digit, phase 1 ranks within (host, shard)
     — each task sorts a 1/16 slice — and phase 2 turns per-(host,
     shard) counts into running offsets with a window over at most
-    _SCHED_SHARDS=16 rows per host (the seq_pack two-phase prefix-sum,
+    16 rows per host (the seq_pack two-phase prefix-sum,
     keyed by host). slot = shard offset + local rank is EXACTLY
     row_number() over (host ORDER BY shard, url) - 1."""
     from pyspark.sql.window import Window

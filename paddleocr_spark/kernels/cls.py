@@ -155,6 +155,13 @@ def classify(crop: np.ndarray, model: RecModel | None = None) -> tuple[str, floa
 # comparison, where the worst per-page correct-vs-wrong gap is +0.04
 # (0/5,500 pages chose a wrong angle in the corpus check).
 CLS_PROBE_EARLY_EXIT = 0.65
+# rec-probe early exit, measured on the sf0.01 corpus: correct-
+# orientation probes score >= 0.973, wrong-orientation 180-symmetric
+# glyph reads <= 0.857 — 0.93 splits the gap, so early exit never
+# fires on a wrong angle.
+REC_PROBE_EARLY_EXIT = 0.93
+# detected lines scored per probed angle
+PROBE_BOXES = 3
 
 
 def orient_page(
@@ -162,22 +169,15 @@ def orient_page(
     detect_fn,
     crop_fn,
     rec_model: RecModel | None = None,
-    priority: tuple[int, ...] | None = None,
-    probe_boxes: int = 3,
-    # None resolves per backend below: 0.93 for rec-probe scoring
-    # (measured on the sf0.01 corpus: correct-orientation probes score
-    # >= 0.973, wrong-orientation 180-symmetric glyph reads <= 0.857 —
-    # 0.93 splits the gap, early exit never fires on a wrong angle) and
-    # CLS_PROBE_EARLY_EXIT for cls_model scoring. A None sentinel, not
-    # a magic-value compare: a caller explicitly passing 0.93 gets 0.93
-    # on either backend (round-4 advice).
-    early_exit: float | None = None,
     cls_model=None,
 ) -> tuple[np.ndarray, int]:
     """Prioritized rotation sweep scored by recognition confidence of up
-    to `probe_boxes` detected lines (the fork scores candidate angles by
+    to PROBE_BOXES detected lines (the fork scores candidate angles by
     OCR quality and early-exits on a confident hit,
-    fastapi_app.py:365-408); ties keep the earliest priority angle.
+    fastapi_app.py:365-408); ties keep the earliest priority angle. A
+    coarse geometric vote picks the axis first (the fork's prioritized
+    candidate list, fastapi_app.py:316-323): a 90/270-rotated page then
+    skips the two useless upright probes.
 
     With `cls_model` (an onnx_models.OnnxClsModel from the broadcast
     bundle), probes are scored by the classifier's p("0") instead of rec
@@ -187,17 +187,14 @@ def orient_page(
 
     The returned page is the very array the accepted angle's probe ran
     `detect_fn` on, so a caller can reuse that probe's boxes."""
-    if early_exit is None:
-        early_exit = CLS_PROBE_EARLY_EXIT if cls_model is not None else 0.93
-    rec_model = rec_model or RecModel()
-    if priority is None:
-        # Coarse geometric vote picks the axis first (the fork's
-        # prioritized candidate list, fastapi_app.py:316-323): a
-        # 90/270-rotated page then skips the two useless upright probes.
-        from .rotation import estimate_rotation
+    from .rotation import estimate_rotation
 
-        axis, _ = estimate_rotation(img)
-        priority = (0, 180, 90, 270) if axis == 0 else (90, 270, 0, 180)
+    early_exit = (
+        CLS_PROBE_EARLY_EXIT if cls_model is not None else REC_PROBE_EARLY_EXIT
+    )
+    rec_model = rec_model or RecModel()
+    axis, _ = estimate_rotation(img)
+    priority = (0, 180, 90, 270) if axis == 0 else (90, 270, 0, 180)
     best_angle, best_score = priority[0], -1.0
     probed = {}
     for angle in priority:
@@ -205,7 +202,7 @@ def orient_page(
         boxes, _ = detect_fn(rotated)
         if len(boxes) == 0:
             continue
-        crops = [crop_fn(rotated, box) for box in boxes[:probe_boxes]]
+        crops = [crop_fn(rotated, box) for box in boxes[:PROBE_BOXES]]
         if cls_model is not None:
             confs = cls_model.prob0_batch(crops)  # one batched run
         else:

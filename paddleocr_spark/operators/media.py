@@ -1,16 +1,14 @@
 """Real audio/video decode operators over opaque binary columns.
 
-Round 1 carried a declared codec stub (`multimodal._decode_media`) for
-audio/video because no codec LIBRARY ships in this container — but
-several production container formats need none: RIFF/WAVE PCM (audio)
-and YUV4MPEG2 / .y4m (raw video) are pure struct/ASCII layouts, GIF's
-LZW is implementable directly, and baseline JPEG needs only Huffman +
-IDCT (kernels/jpeg.py). This module implements genuine byte-level
+No codec LIBRARY ships with this package — but several production
+container formats need none: RIFF/WAVE PCM (audio) and YUV4MPEG2 / .y4m
+(raw video) are pure struct/ASCII layouts, GIF's LZW is implementable
+directly, and baseline JPEG needs only Huffman + IDCT (kernels/jpeg.py). This module implements genuine byte-level
 decoders with stdlib+numpy only — including a full variable-width
 GIF-LZW codec and the T.81 baseline JPEG path — so the multimodal
 family's decode stage is real end-to-end for uncompressed, LZW- and
-DCT-compressed media; `_decode_media` remains the documented swap point
-for the remaining codecs (mp3/h264 -> soundfile/PyAV).
+DCT-compressed media. The remaining codecs (MPEG audio synthesis,
+h264 pixels) would need soundfile/PyAV and are out of scope.
 
 Pipeline shape (the part that matters at 100 TB): payloads stay opaque
 bytes through the scan; decode happens inside one Arrow-batched
@@ -524,8 +522,7 @@ def mp3_frame_bytes(doc_id: int) -> int:
 #   IDR/P-frame structure and GOP boundaries.
 #
 # Pixel decode (CABAC/CAVLC residuals, intra prediction, deblocking)
-# remains the documented codec-library swap point
-# (operators/multimodal._decode_media).
+# needs a codec library and is out of scope.
 
 
 class _EgWriter(_BitWriter):

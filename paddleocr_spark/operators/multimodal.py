@@ -18,9 +18,9 @@ Real here (the container has numpy + our PNG codec):
   (posexplode + modulo filter BEFORE the heavy per-frame work).
 
 Uncompressed audio/video decode is REAL in operators/media.py (RIFF
-WAVE PCM + YUV4MPEG2 need no codec library); `_decode_media` below
-stays as the documented swap point for compressed codecs (mp3/h264 ->
-soundfile/PyAV), with a deterministic fake for plumbing tests.
+WAVE PCM + YUV4MPEG2 need no codec library); the compressed codecs that
+still need a library (MPEG audio synthesis, h264 pixels) are not
+decoded at all.
 """
 
 from __future__ import annotations
@@ -42,30 +42,6 @@ def png_meta(data: bytes) -> tuple[int, int, int]:
     w, h = struct.unpack(">II", data[16:24])
     depth = data[24]
     return int(w), int(h), int(depth)
-
-
-def _decode_media(payload: bytes, kind: str, fake: bool = False) -> np.ndarray:
-    """Decode stub for COMPRESSED-transform audio/video: uncompressed
-    and ADPCM WAV decode for real (operators/media.py wav_decode /
-    adpcm_decode), and MPEG-1 Layer I framing/subband recovery is real
-    too (operators/media.py layer1_decode), as is the H.264 structural
-    layer (Annex-B NAL walk / emulation prevention / SPS dimensions /
-    slice headers — operators/media.py h264_nals etc.); what still
-    needs a codec library is the PCM synthesis side of MPEG audio (the
-    512-tap Annex 3-B window has no closed form — Layer II/III with
-    it) and h264 PIXEL decode (CAVLC/CABAC residuals, intra
-    prediction, deblocking). With fake=True returns a deterministic signal derived
-    from the payload length so the downstream plumbing is testable;
-    otherwise raises (clearly marked stub — swap in soundfile/PyAV
-    here)."""
-    if not fake:
-        raise NotImplementedError(
-            f"no {kind} codec in this environment; pass fake=True for the "
-            "deterministic test signal"
-        )
-    n = len(payload)
-    rng = (np.arange(64, dtype=np.float64) * ((n % 997) + 1)) % 255.0
-    return rng
 
 
 # -- queries -----------------------------------------------------------------

@@ -414,25 +414,6 @@ def write_task_audit(tally: Accumulator, run_id: str, audit_dir: str) -> str:
     return f"{audit_dir.rstrip('/')}/{name}"
 
 
-def tsv_lines(results: DataFrame) -> DataFrame:
-    """The reference's system_results.txt line format
-    (tools/infer/predict_system.py:244-267,304-307):
-    `<name>\\t<json [{"transcription": ..., "points": [[x,y]x4]}]>` —
-    built entirely JVM-side with to_json over the spans column. Write
-    with df.write.text() for a drop-in replacement of the TSV sink."""
-    payload = F.to_json(
-        F.transform(
-            F.col("spans"),
-            lambda s: F.struct(
-                s["text"].alias("transcription"), s["box"].alias("points")
-            ),
-        )
-    )
-    return results.select(
-        F.concat_ws("\t", F.col("url"), payload).alias("value")
-    )
-
-
 def resume_filter(pages: DataFrame, results_path: str) -> DataFrame:
     """Idempotent resume: anti-join urls already committed to the results
     sink (Iceberg snapshot anti-join / MERGE INTO in production)."""
@@ -489,24 +470,6 @@ def run_job(
     # files, no second run of the OCR stage, and no Spark job.
     write_task_audit(tally, rid, audit_path)
     return sum(r["page_count"] for r in tally.value.values())
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, buckets: int = 128
-) -> None:
-    """Persist a table bucketed (and sorted) by `key` so repeated joins
-    and aggregations on that key read co-located, pre-sorted buckets —
-    no Exchange in the join plan (pinned by tests/test_plan_shape.py).
-    At 100 TB this converts the per-query shuffle of a hot join key
-    (e.g. url-hash <-> extraction results) into a one-time layout cost,
-    the Spark-native analogue of the reference's per-directory sharding
-    (tools/infer/utility.py --use_mp round-robin)."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
 
 
 def export_training_shards(

@@ -10,9 +10,9 @@ filesystem:
 - A table is a local directory, named by a plain path or a file:// URI
   (`resolve_root`): `data/<commit-uuid>/part-*.parquet` files plus
   `metadata/snap-<version>.json` manifests. A manifest lists EVERY live
-  data file (path, row count, byte size, min/max url pruning stats),
-  the schema as JSON, the parent version, and a summary (run_id, rows
-  added, warc_ts watermark).
+  data file (path, row count, byte size), the schema as JSON, the
+  parent version, and a summary (run_id, rows added, and the streaming
+  sink's batch_id).
 - Readers resolve the committed table state from the highest manifest
   only: data files not referenced by a committed manifest are invisible
   (a crashed writer leaves orphan files, never partial table state).
@@ -31,24 +31,19 @@ filesystem:
   atomic commit — crash between the two writes can't publish one
   without the other (multi-branch commit; Iceberg would model it as a
   single-transaction write to two tables).
-- Resume has two modes, both O(committed metadata) on the driver:
-  * exact: anti-join of pages against committed urls (reads only files
-    listed by the current manifest — at 10^12 docs the url column of
-    committed data, not a recursive directory walk);
-  * watermark: the manifest summary carries max(warc_ts) of committed
-    rows, so incremental runs filter `warc_ts > watermark` without
-    touching committed data at all — O(1) metadata read, the Iceberg
-    snapshot-watermark idiom for append-only crawls.
+- Resume is an anti-join of pages against committed urls
+  (`resume_filter_exact`). It reads only the files the current manifest
+  lists — at 10^12 docs the url column of committed data, not a
+  recursive directory walk — so a crashed run's orphan files are
+  re-extracted exactly once.
 
 On top of the commit protocol the module carries the table-format
 features a 10^12-doc pipeline actually uses: rewrite snapshots with
-conflict validation (`compact`), incremental consumption between
-versions (`read_changes` — the downstream tokenizer/index builder reads
-only the delta, rewrites are never re-seen), additive schema evolution
-(`_evolved_schema` — add columns, readers null-fill older files), file
-pruning from manifest stats (`prune_files`), snapshot expiry
-(`expire_snapshots`), and the exactly-once streaming sink built on the
-same atomic publish (`streaming/pipeline.snapshot_batch_sink`). The
+conflict validation (`compact`), additive schema evolution
+(`_evolved_schema` — add columns, readers null-fill older files),
+snapshot expiry (`expire_snapshots`), and the exactly-once streaming
+sink built on the same atomic publish
+(`streaming/pipeline.snapshot_batch_sink`). The
 batch job and that sink commit an extraction the same way
 (`commit_extraction`): results files plus the audit rows the
 extraction tasks tallied, in one snapshot.
@@ -71,6 +66,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from urllib.parse import urlsplit
 from urllib.request import url2pathname
@@ -147,27 +143,7 @@ def _file_stats(path: str) -> dict:
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
-    entry = {
-        "path": path,
-        "rows": md.num_rows,
-        "bytes": os.path.getsize(path),
-    }
-    # url min/max from column-chunk statistics when present: gives the
-    # manifest file-pruning bounds (Iceberg's lower_bounds/upper_bounds).
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        for ci in range(group.num_columns):
-            col = group.column(ci)
-            if col.path_in_schema == "url" and col.statistics is not None:
-                st = col.statistics
-                if st.has_min_max:
-                    cmin, cmax = st.min, st.max
-                    lo = cmin if lo is None else min(lo, cmin)
-                    hi = cmax if hi is None else max(hi, cmax)
-    if lo is not None:
-        entry["url_min"], entry["url_max"] = lo, hi
-    return entry
+    return {"path": path, "rows": md.num_rows, "bytes": os.path.getsize(path)}
 
 
 def _list_parquet(d: str) -> list[str]:
@@ -186,8 +162,12 @@ def _write_branch(df: DataFrame, root: str, branch: str) -> tuple[list[dict], st
     df.write.mode("error").parquet(dest)
     stats = [_file_stats(p) for p in _list_parquet(dest)]
     # Zero-row part files (empty upstream partitions) carry no data:
-    # tracking them would only bloat every future manifest rewrite.
-    return [s for s in stats if s["rows"] > 0], df.schema.json()
+    # tracking them would only bloat every future manifest rewrite. A
+    # write with no row at all (a fully resumed run) leaves nothing.
+    files = [s for s in stats if s["rows"] > 0]
+    if not files:
+        shutil.rmtree(dest)
+    return files, df.schema.json()
 
 
 def _evolved_schema(old_json: str | None, new_json: str | None) -> str | None:
@@ -314,116 +294,12 @@ def read(
     return spark.read.schema(schema).parquet(*paths)
 
 
-def read_changes(
-    spark: SparkSession,
-    root: str,
-    from_version: int,
-    to_version: int | None = None,
-    branch: str = "results",
-) -> DataFrame:
-    """Incremental consumption (Iceberg's incremental append scan):
-    the rows appended to `branch` in versions (from_version,
-    to_version]. A downstream consumer (training-data tokenizer,
-    index builder) remembers the last version it processed and reads
-    only the delta — never a full-table diff.
-
-    Walks the manifest chain from to_version down to from_version
-    collecting each append commit's ADDED files (files present in the
-    commit but not its parent). Rewrite commits (compaction) are
-    skipped: they rearrange bytes but add no rows, so a consumer
-    never re-sees compacted data. O(snapshots) driver metadata reads;
-    data I/O touches only the added files. With the exactly-once
-    streaming sink, versions correspond 1:1 to committed epochs, so
-    this is also the per-epoch changelog.
-
-    Raises RuntimeError when the chain was truncated by
-    `expire_snapshots` or an added file was already reclaimed — the
-    consumer must fall back to a full read of the current snapshot
-    (Iceberg's incremental scan has the same restriction)."""
-    to_v = current_version(root) if to_version is None else to_version
-    if from_version > to_v:
-        raise ValueError(
-            f"from_version {from_version} > to_version {to_v}"
-        )
-    added: list[dict] = []
-    schema_json: str | None = None
-    v = to_v
-    while v > from_version:
-        try:
-            snap = load_snapshot(root, v)
-        except FileNotFoundError:
-            raise RuntimeError(
-                f"changelog unavailable: snapshot v{v} of {root!r} was "
-                "expired; fall back to a full read of the current "
-                "snapshot"
-            ) from None
-        b = snap.get("branches", {}).get(branch) or {}
-        if schema_json is None:
-            schema_json = b.get("schema")
-        parent = snap.get("parent") or 0
-        if snap.get("summary", {}).get("compacted") == branch:
-            v = parent
-            continue  # rewrite: bytes moved, no new rows
-        parent_paths: set[str] = set()
-        if parent:
-            try:
-                psnap = load_snapshot(root, parent)
-            except FileNotFoundError:
-                raise RuntimeError(
-                    f"changelog unavailable: snapshot v{parent} of "
-                    f"{root!r} was expired; fall back to a full read"
-                ) from None
-            pb = psnap.get("branches", {}).get(branch)
-            if pb:
-                parent_paths = {f["path"] for f in pb["files"]}
-        added.extend(
-            f for f in b.get("files", []) if f["path"] not in parent_paths
-        )
-        v = parent
-    if schema_json is None:
-        snap = load_snapshot(root, to_v) if to_v else None
-        b = (snap or {}).get("branches", {}).get(branch)
-        if not b or not b.get("schema"):
-            raise ValueError(
-                f"snapshot table {root!r} has no branch {branch!r}"
-            )
-        schema_json = b["schema"]
-    schema = StructType.fromJson(json.loads(schema_json))
-    if not added:
-        return spark.createDataFrame([], schema)
-    missing = [f["path"] for f in added if not os.path.exists(f["path"])]
-    if missing:
-        raise RuntimeError(
-            "changelog unavailable: "
-            f"{len(missing)} added file(s) were reclaimed by "
-            f"expire_snapshots (first: {missing[0]!r}); fall back to a "
-            "full read"
-        )
-    return spark.read.schema(schema).parquet(*[f["path"] for f in added])
-
-
-def prune_files(
-    root: str, url_min: str, url_max: str, branch: str = "results",
-    version: int | None = None,
-) -> list[dict]:
-    """Manifest-level file pruning: data files whose [url_min, url_max]
-    stats overlap the query range. Driver-side, O(files in manifest) —
-    the scan-planning half of Iceberg that makes point lookups on a
-    10^12-row table read a handful of files."""
-    snap = load_snapshot(root, version)
-    out = []
-    for f in ((snap or {}).get("branches", {}).get(branch) or {}).get("files", []):
-        lo, hi = f.get("url_min"), f.get("url_max")
-        if lo is None or (lo <= url_max and hi >= url_min):
-            out.append(f)
-    return out
-
-
-def watermark(root: str, key: str = "max_warc_ts") -> str | None:
-    """Resume watermark from the CURRENT summary chain: highest value of
-    `key` over all committed snapshots (each run stamps only its own
-    increment; the chain walk keeps it monotone). O(snapshots) driver
-    metadata reads, no data I/O."""
+def watermark(root: str, key: str):
+    """Highest value of summary `key` over the CURRENT snapshot chain
+    (each commit stamps only its own value; the chain walk keeps it
+    monotone), or None. O(snapshots) driver metadata reads, no data
+    I/O. The exactly-once streaming sink reads its last committed
+    `batch_id` this way."""
     best = None
     v = current_version(root)
     while v:
@@ -438,19 +314,6 @@ def watermark(root: str, key: str = "max_warc_ts") -> str | None:
     return best
 
 
-def resume_filter_watermark(pages: DataFrame, root: str) -> DataFrame:
-    """Incremental resume for append-only crawls: keep only pages
-    captured after the committed watermark. O(1) data reads. Caveats of
-    the watermark idiom (why `exact=True` is the default): captures
-    sharing the exact boundary timestamp across runs can be skipped, and
-    `expire_snapshots` can truncate the summary chain and regress the
-    watermark (re-admitting pages — duplicated work, never lost)."""
-    wm = watermark(root)
-    if wm is None:
-        return pages
-    return pages.filter(F.col("warc_ts") > F.lit(wm).cast("timestamp"))
-
-
 def resume_filter_exact(pages: DataFrame, root: str) -> DataFrame:
     """Exact idempotent resume: anti-join against committed urls (reads
     only manifest-listed files; orphan files from crashed runs are NOT
@@ -458,10 +321,7 @@ def resume_filter_exact(pages: DataFrame, root: str) -> DataFrame:
     snap = load_snapshot(root)
     if not snap or not snap["branches"].get("results", {}).get("files"):
         return pages
-    done = (
-        read(pages.sparkSession, root, "results")
-        .select("url").distinct()
-    )
+    done = read(pages.sparkSession, root, "results").select("url")
     return pages.join(done, "url", "left_anti")
 
 
@@ -508,37 +368,24 @@ def run_job_snapshot(
     root: str,
     num_partitions: int | None = None,
     run_id: str | None = None,
-    exact: bool = True,
     resume: bool = True,
     **extract_kwargs,
 ) -> dict:
     """`pipeline.run_job` with snapshot-commit semantics: resume from
     the last committed snapshot, extract the remainder, publish results
     AND this run's audit rows in ONE atomic commit. Returns a summary
-    dict ({"version": 0, "rows": 0} when nothing is left to do — an
-    empty re-run does not create an empty snapshot)."""
+    dict (rows 0 and the current version when nothing is left to do —
+    an empty re-run does not create an empty snapshot)."""
     from paddleocr_spark.plans import pipeline
 
     root = resolve_root(root)  # an unsupported scheme fails before any job
     rid = run_id or uuid.uuid4().hex
-    if not resume:
-        todo = pages
-    elif exact:
-        todo = resume_filter_exact(pages, root)
-    else:
-        todo = resume_filter_watermark(pages, root)
-    # Stamp the increment's watermark BEFORE the heavy stage: max over
-    # the todo frame's warc_ts (one cheap column agg on the input side).
-    wm_row = todo.agg(F.max("warc_ts").cast("string").alias("wm")).collect()[0]
-    if wm_row["wm"] is None:
-        return {"version": current_version(root), "rows": 0, "run_id": rid}
+    todo = resume_filter_exact(pages, root) if resume else pages
     tally = pipeline.task_audit(spark)
     results = pipeline.extract_pages(
         todo, num_partitions, _tally=tally, **extract_kwargs
     ).withColumn("run_id", F.lit(rid))
-    version, rows = commit_extraction(
-        root, results, tally, rid, {"max_warc_ts": wm_row["wm"]}
-    )
+    version, rows = commit_extraction(root, results, tally, rid)
     return {"version": version or current_version(root), "rows": rows,
             "run_id": rid}
 

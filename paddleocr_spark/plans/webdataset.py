@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 PAIRS_PER_SHARD = 64
-_RANK_SHARDS = 256
 SEED = "wds1"
 
 

@@ -27,17 +27,17 @@ only:
 The interleave is a fold of shift/and/or terms — pure JVM, whole-stage
 codegen, no UDF.
 
-Layout job (`write_zordered`): repartitionByRange on the key (contiguous
-key ranges per file — range boundaries come from Spark's reservoir
-sample of the key, one extra sampling pass, no global sort) ->
+Layout (`zorder_frame`, written by `snapshots.compact(zorder_by=...)`
+and `job.py --maintain --zorder`): repartitionByRange on the key
+(contiguous key ranges per file — range boundaries come from Spark's
+reservoir sample of the key, one extra sampling pass, no global sort) ->
 sortWithinPartitions(key) -> plain parquet write. One Exchange total,
 scales linearly with executors, and AQE cannot destroy the clustering
 because the ordering lives INSIDE each task's partition.
 
 Reference parity note: the reference has no analogue — its outputs are
 per-process text files (tools/infer/utility.py --use_mp). This is part
-of the Spark-native sink design, same family as
-plans/pipeline.write_bucketed.
+of the Spark-native sink design.
 """
 
 from __future__ import annotations
@@ -115,21 +115,6 @@ def zorder_frame(
         .sortWithinPartitions("__zorder")
         .drop("__zorder")
     )
-
-
-def write_zordered(
-    df: DataFrame,
-    out_dir: str,
-    dims: list[tuple[str, str]],
-    num_files: int = 64,
-    bits: int = 16,
-) -> None:
-    """Rewrite `df` as `num_files` parquet files clustered in Z-order
-    over `dims`. Readers then skip files/row groups via the footer
-    min/max of the ORIGINAL columns."""
-    zorder_frame(df, dims, num_files=num_files, bits=bits).write.mode(
-        "overwrite"
-    ).parquet(out_dir)
 
 
 def parse_zorder_spec(spec: str) -> list[tuple[str, str]]:

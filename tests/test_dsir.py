@@ -3,9 +3,8 @@
 The strict gate (text_stats_suite row 'dsir') proves Spark == DuckDB on
 the fixture; these tests prove the weights are RIGHT: the full pipeline
 matches a pure-Python DSIR built from the same md5 feature stream, the
-weight direction favours the target slice, the scaled (threshold)
-variant agrees with the exact ntile away from the boundary, and the
-plan keeps the 64-row ratio table on the broadcast side.
+weight direction favours the target slice, and the plan keeps the
+64-row ratio table on the broadcast side.
 """
 
 import hashlib
@@ -16,7 +15,6 @@ from paddleocr_spark.functions.dsir import (
     DSIR_KEEP,
     DSIR_TARGET_LANG,
     dsir_weights,
-    dsir_weights_scaled,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -104,34 +102,6 @@ def test_dsir_upranks_target_slice(spark):
     other = [per_tok[r["doc_id"]] for _, r in df.iterrows()
              if r["lang"] != DSIR_TARGET_LANG]
     assert sum(en) / len(en) > sum(other) / len(other)
-
-
-def test_dsir_scaled_agrees_off_boundary(spark):
-    """The approxQuantile threshold variant must agree with the exact
-    ntile on every document whose weight is not pinched against the
-    quartile boundary (the documented tie/epsilon difference)."""
-    exact = {
-        r["doc_id"]: (r["dsir_micro"], r["selected"])
-        for r in dsir_weights(spark, SF).collect()
-    }
-    scaled = {
-        r["doc_id"]: r["selected"]
-        for r in dsir_weights_scaled(spark, SF).collect()
-    }
-    cut_kept = min(w for w, s in exact.values() if s == 1)
-    cut_dropped = max(w for w, s in exact.values() if s == 0)
-    agree = disagree = 0
-    for k, (w, s) in exact.items():
-        if w > cut_kept or w < cut_dropped:
-            assert scaled[k] == s, k
-            agree += 1
-        elif scaled[k] != s:
-            disagree += 1
-    assert agree > 0
-    # boundary disagreements are bounded by the boundary population
-    assert disagree <= sum(
-        1 for w, _ in exact.values() if cut_dropped <= w <= cut_kept
-    )
 
 
 def test_dsir_ratio_table_is_broadcast(spark):

@@ -67,28 +67,40 @@ def brute(spark):
     return vec_ids, *_brute_kmeans(emb, vec_ids, KM_ITERS)
 
 
-def test_kmeans_matches_bruteforce(spark, brute):
-    from paddleocr_spark.functions.kmeans import kmeans_train
+def _branch_rows(spark, sf_dir):
+    """{op: {k-tuple: v-tuple}} of the suite's `kmeans_semdedup_bitext`
+    branch: the kmeans, semdedup and bitext rows that production
+    (`embedding_ops_suite`) emits, parsed back to ints."""
+    from paddleocr_spark.functions.kmeans import embedding_branch_builders
 
+    build = dict(embedding_branch_builders(spark, sf_dir))
+    out: dict[str, dict] = {"kmeans": {}, "semdedup": {}, "bitext": {}}
+    for r in build["kmeans_semdedup_bitext"]().collect():
+        k = tuple(int(x) for x in r["k"].split("|"))
+        out[r["op"]][k] = tuple(int(x) for x in r["v"].split("|"))
+    return out
+
+
+@pytest.fixture(scope="module")
+def branch(spark):
+    return _branch_rows(spark, SF_SMALL)
+
+
+def test_kmeans_matches_bruteforce(branch, brute):
     vec_ids, q, cells, final = brute
-    got = {
-        (r["cent_id"], r["pos"]): (r["m"], r["n"])
-        for r in kmeans_train(spark, SF_SMALL).collect()
-    }
     want = {
         (c, i): (int(m[i]), n)
         for c, (m, n) in final.items()
         for i in range(len(m))
     }
-    assert got == want
+    assert branch["kmeans"] == want
 
 
-def test_semdedup_keep_lowest_id_and_bruteforce(spark, brute):
-    from paddleocr_spark.functions.kmeans import TAU_DEN, TAU_NUM, semdedup
+def test_semdedup_keep_lowest_id_and_bruteforce(branch, brute):
+    from paddleocr_spark.functions.kmeans import TAU_DEN, TAU_NUM
 
     vec_ids, q, cells, _ = brute
-    rows = semdedup(spark, SF_SMALL).collect()
-    got = {r["vec_id"]: (r["cell"], r["dropped"]) for r in rows}
+    got = {k[0]: v for k, v in branch["semdedup"].items()}
     assert set(got) == set(int(v) for v in vec_ids)
 
     # brute-force verdicts on the integer lattice
@@ -117,14 +129,11 @@ def test_semdedup_keep_lowest_id_and_bruteforce(spark, brute):
         assert got[first] == (cell, 0)
 
 
-def test_kmeans_partitioning_invariant(spark, brute):
+def test_kmeans_partitioning_invariant(spark, branch):
     """Integer lattice => result independent of partition count /
     aggregation order (the classic float-kmeans reproducibility hole)."""
     from paddleocr_spark.functions import kmeans as km
 
-    base = sorted(
-        tuple(r) for r in km.kmeans_train(spark, SF_SMALL).collect()
-    )
     orig = km._quantized
 
     def skewed(spark_, sf_dir):
@@ -132,15 +141,13 @@ def test_kmeans_partitioning_invariant(spark, brute):
 
     km._quantized = skewed
     try:
-        rep = sorted(
-            tuple(r) for r in km.kmeans_train(spark, SF_SMALL).collect()
-        )
+        rep = _branch_rows(spark, SF_SMALL)
     finally:
         km._quantized = orig
-    assert base == rep
+    assert rep == branch
 
 
-def test_bitext_candidates_match_bruteforce(spark):
+def test_bitext_candidates_match_bruteforce(spark, branch):
     """Cross-lang same-cell pairs equal the brute-force integer-exact
     cosine test over the collected assignment; every pair is ordered
     (a < b) and genuinely cross-language."""
@@ -148,19 +155,14 @@ def test_bitext_candidates_match_bruteforce(spark):
         BITEXT_DEN,
         BITEXT_NUM,
         _train,
-        bitext_candidates,
     )
 
-    sf_dir = "/root/testdata/sf0.001"
-    got = {
-        (r.a_id, r.b_id2): (r.cell, r.dot)
-        for r in bitext_candidates(spark, sf_dir).collect()
-    }
-    _, assigned = _train(spark, sf_dir)
+    got = branch["bitext"]
+    _, assigned = _train(spark, SF_SMALL)
     vecs = {r.vec_id: (list(r.qq), r.cell) for r in assigned.collect()}
     langs = {
         r.doc_id: r.lang
-        for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
+        for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         .select("doc_id", "lang")
         .collect()
     }

@@ -261,25 +261,6 @@ def test_corrupt_payload_flagged_not_fatal(spark):
     assert row.extracted_text == ""
 
 
-def test_tsv_lines_sink_format(spark):
-    import json as _json
-
-    from paddleocr_spark.plans.pipeline import tsv_lines
-
-    pages = pages_from_documents(spark, SF_SMALL, limit=5)
-    res = extract_pages(pages, num_partitions=4)
-    lines = [r.value for r in tsv_lines(res).collect()]
-    assert len(lines) == 5
-    for line in lines:
-        name, payload = line.split("\t", 1)
-        assert name.startswith("https://")
-        spans = _json.loads(payload)
-        assert spans and all(
-            set(s) == {"transcription", "points"} and len(s["points"]) == 4
-            for s in spans
-        )
-
-
 def test_broadcast_weights_reach_workers(spark):
     """The rec weights ship as a Spark broadcast: a driver-side blob
     with the 'A' and 'B' template rows swapped must make every worker

@@ -97,6 +97,34 @@ def test_run_job_resumed_sink_job_count(spark, tmp_path):
     assert n == 16
 
 
+def test_run_job_snapshot_resumed_job_count(spark, tmp_path):
+    """A resumed run_job_snapshot is one extraction pass, like run_job:
+    the resume anti-join's broadcast, the salted shuffle and the results
+    write (measured 3 on local[4]; 8 while a pre-extraction
+    max(warc_ts) collect stamped a watermark and the resume side ran a
+    distinct). The driver writes and commits the audit itself."""
+    from paddleocr_spark.plans.snapshots import run_job_snapshot
+    from paddleocr_spark.sources.pages import pages_from_documents
+
+    path = str(tmp_path / "pages.parquet")
+    pages_from_documents(spark, SF_SMALL, limit=24).write.parquet(path)
+    pages = spark.read.parquet(path)
+    root = str(tmp_path / "tbl")
+    run_job_snapshot(spark, pages.limit(8), root, num_partitions=2,
+                     run_id="s1")
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-job-shape", "run_job_snapshot, resumed")
+    try:
+        out = run_job_snapshot(
+            spark, pages, root, num_partitions=4, run_id="s2"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("snapshot-job-shape")
+    assert 0 < len(jobs) <= 3, jobs
+    assert out["rows"] == 16
+
+
 def test_link_analysis_job_count(spark):
     """One host_graph build plus the three link-analysis row builders
     over it, collected, is at most 58 Spark jobs (measured 58 on
@@ -157,33 +185,6 @@ def test_snapshot_stream_epoch_job_count(spark, tmp_path, monkeypatch):
     for group in groups:
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) == 1, (group, jobs)
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Two tables bucketed+sorted on the join key must join with zero
-    Exchange (and zero per-query Sort) — the co-located layout the
-    100 TB plan relies on for repeated url-key joins."""
-    from paddleocr_spark.plans.pipeline import write_bucketed
-
-    a = spark.range(0, 2000).selectExpr("id AS doc_id", "md5(string(id)) AS h")
-    b = spark.range(0, 2000).selectExpr("id AS doc_id", "id * 2 AS v")
-    write_bucketed(a, "bucket_demo_a", "doc_id", buckets=8)
-    write_bucketed(b, "bucket_demo_b", "doc_id", buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("bucket_demo_a").join(
-            spark.table("bucket_demo_b"), "doc_id"
-        )
-        plan = _formatted(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # count forces execution: the bucketed read must agree on values
-        assert j.count() == 2000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bucket_demo_a")
-        spark.sql("DROP TABLE IF EXISTS bucket_demo_b")
 
 
 def test_markdown_recovery_single_exchange(spark):

@@ -1,5 +1,5 @@
 """Iceberg-style snapshot layer: atomic commit, crash invisibility,
-time travel, watermark resume, concurrent-commit retry, expiry.
+time travel, exact resume, concurrent-commit retry, expiry.
 
 These pin the production resume contract from BASELINE.json's
 north_star ("resumes idempotently from the last committed snapshot",
@@ -33,7 +33,7 @@ def test_append_read_time_travel(spark, tmp_path):
     assert snap.read(spark, root, version=1).count() == 3
     m = snap.load_snapshot(root)
     assert m["parent"] == 1 and m["version"] == 2
-    # manifest carries footer stats usable for pruning
+    # manifest carries footer stats (row count, byte size) per file
     files = m["branches"]["results"]["files"]
     assert all(f["rows"] > 0 and f["bytes"] > 0 for f in files)
 
@@ -89,12 +89,16 @@ def test_run_job_snapshot_atomic_and_idempotent(spark, tmp_path):
         audit = snap.read(spark, root, "audit")
         s2 = audit.filter("run_id = 's2'").agg({"page_count": "sum"}).collect()[0][0]
         assert s2 == 4
-        # fully-committed input: no-op, no empty snapshot
+        # fully-committed input: no-op, no empty snapshot, no orphan
+        # data directory left behind by the empty write
+        data = snap._data_dir(root)
+        before = sorted(os.listdir(data))
         out3 = snap.run_job_snapshot(
             spark, pages, root, num_partitions=4, run_id="s3"
         )
         assert out3 == {"version": 2, "rows": 0, "run_id": "s3"}
         assert snap.current_version(root) == 2
+        assert sorted(os.listdir(data)) == before
 
     import pytest as _pytest
 
@@ -107,37 +111,6 @@ def test_run_job_snapshot_atomic_and_idempotent(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("snapshot-bad-root") == []
     pages.unpersist()
-
-
-def test_watermark_resume(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    pages = pages_from_documents(spark, SF_SMALL, limit=8).cache()
-    split = pages.selectExpr("percentile(unix_timestamp(warc_ts), 0.5) p").collect()[0]["p"]
-    early = pages.filter(snap.F.unix_timestamp("warc_ts") <= split)
-    late = pages.filter(snap.F.unix_timestamp("warc_ts") > split)
-    n_late = late.count()
-    assert 0 < n_late < 8
-    snap.run_job_snapshot(spark, early, root, num_partitions=2, run_id="w1")
-    wm = snap.watermark(root)
-    assert wm is not None
-    todo = snap.resume_filter_watermark(pages, root)
-    assert todo.count() == n_late  # O(1)-metadata incremental resume
-    out = snap.run_job_snapshot(
-        spark, pages, root, num_partitions=2, run_id="w2", exact=False
-    )
-    assert out["rows"] == n_late
-    assert snap.read(spark, root).select("url").distinct().count() == 8
-    pages.unpersist()
-
-
-def test_file_pruning_by_url_stats(spark, tmp_path):
-    root = str(tmp_path / "tbl")
-    snap.append(_mini(spark, 0, 1), root)  # only u0
-    snap.append(_mini(spark, 1, 3), root)  # u1,u2
-    all_files = snap.load_snapshot(root)["branches"]["results"]["files"]
-    hit = snap.prune_files(root, "u0", "u0")
-    assert len(hit) < len(all_files)
-    assert sum(f["rows"] for f in hit) == 1
 
 
 def test_expire_snapshots_keeps_live_state(spark, tmp_path):
@@ -192,42 +165,6 @@ def test_compaction_noop_below_min_files(spark, tmp_path):
     assert snap.current_version(root) == 1
 
 
-def test_read_changes_incremental_consumption(spark, tmp_path):
-    """A downstream consumer reads only the rows appended after the
-    version it last processed; compaction rewrites are never re-seen;
-    an expired chain raises instead of silently replaying."""
-    import pytest as _pytest
-
-    root = str(tmp_path / "tbl")
-    snap.append(_mini(spark, 0, 3), root)  # v1: +3 rows
-    snap.append(_mini(spark, 3, 6), root)  # v2: +3 rows
-    v3 = snap.compact(spark, root, target_files=1)  # v3: rewrite, +0
-    snap.append(_mini(spark, 6, 8), root)  # v4: +2 rows
-
-    assert snap.read_changes(spark, root, 0).count() == 8
-    got = snap.read_changes(spark, root, 1)
-    assert sorted(r["url"] for r in got.collect()) == [
-        "u3", "u4", "u5", "u6", "u7"
-    ]
-    assert snap.read_changes(spark, root, 2).count() == 2
-    assert snap.read_changes(spark, root, v3).count() == 2
-    # only the rewrite between the endpoints -> empty, schema intact
-    ch = snap.read_changes(spark, root, 2, to_version=v3)
-    assert ch.count() == 0 and ch.columns == ["url", "score"]
-    # from == to -> empty delta
-    assert snap.read_changes(spark, root, 4, to_version=4).count() == 0
-    with _pytest.raises(ValueError, match="from_version"):
-        snap.read_changes(spark, root, 5, to_version=4)
-
-    # expire the early snapshots: the truncated chain must refuse
-    # (diffing v4 needs v3's manifest, so keep the last two)
-    snap.expire_snapshots(root, keep_last=2)
-    with _pytest.raises(RuntimeError, match="changelog unavailable"):
-        snap.read_changes(spark, root, 0)
-    # ...but a delta entirely inside the kept window still works
-    assert snap.read_changes(spark, root, v3).count() == 2
-
-
 def test_schema_evolution_add_column(spark, tmp_path):
     """An append may ADD columns (readers null-fill older files); drops
     and retypes are refused; time travel keeps each version's schema."""
@@ -242,10 +179,6 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert got.columns == ["url", "score", "lang"]
     langs = {r["url"]: r["lang"] for r in got.collect()}
     assert langs["u0"] is None and langs["u3"] == "en"
-    # the evolved schema flows through the changelog too
-    assert snap.read_changes(spark, root, 1).columns == [
-        "url", "score", "lang"
-    ]
     # dropping an existing column is refused (orphan files stay
     # invisible: the table is unchanged)
     v_before = snap.current_version(root)

@@ -69,13 +69,6 @@ def test_frame_sample_every_other(spark):
     assert 0 in idxs
 
 
-def test_media_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        multimodal._decode_media(b"payload", "audio")
-    sig = multimodal._decode_media(b"payload", "audio", fake=True)
-    assert sig.shape == (64,)
-
-
 def test_orientation_sweep_recovers_rotated_page():
     from paddleocr_spark.kernels.cls import orient_page
     from paddleocr_spark.kernels.det import DetModel, detect_lines

@@ -252,51 +252,6 @@ def test_lm_bucket_scores_and_quantiles(spark, tmp_path):
     assert Counter(b for _, _, _, b in got.values()) == {1: 2, 2: 2, 3: 2}
 
 
-def test_lm_bucket_scaled_threshold_semantics(spark, tmp_path):
-    """The 10^12-scale path (`lm_bucket_scaled`): same exact integer
-    scores, buckets assigned by approx-quantile thresholds instead of a
-    global ntile window — boundary ties round toward the better bucket
-    (CCNet's shipped threshold semantics), and the plan carries NO
-    window operator."""
-    common = "aa bb aa bb aa bb"
-    rows = [(i, common, "h") for i in range(4)]
-    rows.append((4, "aa bb zz", "h"))
-    rows.append((5, "zz yy xx", "h"))
-    sf_dir = _write_docs(spark, tmp_path, rows)
-    scaled = text.lm_bucket_scaled(spark, sf_dir, relative_error=0.0)
-    got = {
-        r.doc_id: (r.freq_q, r.freq_frac, r.bucket) for r in scaled.collect()
-    }
-    # the four tied head docs ALL land in bucket 1 (threshold semantics;
-    # the exact ntile path splits them 2/2 by rank)
-    assert {d: g[2] for d, g in got.items()} == {
-        0: 1, 1: 1, 2: 1, 3: 1, 4: 2, 5: 3,
-    }
-    exact = {
-        r.doc_id: (r.freq_q, r.freq_frac)
-        for r in text.lm_bucket(spark, sf_dir).collect()
-    }
-    assert {d: g[:2] for d, g in got.items()} == exact
-    plan = scaled._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan
-
-
-def test_lm_bucket_scaled_empty_corpus(spark, tmp_path):
-    """An empty documents table yields no approxQuantile cuts — the
-    scaled path must return an empty frame with the full schema instead
-    of throwing on the missing thresholds."""
-    sf_dir = _write_docs(
-        spark, tmp_path, [(0, "aa bb", "h")]
-    )
-    # overwrite with zero rows, keeping the schema
-    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0).write.mode(
-        "overwrite"
-    ).parquet(f"{sf_dir}/documents.parquet")
-    out = text.lm_bucket_scaled(spark, sf_dir, relative_error=0.0)
-    assert out.count() == 0
-    assert out.columns == ["doc_id", "n_tokens", "freq_q", "freq_frac", "bucket"]
-
-
 # -- CCNet paragraph-level dedup ----------------------------------------------
 
 def test_paragraph_dedup_first_occurrence_wins(spark, tmp_path):

@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from paddleocr_spark.plans.zorder import write_zordered, zorder_key
+from paddleocr_spark.plans.zorder import zorder_frame, zorder_key
 
 N_HOSTS = 64
 N_DAYS = 64
@@ -63,9 +63,9 @@ def layouts(tmp_path_factory, spark):
     nat = str(root / "natural")
     df.repartition(N_FILES).write.mode("overwrite").parquet(nat)
     zo = str(root / "zordered")
-    write_zordered(
-        df, zo, [("host", "prefix"), ("day", "value")], num_files=N_FILES
-    )
+    zorder_frame(
+        df, [("host", "prefix"), ("day", "value")], num_files=N_FILES
+    ).write.mode("overwrite").parquet(zo)
     return nat, zo
 
 
