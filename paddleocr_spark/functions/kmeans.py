@@ -196,7 +196,6 @@ def _semdedup_from(assigned: DataFrame) -> DataFrame:
             "cell",
             F.coalesce("dropped", F.lit(0)).cast("int").alias("dropped"),
         )
-        .orderBy("vec_id")
     )
 
 

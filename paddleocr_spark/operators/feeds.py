@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 
 from paddleocr_spark.sources.scan import scan_parquet
 from paddleocr_spark.operators.html_extract import (
-    _DomBuilder,
     _Node,
     _node_text,
+    build_dom,
 )
 
 
@@ -83,8 +83,7 @@ def parse_feed(xml: str) -> tuple[str, list[tuple[str, str, str, str]]]:
     BeautifulSoup+html.parser exhibits on RSS. The extractor reads that
     following text sibling, which round-trips this repo's encoder and
     real-world well-formed feeds alike."""
-    builder = _DomBuilder()
-    builder.feed(xml)
+    root = build_dom(xml)
     kind = "unknown"
     out: list[tuple[str, str, str, str]] = []
 
@@ -121,7 +120,7 @@ def parse_feed(xml: str) -> tuple[str, list[tuple[str, str, str, str]]]:
                 continue  # item fields are leaves; no deeper walk needed
             walk(ch)
 
-    walk(builder.root)
+    walk(root)
     return kind, out
 
 

@@ -2,10 +2,10 @@
 
 The north_star mandates boilerplate stripping via DOM text-density
 scoring (Arya/Readability/Boilerpipe heuristics — published, public
-algorithms; the reference has no counterpart, SURVEY.md §7.4). Built on
-html.parser: parse to a lightweight DOM, score candidate containers by
-text mass, link density, tag and class/id hints, and return the text of
-the best candidate.
+algorithms; the reference has no counterpart, SURVEY.md §7.4). Parse to
+a lightweight DOM (`build_dom`: html.parser's tree, built by one compiled
+scan), score candidate containers by text mass, link density, tag and
+class/id hints, and return the text of the best candidate.
 
 Scoring (classic Readability shape):
     score(node) = text_len * (1 - link_density)
@@ -22,6 +22,7 @@ verbatim in a single block round-trips byte-identically.
 from __future__ import annotations
 
 import html as html_mod
+import re
 from html.parser import HTMLParser
 
 _BLOCK_TAGS = {"p", "div", "section", "article", "main", "td", "li", "pre", "blockquote"}
@@ -31,6 +32,8 @@ _NEGATIVE_HINTS = (
     "nav", "sidebar", "side-bar", "ad", "ads", "advert", "footer",
     "comment", "menu", "banner", "promo", "related", "share", "social",
 )
+# matches where any of the hints is a substring
+_NEGATIVE_HINT = re.compile("|".join(map(re.escape, _NEGATIVE_HINTS)))
 _TAG_BONUS = {"article": 50.0, "main": 50.0, "section": 5.0, "div": 5.0}
 _VOID_TAGS = {"br", "hr", "img", "meta", "link", "input", "area", "base", "col", "embed", "source", "track", "wbr"}
 
@@ -83,11 +86,136 @@ class _DomBuilder(HTMLParser):
         self.stack[-1].children.append(data)
 
 
+# One compiled scan over the markup for `build_dom`. Every pattern
+# mirrors html.parser's (Python 3.11) where the two could differ: the
+# tag-name class, `--\s*>` closing a comment, `</\s*name\s*>` end tags,
+# an ASCII case-insensitive `</script>`/`</style>` ending the raw text.
+# Attributes are a strict subset of html.parser's grammar: one `=`, a
+# non-empty value, whitespace between attributes. Each attribute is
+# possessive, so the scan never re-splits a tag html.parser would read
+# otherwise. Groups: 1 text, 2 tag name, 3 attributes, 4 `/` of `/>`,
+# 5 end-tag name, 6 a `<` outside the grammar. Script and style bodies,
+# comments, doctypes and bogus comments match with no group: none of
+# them adds anything to the tree.
+_ATTR_SRC = (
+    r"""\s++[^\s/>=][^\s/=>]*+"""
+    r"""(?:\s*+=\s*+(?:"[^"]*+"|'[^']*+'|[^\s>"'=][^\s>]*+))?+"""
+)
+
+
+def _rawtext(name: str) -> str:
+    ci = "".join(f"[{c}{c.upper()}]" for c in name)
+    return (
+        rf"<{ci}(?=[\t\n\r\f />])(?:{_ATTR_SRC})*+\s*+>"
+        rf"[^<]*+(?:<(?!/\s*+{ci}\s*+>)[^<]*+)*+</\s*+{ci}\s*+>"
+    )
+
+
+_TOKEN = re.compile(
+    r"([^<]++)"
+    + "|" + _rawtext("script")
+    + "|" + _rawtext("style")
+    + rf"|<([a-zA-Z][^\t\n\r\f />\x00]*+)((?:{_ATTR_SRC})*+)\s*+(/?)>"
+    + r"|</\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>"
+    + r"|<!--[^-]*+(?:-(?!-\s*>)[^-]*+)*+--\s*+>"
+    + r"|<!(?!--|\[)[^>]*+>"
+    + r"|(<)"
+)
+# splits an attribute run `_TOKEN` has accepted into (name, '=' when
+# valued, double-quoted, single-quoted, unquoted value)
+_ATTR = re.compile(
+    r"""\s+([^\s/>=][^\s/=>]*)(?:\s*(=)\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+)))?"""
+)
+_TEXT_END = re.compile(r"[\s;]")
+
+
+def _parse_dom(markup: str) -> _Node:
+    builder = _DomBuilder()
+    builder.feed(markup)
+    return builder.root
+
+
+def build_dom(markup: str) -> _Node:
+    """The root of `markup`'s DOM: the tree html.parser gives through
+    `_DomBuilder`, built by one `_TOKEN` scan. Markup outside the scan's
+    grammar (CDATA, `<?`, a `<` that opens no tag, an unterminated or
+    malformed tag, `<script/>`, a trailing text run html.parser holds
+    back for a charref that may continue) goes to `_DomBuilder` itself,
+    so the tree is html.parser's either way."""
+    # html.parser keeps back a last text run whose final '&' (within 34
+    # chars of the end) has no whitespace or ';' after it
+    n = len(markup)
+    amp = markup.rfind("&", max(markup.rfind("<") + 1, n - 34))
+    if amp >= 0 and not _TEXT_END.search(markup, amp):
+        return _parse_dom(markup)
+    root = node = _Node("#root", {}, None, 0)
+    kids = root.children
+    stack = [root]
+    counter = skip = 0
+    for text, tag, attrs, slash, end, stray in _TOKEN.findall(markup):
+        if text:
+            if not skip:
+                if "&" in text:
+                    text = html_mod.unescape(text)
+                    if not text:
+                        continue
+                kids.append(text)
+            continue
+        if tag:
+            tag = tag.lower()
+            if tag == "script" or tag == "style":
+                return _parse_dom(markup)
+            if skip:
+                if tag not in _VOID_TAGS:
+                    skip += 1
+            elif tag == "noscript":
+                skip = 1
+            else:
+                counter += 1
+                amap = {}
+                if attrs:
+                    for name, eq, dq, sq, bare in _ATTR.findall(attrs):
+                        value = (dq or sq or bare) if eq else None
+                        if value and "&" in value:
+                            value = html_mod.unescape(value)
+                        amap[name.lower()] = value
+                child = _Node(tag, amap, node, counter)
+                kids.append(child)
+                if tag not in _VOID_TAGS:
+                    stack.append(child)
+                    node, kids = child, child.children
+            if not slash:
+                continue
+            end = tag
+        elif end:
+            end = end.lower()
+        else:
+            if stray:
+                return _parse_dom(markup)
+            continue
+        if skip:
+            skip -= 1
+        elif end == node.tag:
+            stack.pop()
+            node = stack[-1]
+            kids = node.children
+        elif end not in _VOID_TAGS:
+            for i in range(len(stack) - 2, 0, -1):
+                if stack[i].tag == end:
+                    del stack[i:]
+                    node = stack[-1]
+                    kids = node.children
+                    break
+    return root
+
+
 def _iter_nodes(node: _Node):
-    yield node
-    for c in node.children:
-        if isinstance(c, _Node):
-            yield from _iter_nodes(c)
+    """`node` and its descendant elements in document order."""
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack.extend([c for c in reversed(node.children) if isinstance(c, _Node)])
 
 
 def _node_text(node: _Node) -> str:
@@ -107,11 +235,14 @@ def _node_text(node: _Node) -> str:
 def _is_negative(node: _Node) -> bool:
     if node.tag in _NEGATIVE_TAGS:
         return True
-    hint = (node.attrs.get("class", "") + " " + node.attrs.get("id", "")).lower()
-    return any(h in hint for h in _NEGATIVE_HINTS)
+    attrs = node.attrs
+    if "class" not in attrs and "id" not in attrs:
+        return False
+    hint = (attrs.get("class", "") + " " + attrs.get("id", "")).lower()
+    return _NEGATIVE_HINT.search(hint) is not None
 
 
-def _clean_stats(node: _Node) -> tuple[int, int, int]:
+def _clean_stats(node: _Node, is_neg=_is_negative) -> tuple[int, int, int]:
     """(clean_len, boiler_len, clean_link_len): text mass outside vs
     inside negative subtrees, and link text within the clean part."""
     clean = boiler = link = 0
@@ -128,30 +259,29 @@ def _clean_stats(node: _Node) -> tuple[int, int, int]:
                     if in_link:
                         link += ln
             else:
-                walk(c, in_boiler or _is_negative(c), in_link or c.tag == "a")
+                walk(c, in_boiler or is_neg(c), in_link or c.tag == "a")
 
-    walk(node, _is_negative(node), False)
+    walk(node, is_neg(node), False)
     return clean, boiler, link
 
 
-def score_node(node: _Node) -> float:
+def score_node(node: _Node, is_neg=_is_negative) -> float:
     """Clean text mass discounted by link density, minus half the
-    boilerplate mass the node drags along, plus tag/block bonuses."""
-    if _is_negative(node):
-        return 0.0
-    p = node.parent
+    boilerplate mass the node drags along, plus tag/block bonuses.
+    `is_neg` answers `_is_negative`; `best_node` passes a memo."""
+    p = node
     while p is not None:
-        if _is_negative(p):
+        if is_neg(p):
             return 0.0
         p = p.parent
-    clean, boiler, link = _clean_stats(node)
+    clean, boiler, link = _clean_stats(node, is_neg)
     if clean == 0:
         return 0.0
     # Link text counts doubly against: once for not being content, once as
     # a boilerplate signal (anchors-in-flow = nav/related blocks).
     score = (clean - 2.0 * link) - 0.5 * boiler
     for c in node.children:
-        if isinstance(c, _Node) and c.tag in _BLOCK_TAGS and not _is_negative(c):
+        if isinstance(c, _Node) and c.tag in _BLOCK_TAGS and not is_neg(c):
             if len(_node_text(c).strip()) >= 40:
                 score += 25.0
     return score + _TAG_BONUS.get(node.tag, 0.0)
@@ -167,14 +297,23 @@ def best_node(html: str) -> "_Node | None":
     prefers the deepest of nested equal-content containers (body >
     wrapper > article chains all carry the same clean text; article also
     earns the tag bonus)."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    # each node's negativity once: scoring a candidate reads it for the
+    # candidate's ancestors and for its whole subtree. Lazily, so a node
+    # scoring never reaches is never asked.
+    memo: dict[_Node, bool] = {}
+
+    def is_neg(n: _Node) -> bool:
+        v = memo.get(n)
+        if v is None:
+            v = memo[n] = _is_negative(n)
+        return v
+
     best: _Node | None = None
     best_score = 0.0
-    for node in _iter_nodes(builder.root):
+    for node in _iter_nodes(build_dom(html)):
         if node.tag not in _CANDIDATE_TAGS:
             continue
-        s = score_node(node)
+        s = score_node(node, is_neg)
         if s >= best_score + 1e-9 or (best is not None and abs(s - best_score) < 1e-9):
             if s > 0:
                 best, best_score = node, s
@@ -408,8 +547,7 @@ def extract_links(html: str) -> list[tuple[str, str]]:
     entity decoding, void tags — not an href regex). The outlink layer
     of a crawl pipeline: host-graph edges, frontier seeding, PageRank
     all start here."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     out: list[tuple[str, str]] = []
 
     def walk(node: _Node) -> None:
@@ -420,7 +558,7 @@ def extract_links(html: str) -> list[tuple[str, str]]:
                 out.append((ch.attrs["href"], _node_text(ch)))
             walk(ch)
 
-    walk(builder.root)
+    walk(root)
     return out
 
 
@@ -634,8 +772,7 @@ def extract_image_pairs(html: str) -> list[tuple[str, str, str]]:
     primitive of multimodal training pipelines (LAION, DataComp:
     harvest <img src, alt> from Common Crawl): downstream pairing keeps
     alt when non-blank, else the figcaption."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     out: list[tuple[str, str, str]] = []
 
     def figcaption_text(fig: _Node) -> str:
@@ -656,7 +793,7 @@ def extract_image_pairs(html: str) -> list[tuple[str, str, str]]:
                 ))
             walk(ch, figcaption_text(ch) if ch.tag == "figure" else caption)
 
-    walk(builder.root, "")
+    walk(root, "")
     return out
 
 
@@ -859,8 +996,7 @@ def extract_robots_meta(html: str) -> tuple[int, int, str]:
     Meta Tag spec: comma-separated, ASCII case-insensitive, whitespace-
     tolerant; 'none' == 'noindex, nofollow'. Absent tag => (0, 0, '')
     (indexable by default). First tag wins, like extract_metadata."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     directive = None
 
     def walk(node: _Node) -> None:
@@ -876,7 +1012,7 @@ def extract_robots_meta(html: str) -> tuple[int, int, str]:
                 directive = ch.attrs.get("content", "")
             walk(ch)
 
-    walk(builder.root)
+    walk(root)
     if directive is None:
         return 0, 0, ""
     toks = {t.strip().lower() for t in directive.split(",")}
@@ -934,8 +1070,7 @@ def extract_metadata(html: str) -> tuple[str, str, str, str]:
     record header a crawl pipeline stores next to the extracted text:
     dedup keys (canonical), snippet text (description), and display
     titles all come from here."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     title = desc = canon = og = None
 
     def walk(node: _Node) -> None:
@@ -964,7 +1099,7 @@ def extract_metadata(html: str) -> tuple[str, str, str, str]:
                     canon = ch.attrs.get("href", "")
             walk(ch)
 
-    walk(builder.root)
+    walk(root)
     return (
         title if title is not None else "-",
         desc if desc is not None else "-",
@@ -1023,10 +1158,9 @@ def extract_code_blocks(html: str) -> list[tuple[str, str]]:
     class ('' when unhinted); code text keeps its internal newlines and
     decodes entities through the same DOM build as the main-content
     extractor, so `&amp;`/`&lt;` round-trip to raw source."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     out: list[tuple[str, str]] = []
-    for node in _iter_nodes(builder.root):
+    for node in _iter_nodes(root):
         if node.tag != "code" or node.parent is None:
             continue
         if node.parent.tag != "pre":
@@ -1167,11 +1301,10 @@ def extract_structured(html: str) -> tuple[str, str, str, str, str, str]:
         elif isinstance(a, str):
             author = a
         break
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     org_name = org_url = "-"
     scope = next(
-        (n for n in _iter_nodes(builder.root) if "itemscope" in n.attrs),
+        (n for n in _iter_nodes(root) if "itemscope" in n.attrs),
         None,
     )
     if scope is not None:
@@ -1271,10 +1404,9 @@ def extract_pub_date(html: str) -> tuple[str, str]:
             return cand.strip()[:10]
         return None
 
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     meta_cand = time_cand = None
-    for n in _iter_nodes(builder.root):
+    for n in _iter_nodes(root):
         if (
             meta_cand is None
             and n.tag == "meta"
@@ -1478,8 +1610,7 @@ def extract_tables(html: str) -> list[list[list[str]]]:
     and its rows never leak into the enclosing table's row list (cell
     text of the outer cell still includes the nested text, matching
     _node_text semantics everywhere else)."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     out: list[list[list[str]]] = []
 
     def collect_rows(tnode: _Node) -> list[list[str]]:
@@ -1512,7 +1643,7 @@ def extract_tables(html: str) -> list[list[list[str]]]:
                 out.append(collect_rows(ch))
             walk(ch)
 
-    walk(builder.root)
+    walk(root)
     return out
 
 

@@ -16,7 +16,7 @@ paper: LENGTH_LOW=70, LENGTH_HIGH=200, STOPWORDS_LOW=0.30,
 STOPWORDS_HIGH=0.32, MAX_LINK_DENSITY=0.2, MAX_HEADING_DISTANCE=200):
 
 1. Segmentation: DFS over the SAME DOM build as main-content
-   extraction (`html_extract._DomBuilder`: script/style skipped, void
+   extraction (`html_extract.build_dom`: script/style skipped, void
    tags, entity decoding). A paragraph closes at every BLOCK-tag
    boundary (open or close); <head> is skipped entirely. Paragraph
    text is whitespace-collapsed; the paragraph records its dom_path
@@ -100,10 +100,9 @@ JUSTEXT_STOPLIST = frozenset(
 def segment_paragraphs(html: str) -> list[dict]:
     """[{path, text, link_chars, heading}] in document order (module
     docstring step 1)."""
-    from paddleocr_spark.operators.html_extract import _DomBuilder
+    from paddleocr_spark.operators.html_extract import build_dom
 
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     out: list[dict] = []
     buf: list[str] = []
     state = {"link": 0, "heading": False, "path": "", "started": False}
@@ -150,7 +149,7 @@ def segment_paragraphs(html: str) -> list[dict]:
             else:
                 walk(c, child_path, in_link or c.tag == "a", heading)
 
-    walk(builder.root, "", False, False)
+    walk(root, "", False, False)
     flush()
     return out
 

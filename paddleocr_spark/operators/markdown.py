@@ -7,7 +7,7 @@ WEB page rather than a scan, a curation pipeline converts the DOM
 itself — headings, emphasis, links, lists, quotes, fenced code,
 tables, rules — into markdown, the de-facto interchange format for
 LLM training corpora. Re-uses the SAME real DOM build as main-content
-extraction (`operators/html_extract._DomBuilder`: void tags, entity
+extraction (`operators/html_extract.build_dom`: void tags, entity
 decoding, script/style exclusion), so the renderer sees exactly the
 tree the boilerplate stripper scores.
 
@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from paddleocr_spark.operators.html_extract import _DomBuilder, _Node, _node_text
+from paddleocr_spark.operators.html_extract import _Node, _node_text, build_dom
 from paddleocr_spark.sources.scan import scan_parquet
 
 _HEADINGS = {f"h{i}": i for i in range(1, 7)}
@@ -115,8 +115,7 @@ def _table_block(tnode: _Node) -> str:
 
 def render_markdown(html: str) -> tuple[str, int]:
     """HTML string -> (markdown, n_blocks)."""
-    builder = _DomBuilder()
-    builder.feed(html)
+    root = build_dom(html)
     blocks: list[str] = []
 
     def block_walk(n: _Node) -> None:
@@ -173,7 +172,7 @@ def render_markdown(html: str) -> tuple[str, int]:
             else:
                 block_walk(c)
 
-    block_walk(builder.root)
+    block_walk(root)
     blocks = [b for b in blocks if b]
     return "\n\n".join(blocks), len(blocks)
 

@@ -21,9 +21,9 @@ from pyspark.sql import functions as F
 
 from paddleocr_spark.sources.scan import scan_parquet
 from paddleocr_spark.operators.html_extract import (
-    _DomBuilder,
     _Node,
     _node_text,
+    build_dom,
 )
 
 
@@ -67,8 +67,7 @@ def parse_sitemap(xml: str) -> tuple[str, list[tuple[str, str]]]:
     """('urlset'|'index'|'unknown', [(loc, lastmod)]). Index entries
     carry '' lastmod unless declared. Entities decode through the
     parser (sitemaps must XML-escape &)."""
-    builder = _DomBuilder()
-    builder.feed(xml)
+    root = build_dom(xml)
     kind = "unknown"
     out: list[tuple[str, str]] = []
 
@@ -92,7 +91,7 @@ def parse_sitemap(xml: str) -> tuple[str, list[tuple[str, str]]]:
                     out.append((loc, lastmod))
             walk(ch)
 
-    walk(builder.root)
+    walk(root)
     return kind, out
 
 

@@ -11,7 +11,7 @@ text per page only shows up here). The per-host template census
 the standard seed for per-template extraction rules.
 
 Skeleton: document-order tag names from the SAME real DOM build as
-main-content extraction (`operators/html_extract._DomBuilder` — void
+main-content extraction (`operators/html_extract.build_dom` — void
 tags, script/style exclusion, tag-soup recovery all identical), joined
 with '>' and md5'd. Attributes and text are excluded by definition:
 a skeleton is structure only.
@@ -44,7 +44,7 @@ def page_templates(spark: SparkSession, sf_dir: str, pages=None) -> DataFrame:
 
     import pandas as pd
 
-    from paddleocr_spark.operators.html_extract import _DomBuilder, _Node
+    from paddleocr_spark.operators.html_extract import _Node, build_dom
     from paddleocr_spark.sources.pages import html_pages_from_documents
 
     if pages is None:
@@ -55,10 +55,8 @@ def page_templates(spark: SparkSession, sf_dir: str, pages=None) -> DataFrame:
             hosts, tpls = [], []
             for url, blob in zip(pdf["url"], pdf["html"]):
                 host = url.split("://", 1)[-1].split("/", 1)[0].lower()
-                b = _DomBuilder()
-                b.feed(bytes(blob).decode("utf-8"))
                 tags = []
-                stack = [b.root]
+                stack = [build_dom(bytes(blob).decode("utf-8"))]
                 while stack:
                     node = stack.pop()
                     if isinstance(node, _Node):

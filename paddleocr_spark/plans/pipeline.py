@@ -384,6 +384,10 @@ def _filesystem(path: str):
     return fs.FileSystem.from_uri(path)
 
 
+# Writer option that stops Hadoop's committer leaving a `_SUCCESS` file.
+NO_SUCCESS_MARKER = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
+
 def write_task_audit(tally: Accumulator, run_id: str, audit_dir: str) -> str:
     """Write the task rows in `tally` (AUDIT_SCHEMA) to one parquet file,
     `part-<run_id>.parquet` under `audit_dir`, and return its path. Call
@@ -463,8 +467,12 @@ def run_job(
     # (a pre-partitioning flat sink would make partition discovery raise
     # 'Conflicting directory structures'). run_id stays IN the data
     # files, so recursive reads of old and new generations both work.
+    # No Hadoop `_SUCCESS` marker: nothing reads it (recursive parquet
+    # reads skip `_` files, and the audit file written next marks a
+    # finished run), and each marker costs a file, its .crc and two
+    # forked chmods on the driver.
     run_dir = os.path.join(results_path, f"run_id={rid}")
-    results.write.mode("append").parquet(run_dir)
+    results.write.mode("append").option(NO_SUCCESS_MARKER, "false").parquet(run_dir)
     # The audit covers THIS run's increment only, from the rows the
     # extraction tasks tallied while they wrote it: no read-back of the
     # files, no second run of the OCR stage, and no Spark job.

@@ -158,8 +158,10 @@ def _write_branch(df: DataFrame, root: str, branch: str) -> tuple[list[dict], st
     """Write one branch's data files under data/<uuid>/ and return
     (file entries, schema json). Files are durable but INVISIBLE until
     a manifest referencing them is committed."""
+    from paddleocr_spark.plans.pipeline import NO_SUCCESS_MARKER
+
     dest = os.path.join(_data_dir(root), f"{branch}-{uuid.uuid4().hex}")
-    df.write.mode("error").parquet(dest)
+    df.write.mode("error").option(NO_SUCCESS_MARKER, "false").parquet(dest)
     stats = [_file_stats(p) for p in _list_parquet(dest)]
     # Zero-row part files (empty upstream partitions) carry no data:
     # tracking them would only bloat every future manifest rewrite. A

@@ -52,6 +52,20 @@ def test_script_style_ignored():
     assert "visible content" in out
 
 
+def test_negativity_read_only_where_scoring_reaches():
+    """best_node asks a node's class/id hints only when scoring reaches
+    the node: a bare `class` in <head>, under a negative box or on a
+    page with no candidate never reaches `_is_negative`."""
+    body = "<p>visible content words here enough for scoring rules</p>"
+    assert extract_main_text(
+        f"<html><head><link class></head><body><div>{body}</div></body></html>"
+    ) == "visible content words here enough for scoring rules"
+    assert "visible" in extract_main_text(
+        f'<body><nav><a id>x</a></nav><div class="post">{body}</div></body>'
+    )
+    assert extract_main_text("<p class>no candidate</p>") == ""
+
+
 def test_empty_and_garbage():
     assert extract_main_text("") == ""
     assert extract_main_text("<p></p>") == ""

@@ -96,6 +96,10 @@ def test_run_job_resume_idempotent(spark, tmp_path):
         assert todo.count() == 6
         n = run_job(spark, pages, results, audit, num_partitions=4, run_id="r2")
         assert n == 6
+        run_dirs = sorted((tmp_path / root.rsplit("/", 1)[-1] / "results").iterdir())
+        assert [d.name for d in run_dirs] == ["run_id=r1", "run_id=r2"]
+        for d in run_dirs:
+            assert not list(d.glob("*_SUCCESS*")), d
         final = spark.read.parquet(results)
         assert final.count() == 12
         assert final.select("url").distinct().count() == 12
@@ -183,6 +187,9 @@ def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
     n = run_job(spark, pages, results, audit, num_partitions=4, run_id="t1")
     committed = spark.read.parquet(results).drop("run_id")
     assert n == committed.count()
+    # the results write leaves data files only: no Hadoop `_SUCCESS`
+    # marker (nor its .crc); the audit file marks the finished run
+    assert [f for f in os.listdir(f"{results}/run_id=t1") if "_SUCCESS" in f] == []
 
     assert sorted(os.listdir(audit)) == ["part-t1.parquet"]
     tallied = spark.read.parquet(audit)

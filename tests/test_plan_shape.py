@@ -14,6 +14,7 @@ pass every value oracle and still fall over at 10^12 docs. Pin them.
   streaming epoch is one: nothing reads back what was just written.
 - The link-analysis branches (PageRank, TrustRank, HITS) share one host
   graph, and each power step is one shuffle plus one broadcast.
+- The k-means branch sorts nothing: the suite's union drops row order.
 """
 
 import re
@@ -148,6 +149,26 @@ def test_link_analysis_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup("link-analysis-shape")
     assert 0 < len(jobs) <= 58, len(jobs)
+
+
+def test_kmeans_semdedup_bitext_job_count(spark):
+    """Collecting the built `kmeans_semdedup_bitext` branch is at most
+    10 Spark jobs (measured 10 on local[8] at sf0.001). Its rows are
+    unioned into `embedding_ops_suite`, where order is lost, so a
+    global sort of the SemDeDup verdicts (a range-partitioning exchange
+    plus its sampling job: 12 jobs) fails this pin."""
+    from paddleocr_spark.functions.kmeans import embedding_branch_builders
+
+    build = dict(embedding_branch_builders(spark, SF_SMALL))
+    branch = build["kmeans_semdedup_bitext"]()
+    sc = spark.sparkContext
+    sc.setJobGroup("kmeans-branch-shape", "collect the kmeans branch")
+    try:
+        assert branch.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("kmeans-branch-shape")
+    assert 0 < len(jobs) <= 10, len(jobs)
 
 
 def test_snapshot_stream_epoch_job_count(spark, tmp_path, monkeypatch):

@@ -93,6 +93,9 @@ def test_run_job_snapshot_atomic_and_idempotent(spark, tmp_path):
         # data directory left behind by the empty write
         data = snap._data_dir(root)
         before = sorted(os.listdir(data))
+        # the branch writes leave no Hadoop `_SUCCESS` marker
+        for d in before:
+            assert "_SUCCESS" not in os.listdir(os.path.join(data, d)), d
         out3 = snap.run_job_snapshot(
             spark, pages, root, num_partitions=4, run_id="s3"
         )

@@ -317,6 +317,14 @@ def test_session_conf_leaves_master_heap_and_local_dir_to_the_deployment():
     assert not owned & SESSION_CONF.keys()
 
 
+def test_python_workers_talk_over_a_unix_socket(spark):
+    """Every session, local or submitted, sends Arrow batches to Python
+    workers over a Unix socket, not TCP loopback."""
+    key = "spark.python.unix.domain.socket.enabled"
+    assert SESSION_CONF[key] == "true"
+    assert spark.conf.get(key) == "true"
+
+
 def test_submit_extract_passes_exactly_local_conf(monkeypatch, tmp_path):
     from tools import submit_pyfiles
 
