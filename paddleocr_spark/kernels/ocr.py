@@ -1,13 +1,14 @@
-"""The composed per-page OCR kernel: detect -> order -> crop -> recognize
--> score-filter -> extracted text.
+"""The composed per-page OCR kernel: detected boxes -> order -> crop ->
+recognize -> score-filter -> spans.
 
-This is the numpy core that the Spark mapInPandas stage calls per page —
-the analogue of the reference's TextSystem.__call__
-(tools/infer/predict_system.py:76-157): det boxes, sorted_boxes reading
-order (:124), perspective crop per box (:126-132), optional 0/180 cls,
-batched rec, then drop results with score < drop_score (:149-154,
-default 0.5). extracted_text joins kept line texts with '\n' in reading
-order (the TSV sink's transcription order, :244-267).
+This is the numpy core that the Spark mapInPandas stage calls per page
+(`plans/pipeline._ocr_batches_run`, after its det or orientation sweep)
+— the analogue of the reference's TextSystem.__call__
+(tools/infer/predict_system.py:76-157): sorted_boxes reading order
+(:124), perspective crop per box (:126-132), batched rec, then drop
+results with score < drop_score (:149-154, default 0.5). A page's
+extracted text joins the kept span texts with '\n' in reading order (the
+TSV sink's transcription order, :244-267).
 """
 
 from __future__ import annotations
@@ -16,8 +17,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .cls import classify
-from .det import DetConfig, DetModel, detect_lines
+from .det import DetConfig, DetModel
 from .geometry import sorted_boxes
 from .imageops import warp_perspective
 from .rec import RecConfig, RecModel, recognize_crops
@@ -60,7 +60,6 @@ class OcrConfig:
     det: DetConfig = field(default_factory=DetConfig)
     rec: RecConfig = field(default_factory=RecConfig)
     drop_score: float = DROP_SCORE
-    use_angle_cls: bool = False
 
 
 @dataclass
@@ -73,28 +72,22 @@ class OcrEngine:
     def __post_init__(self):
         self.det_model = DetModel(self.cfg.det)
         self.rec_model = RecModel(self.cfg.rec)
+        # orientation probe scorer: an onnx_models.OnnxClsModel while a
+        # three-model bundle is installed, else rec confidence scores
+        self.cls_model = None
 
-    def ocr_page(self, gray: np.ndarray) -> list[dict]:
-        """uint8 grayscale page -> reading-ordered, score-filtered spans:
-        [{box: [[x,y]x4], text: str, score: float}]."""
-        boxes, _ = detect_lines(gray, self.det_model)
+    def ocr_page(self, gray: np.ndarray, boxes: np.ndarray) -> list[dict]:
+        """uint8 grayscale page and its detected boxes -> reading-ordered,
+        score-filtered spans: [{box: [[x,y]x4], text: str, score: float}]."""
         boxes = sorted_boxes(boxes)
         crops = [get_rotate_crop_image(gray, b) for b in boxes]
-        if self.cfg.use_angle_cls:
-            crops = [classify(c, self.rec_model)[2] for c in crops]
         rec_res = recognize_crops(crops, self.rec_model)
-        spans = []
-        for box, (text, score) in zip(boxes, rec_res):
-            if score < self.cfg.drop_score:
-                continue
-            spans.append(
-                {
-                    "box": np.asarray(box, dtype=np.float32).tolist(),
-                    "text": text,
-                    "score": float(score),
-                }
-            )
-        return spans
-
-    def extract_text(self, gray: np.ndarray) -> str:
-        return "\n".join(s["text"] for s in self.ocr_page(gray))
+        return [
+            {
+                "box": np.asarray(box, dtype=np.float32).tolist(),
+                "text": text,
+                "score": float(score),
+            }
+            for box, (text, score) in zip(boxes, rec_res)
+            if score >= self.cfg.drop_score
+        ]

@@ -66,7 +66,9 @@ class _DomBuilder(HTMLParser):
             self._skip_depth = 1
             return
         self.counter += 1
-        node = _Node(tag, dict(attrs), self.stack[-1], self.counter)
+        # a bare attribute (`<div hidden>`) has the value "", as in the HTML DOM
+        attrs = {k: "" if v is None else v for k, v in attrs}
+        node = _Node(tag, attrs, self.stack[-1], self.counter)
         self.stack[-1].children.append(node)
         if tag not in _VOID_TAGS:
             self.stack.append(node)
@@ -95,8 +97,9 @@ class _DomBuilder(HTMLParser):
 # possessive, so the scan never re-splits a tag html.parser would read
 # otherwise. Groups: 1 text, 2 tag name, 3 attributes, 4 `/` of `/>`,
 # 5 end-tag name, 6 a `<` outside the grammar. Script and style bodies,
-# comments, doctypes and bogus comments match with no group: none of
-# them adds anything to the tree.
+# comments, doctypes, bogus comments and processing instructions (`<?`
+# to the first `>`, as html.parser's parse_pi reads it) match with no
+# group: none of them adds anything to the tree.
 _ATTR_SRC = (
     r"""\s++[^\s/>=][^\s/=>]*+"""
     r"""(?:\s*+=\s*+(?:"[^"]*+"|'[^']*+'|[^\s>"'=][^\s>]*+))?+"""
@@ -119,12 +122,14 @@ _TOKEN = re.compile(
     + r"|</\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>"
     + r"|<!--[^-]*+(?:-(?!-\s*>)[^-]*+)*+--\s*+>"
     + r"|<!(?!--|\[)[^>]*+>"
+    + r"|<\?[^>]*+>"
     + r"|(<)"
 )
-# splits an attribute run `_TOKEN` has accepted into (name, '=' when
-# valued, double-quoted, single-quoted, unquoted value)
+# splits an attribute run `_TOKEN` has accepted into (name,
+# double-quoted, single-quoted, unquoted value); all three values are ""
+# for a bare attribute
 _ATTR = re.compile(
-    r"""\s+([^\s/>=][^\s/=>]*)(?:\s*(=)\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+)))?"""
+    r"""\s+([^\s/>=][^\s/=>]*)(?:\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+)))?"""
 )
 _TEXT_END = re.compile(r"[\s;]")
 
@@ -138,10 +143,11 @@ def _parse_dom(markup: str) -> _Node:
 def build_dom(markup: str) -> _Node:
     """The root of `markup`'s DOM: the tree html.parser gives through
     `_DomBuilder`, built by one `_TOKEN` scan. Markup outside the scan's
-    grammar (CDATA, `<?`, a `<` that opens no tag, an unterminated or
-    malformed tag, `<script/>`, a trailing text run html.parser holds
-    back for a charref that may continue) goes to `_DomBuilder` itself,
-    so the tree is html.parser's either way."""
+    grammar (CDATA, an unterminated `<?`, a `<` that opens no tag, an
+    unterminated or malformed tag, `<script/>`, a trailing text run
+    html.parser holds back for a charref that may continue) goes to
+    `_DomBuilder` itself, so the tree is html.parser's either way. A bare
+    attribute's value is "" in both."""
     # html.parser keeps back a last text run whose final '&' (within 34
     # chars of the end) has no whitespace or ';' after it
     n = len(markup)
@@ -174,9 +180,9 @@ def build_dom(markup: str) -> _Node:
                 counter += 1
                 amap = {}
                 if attrs:
-                    for name, eq, dq, sq, bare in _ATTR.findall(attrs):
-                        value = (dq or sq or bare) if eq else None
-                        if value and "&" in value:
+                    for name, dq, sq, bare in _ATTR.findall(attrs):
+                        value = dq or sq or bare
+                        if "&" in value:
                             value = html_mod.unescape(value)
                         amap[name.lower()] = value
                 child = _Node(tag, amap, node, counter)

@@ -23,7 +23,11 @@ Scale notes (the parts that matter at 10^12 docs / 1000 executors):
   worker itself is tuned once, when a task first imports the package
   (paddleocr_spark._tune_worker), so the stage carries no per-task
   worker fix of its own.
-- Results carry per-row stage timings. Every extraction writer, batch
+- Results carry per-row stage timings: `decode_ms` is routing plus
+  decode (or the DOM strip / PDF text layer), `det_ms` the orientation
+  sweep (when `orient`) plus the page's det, and `rec_ms` the page chain
+  after det (`OcrEngine.ocr_page`: reading order, crop, rec and the
+  drop_score filter). Every extraction writer, batch
   (`run_job`, snapshots.run_job_snapshot) or streaming (the
   streaming/pipeline.py foreachBatch sinks), takes the lineage/audit
   rows (north_star) from the extraction tasks themselves: each task
@@ -149,7 +153,7 @@ def _ocr_batches(
     saved = (
         engine.det_model,
         engine.rec_model,
-        getattr(engine, "cls_model", None),
+        engine.cls_model,
         font.TEMPLATES,
     )
     counted: list[pd.DataFrame] = []
@@ -192,11 +196,9 @@ def _ocr_batches_run(
 ) -> Iterator[pd.DataFrame]:
     from paddleocr_spark.kernels.cls import orient_page
     from paddleocr_spark.kernels.det import detect_lines
-    from paddleocr_spark.kernels.geometry import sorted_boxes
     from paddleocr_spark.kernels.multipage import decode_pages, route
     from paddleocr_spark.kernels.ocr import get_rotate_crop_image
     from paddleocr_spark.kernels.pdf import pdf_text_pages
-    from paddleocr_spark.kernels.rec import recognize_crops
 
     from paddleocr_spark.operators.html_extract import extract_main_text
 
@@ -274,26 +276,14 @@ def _ocr_batches_run(
                         probe,
                         get_rotate_crop_image,
                         engine.rec_model,
-                        cls_model=getattr(engine, "cls_model", None),
+                        cls_model=engine.cls_model,
                     )
-                    hit = [det for im, det in probes if im is img]
-                    boxes = (hit[0] if hit else detect_lines(img, engine.det_model))[0]
+                    boxes = next(det for im, det in probes if im is img)[0]
                 else:
                     boxes, _ = detect_lines(img, engine.det_model)
-                boxes = sorted_boxes(boxes)
-                crops = [get_rotate_crop_image(img, b) for b in boxes]
                 d1 = time.perf_counter()
-                rec_res = recognize_crops(crops, engine.rec_model)
+                spans = engine.ocr_page(img, boxes)
                 d2 = time.perf_counter()
-                spans = [
-                    {
-                        "box": [[float(x), float(y)] for x, y in b],
-                        "text": t,
-                        "score": float(s),
-                    }
-                    for b, (t, s) in zip(boxes, rec_res)
-                    if s >= engine.cfg.drop_score
-                ]
                 rows.append(
                     dict(
                         url=url,

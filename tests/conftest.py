@@ -19,3 +19,17 @@ def spark():
     s = local_session(8, "paddleocr_spark-tests")
     yield s
     s.stop()
+
+
+def page_spans(engine, img) -> list[dict]:
+    """A page's spans through the extraction task's chain: det, then
+    `OcrEngine.ocr_page` on the page and its boxes."""
+    from paddleocr_spark.kernels.det import detect_lines
+
+    boxes, _ = detect_lines(img, engine.det_model)
+    return engine.ocr_page(img, boxes)
+
+
+def page_text(engine, img) -> str:
+    """A page's extracted text: its span texts joined in reading order."""
+    return "\n".join(s["text"] for s in page_spans(engine, img))

@@ -71,7 +71,8 @@ def _assert_same(markup):
 # -- tag soup ---------------------------------------------------------
 
 _NAMES = ["div", "p", "a", "DIV", "Br", "img", "span", "noscript", "section",
-          "td", "x-y", "nav", "scriptx", "li"]
+          "td", "x-y", "nav", "scriptx", "li", "meta", "pre", "code", "time",
+          "link", "table", "tr"]
 _TEXT = st.text(alphabet="ab &;#x1<>/'\"=-!\n\t\xa0ſ", max_size=12)
 _ENTITY = st.sampled_from(["&amp;", "&amp", "&lt;", "&#39;", "&#x41", "&#1;",
                            "&nbsp", "&notin;", "&", "&#", "&#x;", "&zz;"])
@@ -86,7 +87,8 @@ _ATTR = st.builds(
     lambda sep, name, value: sep + name + value,
     st.sampled_from([" ", " ", "\n", "  ", "", "/", " / "]),
     st.sampled_from(["class", "id", "href", "CLASS", "data-x", "alt", "b",
-                     "'q", "=x"]),
+                     "'q", "=x", "name", "property", "content", "rel", "src",
+                     "srcset", "itemprop", "itemscope", "datetime"]),
     _VALUE,
 )
 _START = st.builds(
@@ -182,11 +184,9 @@ def test_feed_and_sitemap_documents():
         source = "src" + chr(c)
         docs = [synth_host_feed(source)[1], *synth_host_sitemaps(source).values()]
         for xml in docs:
-            _assert_same(xml)
-            # without the XML declaration (a `<?`), and with no raw '<'
-            # in the host name, the same documents take the scan
-            body = xml.split("?>", 1)[1]
-            assert _assert_same(body) or chr(c) == "<", body
+            # the XML declaration (a `<?` up to the first `>`) is on the
+            # scan; only a raw '<' in the host name falls back
+            assert _assert_same(xml) or chr(c) == "<", xml
 
 
 def _test_file_markup():
@@ -208,3 +208,78 @@ def test_test_file_fixtures():
     assert len(markup) > 100
     fast = sum(_assert_same(m) for m in markup)
     assert fast > len(markup) // 2, (fast, len(markup))
+
+
+# -- the readers of the tree -------------------------------------------
+
+
+def _readers():
+    """Every HTML/XML extractor that `extract_pages` or a board row calls."""
+    from paddleocr_spark.operators import feeds, justext, markdown, sitemap, spans
+
+    return [
+        he.extract_main_text,
+        he.extract_links,
+        he.extract_image_pairs,
+        he.extract_robots_meta,
+        he.extract_metadata,
+        he.extract_code_blocks,
+        he.extract_structured,
+        he.extract_pub_date,
+        he.extract_tables,
+        markdown.render_markdown,
+        feeds.parse_feed,
+        sitemap.parse_sitemap,
+        justext._analyze,
+        spans.extract_spans,
+    ]
+
+
+@settings(max_examples=400, deadline=None)
+@given(_SOUP)
+@example("<div class>hello world and more words here</div>")
+@example("<meta property content><meta name><link rel href><time datetime>")
+@example("<pre><code class>x</code></pre><a href>y</a><img src srcset alt>")
+@example("<div itemscope><a itemprop href>z</a></div>")
+def test_readers_never_raise_on_tag_soup(markup):
+    """A valid page never becomes an error row: each reader returns on
+    any tree, bare attributes (value "") included."""
+    for read in _readers():
+        read(markup)
+
+
+_BARE = [
+    # the same result as without the bare attribute
+    ("extract_main_text",
+     "<div class>hello world and more words here</div>",
+     "<div>hello world and more words here</div>"),
+    ("extract_pub_date", "<meta property><p>x</p>", "<meta><p>x</p>"),
+    ("extract_metadata", "<meta name><title>t</title>", "<meta><title>t</title>"),
+    ("extract_robots_meta", "<meta name content=x><p>x</p>",
+     "<meta content=x><p>x</p>"),
+    ("extract_code_blocks", "<pre><code class>x</code></pre>",
+     "<pre><code>x</code></pre>"),
+    ("render_markdown", "<pre><code class>x</code></pre>",
+     "<pre><code>x</code></pre>"),
+    ("extract_structured", '<div itemscope><a itemprop href="/u">n</a></div>',
+     '<div itemscope><a href="/u">n</a></div>'),
+    # the same result as the empty value
+    ("extract_links", "<a href>x</a>", '<a href="">x</a>'),
+    ("extract_image_pairs", "<img src alt>", '<img src="" alt="">'),
+    ("parse_feed",
+     '<feed><title>t</title><entry><id>i</id><link href></entry></feed>',
+     '<feed><title>t</title><entry><id>i</id><link href=""></entry></feed>'),
+]
+
+
+@pytest.mark.parametrize("reader, bare, plain", _BARE, ids=[r[0] for r in _BARE])
+def test_bare_attribute_reads_as_empty_value(reader, bare, plain):
+    (read,) = [r for r in _readers() if r.__name__ == reader]
+    assert read(bare) == read(plain)
+
+
+def test_bare_attribute_values():
+    assert he.extract_links("<a href>x</a>") == [("", "x")]
+    assert he.build_dom("<p hidden class=a>").children[0].attrs == {
+        "hidden": "", "class": "a"
+    }

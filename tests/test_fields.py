@@ -6,7 +6,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, page_text
 
 from paddleocr_spark.functions import fields
 
@@ -133,8 +133,8 @@ def test_space_and_dash_ocr_roundtrip():
 
     eng = OcrEngine()
     t = ["880101-14-5523", "AHMAD BIN OSMAN", "53300 KUALA LUMPUR"]
-    assert eng.extract_text(render_page(t)) == "\n".join(t)
-    assert eng.extract_text(render_page(["NOSPACESHERE123"])) == "NOSPACESHERE123"
+    assert page_text(eng, render_page(t)) == "\n".join(t)
+    assert page_text(eng, render_page(["NOSPACESHERE123"])) == "NOSPACESHERE123"
 
 
 def test_ic_fields_from_rendered_pages_end_to_end(spark):

@@ -7,6 +7,8 @@ import random
 import numpy as np
 import pytest
 
+from conftest import page_spans
+
 from paddleocr_spark.kernels import font
 from paddleocr_spark.kernels.ctc import ctc_decode
 from paddleocr_spark.kernels.db_postprocess import (
@@ -269,12 +271,12 @@ class TestEndToEnd:
                 for _ in range(rng.randint(1, 5))
             ]
             page = font.render_page(lines)
-            got = [s["text"] for s in eng.ocr_page(page)]
+            got = [s["text"] for s in page_spans(eng, page)]
             assert got == lines
 
     def test_scores_above_drop(self):
         eng = OcrEngine()
-        spans = eng.ocr_page(font.render_page(["HELLO123"]))
+        spans = page_spans(eng, font.render_page(["HELLO123"]))
         assert all(s["score"] >= 0.5 for s in spans)
 
     def test_low_score_line_filtered(self):
@@ -286,7 +288,7 @@ class TestEndToEnd:
         rng = np.random.default_rng(0)
         noise = rng.integers(0, 256, size=page[h // 2 :, :].shape, dtype=np.uint8)
         page[h // 2 :, :] = np.minimum(page[h // 2 :, :], noise)
-        spans = eng.ocr_page(page)
+        spans = page_spans(eng, page)
         texts = [s["text"] for s in spans]
         assert "GOODLINE" in texts
 
@@ -301,7 +303,7 @@ class TestEndToEnd:
             up, angle = orient_page(
                 page, lambda im: dl(im, eng.det_model), get_rotate_crop_image, eng.rec_model
             )
-            got = [s["text"] for s in eng.ocr_page(up)]
+            got = [s["text"] for s in page_spans(eng, up)]
             assert got == lines, f"k={k} angle={angle}"
 
     def test_tsv_serialization_parity(self):
@@ -310,7 +312,7 @@ class TestEndToEnd:
         import json
 
         eng = OcrEngine()
-        spans = eng.ocr_page(font.render_page(["AB12"]))
+        spans = page_spans(eng, font.render_page(["AB12"]))
         line = "page0\t" + json.dumps(
             [
                 {"transcription": s["text"], "points": [[int(x), int(y)] for x, y in s["box"]]}

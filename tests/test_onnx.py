@@ -35,7 +35,7 @@ from paddleocr_spark.kernels.onnx_rt import (
 )
 from paddleocr_spark.kernels.rec import RecModel
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, page_text
 
 rng = np.random.default_rng(7)
 
@@ -193,7 +193,7 @@ def test_engine_extract_text_byte_identical(text):
         build_det_onnx(), build_rec_onnx(), onnx.cfg.det, onnx.cfg.rec
     )
     page = font.render_page(text)
-    assert onnx.extract_text(page) == stub.extract_text(page)
+    assert page_text(onnx, page) == page_text(stub, page)
 
 
 def test_bundle_roundtrip_and_session_cache():

@@ -8,6 +8,8 @@ space so a det/rec regression cannot hide behind the happy path.
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from conftest import page_text
+
 from paddleocr_spark.kernels.cls import orient_page
 from paddleocr_spark.kernels.det import detect_lines
 from paddleocr_spark.kernels.font import CHARSET, render_page
@@ -29,7 +31,7 @@ def test_multipage_payload_roundtrips_in_order(pages):
     decoded = decode_payload(payload)
     assert len(decoded) == len(pages)
     for ls, img in zip(pages, decoded):
-        assert _ENGINE.extract_text(img) == "\n".join(ls)
+        assert page_text(_ENGINE, img) == "\n".join(ls)
 
 
 # Orientation needs evidence: pages built only from rotation-symmetric
@@ -56,4 +58,4 @@ def test_rotation_sweep_recovers_any_quarter_turn(lines, k):
         get_rotate_crop_image,
         _ENGINE.rec_model,
     )
-    assert _ENGINE.extract_text(upright) == "\n".join(lines)
+    assert page_text(_ENGINE, upright) == "\n".join(lines)

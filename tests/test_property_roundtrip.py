@@ -9,6 +9,8 @@ exactly this way."""
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from conftest import page_text
+
 from paddleocr_spark.kernels.font import CHARSET, render_page
 from paddleocr_spark.kernels.ocr import OcrEngine
 
@@ -39,5 +41,5 @@ def _line() -> st.SearchStrategy[str]:
 @example(["--"])
 @example(["-- ---", "AB"])
 def test_any_renderable_page_roundtrips(lines):
-    got = _ENGINE.extract_text(render_page(lines))
+    got = page_text(_ENGINE, render_page(lines))
     assert got == "\n".join(lines)

@@ -10,6 +10,8 @@ test pins the fix (h_dilate=31, window 63) against the full pair space
 so no future charset or font change can silently reintroduce the split.
 """
 
+from conftest import page_text
+
 from paddleocr_spark.kernels.font import CHARSET, render_page
 from paddleocr_spark.kernels.ocr import OcrEngine
 
@@ -22,7 +24,7 @@ def test_every_charset_pair_bridges_a_space():
     for a in chars:
         for b in chars:
             line = f"{a} {b}"
-            got = _ENGINE.extract_text(render_page([line]))
+            got = page_text(_ENGINE, render_page([line]))
             if got != line:
                 bad.append((line, got))
     assert not bad, f"{len(bad)} pairs failed, first: {bad[:5]}"

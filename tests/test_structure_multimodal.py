@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, page_text
 
 from paddleocr_spark.functions import structure
 from paddleocr_spark.operators import multimodal
@@ -86,7 +86,7 @@ def test_orientation_sweep_recovers_rotated_page():
         eng.rec_model,
     )
     assert angle == 180
-    assert eng.extract_text(upright) == text
+    assert page_text(eng, upright) == text
 
 
 def test_image_policy_bitmask_matrix(spark):
