@@ -24,11 +24,11 @@ shuffle-free at any scale.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 
 from paddleocr_spark.functions.corrections import (
     apply_line_corrections,
@@ -390,17 +390,11 @@ def ic_address_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.expr(_layout_sql(True)).alias("transcript")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["transcript"]):
-                r = extract_serving_fields(t.split("\n"))
-                rows.append((doc_id, r["name"], r["address"]))
-            yield pd.DataFrame(rows, columns=["doc_id", "name", "address"])
+    def fields(doc_id, t):
+        r = extract_serving_fields(t.split("\n"))
+        return [(doc_id, r["name"], r["address"])]
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, name string, address string"
-    )
+    return map_rows(docs, fields, "doc_id long, name string, address string")
 
 
 IC_ADDRESS_EXTRACT_SQL = _expected_sql(False)

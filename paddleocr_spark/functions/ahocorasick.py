@@ -106,34 +106,20 @@ def ac_scan(
 def ac_scan_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(op='ac_scan', k=doc_id, v=total|n_patterns|first_end) over the
     injected corpus."""
-    import pandas as pd
+    from paddleocr_spark.frames import map_rows
 
     auto = build_automaton(PHRASES)
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", F.expr(AC_INJECT_EXPR).alias("t")
     )
 
-    def run(batches):
-        for pdf in batches:
-            ids, tot, npat, fe = [], [], [], []
-            for d, t in zip(pdf["doc_id"], pdf["t"]):
-                hits = ac_scan(str(t), auto, PHRASES)
-                ids.append(int(d))
-                tot.append(len(hits))
-                npat.append(len({i for i, _ in hits}))
-                fe.append(min((e for _, e in hits), default=0))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "total": pd.Series(tot, dtype="int64"),
-                    "n_patterns": pd.Series(npat, dtype="int64"),
-                    "first_end": pd.Series(fe, dtype="int64"),
-                }
-            )
+    def scan(d, t):
+        hits = ac_scan(str(t), auto, PHRASES)
+        return [(int(d), len(hits), len({i for i, _ in hits}),
+                 min((e for _, e in hits), default=0))]
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, total long, n_patterns long, first_end long",
+    return map_rows(
+        docs, scan, "doc_id long, total long, n_patterns long, first_end long"
     ).select(
         F.lit("ac_scan").alias("op"),
         F.col("doc_id").cast("string").alias("k"),

@@ -22,7 +22,7 @@ repo already uses:
   JVM `aggregate` fold (no Python in the loop) -> `localCheckpoint`
   truncates the per-round lineage (N_MERGES nested `aggregate` calls
   would otherwise stack into one unplannable codegen unit).
-* Encoding is an Arrow-batched mapInPandas with a per-word memo dict:
+* Encoding is an Arrow-batched `frames.map_rows` with a per-word memo dict:
   Zipf means a batch of documents re-encodes the same head words
   thousands of times, so amortized cost per token is a dict hit. The
   merge table rides the closure (broadcast-sized: N_MERGES entries).
@@ -178,7 +178,7 @@ def encode_bpe(
     batch, not once per occurrence."""
     import hashlib
 
-    import pandas as pd
+    from paddleocr_spark.frames import map_rows
 
     raw = _docs(spark, sf_dir)
     # lang rides along when the table has it (test corpora may not)
@@ -187,43 +187,25 @@ def encode_bpe(
         if "lang" in raw.columns
         else raw.select("doc_id", "text", F.lit("und").alias("lang"))
     )
+    # per-word memo, one per task: each task unpickles its own `encode`
+    memo: dict[str, list[str]] = {}
 
-    def run(batches):
-        memo: dict[str, list[str]] = {}
-        for pdf in batches:
-            ids, langs, nw, nt, digests = [], [], [], [], []
-            for d, t, lang in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                words = split_words(str(t))
-                toks: list[str] = []
-                for w in words:
-                    enc = memo.get(w)
-                    if enc is None:
-                        enc = encode_word(w, merges)
-                        memo[w] = enc
-                    toks.extend(enc)
-                ids.append(d)
-                langs.append(lang)
-                nw.append(len(words))
-                nt.append(len(toks))
-                digests.append(
-                    hashlib.md5(" ".join(toks).encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "lang": langs,
-                    "n_words": nw,
-                    "n_bpe_tokens": nt,
-                    "tokens_md5": digests,
-                }
-            )
+    def encode(d, t, lang):
+        words = split_words(str(t))
+        toks: list[str] = []
+        for w in words:
+            enc = memo.get(w)
+            if enc is None:
+                enc = encode_word(w, merges)
+                memo[w] = enc
+            toks.extend(enc)
+        return [(d, lang, len(words), len(toks),
+                 hashlib.md5(" ".join(toks).encode("utf-8")).hexdigest())]
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, lang string, n_words int, n_bpe_tokens int,"
-            " tokens_md5 string"
-        ),
+    return map_rows(
+        docs, encode,
+        "doc_id long, lang string, n_words int, n_bpe_tokens int,"
+        " tokens_md5 string",
     )
 
 

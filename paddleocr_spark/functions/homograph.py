@@ -33,9 +33,12 @@ HTTP chain).
 
 from __future__ import annotations
 
+from html.parser import HTMLParser
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 # UTS #39 confusable subset used by the fixture: Cyrillic -> ASCII
@@ -163,35 +166,20 @@ def puny_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     label (doc_id % len); encode = OUR codec, asserted equal to its
     own decode round-trip in-runner; the oracle carries the stdlib
     expectation."""
-    from typing import Iterator
-
-    import pandas as pd
+    from paddleocr_spark.kernels.punycode import host_to_ascii, host_to_unicode
 
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.punycode import (
-            host_to_ascii,
-            host_to_unicode,
-        )
+    def puny(d):
+        label = PUNY_LABELS[d % len(PUNY_LABELS)]
+        ace = host_to_ascii(label)
+        if host_to_unicode(ace) != label.lower():
+            raise ValueError(f"punycode roundtrip broke: {label}")
+        return [("puny", str(d), f"{label}|{ace}")]
 
-        for pdf in batches:
-            ks, vs = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                label = PUNY_LABELS[d % len(PUNY_LABELS)]
-                ace = host_to_ascii(label)
-                if host_to_unicode(ace) != label.lower():
-                    raise ValueError(f"punycode roundtrip broke: {label}")
-                ks.append(str(d))
-                vs.append(f"{label}|{ace}")
-            yield pd.DataFrame({"k": ks, "v": vs})
-
-    return docs.mapInPandas(run, schema="k string, v string").select(
-        F.lit("puny").alias("op"), "k", "v"
-    )
+    return map_rows(docs, puny, "op string, k string, v string")
 
 
 def _puny_sql() -> str:
@@ -271,53 +259,39 @@ def synth_refresh_page(doc_id: int) -> str:
     )
 
 
+class _RefreshMeta(HTMLParser):
+    """Keeps the `content` of the first `<meta http-equiv=refresh>`."""
+
+    def __init__(self):
+        super().__init__()
+        self.content = None
+
+    def handle_starttag(self, tag, attrs):
+        if tag == "meta" and self.content is None:
+            a = dict(attrs)
+            if (a.get("http-equiv") or "").lower() == "refresh":
+                self.content = a.get("content") or ""
+
+
 def meta_refresh_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(op='meta_refresh', k=doc_id, v=delay|resolved_target_or_-)."""
-    from typing import Iterator
+    import urllib.parse
 
-    import pandas as pd
+    from paddleocr_spark.sources.pages import doc_url
 
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from html.parser import HTMLParser
+    def refresh(d, source):
+        m = _RefreshMeta()
+        m.feed(synth_refresh_page(d))
+        delay, target = parse_meta_refresh(m.content)
+        base = doc_url(d, str(source))
+        resolved = urllib.parse.urljoin(base, target) if target else "-"
+        return [("meta_refresh", str(d), f"{delay}|{resolved}")]
 
-        from paddleocr_spark.sources.pages import doc_url
-
-        class Meta(HTMLParser):
-            def __init__(self):
-                super().__init__()
-                self.content = None
-
-            def handle_starttag(self, tag, attrs):
-                if tag == "meta" and self.content is None:
-                    a = dict(attrs)
-                    if (a.get("http-equiv") or "").lower() == "refresh":
-                        self.content = a.get("content") or ""
-
-        import urllib.parse
-
-        for pdf in batches:
-            ks, vs = [], []
-            for doc_id, source in zip(pdf["doc_id"], pdf["source"]):
-                d = int(doc_id)
-                page = synth_refresh_page(d)
-                m = Meta()
-                m.feed(page)
-                delay, target = parse_meta_refresh(m.content)
-                base = doc_url(d, str(source))
-                resolved = (
-                    urllib.parse.urljoin(base, target) if target else "-"
-                )
-                ks.append(str(d))
-                vs.append(f"{delay}|{resolved}")
-            yield pd.DataFrame({"k": ks, "v": vs})
-
-    return docs.mapInPandas(run, schema="k string, v string").select(
-        F.lit("meta_refresh").alias("op"), "k", "v"
-    )
+    return map_rows(docs, refresh, "op string, k string, v string")
 
 
 META_REFRESH_SQL = """

@@ -21,11 +21,11 @@ Arrow-batched UDFs next to the OCR kernels; no shuffle, no driver work.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 IC_RE = re.compile(r"\d{6}-\d{2}-\d{4}")
@@ -311,31 +311,23 @@ FROM documents
 """
 
 
+_FIELDS_SCHEMA = (
+    "doc_id long, ic_number string, name string, "
+    "address string, gender string, religion string"
+)
+
+
+def _field_rows(doc_id, transcript: str) -> list[tuple]:
+    r = extract_fields_dispatch(transcript.split("\n"))
+    return [(doc_id, r["ic_number"], r["name"], r["address"],
+             r["gender"], r["religion"])]
+
+
 def ic_ultimate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", F.expr(_layout_sql(True)).alias("transcript")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["transcript"]):
-                r = extract_fields_dispatch(t.split("\n"))
-                rows.append(
-                    (doc_id, r["ic_number"], r["name"], r["address"],
-                     r["gender"], r["religion"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "ic_number", "name", "address",
-                         "gender", "religion"],
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema=("doc_id long, ic_number string, name string, "
-                "address string, gender string, religion string"),
-    )
+    return map_rows(docs, _field_rows, _FIELDS_SCHEMA)
 
 
 IC_ULTIMATE_EXTRACT_SQL = _expected_sql(False)
@@ -348,63 +340,19 @@ def ic_serving_from_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas OCR -> per-doc extract_fields_dispatch. Same oracle as
     ic_ultimate_extract — byte-identical fields prove the whole image
     chain feeds the parser exactly."""
-    import pandas as _pd
-
     from paddleocr_spark.plans.pipeline import extract_pages
-    from paddleocr_spark.sources.pages import doc_ts, doc_url
+    from paddleocr_spark.sources.pages import PAGES_SCHEMA, transcript_page
 
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id",
         "source",
         F.expr(_layout_sql(True, renderable=True)).alias("transcript"),
     ).repartition(spark.sparkContext.defaultParallelism)
-
-    def render(batches: Iterator[_pd.DataFrame]) -> Iterator[_pd.DataFrame]:
-        from paddleocr_spark.kernels.font import render_page
-        from paddleocr_spark.kernels.png import encode_gray_png
-
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "url": [
-                        doc_url(int(d), str(s))
-                        for d, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": [doc_ts(int(d)) for d in pdf["doc_id"]],
-                    "html": [
-                        encode_gray_png(render_page(t.split("\n")))
-                        for t in pdf["transcript"]
-                    ],
-                    "text": pdf["transcript"].astype(str),
-                    "lang": ["ms"] * len(pdf),
-                }
-            )
-
-    pages = docs.mapInPandas(
-        render,
-        schema="url string, warc_ts timestamp, html binary, text string, lang string",
-    )
+    pages = map_rows(docs, transcript_page, PAGES_SCHEMA)
     ncpu = spark.sparkContext.defaultParallelism
     res = extract_pages(pages, num_partitions=ncpu)
-
-    def parse(batches: Iterator[_pd.DataFrame]) -> Iterator[_pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["extracted_text"]):
-                r = extract_fields_dispatch(text.split("\n"))
-                doc_id = int(url.rsplit("/", 1)[1])
-                rows.append(
-                    (doc_id, r["ic_number"], r["name"], r["address"],
-                     r["gender"], r["religion"])
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "ic_number", "name", "address",
-                         "gender", "religion"],
-            )
-
-    return res.select("url", "extracted_text").mapInPandas(
-        parse,
-        schema=("doc_id long, ic_number string, name string, "
-                "address string, gender string, religion string"),
+    return map_rows(
+        res.select("url", "extracted_text"),
+        lambda url, text: _field_rows(int(url.rsplit("/", 1)[1]), text),
+        _FIELDS_SCHEMA,
     )

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import union_branches
 from paddleocr_spark.functions.pca import PCA_SQL as _PCA_SQL
 from paddleocr_spark.functions.similarity import (
     ANN_RECALL_SQL,
@@ -254,22 +255,14 @@ def embedding_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the returned plan references it from several sides (same
     discipline as text_stats_suite's html_links).
 
-    Construction runs on a thread pool (the text_stats_suite
-    rationale): every branch has driver-BLOCKING phases — Lloyd
-    centroid collects, PCA power-step aggregations, PQ codebook
-    training, the recall gate's exact-top-K collects — that are pure
-    wait from the driver's perspective. Threads overlap those stalls;
+    Construction runs on union_branches' thread pool (the
+    text_stats_suite rationale): every branch has driver-BLOCKING
+    phases — Lloyd centroid collects, PCA power-step aggregations, PQ
+    codebook training, the recall gate's exact-top-K collects — that
+    are pure wait from the driver's perspective. Threads overlap those stalls;
     branch results are unioned in the fixed declaration order, so the
     output frame is unchanged."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    builders = embedding_branch_builders(spark, sf_dir)
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        frames = [f.result() for f in [pool.submit(b[1]) for b in builders]]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
+    return union_branches(spark, embedding_branch_builders(spark, sf_dir))
 
 
 def embedding_branch_builders(spark: SparkSession, sf_dir: str):

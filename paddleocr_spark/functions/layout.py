@@ -1,6 +1,6 @@
 """Layout-region detection query (SURVEY §2.9 layout net row): the
 PicoDet decode tail (kernels/layout.py) run per document over
-deterministic raw-head candidates, Spark-side as one mapInPandas over
+deterministic raw-head candidates, Spark-side as one `frames.map_rows` over
 the documents scan — a narrow map, no shuffle; at 100 TB this stage is
 embarrassingly parallel and the candidate generator is where an ONNX
 head would batch-infer instead (ppstructure/layout/predict_layout.py).
@@ -25,10 +25,9 @@ everywhere):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 # class indices into kernels.layout.LAYOUT_LABELS
@@ -213,30 +212,21 @@ def layout_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     model_bytes = build_layout_onnx()  # driver-side export, ships in closure
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.layout import layout_postprocess
+    from paddleocr_spark.kernels.layout import layout_postprocess
 
-        head = OnnxLayoutHead(model_bytes)  # per-process session cache
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                for label, score, (x0, y0, x1, y1) in layout_postprocess(
-                    head.candidates(d)
-                ):
-                    rows.append(
-                        (d, label, round(score, 6), int(x0), int(y0),
-                         int(x1), int(y1))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "label", "score", "x0", "y0", "x1", "y1"],
-            )
+    def regions(d):
+        # OnnxLayoutHead reuses the per-process session cache
+        head = OnnxLayoutHead(model_bytes)
+        return [
+            (d, label, round(score, 6), int(x0), int(y0), int(x1), int(y1))
+            for label, score, (x0, y0, x1, y1)
+            in layout_postprocess(head.candidates(d))
+        ]
 
-    return docs.mapInPandas(
-        run,
-        schema=("doc_id long, label string, score double, "
-                "x0 long, y0 long, x1 long, y1 long"),
+    return map_rows(
+        docs, regions,
+        "doc_id long, label string, score double, "
+        "x0 long, y0 long, x1 long, y1 long",
     )
 
 

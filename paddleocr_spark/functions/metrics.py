@@ -27,11 +27,11 @@ from __future__ import annotations
 
 import math
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 
 # ---------------------------------------------------------------------------
 # Detection IoU evaluator (upright-rect specialization of the ICDAR
@@ -105,30 +105,22 @@ def det_iou_hmean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pages = pages_from_documents(spark, sf_dir).select("url", "html", "text")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.det import DetModel, detect_lines
-        from paddleocr_spark.kernels.png import decode_gray_png
-        from paddleocr_spark.sources.pages import normalize_text
+    from paddleocr_spark.kernels.det import DetModel, detect_lines
+    from paddleocr_spark.kernels.png import decode_gray_png
+    from paddleocr_spark.sources.pages import normalize_text
 
-        model = DetModel()
-        tm = tg = tp = 0
-        for pdf in batches:
-            for payload, text in zip(pdf["html"], pdf["text"]):
-                img = decode_gray_png(bytes(payload))
-                boxes, _ = detect_lines(img, model)
-                gt = _gt_line_quads(len(normalize_text(text)))
-                m, ng, np_ = det_eval_sample(gt, list(boxes))
-                tm += m
-                tg += ng
-                tp += np_
-        yield pd.DataFrame(
-            {"matched": [tm], "n_gt": [tg], "n_pred": [tp]}
-        )
+    model = DetModel()
 
-    per_part = pages.mapInPandas(
-        run, schema="matched long, n_gt long, n_pred long"
+    def sample(payload, text):
+        boxes, _ = detect_lines(decode_gray_png(bytes(payload)), model)
+        gt = _gt_line_quads(len(normalize_text(text)))
+        return [det_eval_sample(gt, list(boxes))]
+
+    per_page = map_rows(
+        pages, sample, "matched long, n_gt long, n_pred long",
+        cols=["html", "text"],
     )
-    agg = per_part.agg(
+    agg = per_page.agg(
         F.sum("matched").alias("matched"),
         F.sum("n_gt").alias("n_gt"),
         F.sum("n_pred").alias("n_pred"),
@@ -292,18 +284,15 @@ def table_teds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pred = table_html_assembly(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sims = []
-            for doc_id, html in zip(pdf["doc_id"], pdf["table_html"]):
-                gt = html
-                if int(doc_id) % 4 == 0:
-                    gt = re.sub(r"<td>[^<]*</td></tr></table>$",
-                                "</tr></table>", html)
-                sims.append(round(teds_similarity(html, gt), 6))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "teds": sims})
+    def teds(doc_id, html):
+        gt = html
+        if int(doc_id) % 4 == 0:
+            gt = re.sub(r"<td>[^<]*</td></tr></table>$", "</tr></table>", html)
+        return [(doc_id, round(teds_similarity(html, gt), 6))]
 
-    return pred.mapInPandas(run, schema="doc_id long, teds double")
+    return map_rows(
+        pred, teds, "doc_id long, teds double", cols=["doc_id", "table_html"]
+    )
 
 
 TABLE_TEDS_SQL = """

@@ -19,7 +19,7 @@ constructed examples. Text with characters outside cp1252 (CJK) can't
 re-encode, so it is a guaranteed no-op.
 
 Like NFC normalization this is the sanctioned Python exception (Spark
-has no codec round-trip builtin): an Arrow-batched mapInPandas, a pure
+has no codec round-trip builtin): an Arrow-batched `frames.map_rows`, a pure
 narrow map with zero shuffles riding the scan partitioning. The
 fixture INJECTS the corruption via one portable SQL expression (a
 garbled prefix on doc_id%3==1 rows, the clean prefix otherwise), and
@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 MAX_ROUNDS = 3
@@ -71,32 +72,16 @@ def mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched."""
     import hashlib
 
-    import pandas as pd
-
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"{MOJIBAKE_INJECT_EXPR} AS injected"
     )
 
-    def run(batches):
-        for pdf in batches:
-            ids, rounds, digests = [], [], []
-            for d, t in zip(pdf["doc_id"], pdf["injected"]):
-                fixed, r = fix_encoding(t)
-                ids.append(d)
-                rounds.append(r)
-                digests.append(
-                    hashlib.md5(fixed.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "fixed_rounds": rounds,
-                    "repaired_md5": digests,
-                }
-            )
+    def repair(d, t):
+        fixed, r = fix_encoding(t)
+        return [(d, r, hashlib.md5(fixed.encode("utf-8")).hexdigest())]
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, fixed_rounds int, repaired_md5 string"
+    return map_rows(
+        docs, repair, "doc_id long, fixed_rounds int, repaired_md5 string"
     ).orderBy("doc_id")
 
 

@@ -24,11 +24,11 @@ mismatch means the extraction logic broke, not the fixture.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 IC_LINE_RE = re.compile(r"\d{6}-\d{2}-\d{4}")
@@ -298,16 +298,9 @@ def ic_name_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.expr(_name_layout_sql(True)).alias("raw_ocr_text")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "name": [extract_name(t) for t in pdf["raw_ocr_text"]],
-                }
-            )
-
-    return docs.mapInPandas(run, schema="doc_id long, name string")
+    return map_rows(
+        docs, lambda d, t: [(d, extract_name(t))], "doc_id long, name string"
+    )
 
 
 IC_NAME_EXTRACT_SQL = (
@@ -426,17 +419,10 @@ def malay_word_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.expr(concat_expr).alias("joined")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "joined": pdf["joined"],
-                    "split": [split_malay_words(s) for s in pdf["joined"]],
-                }
-            )
-
-    return docs.mapInPandas(run, schema="doc_id long, joined string, split string")
+    return map_rows(
+        docs, lambda d, s: [(d, s, split_malay_words(s))],
+        "doc_id long, joined string, split string",
+    )
 
 
 def _expected_split_sql() -> str:

@@ -75,31 +75,27 @@ def rag_chunk_rows(
 ) -> DataFrame:
     """(op='rag_chunk', k=doc_id:idx, v=n_spans|n_tokens|oversize|md5)
     suite row."""
-    import pandas as pd
-
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.operators.spans import extract_spans
     from paddleocr_spark.sources.pages import html_pages_from_documents
 
     if pages is None:
         pages = html_pages_from_documents(spark, sf_dir)
 
-    def run(batches):
-        for pdf in batches:
-            ops, ks, vs = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = int(url.rsplit("/", 1)[1])
-                spans = extract_spans(bytes(blob).decode("utf-8"))
-                chunks = chunk_spans([t for _, _, _, t in spans])
-                for i, (ns, nt, ov, text) in enumerate(chunks):
-                    ops.append("rag_chunk")
-                    ks.append(f"{doc_id}:{i}")
-                    vs.append(
-                        f"{ns}|{nt}|{ov}|"
-                        + hashlib.md5(text.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame({"op": ops, "k": ks, "v": vs})
+    def chunks(url, blob):
+        doc_id = int(url.rsplit("/", 1)[1])
+        spans = extract_spans(bytes(blob).decode("utf-8"))
+        return [
+            ("rag_chunk", f"{doc_id}:{i}", f"{ns}|{nt}|{ov}|"
+             + hashlib.md5(text.encode("utf-8")).hexdigest())
+            for i, (ns, nt, ov, text) in enumerate(
+                chunk_spans([t for _, _, _, t in spans])
+            )
+        ]
 
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    return map_rows(
+        pages, chunks, "op string, k string, v string", cols=["url", "html"]
+    )
 
 
 # Oracle: span structure per layout (HTML_SPANS_SQL): layouts 0/1/3

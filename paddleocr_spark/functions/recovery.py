@@ -23,12 +23,11 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 # -- paragraph merge ---------------------------------------------------------
@@ -239,57 +238,50 @@ def doc_markdown_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "norm", F.explode(F.sequence(F.lit(0), k - 1)).alias("i")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        width, height = 480, 80
-        for pdf in batches:
-            out = {"doc_id": [], "colg": [], "y0": [], "x0": [], "block": []}
-            for doc_id, norm, i in zip(pdf["doc_id"], pdf["norm"], pdf["i"]):
-                doc_id, i = int(doc_id), int(i)
-                x0 = 10 if i % 2 == 0 else 510
-                y0 = (i // 2) * 100 + doc_id % 37
-                rtype = _MD_TYPES[i % 5]
-                if rtype == "text":
-                    l1 = norm[i * 6 : i * 6 + 6]
-                    l2 = norm[i * 6 + 6 : i * 6 + 12] + "*x$"
-                    # line geometry drives the merge: row 1 is full-width
-                    # on even (doc_id+i) parity, short otherwise
-                    w1 = 470 if (doc_id + i) % 2 == 0 else 300
-                    merged = _merge_text_region(
-                        [(l1, w1, 20), (l2, 300, 20)], width
-                    )
-                    block = _replace_special_char(merged)
-                elif rtype == "title":
-                    parts = [norm[i * 6 : i * 6 + 5], norm[i * 6 + 5 : i * 6 + 10]]
-                    block = "# " + parts[0] + "".join(
-                        " " + p for p in parts[1:]
-                    )
-                elif rtype == "table":
-                    tokens = [
-                        "<table>", "<tr>", "<td></td>", "<td></td>", "</tr>",
-                        "</table>",
-                    ]
-                    texts = [norm[i * 6 : i * 6 + 4], norm[i * 6 + 4 : i * 6 + 8]]
-                    block = assemble_table_html(tokens, texts)
-                elif rtype == "figure":
-                    bbox = [x0, y0, x0 + width, y0 + height]
-                    img_name = f"doc{doc_id}"
-                    img_file_name = "{}_{}.jpg".format(bbox, 0)
-                    block = (
-                        '<div align="center">\n\t<img src="'
-                        + img_name + "/" + img_file_name
-                        + '">\n</div>'
-                    )
-                else:  # header/footer: the reference's pass branch
-                    block = None
-                out["doc_id"].append(doc_id)
-                out["colg"].append(0 if x0 < 250 else 1)
-                out["y0"].append(y0)
-                out["x0"].append(x0)
-                out["block"].append(block)
-            yield pd.DataFrame(out)
+    width, height = 480, 80
 
-    blocks = regions.mapInPandas(
-        run, schema="doc_id long, colg long, y0 long, x0 long, block string"
+    def region(doc_id, norm, i):
+        x0 = 10 if i % 2 == 0 else 510
+        y0 = (i // 2) * 100 + doc_id % 37
+        rtype = _MD_TYPES[i % 5]
+        if rtype == "text":
+            l1 = norm[i * 6 : i * 6 + 6]
+            l2 = norm[i * 6 + 6 : i * 6 + 12] + "*x$"
+            # line geometry drives the merge: row 1 is full-width
+            # on even (doc_id+i) parity, short otherwise
+            w1 = 470 if (doc_id + i) % 2 == 0 else 300
+            merged = _merge_text_region(
+                [(l1, w1, 20), (l2, 300, 20)], width
+            )
+            block = _replace_special_char(merged)
+        elif rtype == "title":
+            parts = [norm[i * 6 : i * 6 + 5], norm[i * 6 + 5 : i * 6 + 10]]
+            block = "# " + parts[0] + "".join(
+                " " + p for p in parts[1:]
+            )
+        elif rtype == "table":
+            tokens = [
+                "<table>", "<tr>", "<td></td>", "<td></td>", "</tr>",
+                "</table>",
+            ]
+            texts = [norm[i * 6 : i * 6 + 4], norm[i * 6 + 4 : i * 6 + 8]]
+            block = assemble_table_html(tokens, texts)
+        elif rtype == "figure":
+            bbox = [x0, y0, x0 + width, y0 + height]
+            img_name = f"doc{doc_id}"
+            img_file_name = "{}_{}.jpg".format(bbox, 0)
+            block = (
+                '<div align="center">\n\t<img src="'
+                + img_name + "/" + img_file_name
+                + '">\n</div>'
+            )
+        else:  # header/footer: the reference's pass branch
+            block = None
+        return [(doc_id, 0 if x0 < 250 else 1, y0, x0, block)]
+
+    blocks = map_rows(
+        regions, region,
+        "doc_id long, colg long, y0 long, x0 long, block string",
     ).where(F.col("block").isNotNull())
     md = blocks.groupBy("doc_id").agg(
         F.concat_ws(
@@ -396,20 +388,9 @@ def rtl_reverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = docs.select("doc_id", transcript.alias("transcript"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "transcript": pdf["transcript"],
-                    "rtl_fixed": [
-                        reverse_rtl_segments(t) for t in pdf["transcript"]
-                    ],
-                }
-            )
-
-    return src.mapInPandas(
-        run, schema="doc_id long, transcript string, rtl_fixed string"
+    return map_rows(
+        src, lambda d, t: [(d, t, reverse_rtl_segments(t))],
+        "doc_id long, transcript string, rtl_fixed string",
     )
 
 

@@ -18,10 +18,9 @@ h/w > 2 trigger exercise the single-pass fallback branch instead.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from paddleocr_spark.frames import map_rows
 
 POSTER_WRAP = 9
 
@@ -34,30 +33,24 @@ def _extract_with(pages: DataFrame, detect) -> DataFrame:
     engine is the per-python-worker singleton (a real model session must
     never be rebuilt per task), and the input takes the same salted
     repartition so host-skewed url prefixes cannot pin one executor."""
-    from paddleocr_spark.plans.pipeline import salted_repartition
+    from paddleocr_spark.kernels.geometry import sorted_boxes
+    from paddleocr_spark.kernels.ocr import get_rotate_crop_image
+    from paddleocr_spark.kernels.png import decode_gray_png
+    from paddleocr_spark.kernels.rec import recognize_crops
+    from paddleocr_spark.plans.pipeline import _get_engine, salted_repartition
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.geometry import sorted_boxes
-        from paddleocr_spark.kernels.ocr import get_rotate_crop_image
-        from paddleocr_spark.kernels.png import decode_gray_png
-        from paddleocr_spark.kernels.rec import recognize_crops
-        from paddleocr_spark.plans.pipeline import _get_engine
-
+    def extract(url, payload):
         eng = _get_engine()
-        for pdf in batches:
-            urls, texts = [], []
-            for url, payload in zip(pdf["url"], pdf["html"]):
-                img = decode_gray_png(bytes(payload))
-                boxes = sorted_boxes(detect(img, eng.det_model))
-                crops = [get_rotate_crop_image(img, b) for b in boxes]
-                rec = recognize_crops(crops, eng.rec_model)
-                urls.append(url)
-                texts.append("".join(t for t, _ in rec))
-            yield pd.DataFrame({"url": urls, "joined_text": texts})
+        img = decode_gray_png(bytes(payload))
+        boxes = sorted_boxes(detect(img, eng.det_model))
+        crops = [get_rotate_crop_image(img, b) for b in boxes]
+        rec = recognize_crops(crops, eng.rec_model)
+        return [(url, "".join(t for t, _ in rec))]
 
     ncpu = pages.sparkSession.sparkContext.defaultParallelism
-    return salted_repartition(pages, ncpu).mapInPandas(
-        run, schema="url string, joined_text string"
+    return map_rows(
+        salted_repartition(pages, ncpu), extract,
+        "url string, joined_text string", cols=["url", "html"],
     )
 
 

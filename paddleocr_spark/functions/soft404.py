@@ -25,13 +25,9 @@ closed-form.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 SOFT404_MIN_CHARS = 120
@@ -99,22 +95,14 @@ def soft404_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ks, vs = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                verdict, tflag, blen = is_soft404(synth_soft404_page(d))
-                # the detector must recover the planted family exactly
-                if verdict != (1 if d % 4 == 1 else 0):
-                    raise ValueError(f"soft404 misclassified doc {d}")
-                ks.append(str(d))
-                vs.append(f"{verdict}|{tflag}|{blen}")
-            yield pd.DataFrame({"k": ks, "v": vs})
+    def verdict(d):
+        verdict, tflag, blen = is_soft404(synth_soft404_page(d))
+        # the detector must recover the planted family exactly
+        if verdict != (1 if d % 4 == 1 else 0):
+            raise ValueError(f"soft404 misclassified doc {d}")
+        return [("soft404", str(d), f"{verdict}|{tflag}|{blen}")]
 
-    return docs.mapInPandas(run, schema="k string, v string").select(
-        F.lit("soft404").alias("op"), "k", "v"
-    )
+    return map_rows(docs, verdict, "op string, k string, v string")
 
 
 # Closed-form twin: error shells have title_flag=1 and body_len =

@@ -22,12 +22,12 @@ arithmetic) so both engines compute over identical data.
 from __future__ import annotations
 
 import html as _html
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 PAGE_W = 1000
@@ -139,24 +139,20 @@ def table_html_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", _norm_expr().alias("norm"), (F.col("doc_id") % 3 + 1).alias("rows")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            htmls = []
-            for norm, nrows in zip(pdf["norm"], pdf["rows"]):
-                tokens = ["<table>"]
-                texts = []
-                for r in range(int(nrows)):
-                    tokens.append("<tr>")
-                    for c in range(N_COLS):
-                        tokens.append("<td></td>")
-                        start = (r * N_COLS + c) * CELL_CHARS
-                        texts.append(norm[start : start + CELL_CHARS])
-                    tokens.append("</tr>")
-                tokens.append("</table>")
-                htmls.append(assemble_table_html(tokens, texts))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "table_html": htmls})
+    def table(doc_id, norm, nrows):
+        tokens = ["<table>"]
+        texts = []
+        for r in range(int(nrows)):
+            tokens.append("<tr>")
+            for c in range(N_COLS):
+                tokens.append("<td></td>")
+                start = (r * N_COLS + c) * CELL_CHARS
+                texts.append(norm[start : start + CELL_CHARS])
+            tokens.append("</tr>")
+        tokens.append("</table>")
+        return [(doc_id, assemble_table_html(tokens, texts))]
 
-    return docs.mapInPandas(run, schema="doc_id long, table_html string")
+    return map_rows(docs, table, "doc_id long, table_html string")
 
 
 def _table_html_sql() -> str:
@@ -265,41 +261,32 @@ def table_structure_from_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 4 + 2).alias("gc"),
     )
 
-    from paddleocr_spark.kernels.table_struct import build_table_onnx
+    from paddleocr_spark.kernels.onnx_rt import session_for
+    from paddleocr_spark.kernels.table_struct import (
+        build_table_onnx,
+        recover_structure_onnx,
+        render_table_grid,
+    )
 
     model_bytes = build_table_onnx()  # driver-side export, ships in closure
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.onnx_rt import session_for
-        from paddleocr_spark.kernels.table_struct import (
-            recover_structure_onnx,
-            render_table_grid,
-        )
+    def cells(doc_id, gr, gc):
+        img = render_table_grid(int(gr), int(gc))
+        # session_for: per-process cache keyed by the model's digest
+        tokens, boxes = recover_structure_onnx(img, session_for(model_bytes))
+        n_rows = tokens.count("<tr>")
+        n_cols = len(boxes) // n_rows if n_rows else 0
+        tok_str = "".join(tokens)
+        return [
+            (int(doc_id), n_rows, n_cols, tok_str,
+             i // n_cols, i % n_cols, x0, y0, x1, y1)
+            for i, (x0, y0, x1, y1) in enumerate(boxes)
+        ]
 
-        session = session_for(model_bytes)  # per-process cache
-        for pdf in batches:
-            rows = []
-            for doc_id, gr, gc in zip(pdf["doc_id"], pdf["gr"], pdf["gc"]):
-                img = render_table_grid(int(gr), int(gc))
-                tokens, boxes = recover_structure_onnx(img, session)
-                n_rows = tokens.count("<tr>")
-                n_cols = len(boxes) // n_rows if n_rows else 0
-                tok_str = "".join(tokens)
-                for i, (x0, y0, x1, y1) in enumerate(boxes):
-                    rows.append(
-                        (int(doc_id), n_rows, n_cols, tok_str,
-                         i // n_cols, i % n_cols, x0, y0, x1, y1)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_rows", "n_cols", "tokens",
-                         "r", "c", "x0", "y0", "x1", "y1"],
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema=("doc_id long, n_rows long, n_cols long, tokens string, "
-                "r long, c long, x0 long, y0 long, x1 long, y1 long"),
+    return map_rows(
+        docs, cells,
+        "doc_id long, n_rows long, n_cols long, tokens string, "
+        "r long, c long, x0 long, y0 long, x1 long, y1 long",
     )
 
 

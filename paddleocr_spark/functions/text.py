@@ -14,6 +14,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows, union_branches
 from paddleocr_spark.sources.scan import scan_parquet
 
 
@@ -916,38 +918,21 @@ def postings_vb_rows(
     LEB128 length formula over the gap sequence. At 10^12 docs this is
     the difference between 8 bytes/posting and ~1 for hot terms —
     storage-layer scaling, not an algorithmic nicety."""
-    import pandas as _pd
+    from paddleocr_spark.kernels.varint import decode_postings, encode_postings
 
     if idx is None:
         idx = inverted_index(spark, sf_dir)
 
-    def run(batches):
-        from paddleocr_spark.kernels.varint import (
-            decode_postings,
-            encode_postings,
-        )
+    def roundtrip(term, df_, postings):
+        ids = [int(x) for x in postings.split(",")] if postings else []
+        blob = encode_postings(ids)
+        if decode_postings(blob) != ids:
+            raise ValueError(f"varint roundtrip mismatch: {term}")
+        return [("postings_vb", term, f"{df_}|{len(blob)}|{len(ids)}")]
 
-        for pdf in batches:
-            ks, vs = [], []
-            for term, df_, postings in zip(
-                pdf["term"], pdf["df"], pdf["postings"]
-            ):
-                ids = (
-                    [int(x) for x in postings.split(",")]
-                    if postings
-                    else []
-                )
-                blob = encode_postings(ids)
-                if decode_postings(blob) != ids:
-                    raise ValueError(
-                        f"varint roundtrip mismatch: {term}"
-                    )
-                ks.append(term)
-                vs.append(f"{df_}|{len(blob)}|{len(ids)}")
-            yield _pd.DataFrame({"k": ks, "v": vs})
-
-    return idx.mapInPandas(run, schema="k string, v string").select(
-        F.lit("postings_vb").alias("op"), "k", "v"
+    return map_rows(
+        idx, roundtrip, "op string, k string, v string",
+        cols=["term", "df", "postings"],
     )
 
 
@@ -1113,7 +1098,7 @@ def nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     or 'café' != 'café' silently splits duplicate groups).
 
     Spark has no NFC builtin, so this is the sanctioned Python
-    exception: an Arrow-batched mapInPandas running unicodedata.NFC —
+    exception: an Arrow-batched `frames.map_rows` running unicodedata.NFC —
     a pure narrow map (zero shuffles) riding the scan partitioning.
     The oracle twin is DuckDB's utf8proc `nfc_normalize`; both
     implement the same Unicode standard. Output ships (changed flag,
@@ -1122,26 +1107,17 @@ def nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import unicodedata
 
-    import pandas as pd
-
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", f"{NFC_INJECT_EXPR} AS injected"
     )
 
-    def run(batches):
-        for pdf in batches:
-            ids, changed, digests = [], [], []
-            for d, t in zip(pdf["doc_id"], pdf["injected"]):
-                norm = unicodedata.normalize("NFC", t)
-                ids.append(d)
-                changed.append(int(norm != t))
-                digests.append(hashlib.md5(norm.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "changed": changed, "norm_md5": digests}
-            )
+    def normalize(d, t):
+        norm = unicodedata.normalize("NFC", t)
+        digest = hashlib.md5(norm.encode("utf-8")).hexdigest()
+        return [(d, int(norm != t), digest)]
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, changed int, norm_md5 string"
+    return map_rows(
+        docs, normalize, "doc_id long, changed int, norm_md5 string"
     ).orderBy("doc_id")
 
 
@@ -1483,41 +1459,22 @@ def text_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     `suite_input_builders` — without that each union branch would
     re-synthesize and re-parse its input (localCheckpoint, not
     persist: the caller owns the returned plan)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     shared: dict = {}
     for name, build in suite_input_builders(spark, sf_dir):
         shared[name] = build(shared)
-    builders = suite_branch_builders(spark, sf_dir, **shared)
-
-    # Branch builders run on a thread pool: about two thirds of the
-    # suite's wall time is CONSTRUCTION, not execution — eager
-    # localCheckpoints, broadcast-side collects (bm25 scalar stats,
-    # decontaminate grams, Bloom bits), and bounded redirect rounds
-    # each submit small driver-blocking jobs. The link-analysis
-    # branches only checkpoint their normalized edges over the shared
-    # host graph (PageRank also counts dangling hosts); their power
-    # steps (one groupBy shuffle plus one broadcast per round, no join
-    # back onto the nodes) run in the union's action.
-    # Built serially those jobs leave the cluster mostly idle between
-    # stages (measured 22.9 s build + 12.2 s execute at sf0.1);
-    # concurrent submission from threads is the standard Spark
-    # scheduler pattern for exactly this shape and needs no FAIR pool.
-    # The union ORDER stays the literal list order (pool.map preserves
-    # it), so the plan — and the oracle hash — are byte-identical to
-    # the serial build. inheritable_thread_target hands each builder
-    # thread the caller's local properties and tags, so a caller's job
-    # group also holds the build-time jobs.
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        frames = list(pool.map(
-            inheritable_thread_target(spark)(lambda b: b[1]()), builders
-        ))
-    out = frames[0]
-    for frame in frames[1:]:
-        out = out.unionByName(frame)
-    return out
+    # About two thirds of the suite's wall time is CONSTRUCTION, not
+    # execution: eager localCheckpoints, broadcast-side collects (bm25
+    # scalar stats, decontaminate grams, Bloom bits) and bounded
+    # redirect rounds each submit small driver-blocking jobs (measured
+    # 22.9 s build + 12.2 s execute at sf0.1 when built serially), so
+    # the branches build on union_branches' thread pool. The
+    # link-analysis branches only checkpoint their normalized edges
+    # over the shared host graph (PageRank also counts dangling hosts);
+    # their power steps (one groupBy shuffle plus one broadcast per
+    # round, no join back onto the nodes) run in the union's action.
+    return union_branches(
+        spark, suite_branch_builders(spark, sf_dir, **shared)
+    )
 
 
 def suite_input_builders(spark, sf_dir):

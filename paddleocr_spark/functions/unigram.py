@@ -195,8 +195,7 @@ def encode_unigram(
     with the learned table — one narrow Arrow pass, per-word memo."""
     import hashlib
 
-    import pandas as pd
-
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.sources.scan import scan_parquet
 
     counts = dict(pieces)
@@ -204,43 +203,25 @@ def encode_unigram(
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "text"
     )
+    # per-word memo, one per task: each task unpickles its own `encode`
+    memo: dict[str, tuple[str, ...]] = {}
 
-    def run(batches):
-        memo: dict[str, tuple[str, ...]] = {}
-        for pdf in batches:
-            ids, langs, nw, np_, md5s = [], [], [], [], []
-            for d, lg, t in zip(pdf["doc_id"], pdf["lang"], pdf["text"]):
-                words = split_words(str(t))
-                out: list[str] = []
-                for w in words:
-                    seg = memo.get(w)
-                    if seg is None:
-                        seg = viterbi_segment(w, counts, total)
-                        memo[w] = seg
-                    out.extend(seg)
-                ids.append(int(d))
-                langs.append(str(lg))
-                nw.append(len(words))
-                np_.append(len(out))
-                md5s.append(
-                    hashlib.md5(" ".join(out).encode()).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "lang": langs,
-                    "n_words": pd.Series(nw, dtype="int64"),
-                    "n_pieces": pd.Series(np_, dtype="int64"),
-                    "piece_md5": md5s,
-                }
-            )
+    def encode(d, lg, t):
+        words = split_words(str(t))
+        out: list[str] = []
+        for w in words:
+            seg = memo.get(w)
+            if seg is None:
+                seg = viterbi_segment(w, counts, total)
+                memo[w] = seg
+            out.extend(seg)
+        return [(int(d), str(lg), len(words), len(out),
+                 hashlib.md5(" ".join(out).encode()).hexdigest())]
 
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, lang string, n_words long, n_pieces long, "
-            "piece_md5 string"
-        ),
+    return map_rows(
+        docs, encode,
+        "doc_id long, lang string, n_words long, n_pieces long, "
+        "piece_md5 string",
     )
 
 

@@ -15,11 +15,10 @@ therefore proves cell count AND geometric placement, not just schema."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 # DuckDB needs the 'g' flag; Spark's regexp_replace is global by default
@@ -37,49 +36,43 @@ def word_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"substring({_NORM_SPARK}, 1, {_WRAP})").alias("line1"),
     ).repartition(spark.sparkContext.defaultParallelism)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        from paddleocr_spark.kernels.font import render_line
-        from paddleocr_spark.kernels.rec import RecModel
-        from paddleocr_spark.kernels.wordbox import cal_word_boxes
+    from paddleocr_spark.kernels.font import render_line
+    from paddleocr_spark.kernels.rec import RecModel
+    from paddleocr_spark.kernels.wordbox import cal_word_boxes
 
-        model = RecModel()
-        rows = []
-        for pdf in batches:
-            for doc_id, line in zip(pdf["doc_id"], pdf["line1"]):
-                if not line:
-                    continue
-                crop = render_line(line)
-                h, w = crop.shape
-                box = np.array(
-                    [
-                        [_MARGIN, _MARGIN],
-                        [_MARGIN + w, _MARGIN],
-                        [_MARGIN + w, _MARGIN + h],
-                        [_MARGIN, _MARGIN + h],
-                    ],
-                    dtype=np.float64,
-                )
-                quads = cal_word_boxes(crop, box, model)
-                for i, q in enumerate(quads):
-                    xc = float(q[0][0] + q[1][0]) / 2.0
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            int((xc - _MARGIN) // _ADV),
-                            int(round(float(q[0][1]))),
-                            int(round(float(q[2][1]))),
-                        )
-                    )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "word_idx", "slot", "y_top", "y_bot"]
+    model = RecModel()
+
+    def words(doc_id, line):
+        if not line:
+            return []
+        crop = render_line(line)
+        h, w = crop.shape
+        box = np.array(
+            [
+                [_MARGIN, _MARGIN],
+                [_MARGIN + w, _MARGIN],
+                [_MARGIN + w, _MARGIN + h],
+                [_MARGIN, _MARGIN + h],
+            ],
+            dtype=np.float64,
         )
+        rows = []
+        for i, q in enumerate(cal_word_boxes(crop, box, model)):
+            xc = float(q[0][0] + q[1][0]) / 2.0
+            rows.append((
+                int(doc_id),
+                i,
+                int((xc - _MARGIN) // _ADV),
+                int(round(float(q[0][1]))),
+                int(round(float(q[2][1]))),
+            ))
+        return rows
 
-    return docs.mapInPandas(
-        run,
-        schema="doc_id long, word_idx long, slot long, y_top long, y_bot long",
+    return map_rows(
+        docs, words,
+        "doc_id long, word_idx long, slot long, y_top long, y_bot long",
     )
 
 

@@ -6,8 +6,7 @@ Page-level semantics from the fork's rotation sweep
 readable horizontal text it yields, early-exit on a confident hit,
 prefer 0 on ties. Probes are scored by rec read confidence, or by the
 reference's 0/180 text-direction net (tools/infer/predict_cls.py) when a
-three-model ONNX bundle supplies one (onnx_models.OnnxClsModel, which
-also keeps the reference's per-crop cls_thresh rotate rule).
+three-model ONNX bundle supplies one (onnx_models.OnnxClsModel).
 """
 
 from __future__ import annotations

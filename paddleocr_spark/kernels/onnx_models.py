@@ -558,15 +558,10 @@ class OnnxRecModel(RecModel):
 
 class OnnxClsModel:
     """0/180 classifier driven by the cls ONNX session. `prob0` is the
-    orientation-probe score (p of label "0" = upright); `classify`
-    applies the reference's cls_thresh gate (predict_cls.py:133-136:
-    rotate only when the "180" score clears 0.9)."""
+    orientation-probe score (p of label "0" = upright)."""
 
-    labels = ("0", "180")
-
-    def __init__(self, session: OnnxSession, thresh: float = 0.9):
+    def __init__(self, session: OnnxSession):
         self.session = session
-        self.thresh = thresh
 
     def prob0(self, crop: np.ndarray) -> float:
         return self.prob0_batch([crop])[0]
@@ -581,17 +576,6 @@ class OnnxClsModel:
         )[:, None]
         probs = self.session.run({"x": x})["probs"]
         return [float(v) for v in probs[:, 0]]
-
-    def classify(self, crop: np.ndarray):
-        from .imageops import rotate180
-
-        p0 = self.prob0(crop)
-        if p0 >= 0.5:
-            return "0", p0, crop
-        score = 1.0 - p0
-        if score > self.thresh:
-            return "180", score, rotate180(crop)
-        return "180", score, crop
 
 
 def onnx_engine_models(det_bytes: bytes, rec_bytes: bytes,

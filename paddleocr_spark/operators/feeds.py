@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 from paddleocr_spark.operators.html_extract import (
     _Node,
@@ -156,40 +157,28 @@ def feed_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovered by fetching each host's feed — encode + parse round-trip
     per host (the parser is held to its own encoders the way the
     sitemap walk is)."""
-    import pandas as pd
-
     hosts = (
         scan_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("source")
         .distinct()
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for source in pdf["source"]:
-                s = str(source)
-                host = s.lower() + ".example.test"
-                want_kind, xml = synth_host_feed(s)
-                kind, entries = parse_feed(xml)
-                if kind != want_kind:
-                    raise ValueError(f"feed kind mismatch: {kind}")
-                for i, (eid, title, link, date) in enumerate(entries):
-                    rows.append((host, kind, i, eid, title, link, date))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "host", "kind", "idx", "entry_id", "title", "link",
-                    "date",
-                ],
-            )
+    def entries(source):
+        s = str(source)
+        host = s.lower() + ".example.test"
+        want_kind, xml = synth_host_feed(s)
+        kind, entries = parse_feed(xml)
+        if kind != want_kind:
+            raise ValueError(f"feed kind mismatch: {kind}")
+        return [
+            (host, kind, i, eid, title, link, date)
+            for i, (eid, title, link, date) in enumerate(entries)
+        ]
 
-    return hosts.mapInPandas(
-        run,
-        schema=(
-            "host string, kind string, idx int, entry_id string, "
-            "title string, link string, date string"
-        ),
+    return map_rows(
+        hosts, entries,
+        "host string, kind string, idx int, entry_id string, "
+        "title string, link string, date string",
     )
 
 

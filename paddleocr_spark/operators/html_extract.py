@@ -574,39 +574,51 @@ def html_links(spark, sf_dir: str, pages=None):
     `pages` lets a caller hand in an already-checkpointed pages frame
     so the HTML synthesis is paid once across several walks (the suite
     shares one with html_metadata_rows).
-    Narrow mapInPandas (1 page -> N link rows, zero shuffles). Host is
+    Narrow `map_rows` map (1 page -> N link rows, zero shuffles). Host is
     parsed scheme-agnostically (up to the first path slash) and
     lowercased, so the frame also serves WARC-sourced pages whose
     urls are arbitrary. Callers that run several link operators in one
     plan should localCheckpoint the frame — the suite does — so the
     synthesize+parse cost is paid once, not once per operator."""
-    import pandas as pd
-
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.sources.pages import html_pages_from_documents
 
     if pages is None:
         pages = html_pages_from_documents(spark, sf_dir)
 
-    def run(batches):
-        for pdf in batches:
-            ids, hosts, hrefs, anchors = [], [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                host = url.split("://", 1)[-1].split("/", 1)[0].lower()
-                for href, anchor in extract_links(
-                    bytes(blob).decode("utf-8")
-                ):
-                    ids.append(doc_id)
-                    hosts.append(host)
-                    hrefs.append(href)
-                    anchors.append(anchor)
-            yield pd.DataFrame(
-                {"doc_id": ids, "host": hosts, "href": hrefs,
-                 "anchor": anchors}
-            )
+    def links(url, blob):
+        doc_id = url.rsplit("/", 1)[1]
+        host = url.split("://", 1)[-1].split("/", 1)[0].lower()
+        return [
+            (doc_id, host, href, anchor)
+            for href, anchor in extract_links(bytes(blob).decode("utf-8"))
+        ]
 
-    return pages.mapInPandas(
-        run, schema="doc_id string, host string, href string, anchor string"
+    return map_rows(
+        pages, links, "doc_id string, host string, href string, anchor string",
+        cols=["url", "html"],
+    )
+
+
+def _page_rows(
+    spark, sf_dir: str, pages, fn, schema="op string, k string, v string"
+):
+    """A per-page suite branch over the HTML corpus: one narrow map
+    (zero shuffles) of `fn(doc_id, html)` over each page's id (the
+    url's last path segment) and decoded markup. `pages` as in
+    html_links."""
+    from paddleocr_spark.frames import map_rows
+    from paddleocr_spark.sources.pages import html_pages_from_documents
+
+    if pages is None:
+        pages = html_pages_from_documents(spark, sf_dir)
+    return map_rows(
+        pages,
+        lambda url, blob: fn(
+            url.rsplit("/", 1)[1], bytes(blob).decode("utf-8")
+        ),
+        schema,
+        cols=["url", "html"],
     )
 
 
@@ -809,30 +821,18 @@ def img_pairs_rows(spark, sf_dir: str, pages=None):
     image-text pairs. One narrow walk emits a tagged (doc_id, src~text,
     kept) frame, then ONE map-side-combined groupBy(doc_id) — the same
     bounded-key shape as doc_links."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.sources.pages import html_pages_from_documents
+    def pairs(doc_id, html):
+        rows = []
+        for src, alt, cap in extract_image_pairs(html):
+            text = alt.strip() or cap.strip()
+            rows.append((doc_id, src + "~" + text if text else "",
+                         1 if text else 0))
+        return rows
 
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ids, pairs, kept = [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                for src, alt, cap in extract_image_pairs(
-                    bytes(blob).decode("utf-8")
-                ):
-                    text = alt.strip() or cap.strip()
-                    ids.append(doc_id)
-                    pairs.append(src + "~" + text if text else "")
-                    kept.append(1 if text else 0)
-            yield pd.DataFrame({"doc_id": ids, "pair": pairs, "kept": kept})
-
-    walked = pages.mapInPandas(
-        run, schema="doc_id string, pair string, kept int"
+    walked = _page_rows(
+        spark, sf_dir, pages, pairs, "doc_id string, pair string, kept int"
     )
     return (
         walked.groupBy("doc_id")
@@ -1029,27 +1029,10 @@ def extract_robots_meta(html: str) -> tuple[int, int, str]:
 
 def robots_meta_rows(spark, sf_dir: str, pages=None):
     """(op='meta_robots', k=doc_id, v=noindex|nofollow|directive) suite
-    row: narrow mapInPandas over the shared pages frame."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                ni, nf, d = extract_robots_meta(bytes(blob).decode("utf-8"))
-                ks.append(doc_id)
-                vs.append(f"{ni}|{nf}|{d}")
-            yield pd.DataFrame(
-                {"op": ["meta_robots"] * len(ks), "k": ks, "v": vs}
-            )
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    row: one `_page_rows` map over the shared pages frame."""
+    return _page_rows(spark, sf_dir, pages, lambda doc_id, html: [
+        ("meta_robots", doc_id, "|".join(map(str, extract_robots_meta(html))))
+    ])
 
 
 # closed-form: directive cycles by doc_id % 5 (see synthesize_html)
@@ -1116,28 +1099,13 @@ def extract_metadata(html: str) -> tuple[str, str, str, str]:
 
 def html_metadata_rows(spark, sf_dir: str, pages=None):
     """(op='html_meta', k=doc_id, v=title|description|canonical|og)
-    suite row. Narrow mapInPandas over the HTML corpus (zero shuffles —
+    suite row. One `_page_rows` map over the HTML corpus (zero shuffles —
     metadata extraction is a per-page map, like the main-content
     strip); the DuckDB twin reconstructs the deterministic head
     closed-form from doc_id. `pages` as in html_links."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                t, d, c, o = extract_metadata(bytes(blob).decode("utf-8"))
-                ks.append(doc_id)
-                vs.append("|".join((t, d, c, o)))
-            yield pd.DataFrame({"op": ["html_meta"] * len(ks), "k": ks, "v": vs})
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    return _page_rows(spark, sf_dir, pages, lambda doc_id, html: [
+        ("html_meta", doc_id, "|".join(extract_metadata(html)))
+    ])
 
 
 HTML_META_SQL = """
@@ -1182,31 +1150,15 @@ def extract_code_blocks(html: str) -> list[tuple[str, str]]:
 
 def code_blocks_rows(spark, sf_dir: str, pages=None):
     """(op='code_blocks', k=doc_id|idx, v=lang|n_lines|code) suite row.
-    Narrow mapInPandas over the HTML corpus (zero shuffles — a per-page
+    One `_page_rows` map over the HTML corpus (zero shuffles — a per-page
     map like the metadata walk); the DuckDB twin reconstructs the
     deterministic snippet closed-form from doc_id. `pages` as in
     html_links."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                blocks = extract_code_blocks(bytes(blob).decode("utf-8"))
-                for i, (lang, code) in enumerate(blocks):
-                    ks.append(f"{doc_id}|{i}")
-                    vs.append(f"{lang}|{code.count(chr(10)) + 1}|{code}")
-            yield pd.DataFrame(
-                {"op": ["code_blocks"] * len(ks), "k": ks, "v": vs}
-            )
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    return _page_rows(spark, sf_dir, pages, lambda doc_id, html: [
+        ("code_blocks", f"{doc_id}|{i}",
+         f"{lang}|{code.count(chr(10)) + 1}|{code}")
+        for i, (lang, code) in enumerate(extract_code_blocks(html))
+    ])
 
 
 CODE_BLOCKS_SQL = """
@@ -1333,31 +1285,14 @@ def extract_structured(html: str) -> tuple[str, str, str, str, str, str]:
 
 def structured_data_rows(spark, sf_dir: str, pages=None):
     """(op='structured_data', k=doc_id,
-    v=ld_type|headline|date|author|org_name|org_url) suite row. Narrow
-    zero-shuffle mapInPandas like html_meta; the fixture embeds a valid
+    v=ld_type|headline|date|author|org_name|org_url) suite row. One
+    zero-shuffle `_page_rows` map like html_meta; the fixture embeds a valid
     Article JSON-LD on layouts 0/2, a malformed blob on layout 1, and
     none on layout 3, plus an Organization microdata footer everywhere,
     so the DuckDB twin is closed-form CASE arithmetic in doc_id."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                fields = extract_structured(bytes(blob).decode("utf-8"))
-                ks.append(doc_id)
-                vs.append("|".join(fields))
-            yield pd.DataFrame(
-                {"op": ["structured_data"] * len(ks), "k": ks, "v": vs}
-            )
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    return _page_rows(spark, sf_dir, pages, lambda doc_id, html: [
+        ("structured_data", doc_id, "|".join(extract_structured(html)))
+    ])
 
 
 STRUCTURED_DATA_SQL = """
@@ -1456,32 +1391,15 @@ def extract_pub_date(html: str) -> tuple[str, str]:
 
 
 def pub_date_rows(spark, sf_dir: str, pages=None):
-    """(op='pub_date', k=doc_id, v=date|source) suite row. Narrow
-    zero-shuffle mapInPandas like html_meta; the fixture plants the
+    """(op='pub_date', k=doc_id, v=date|source) suite row. One
+    zero-shuffle `_page_rows` map like html_meta; the fixture plants the
     meta tag on layout 0 (conflicting with that page's JSON-LD — the
     precedence is observable), JSON-LD-only on layout 2, a <time>
     byline on layout 1 (whose JSON-LD is malformed), nothing on layout
     3, so the DuckDB twin is closed-form CASE arithmetic in doc_id."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                date, src = extract_pub_date(bytes(blob).decode("utf-8"))
-                ks.append(doc_id)
-                vs.append(date + "|" + src)
-            yield pd.DataFrame(
-                {"op": ["pub_date"] * len(ks), "k": ks, "v": vs}
-            )
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    return _page_rows(spark, sf_dir, pages, lambda doc_id, html: [
+        ("pub_date", doc_id, "|".join(extract_pub_date(html)))
+    ])
 
 
 PUB_DATE_SQL = """
@@ -1568,29 +1486,15 @@ def charset_decode_rows(spark, sf_dir: str, pages=None):
     run the SAME main-content extraction — the decoded text must be
     byte-identical to documents.text end-to-end (the strongest possible
     oracle for a decoder: the whole DOM pipeline must survive the
-    round-trip). Narrow mapInPandas, zero shuffles. `pages` as in
+    round-trip). One `_page_rows` map, zero shuffles. `pages` as in
     html_links."""
-    import pandas as pd
 
-    from paddleocr_spark.sources.pages import html_pages_from_documents
+    def decode(doc_id, html):
+        enc, decoded = sniff_decode(encoded_variant(html, int(doc_id)))
+        return [("charset_decode", str(int(doc_id)),
+                 enc + "|" + extract_main_text(decoded))]
 
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = int(url.rsplit("/", 1)[1])
-                wire = encoded_variant(bytes(blob).decode("utf-8"), doc_id)
-                enc, decoded = sniff_decode(wire)
-                ks.append(str(doc_id))
-                vs.append(enc + "|" + extract_main_text(decoded))
-            yield pd.DataFrame(
-                {"op": ["charset_decode"] * len(ks), "k": ks, "v": vs}
-            )
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    return _page_rows(spark, sf_dir, pages, decode)
 
 
 # the detected codec is closed-form in doc_id; the text must round-trip
@@ -1656,30 +1560,12 @@ def extract_tables(html: str) -> list[list[list[str]]]:
 def html_tables_rows(spark, sf_dir: str, pages=None):
     """(op='html_tables', k=doc_id|table|row, v=cells joined '|') suite
     row. Only layout-0 pages carry a table, so 3/4 of the corpus
-    exercises the absent case. Narrow mapInPandas; `pages` as in
-    html_links."""
-    import pandas as pd
-
-    from paddleocr_spark.sources.pages import html_pages_from_documents
-
-    if pages is None:
-        pages = html_pages_from_documents(spark, sf_dir)
-
-    def run(batches):
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                tables = extract_tables(bytes(blob).decode("utf-8"))
-                for t, rows in enumerate(tables):
-                    for r, cells in enumerate(rows):
-                        ks.append(f"{doc_id}|{t}|{r}")
-                        vs.append("|".join(cells))
-            yield pd.DataFrame(
-                {"op": ["html_tables"] * len(ks), "k": ks, "v": vs}
-            )
-
-    return pages.mapInPandas(run, schema="op string, k string, v string")
+    exercises the absent case. One `_page_rows` map."""
+    return _page_rows(spark, sf_dir, pages, lambda doc_id, html: [
+        ("html_tables", f"{doc_id}|{t}|{r}", "|".join(cells))
+        for t, rows in enumerate(extract_tables(html))
+        for r, cells in enumerate(rows)
+    ])
 
 
 HTML_TABLES_SQL = """

@@ -54,7 +54,7 @@ alone (measured at sf0.01: good 209 / neargood 140 / bad 135 /
 short 16). A production run swaps the language stoplist in
 (broadcast-size, like the langid profile table).
 
-Spark shape: one narrow Arrow mapInPandas over the shared
+Spark shape: one narrow `frames.map_rows` map over the shared
 checkpointed pages frame (page -> N paragraph rows, zero shuffles) —
 the per-row work is a bounded DOM walk, the sanctioned Python
 exception (NFC discipline: no Spark builtin parses HTML).
@@ -302,71 +302,50 @@ def justext_suite_rows(
     second pass is the difference that matters. The corpus row is one
     tiny agg over the localCheckpoint'd combined frame (never re-runs
     the extraction)."""
-    import pandas as pd
     from collections import Counter
 
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.sources.pages import html_pages_from_documents
 
     if pages is None:
         pages = html_pages_from_documents(spark, sf_dir)
 
-    def run(batches):
-        for pdf in batches:
-            ops, ks, vs, f1col = [], [], [], []
-            for url, blob, gold in zip(pdf["url"], pdf["html"], pdf["text"]):
-                doc_id = int(url.rsplit("/", 1)[1])
-                paras, final = _analyze(bytes(blob).decode("utf-8"))
-                for i, p in enumerate(paras):
-                    ops.append("justext")
-                    ks.append(f"{doc_id}:{i}")
-                    vs.append(
-                        f"{p['cf']}|{final[i]}|{len(p['text'])}|"
-                        + hashlib.md5(p["text"].encode()).hexdigest()
-                        + f"|{p['path']}"
-                    )
-                    f1col.append(-1)
-                ext = "\n".join(
-                    p["text"] for p, f in zip(paras, final) if f == "good"
-                )
-                gold_toks = str(gold).split()
-                ext_toks = ext.split()
-                cg, ce = Counter(gold_toks), Counter(ext_toks)
-                inter = sum(min(c, cg[w]) for w, c in ce.items())
-                ng, ne = len(gold_toks), len(ext_toks)
-                f1 = 2000000 * inter // max(ng + ne, 1)
-                ops.append("extract_eval")
-                ks.append(str(doc_id))
-                vs.append(
-                    "|".join(
-                        map(
-                            str,
-                            (
-                                ng, ne, inter,
-                                1000000 * inter // max(ne, 1),
-                                1000000 * inter // max(ng, 1),
-                                f1,
-                            ),
-                        )
-                    )
-                    + "|"
-                    + (
-                        hashlib.md5(ext.encode("utf-8")).hexdigest()
-                        if ext
-                        else "-"
-                    )
-                )
-                f1col.append(f1)
-            yield pd.DataFrame(
-                {
-                    "op": ops,
-                    "k": ks,
-                    "v": vs,
-                    "f1_micro": pd.Series(f1col, dtype="int64"),
-                }
-            )
+    def judge(url, blob, gold):
+        doc_id = int(url.rsplit("/", 1)[1])
+        paras, final = _analyze(bytes(blob).decode("utf-8"))
+        rows = [
+            ("justext", f"{doc_id}:{i}",
+             f"{p['cf']}|{final[i]}|{len(p['text'])}|"
+             + hashlib.md5(p["text"].encode()).hexdigest()
+             + f"|{p['path']}", -1)
+            for i, p in enumerate(paras)
+        ]
+        ext = "\n".join(
+            p["text"] for p, f in zip(paras, final) if f == "good"
+        )
+        gold_toks = str(gold).split()
+        ext_toks = ext.split()
+        cg, ce = Counter(gold_toks), Counter(ext_toks)
+        inter = sum(min(c, cg[w]) for w, c in ce.items())
+        ng, ne = len(gold_toks), len(ext_toks)
+        f1 = 2000000 * inter // max(ng + ne, 1)
+        metrics = (
+            ng, ne, inter,
+            1000000 * inter // max(ne, 1),
+            1000000 * inter // max(ng, 1),
+            f1,
+        )
+        rows.append((
+            "extract_eval", str(doc_id),
+            "|".join(map(str, metrics)) + "|"
+            + (hashlib.md5(ext.encode("utf-8")).hexdigest() if ext else "-"),
+            f1,
+        ))
+        return rows
 
-    combined = pages.mapInPandas(
-        run, schema="op string, k string, v string, f1_micro long"
+    combined = map_rows(
+        pages, judge, "op string, k string, v string, f1_micro long",
+        cols=["url", "html", "text"],
     ).localCheckpoint()
 
     mean_row = combined.filter(F.col("op") == "extract_eval").agg(

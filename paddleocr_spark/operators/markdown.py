@@ -24,7 +24,7 @@ Rendering rules (CommonMark-flavored):
   are backslash-escaped so round-tripping never invents formatting;
 - blocks join with one blank line.
 
-Spark shape: a narrow Arrow-batched mapInPandas (1 row in -> 1 row
+Spark shape: a narrow `frames.map_rows` map (1 row in -> 1 row
 out), zero shuffles — rides the scan partitioning at any corpus size.
 The fixture page is synthesized per row from (doc_id, text) with a
 %3-keyed layout (list / numbered+quote / table) so every rendering
@@ -34,13 +34,13 @@ doc_id arithmetic, making the DuckDB oracle a pure string build.
 
 from __future__ import annotations
 
+import hashlib
 import html as html_mod
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.operators.html_extract import _Node, _node_text, build_dom
 from paddleocr_spark.sources.scan import scan_parquet
 
@@ -213,25 +213,12 @@ def html_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def page(did, text):
+        md, n = render_markdown(markdown_page(text, int(did)))
+        return [(did, n, hashlib.md5(md.encode()).hexdigest())]
 
-        for pdf in batches:
-            out_n, out_md5 = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                md, n = render_markdown(markdown_page(text, int(did)))
-                out_n.append(n)
-                out_md5.append(hashlib.md5(md.encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_blocks": out_n,
-                    "markdown_md5": out_md5,
-                }
-            )
-
-    return docs.mapInPandas(
-        run, schema="doc_id long, n_blocks long, markdown_md5 string"
+    return map_rows(
+        docs, page, "doc_id long, n_blocks long, markdown_md5 string"
     )
 
 

@@ -12,8 +12,8 @@ h264 pixels) would need soundfile/PyAV and are out of scope.
 
 Pipeline shape (the part that matters at 100 TB): payloads stay opaque
 bytes through the scan; decode happens inside one Arrow-batched
-mapInPandas; features are integer-exact accumulations (sum of squares /
-sum of luma as int64) so the strict DuckDB oracle reproduces them
+`frames.map_rows` map; features are integer-exact accumulations (sum
+of squares / sum of luma as int64) so the strict DuckDB oracle reproduces them
 closed-form from the deterministic fixture synthesis.
 
 Fixture synthesis (same policy as sources/pages.py: derive everything
@@ -27,11 +27,12 @@ from doc_id):
 
 from __future__ import annotations
 
+import math
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from paddleocr_spark.frames import map_rows, union_branches
 from paddleocr_spark.sources.scan import scan_parquet
 
 # ---------------------------------------------------------------------------
@@ -1062,26 +1063,16 @@ def audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
+    def features(doc_id):
+        rate, samples = wav_decode(synth_wav(doc_id))
+        n = len(samples)
+        ssq = sum(s * s for s in samples)
+        return [(doc_id, n, rate, ssq, math.sqrt(ssq / n))]
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                rate, samples = wav_decode(synth_wav(d))
-                n = len(samples)
-                ssq = sum(s * s for s in samples)
-                rows.append((d, n, rate, ssq, math.sqrt(ssq / n)))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_samples", "sample_rate", "sum_sq", "rms"],
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema=("doc_id long, n_samples long, sample_rate long, "
-                "sum_sq long, rms double"),
+    return map_rows(
+        docs, features,
+        "doc_id long, n_samples long, sample_rate long, sum_sq long, "
+        "rms double",
     )
 
 
@@ -1113,23 +1104,16 @@ def video_keyframes(spark: SparkSession, sf_dir: str, every: int = 2) -> DataFra
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, frames = y4m_decode(synth_y4m(d))
-                for idx in range(0, len(frames), every):
-                    rows.append((d, idx, w, h, sum(frames[idx])))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "width", "height", "luma_sum"],
-            )
+    def keyframes(d):
+        w, h, frames = y4m_decode(synth_y4m(d))
+        return [
+            (d, idx, w, h, sum(frames[idx]))
+            for idx in range(0, len(frames), every)
+        ]
 
-    return docs.mapInPandas(
-        run,
-        schema=("doc_id long, frame_idx long, width long, height long, "
-                "luma_sum long"),
+    return map_rows(
+        docs, keyframes,
+        "doc_id long, frame_idx long, width long, height long, luma_sum long",
     )
 
 
@@ -1411,6 +1395,9 @@ def media_branch_builders(spark: SparkSession, sf_dir: str):
     and each branch parallelizes across every core; at production
     scale the table arrives in many splits and the exchange is a
     near-no-op (same rationale as dedup._cdc_chunks_frame)."""
+    from paddleocr_spark.kernels.pdf import pdf_decode_pages, pdf_text_pages
+    from paddleocr_spark.sources.warc import warc_date_epoch, warc_decode
+
     par = spark.sparkContext.defaultParallelism
     docs = (
         scan_parquet(spark, f"{sf_dir}/documents.parquet")
@@ -1418,443 +1405,284 @@ def media_branch_builders(spark: SparkSession, sf_dir: str):
         .repartition(par)
     )
 
-    def run_gif(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, palette, frames = gif_decode(synth_gif(d))
-                for idx, fr in enumerate(frames):
-                    rows.append(
-                        (d, "gif", idx, w, h, sum(fr),
-                         sum(palette[p][0] for p in fr))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def gif(d):
+        w, h, palette, frames = gif_decode(synth_gif(d))
+        for idx, fr in enumerate(frames):
+            yield (d, "gif", idx, w, h, sum(fr),
+                   sum(palette[p][0] for p in fr))
 
-    def run_jpeg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, m1, m2 = _jpeg_metrics(synth_jpeg(d))
-                rows.append((d, "jpeg", 0, w, h, m1, m2))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def jpeg(d):
+        w, h, m1, m2 = _jpeg_metrics(synth_jpeg(d))
+        yield (d, "jpeg", 0, w, h, m1, m2)
 
-    def run_jpegprog(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = synth_jpeg_prog(d)
-                # the scan really must be progressive: a baseline frame
-                # here would mean the fixture writer silently regressed
-                if b"\xff\xc2" not in payload or b"\xff\xc0" in payload:
-                    raise ValueError("jpegprog fixture is not SOF2")
-                w, h, m1, m2 = _jpeg_metrics(payload)
-                rows.append((d, "jpegprog", 0, w, h, m1, m2))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def jpegprog(d):
+        payload = synth_jpeg_prog(d)
+        # the scan really must be progressive: a baseline frame
+        # here would mean the fixture writer silently regressed
+        if b"\xff\xc2" not in payload or b"\xff\xc0" in payload:
+            raise ValueError("jpegprog fixture is not SOF2")
+        w, h, m1, m2 = _jpeg_metrics(payload)
+        yield (d, "jpegprog", 0, w, h, m1, m2)
 
-    def run_pdf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.pdf import (
-            pdf_decode_pages,
-            pdf_text_pages,
-        )
+    def pdf(d):
+        payload = synth_pdf(d)
+        # the text-vs-scan router must send every scanned page
+        # to the OCR path — a misroute is a whole-query failure
+        if any(t is not None for t in pdf_text_pages(payload)):
+            raise ValueError("router claimed text in a scan PDF")
+        for k, (pw, ph, filt, jpeg, _content) in enumerate(
+            pdf_decode_pages(payload)
+        ):
+            if filt != "DCTDecode":
+                raise ValueError("scan fixture must be DCTDecode")
+            w, h, m1, m2 = _jpeg_metrics(jpeg)
+            if (pw, ph) != (w, h):
+                raise ValueError(
+                    "XObject dims disagree with embedded JPEG"
+                )
+            yield (d, "pdf", k, w, h, m1, m2)
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = synth_pdf(d)
-                # the text-vs-scan router must send every scanned page
-                # to the OCR path — a misroute is a whole-query failure
-                if any(t is not None for t in pdf_text_pages(payload)):
-                    raise ValueError("router claimed text in a scan PDF")
-                for k, (pw, ph, filt, jpeg, _content) in enumerate(
-                    pdf_decode_pages(payload)
-                ):
-                    if filt != "DCTDecode":
-                        raise ValueError("scan fixture must be DCTDecode")
-                    w, h, m1, m2 = _jpeg_metrics(jpeg)
-                    if (pw, ph) != (w, h):
-                        raise ValueError(
-                            "XObject dims disagree with embedded JPEG"
-                        )
-                    rows.append((d, "pdf", k, w, h, m1, m2))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def pdftext(d):
+        payload, want = synth_text_pdf(d)
+        texts = pdf_text_pages(payload)
+        # router contract: every born-digital page extracts
+        # WITHOUT OCR; byte-identity vs the synthesized lines
+        # is asserted here (the oracle sees integer features)
+        if texts != want:
+            raise ValueError("born-digital text mismatch")
+        for k, text in enumerate(texts):
+            codes = [ord(c) for c in text]
+            yield (d, "pdftext", k, len(text),
+                   text.count("\n") + 1, sum(codes),
+                   sum((p + 1) * c for p, c in enumerate(codes)))
 
-    def run_pdftext(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.pdf import pdf_text_pages
+    def warc(d, text, source):
+        decoded = warc_decode(synth_warc(d, str(text), str(source)))
+        if decoded[0]["type"] != "warcinfo":
+            raise ValueError("first warc record must be warcinfo")
+        responses = [r for r in decoded if r["type"] == "response"]
+        if len(responses) != 1 + d % 2:
+            raise ValueError("warc response record count mismatch")
+        for k, rec in enumerate(responses):
+            # byte-level roundtrip invariants the oracle can't
+            # see directly: fail the whole query on mismatch
+            if rec["http_status"] != 200 or not rec["url"]:
+                raise ValueError("warc http envelope mismatch")
+            epoch = warc_date_epoch(rec["date"])
+            yield (d, "warc", k, len(rec["payload"]),
+                   len(rec["headers"]), epoch, sum(rec["payload"]))
 
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload, want = synth_text_pdf(d)
-                texts = pdf_text_pages(payload)
-                # router contract: every born-digital page extracts
-                # WITHOUT OCR; byte-identity vs the synthesized lines
-                # is asserted here (the oracle sees integer features)
-                if texts != want:
-                    raise ValueError("born-digital text mismatch")
-                for k, text in enumerate(texts):
-                    codes = [ord(c) for c in text]
-                    rows.append(
-                        (d, "pdftext", k, len(text),
-                         text.count("\n") + 1, sum(codes),
-                         sum((p + 1) * c for p, c in enumerate(codes)))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
-
-    def run_warc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.sources.warc import warc_date_epoch, warc_decode
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                d = int(doc_id)
-                decoded = warc_decode(synth_warc(d, str(text), str(source)))
-                if decoded[0]["type"] != "warcinfo":
-                    raise ValueError("first warc record must be warcinfo")
-                responses = [r for r in decoded if r["type"] == "response"]
-                if len(responses) != 1 + d % 2:
-                    raise ValueError("warc response record count mismatch")
-                for k, rec in enumerate(responses):
-                    # byte-level roundtrip invariants the oracle can't
-                    # see directly: fail the whole query on mismatch
-                    if rec["http_status"] != 200 or not rec["url"]:
-                        raise ValueError("warc http envelope mismatch")
-                    epoch = warc_date_epoch(rec["date"])
-                    rows.append(
-                        (d, "warc", k, len(rec["payload"]),
-                         len(rec["headers"]), epoch, sum(rec["payload"]))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
-
-    # NOTE: run_sniff re-synthesizes the gif/jpeg/pdf/warc payloads the
+    # NOTE: sniff re-synthesizes the gif/jpeg/pdf/warc payloads the
     # other runners also build — a FIXTURE-only cost (runners are
     # separate Arrow streams and can't share Python objects). In a real
     # deployment the payload bytes come from the table scan and
     # sniffing reads a <=512-byte prefix of bytes already in hand.
-    def run_sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                d = int(doc_id)
-                for k, (kind, _true_mime, _ml) in enumerate(_MIME_KINDS):
-                    payload = _synth_kind(kind, d, str(text), str(source))
-                    sniffed, maglen = sniff_mime(payload)
-                    # odd doc_id%3==0 rows declare the NEXT kind's type
-                    # (origin mislabel); types are distinct so mismatch
-                    # is deterministic
-                    declared = _MIME_KINDS[
-                        (k + 1) % len(_MIME_KINDS) if d % 3 == 0 else k
-                    ][1]
-                    rows.append(
-                        (d, f"sniff|{sniffed}|{declared}", k, 0, 0,
-                         int(sniffed != declared), maglen)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def sniff(d, text, source):
+        for k, (kind, _true_mime, _ml) in enumerate(_MIME_KINDS):
+            payload = _synth_kind(kind, d, str(text), str(source))
+            sniffed, maglen = sniff_mime(payload)
+            # odd doc_id%3==0 rows declare the NEXT kind's type
+            # (origin mislabel); types are distinct so mismatch
+            # is deterministic
+            declared = _MIME_KINDS[
+                (k + 1) % len(_MIME_KINDS) if d % 3 == 0 else k
+            ][1]
+            yield (d, f"sniff|{sniffed}|{declared}", k, 0, 0,
+                   int(sniffed != declared), maglen)
 
-    def run_vad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                _rate, samples = wav_decode(synth_wav(d))
-                for k, (s, e, mx, sa) in enumerate(vad_segments(samples)):
-                    rows.append((d, "vad", k, s, e, mx, sa))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def vad(d):
+        _rate, samples = wav_decode(synth_wav(d))
+        for k, (s, e, mx, sa) in enumerate(vad_segments(samples)):
+            yield (d, "vad", k, s, e, mx, sa)
 
-    def run_adpcm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                samples = synth_adpcm_samples(d)
-                payload = adpcm_encode(samples, block_samples=129)
-                rate, got = adpcm_decode(payload)
-                # byte-level invariants the oracle can't see directly
-                if rate != _RATE or len(got) != len(samples):
-                    raise ValueError(f"adpcm envelope mismatch doc {d}")
-                bad = [
-                    i for i, (a, b) in enumerate(zip(samples, got))
-                    if abs(a - b) > ADPCM_TOL
-                ]
-                if bad:
-                    raise ValueError(
-                        f"adpcm reconstruction excursion doc {d} at {bad[:3]}"
-                    )
-                starts = range(0, len(samples), 129)
-                if any(got[s] != samples[s] for s in starts):
-                    raise ValueError(f"adpcm block header inexact doc {d}")
-                rows.append(
-                    (d, "adpcm", 0, len(samples), len(list(starts)),
-                     sum(samples[s] for s in starts), len(samples))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
+    def adpcm(d):
+        samples = synth_adpcm_samples(d)
+        payload = adpcm_encode(samples, block_samples=129)
+        rate, got = adpcm_decode(payload)
+        # byte-level invariants the oracle can't see directly
+        if rate != _RATE or len(got) != len(samples):
+            raise ValueError(f"adpcm envelope mismatch doc {d}")
+        bad = [
+            i for i, (a, b) in enumerate(zip(samples, got))
+            if abs(a - b) > ADPCM_TOL
+        ]
+        if bad:
+            raise ValueError(
+                f"adpcm reconstruction excursion doc {d} at {bad[:3]}"
             )
+        starts = range(0, len(samples), 129)
+        if any(got[s] != samples[s] for s in starts):
+            raise ValueError(f"adpcm block header inexact doc {d}")
+        yield (d, "adpcm", 0, len(samples), len(list(starts)),
+               sum(samples[s] for s in starts), len(samples))
 
-    def run_mp3(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                frames, alloc, n_frames = synth_layer1_frames(d)
-                payload = layer1_encode(
-                    frames, alloc, rate=_MP3_RATES[d % 3]
-                )
-                # the closed-form slot arithmetic must match the real
-                # bit packing byte-for-byte
-                if len(payload) != n_frames * mp3_frame_bytes(d):
-                    raise ValueError(f"mp3 slot arithmetic off doc {d}")
-                rate, decoded = layer1_decode(payload)
-                if rate != _MP3_RATES[d % 3] or len(decoded) != n_frames:
-                    raise ValueError(f"mp3 envelope mismatch doc {d}")
-                m1 = 0
-                for f, (dalloc, dsf, sub) in enumerate(decoded):
-                    if dalloc != alloc:
-                        raise ValueError(f"mp3 allocation mismatch doc {d}")
-                    k = 0
-                    for sb in range(MP3_SUBBANDS):
-                        nb = alloc[sb]
-                        if not nb:
-                            if any(s != 0.0 for s in sub[sb]):
-                                raise ValueError(
-                                    f"mp3 silent subband decoded "
-                                    f"non-zero doc {d}"
-                                )
-                            continue
-                        peak = max(abs(s) for s in frames[f][sb])
-                        want_idx = _mp3_sf_index(peak)
-                        if dsf[k] != want_idx:
-                            raise ValueError(
-                                f"mp3 scalefactor mismatch doc {d} sb {sb}"
-                            )
-                        sf = _mp3_sf_value(want_idx)
-                        # half a quantizer step after the 2.4.3.3
-                        # dequant expansion, scaled back by sf
-                        tol = (
-                            sf * (2**nb / (2**nb - 1.0)) * 2.0 ** (-nb)
-                        ) * (1 + 1e-9) + 1e-12
-                        k += 1
-                        for t in range(MP3_GRANULE):
-                            raw = (
-                                d * 7 + f * 31 + sb * 13 + t * 29
-                            ) % MP3_RAW_MOD - 1000
-                            if abs(sub[sb][t] - raw / MP3_RAW_SCALE) > tol:
-                                raise ValueError(
-                                    f"mp3 reconstruction excursion doc "
-                                    f"{d} sb {sb} t {t}"
-                                )
-                            m1 += raw
-                rows.append(
-                    (d, "mp3", 0,
-                     n_frames * MP3_SUBBANDS * MP3_GRANULE, n_frames,
-                     m1, len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
-
-    def run_h264(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                stream, w, h, nf = synth_h264_stream(d)
-                # emulation prevention must actually have fired — the
-                # fixture plants 00 00 01 runs inside slice payloads
-                if b"\x00\x00\x03" not in stream:
-                    raise ValueError(f"h264 EP never fired doc {d}")
-                nals = h264_nals(stream)
-                if [t for t, _, _ in nals[:2]] != [7, 8]:
-                    raise ValueError(f"h264 SPS/PPS order wrong doc {d}")
-                sps = h264_parse_sps(nals[0][2])
-                if (sps["width"], sps["height"]) != (w, h):
-                    raise ValueError(
-                        f"h264 crop arithmetic off doc {d}: "
-                        f"{sps['width']}x{sps['height']} != {w}x{h}"
-                    )
-                slices = [x for x in nals if x[0] in (1, 5)]
-                if len(slices) != nf or slices[0][0] != 5:
-                    raise ValueError(f"h264 slice census wrong doc {d}")
-                m1 = 0
-                for f, (t, _ref, rbsp) in enumerate(slices):
-                    sh = h264_slice_header(
-                        rbsp, sps["log2_max_frame_num"]
-                    )
-                    if sh["frame_num"] != f or sh["first_mb"] != 0:
+    def mp3(d):
+        frames, alloc, n_frames = synth_layer1_frames(d)
+        payload = layer1_encode(
+            frames, alloc, rate=_MP3_RATES[d % 3]
+        )
+        # the closed-form slot arithmetic must match the real
+        # bit packing byte-for-byte
+        if len(payload) != n_frames * mp3_frame_bytes(d):
+            raise ValueError(f"mp3 slot arithmetic off doc {d}")
+        rate, decoded = layer1_decode(payload)
+        if rate != _MP3_RATES[d % 3] or len(decoded) != n_frames:
+            raise ValueError(f"mp3 envelope mismatch doc {d}")
+        m1 = 0
+        for f, (dalloc, dsf, sub) in enumerate(decoded):
+            if dalloc != alloc:
+                raise ValueError(f"mp3 allocation mismatch doc {d}")
+            k = 0
+            for sb in range(MP3_SUBBANDS):
+                nb = alloc[sb]
+                if not nb:
+                    if any(s != 0.0 for s in sub[sb]):
                         raise ValueError(
-                            f"h264 slice header mismatch doc {d} f {f}"
+                            f"mp3 silent subband decoded "
+                            f"non-zero doc {d}"
                         )
-                    m1 += sh["frame_num"] * 10 + sh["slice_type"]
-                rows.append((d, "h264", 0, w, h, m1, w * h))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
-
-    def run_tiff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload, w, h, px = synth_tiff(d)
-                w2, h2, got = tiff_decode(payload)
-                # byte-level invariants the oracle can't see: the
-                # decode must reproduce the raster exactly, and the
-                # OPPOSITE byte order + opposite compression must
-                # decode to the same raster (format coverage, not just
-                # the fixture's own parity)
-                if (w2, h2, got) != (w, h, px):
-                    raise ValueError("tiff roundtrip mismatch")
-                alt = tiff_encode(
-                    px, w, h,
-                    big_endian=(d % 2 == 0), packbits=(d % 3 != 0),
-                )
-                if tiff_decode(alt)[2] != px:
-                    raise ValueError("tiff cross-variant mismatch")
-                rows.append(
-                    (d, "tiff", 0, w, h, sum(got),
-                     sum((p + 1) * v for p, v in enumerate(got)))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
-
-    def run_shots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, frames = y4m_decode(synth_shots(d))
-                k = 2 + d % 3
-                cuts = 0
-                for f in range(len(frames) - 1):
-                    sad = sum(
-                        abs(a - b)
-                        for a, b in zip(frames[f], frames[f + 1])
-                    )
-                    cut = 1 if sad >= SHOT_THRESHOLD else 0
-                    cuts += cut
-                    rows.append((d, "shots", f, w, h, sad, cut))
-                # detection must recover exactly the planted scene
-                # structure (the fixture separates by construction:
-                # within-scene SAD <= w*h + 254, cross-scene >= 98*w*h)
-                planted = sum(
-                    1 for f in range(1, len(frames)) if f % k == 0
-                )
-                if cuts != planted:
+                    continue
+                peak = max(abs(s) for s in frames[f][sb])
+                want_idx = _mp3_sf_index(peak)
+                if dsf[k] != want_idx:
                     raise ValueError(
-                        f"shot detection missed cuts doc {d}: "
-                        f"{cuts} != {planted}"
+                        f"mp3 scalefactor mismatch doc {d} sb {sb}"
                     )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
+                sf = _mp3_sf_value(want_idx)
+                # half a quantizer step after the 2.4.3.3
+                # dequant expansion, scaled back by sf
+                tol = (
+                    sf * (2**nb / (2**nb - 1.0)) * 2.0 ** (-nb)
+                ) * (1 + 1e-9) + 1e-12
+                k += 1
+                for t in range(MP3_GRANULE):
+                    raw = (
+                        d * 7 + f * 31 + sb * 13 + t * 29
+                    ) % MP3_RAW_MOD - 1000
+                    if abs(sub[sb][t] - raw / MP3_RAW_SCALE) > tol:
+                        raise ValueError(
+                            f"mp3 reconstruction excursion doc "
+                            f"{d} sb {sb} t {t}"
+                        )
+                    m1 += raw
+        yield (d, "mp3", 0,
+               n_frames * MP3_SUBBANDS * MP3_GRANULE, n_frames,
+               m1, len(payload))
+
+    def h264(d):
+        stream, w, h, nf = synth_h264_stream(d)
+        # emulation prevention must actually have fired — the
+        # fixture plants 00 00 01 runs inside slice payloads
+        if b"\x00\x00\x03" not in stream:
+            raise ValueError(f"h264 EP never fired doc {d}")
+        nals = h264_nals(stream)
+        if [t for t, _, _ in nals[:2]] != [7, 8]:
+            raise ValueError(f"h264 SPS/PPS order wrong doc {d}")
+        sps = h264_parse_sps(nals[0][2])
+        if (sps["width"], sps["height"]) != (w, h):
+            raise ValueError(
+                f"h264 crop arithmetic off doc {d}: "
+                f"{sps['width']}x{sps['height']} != {w}x{h}"
+            )
+        slices = [x for x in nals if x[0] in (1, 5)]
+        if len(slices) != nf or slices[0][0] != 5:
+            raise ValueError(f"h264 slice census wrong doc {d}")
+        m1 = 0
+        for f, (t, _ref, rbsp) in enumerate(slices):
+            sh = h264_slice_header(
+                rbsp, sps["log2_max_frame_num"]
+            )
+            if sh["frame_num"] != f or sh["first_mb"] != 0:
+                raise ValueError(
+                    f"h264 slice header mismatch doc {d} f {f}"
+                )
+            m1 += sh["frame_num"] * 10 + sh["slice_type"]
+        yield (d, "h264", 0, w, h, m1, w * h)
+
+    def tiff(d):
+        payload, w, h, px = synth_tiff(d)
+        w2, h2, got = tiff_decode(payload)
+        # byte-level invariants the oracle can't see: the
+        # decode must reproduce the raster exactly, and the
+        # OPPOSITE byte order + opposite compression must
+        # decode to the same raster (format coverage, not just
+        # the fixture's own parity)
+        if (w2, h2, got) != (w, h, px):
+            raise ValueError("tiff roundtrip mismatch")
+        alt = tiff_encode(
+            px, w, h,
+            big_endian=(d % 2 == 0), packbits=(d % 3 != 0),
+        )
+        if tiff_decode(alt)[2] != px:
+            raise ValueError("tiff cross-variant mismatch")
+        yield (d, "tiff", 0, w, h, sum(got),
+               sum((p + 1) * v for p, v in enumerate(got)))
+
+    def shots(d):
+        w, h, frames = y4m_decode(synth_shots(d))
+        k = 2 + d % 3
+        cuts = 0
+        for f in range(len(frames) - 1):
+            sad = sum(
+                abs(a - b)
+                for a, b in zip(frames[f], frames[f + 1])
+            )
+            cut = 1 if sad >= SHOT_THRESHOLD else 0
+            cuts += cut
+            yield (d, "shots", f, w, h, sad, cut)
+        # detection must recover exactly the planted scene
+        # structure (the fixture separates by construction:
+        # within-scene SAD <= w*h + 254, cross-scene >= 98*w*h)
+        planted = sum(
+            1 for f in range(1, len(frames)) if f % k == 0
+        )
+        if cuts != planted:
+            raise ValueError(
+                f"shot detection missed cuts doc {d}: "
+                f"{cuts} != {planted}"
             )
 
-    def run_exif(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = synth_exif_jpeg(d)
-                meta = exif_parse(payload)
-                # byte-level invariants the oracle can't see: parsed
-                # fields match the synth parameters in EITHER byte
-                # order, the strip is idempotent/passthrough without
-                # GPS, preserves orientation + capture time, and the
-                # pixel decode is untouched
-                want_dt = f"2026:08:{1 + d % 28:02d} 12:{d % 60:02d}:00"
-                if (
-                    meta["orientation"] != 1 + d % 8
-                    or meta["datetime"] != want_dt
-                    or (meta["gps"] is not None) != (d % 3 == 0)
-                    or meta["big_endian"] != (d % 2 == 0)
-                ):
-                    raise ValueError(f"exif parse mismatch doc {d}")
-                stripped = exif_strip_gps(payload)
-                delta = len(payload) - len(stripped)
-                if d % 3 == 0:
-                    if delta != EXIF_GPS_DELTA:
-                        raise ValueError("exif strip delta mismatch")
-                elif stripped != payload:
-                    raise ValueError("exif strip not a passthrough")
-                after = exif_parse(stripped)
-                if (
-                    after["gps"] is not None
-                    or after["orientation"] != meta["orientation"]
-                    or after["datetime"] != meta["datetime"]
-                ):
-                    raise ValueError("exif strip lost metadata")
-                w, h, m1s, m2s = _jpeg_metrics(stripped)
-                if (w, h, m1s, m2s) != _jpeg_metrics(payload):
-                    raise ValueError("exif strip touched pixels")
-                rows.append(
-                    (
-                        d, "exif", 0, w, h,
-                        (1 + d % 8) * 1000000
-                        + (1 + d % 28) * 10000
-                        + (d % 60) * 100
-                        + (1 if d % 3 == 0 else 0),
-                        delta,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "codec", "item_idx", "width", "height",
-                         "m1", "m2"],
-            )
+    def exif(d):
+        payload = synth_exif_jpeg(d)
+        meta = exif_parse(payload)
+        # byte-level invariants the oracle can't see: parsed
+        # fields match the synth parameters in EITHER byte
+        # order, the strip is idempotent/passthrough without
+        # GPS, preserves orientation + capture time, and the
+        # pixel decode is untouched
+        want_dt = f"2026:08:{1 + d % 28:02d} 12:{d % 60:02d}:00"
+        if (
+            meta["orientation"] != 1 + d % 8
+            or meta["datetime"] != want_dt
+            or (meta["gps"] is not None) != (d % 3 == 0)
+            or meta["big_endian"] != (d % 2 == 0)
+        ):
+            raise ValueError(f"exif parse mismatch doc {d}")
+        stripped = exif_strip_gps(payload)
+        delta = len(payload) - len(stripped)
+        if d % 3 == 0:
+            if delta != EXIF_GPS_DELTA:
+                raise ValueError("exif strip delta mismatch")
+        elif stripped != payload:
+            raise ValueError("exif strip not a passthrough")
+        after = exif_parse(stripped)
+        if (
+            after["gps"] is not None
+            or after["orientation"] != meta["orientation"]
+            or after["datetime"] != meta["datetime"]
+        ):
+            raise ValueError("exif strip lost metadata")
+        w, h, m1s, m2s = _jpeg_metrics(stripped)
+        if (w, h, m1s, m2s) != _jpeg_metrics(payload):
+            raise ValueError("exif strip touched pixels")
+        yield (
+            d, "exif", 0, w, h,
+            (1 + d % 8) * 1000000
+            + (1 + d % 28) * 10000
+            + (d % 60) * 100
+            + (1 if d % 3 == 0 else 0),
+            delta,
+        )
 
     schema = (
         "doc_id long, codec string, item_idx long, width long, "
@@ -1866,31 +1694,27 @@ def media_branch_builders(spark: SparkSession, sf_dir: str):
         .repartition(par)
     )
     return [
-        ("gif", lambda: docs.mapInPandas(run_gif, schema=schema)),
-        ("jpeg", lambda: docs.mapInPandas(run_jpeg, schema=schema)),
-        ("jpegprog", lambda: docs.mapInPandas(run_jpegprog, schema=schema)),
-        ("pdf", lambda: docs.mapInPandas(run_pdf, schema=schema)),
-        ("pdftext", lambda: docs.mapInPandas(run_pdftext, schema=schema)),
-        ("warc", lambda: docs_full.mapInPandas(run_warc, schema=schema)),
-        ("sniff", lambda: docs_full.mapInPandas(run_sniff, schema=schema)),
-        ("vad", lambda: docs.mapInPandas(run_vad, schema=schema)),
-        ("adpcm", lambda: docs.mapInPandas(run_adpcm, schema=schema)),
-        ("mp3", lambda: docs.mapInPandas(run_mp3, schema=schema)),
-        ("h264", lambda: docs.mapInPandas(run_h264, schema=schema)),
-        ("tiff", lambda: docs.mapInPandas(run_tiff, schema=schema)),
-        ("exif", lambda: docs.mapInPandas(run_exif, schema=schema)),
-        ("shots", lambda: docs.mapInPandas(run_shots, schema=schema)),
+        ("gif", lambda: map_rows(docs, gif, schema)),
+        ("jpeg", lambda: map_rows(docs, jpeg, schema)),
+        ("jpegprog", lambda: map_rows(docs, jpegprog, schema)),
+        ("pdf", lambda: map_rows(docs, pdf, schema)),
+        ("pdftext", lambda: map_rows(docs, pdftext, schema)),
+        ("warc", lambda: map_rows(docs_full, warc, schema)),
+        ("sniff", lambda: map_rows(docs_full, sniff, schema)),
+        ("vad", lambda: map_rows(docs, vad, schema)),
+        ("adpcm", lambda: map_rows(docs, adpcm, schema)),
+        ("mp3", lambda: map_rows(docs, mp3, schema)),
+        ("h264", lambda: map_rows(docs, h264, schema)),
+        ("tiff", lambda: map_rows(docs, tiff, schema)),
+        ("exif", lambda: map_rows(docs, exif, schema)),
+        ("shots", lambda: map_rows(docs, shots, schema)),
     ]
 
 
 def media_codec_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All codec branches unioned in registry order — the board row.
     See media_branch_builders for the per-codec documentation."""
-    frames = [build() for _, build in media_branch_builders(spark, sf_dir)]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionAll(fr)
-    return out
+    return union_branches(spark, media_branch_builders(spark, sf_dir))
 
 
 MEDIA_CODEC_SUITE_SQL = f"""

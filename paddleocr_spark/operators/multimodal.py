@@ -1,7 +1,7 @@
 """Multimodal binary-column operators for training-data pipelines.
 
 Images / audio / video are opaque `binary` columns with typed metadata
-extracted or derived by Arrow-batched UDFs (`mapInPandas`) — never
+extracted or derived by Arrow-batched row maps (`frames.map_rows`) — never
 decoded driver-side, never per-row Python. This mirrors how the
 reference treats documents as opaque bytes until the decode stage
 (ppocr/data/imaug/operators.py:30-68 DecodeImage, bytes -> image inside
@@ -26,12 +26,12 @@ decoded at all.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 
 
 def png_meta(data: bytes) -> tuple[int, int, int]:
@@ -57,20 +57,9 @@ def image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG header metadata per page payload (no full decode)."""
     pages = _pages(spark, sf_dir).select("url", "html")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [png_meta(bytes(b)) for b in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "width": [m[0] for m in metas],
-                    "height": [m[1] for m in metas],
-                    "bit_depth": [m[2] for m in metas],
-                }
-            )
-
-    return pages.mapInPandas(
-        run, schema="url string, width long, height long, bit_depth long"
+    return map_rows(
+        pages, lambda url, b: [(url, *png_meta(bytes(b)))],
+        "url string, width long, height long, bit_depth long",
     )
 
 
@@ -101,24 +90,15 @@ def image_resize_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers on both engines — no rounding needed."""
     pages = _pages(spark, sf_dir).select("url", "html")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.png import decode_gray_png
+    from paddleocr_spark.kernels.png import decode_gray_png
 
-        for pdf in batches:
-            urls, ws, hs, means = [], [], [], []
-            for url, b in zip(pdf["url"], pdf["html"]):
-                img = decode_gray_png(bytes(b))
-                h, w = img.shape
-                urls.append(url)
-                ws.append(int(w))
-                hs.append(int(h))
-                means.append(float(img.mean()))
-            yield pd.DataFrame(
-                {"url": urls, "width": ws, "height": hs, "ink_mean": means}
-            )
+    def feature(url, b):
+        img = decode_gray_png(bytes(b))
+        h, w = img.shape
+        return [(url, int(w), int(h), float(img.mean()))]
 
-    return pages.mapInPandas(
-        run, schema="url string, width long, height long, ink_mean double"
+    return map_rows(
+        pages, feature, "url string, width long, height long, ink_mean double"
     )
 
 
@@ -165,24 +145,20 @@ def frame_sample(spark: SparkSession, sf_dir: str, every: int = 2) -> DataFrame:
     scale."""
     pages = _pages(spark, sf_dir, multipage=True).select("url", "html")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.pdf import pdf_page_dims
+    from paddleocr_spark.kernels.pdf import pdf_page_dims
 
-        rows = []
-        for pdf in batches:
-            for url, data in zip(pdf["url"], pdf["html"]):
-                # dims come from the object DICTIONARIES (pdf_page_dims)
-                # — no image stream is sliced or decompressed for
-                # skipped OR kept frames
-                for idx, (w, h) in enumerate(pdf_page_dims(bytes(data))):
-                    if idx % every == 0:
-                        rows.append((url, idx, w, h))
-        yield pd.DataFrame(
-            rows, columns=["url", "frame_idx", "width", "height"]
-        )
+    def frames(url, data):
+        # dims come from the object DICTIONARIES (pdf_page_dims) — no
+        # image stream is sliced or decompressed for skipped OR kept
+        # frames
+        return [
+            (url, idx, w, h)
+            for idx, (w, h) in enumerate(pdf_page_dims(bytes(data)))
+            if idx % every == 0
+        ]
 
-    return pages.mapInPandas(
-        run, schema="url string, frame_idx long, width long, height long"
+    return map_rows(
+        pages, frames, "url string, frame_idx long, width long, height long"
     )
 
 
@@ -223,33 +199,28 @@ def _image_signatures(
     dhash64 locality bound."""
     pages = _pages(spark, sf_dir).select("url", "html")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    import hashlib
 
-        from paddleocr_spark.kernels.imageops import dhash64
-        from paddleocr_spark.kernels.png import decode_gray_png
+    from paddleocr_spark.kernels.imageops import dhash64
+    from paddleocr_spark.kernels.png import decode_gray_png
 
-        for pdf in batches:
-            urls, dhs, shas = [], [], []
+    def signature(url: str, img: np.ndarray) -> tuple:
+        h = hashlib.sha256()
+        h.update(struct.pack(">II", *img.shape))
+        h.update(np.ascontiguousarray(img, dtype=np.uint8).tobytes())
+        return (url, dhash64(img),
+                int.from_bytes(h.digest()[:8], "big", signed=True))
 
-            def emit(url: str, img: np.ndarray) -> None:
-                urls.append(url)
-                dhs.append(dhash64(img))
-                h = hashlib.sha256()
-                h.update(struct.pack(">II", *img.shape))
-                h.update(np.ascontiguousarray(img, dtype=np.uint8).tobytes())
-                shas.append(int.from_bytes(h.digest()[:8], "big", signed=True))
+    def signatures(url, b):
+        img = decode_gray_png(bytes(b))
+        out = [signature(str(url), img)]
+        if variants:
+            v = img.copy()
+            v[v.shape[0] // 3, v.shape[1] // 3] ^= 0x80
+            out.append(signature(str(url) + "#v2", v))
+        return out
 
-            for url, b in zip(pdf["url"], pdf["html"]):
-                img = decode_gray_png(bytes(b))
-                emit(str(url), img)
-                if variants:
-                    v = img.copy()
-                    v[v.shape[0] // 3, v.shape[1] // 3] ^= 0x80
-                    emit(str(url) + "#v2", v)
-            yield pd.DataFrame({"url": urls, "dhash": dhs, "sha": shas})
-
-    return pages.mapInPandas(run, schema="url string, dhash long, sha long")
+    return map_rows(pages, signatures, "url string, dhash long, sha long")
 
 
 def image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,6 +33,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 AGENT = "paddlebot"  # this crawler's product token
@@ -167,52 +169,37 @@ def robots_rfc_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite row: parse each host's robots.txt on the host census, join
     the rules (broadcast-sized) onto the url frame, evaluate the RFC
     verdict per url."""
-    import pandas as pd
-
     docs = scan_parquet(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
     )
     hosts = docs.select("source").distinct()
 
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for source in pdf["source"]:
-                s = str(source)
-                rules, delay = parse_robots(synth_robots(s), AGENT)
-                rows.append((s, json.dumps(rules), delay))
-            yield pd.DataFrame(
-                rows, columns=["source", "rules_json", "delay"]
-            )
+    def parse(source):
+        s = str(source)
+        rules, delay = parse_robots(synth_robots(s), AGENT)
+        return [(s, json.dumps(rules), delay)]
 
-    rules_dim = hosts.mapInPandas(
-        parse, schema="source string, rules_json string, delay double"
+    rules_dim = map_rows(
+        hosts, parse, "source string, rules_json string, delay double"
     )
     joined = docs.join(F.broadcast(rules_dim), "source")
+    # compiled-regex cache keyed by the rules blob: a megahost's pages
+    # pay ONE compile per task (each task unpickles its own dict)
+    cache: dict[str, list] = {}
 
-    def verdict(batches):
-        cache: dict[str, list] = {}
-        for pdf in batches:
-            ks, vs = [], []
-            for doc_id, rj, delay in zip(
-                pdf["doc_id"], pdf["rules_json"], pdf["delay"]
-            ):
-                rules = cache.get(rj)
-                if rules is None:
-                    # compiled-regex cache keyed by the rules blob: a
-                    # megahost's pages pay ONE compile per task
-                    rules = compile_rules(
-                        [(bool(a), p) for a, p in json.loads(rj)]
-                    )
-                    cache[rj] = rules
-                allowed, wlen = robots_verdict(rules, f"/doc/{doc_id}")
-                ks.append(str(doc_id))
-                vs.append(f"{int(allowed)}|{int(round(delay * 10))}|{wlen}")
-            yield pd.DataFrame(
-                {"op": ["robots_rfc"] * len(ks), "k": ks, "v": vs}
-            )
+    def verdict(doc_id, rj, delay):
+        rules = cache.get(rj)
+        if rules is None:
+            rules = compile_rules([(bool(a), p) for a, p in json.loads(rj)])
+            cache[rj] = rules
+        allowed, wlen = robots_verdict(rules, f"/doc/{doc_id}")
+        return [("robots_rfc", str(doc_id),
+                 f"{int(allowed)}|{int(round(delay * 10))}|{wlen}")]
 
-    return joined.mapInPandas(verdict, schema="op string, k string, v string")
+    return map_rows(
+        joined, verdict, "op string, k string, v string",
+        cols=["doc_id", "rules_json", "delay"],
+    )
 
 
 # Closed-form twin: even hosts follow the `*` group (block ids ending

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 from paddleocr_spark.operators.html_extract import (
     _Node,
@@ -125,38 +126,34 @@ def sitemap_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     walking each host's /sitemap.xml index one level down — encode +
     parse round-trip per host (the parser is held to its own encoder
     the way the codec suite holds GIF/JPEG to theirs)."""
-    import pandas as pd
-
     hosts = (
         scan_parquet(spark, f"{sf_dir}/documents.parquet")
         .select("source")
         .distinct()
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for source in pdf["source"]:
-                s = str(source)
-                host = s.lower() + ".example.test"
-                tree = synth_host_sitemaps(s)
-                kind, children = parse_sitemap(tree["/sitemap.xml"])
-                if kind != "index":
-                    raise ValueError("root sitemap must be an index")
-                for k, (child_loc, _lm) in enumerate(children):
-                    path = child_loc.split(host, 1)[1]
-                    ckind, entries = parse_sitemap(tree[path])
-                    if ckind != "urlset":
-                        raise ValueError("child sitemap must be a urlset")
-                    for i, (loc, lastmod) in enumerate(entries):
-                        rows.append((host, k, i, loc, lastmod))
-            yield pd.DataFrame(
-                rows, columns=["host", "child", "idx", "loc", "lastmod"]
+    def seeds(source):
+        s = str(source)
+        host = s.lower() + ".example.test"
+        tree = synth_host_sitemaps(s)
+        kind, children = parse_sitemap(tree["/sitemap.xml"])
+        if kind != "index":
+            raise ValueError("root sitemap must be an index")
+        rows = []
+        for k, (child_loc, _lm) in enumerate(children):
+            path = child_loc.split(host, 1)[1]
+            ckind, entries = parse_sitemap(tree[path])
+            if ckind != "urlset":
+                raise ValueError("child sitemap must be a urlset")
+            rows.extend(
+                (host, k, i, loc, lastmod)
+                for i, (loc, lastmod) in enumerate(entries)
             )
+        return rows
 
-    return hosts.mapInPandas(
-        run,
-        schema="host string, child int, idx int, loc string, lastmod string",
+    return map_rows(
+        hosts, seeds,
+        "host string, child int, idx int, loc string, lastmod string",
     )
 
 

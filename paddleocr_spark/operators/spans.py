@@ -23,8 +23,8 @@ A winner with no <p> descendant yields one span covering the winner
 itself (degenerate pages). Documents where nothing scores (empty/
 whitespace text) yield no spans.
 
-Spark shape: one narrow Arrow mapInPandas (page -> N span rows, zero
-shuffles) riding the shared checkpointed pages frame.
+Spark shape: one narrow `frames.map_rows` map (page -> N span rows,
+zero shuffles) riding the shared checkpointed pages frame.
 
 Oracle: the fixture layouts pin the winner and its paragraph structure
 (layouts 0/1/3: one <p> holding the whole text; layout 2: the text
@@ -86,46 +86,27 @@ def html_spans(spark: SparkSession, sf_dir: str, pages=None) -> DataFrame:
     per main-content paragraph span."""
     import hashlib
 
-    import pandas as pd
-
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.sources.pages import html_pages_from_documents
 
     if pages is None:
         pages = html_pages_from_documents(spark, sf_dir)
 
-    def run(batches):
-        for pdf in batches:
-            ids, idxs, paths, starts, ends, md5s = [], [], [], [], [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = int(url.rsplit("/", 1)[1])
-                for i, (path, a, b, txt) in enumerate(
-                    extract_spans(bytes(blob).decode("utf-8"))
-                ):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    paths.append(path)
-                    starts.append(a)
-                    ends.append(b)
-                    md5s.append(
-                        hashlib.md5(txt.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "span_idx": pd.Series(idxs, dtype="int64"),
-                    "dom_path": paths,
-                    "char_start": pd.Series(starts, dtype="int64"),
-                    "char_end": pd.Series(ends, dtype="int64"),
-                    "span_md5": md5s,
-                }
+    def spans(url, blob):
+        doc_id = int(url.rsplit("/", 1)[1])
+        return [
+            (doc_id, i, path, a, b,
+             hashlib.md5(txt.encode("utf-8")).hexdigest())
+            for i, (path, a, b, txt) in enumerate(
+                extract_spans(bytes(blob).decode("utf-8"))
             )
+        ]
 
-    return pages.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, span_idx long, dom_path string, "
-            "char_start long, char_end long, span_md5 string"
-        ),
+    return map_rows(
+        pages, spans,
+        "doc_id long, span_idx long, dom_path string, "
+        "char_start long, char_end long, span_md5 string",
+        cols=["url", "html"],
     )
 
 

@@ -16,7 +16,7 @@ tags, script/style exclusion, tag-soup recovery all identical), joined
 with '>' and md5'd. Attributes and text are excluded by definition:
 a skeleton is structure only.
 
-Spark shape: one narrow Arrow mapInPandas (page -> (host, tpl)) riding
+Spark shape: one narrow `frames.map_rows` map (page -> (host, tpl)) riding
 the shared checkpointed pages frame, then a (host, tpl) groupBy and a
 host-level rollup — both map-side combined, per-key cardinality is
 #templates-per-host (tiny). At 10^12 docs the census frame is
@@ -42,34 +42,29 @@ def page_templates(spark: SparkSession, sf_dir: str, pages=None) -> DataFrame:
     skeleton from the shared DOM build."""
     import hashlib
 
-    import pandas as pd
-
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.operators.html_extract import _Node, build_dom
     from paddleocr_spark.sources.pages import html_pages_from_documents
 
     if pages is None:
         pages = html_pages_from_documents(spark, sf_dir)
 
-    def run(batches):
-        for pdf in batches:
-            hosts, tpls = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                host = url.split("://", 1)[-1].split("/", 1)[0].lower()
-                tags = []
-                stack = [build_dom(bytes(blob).decode("utf-8"))]
-                while stack:
-                    node = stack.pop()
-                    if isinstance(node, _Node):
-                        if node.tag != "#root":
-                            tags.append(node.tag)
-                        # children reversed so pop() walks doc order
-                        stack.extend(reversed(node.children))
-                skel = ">".join(tags)
-                hosts.append(host)
-                tpls.append(hashlib.md5(skel.encode()).hexdigest())
-            yield pd.DataFrame({"host": hosts, "tpl": tpls})
+    def template(url, blob):
+        host = url.split("://", 1)[-1].split("/", 1)[0].lower()
+        tags = []
+        stack = [build_dom(bytes(blob).decode("utf-8"))]
+        while stack:
+            node = stack.pop()
+            if isinstance(node, _Node):
+                if node.tag != "#root":
+                    tags.append(node.tag)
+                # children reversed so pop() walks doc order
+                stack.extend(reversed(node.children))
+        return [(host, hashlib.md5(">".join(tags).encode()).hexdigest())]
 
-    return pages.mapInPandas(run, schema="host string, tpl string")
+    return map_rows(
+        pages, template, "host string, tpl string", cols=["url", "html"]
+    )
 
 
 def dom_template_census(

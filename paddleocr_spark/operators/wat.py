@@ -99,37 +99,28 @@ def _page_wat(url: str, html: str) -> tuple[int, str]:
 def wat_rows(spark, sf_dir: str, pages=None):
     """(op='wat', k=doc_id, v=n_links|md5(json)) — json round-tripped
     through a real one-record .wat.gz member per page in-runner."""
-    from pyspark.sql import functions as F
-
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.sources.pages import html_pages_from_documents
+    from paddleocr_spark.sources.warc import warc_iter_records
 
     if pages is None:
         pages = html_pages_from_documents(spark, sf_dir)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.sources.warc import warc_iter_records
+    def wat(url, blob):
+        doc_id = url.rsplit("/", 1)[1]
+        n, js = _page_wat(url, bytes(blob).decode("utf-8"))
+        member = wat_record(url, "2026-01-01T00:00:00Z", js, int(doc_id))
+        (rec,) = list(warc_iter_records(member))
+        if (
+            rec["type"] != "metadata"
+            or rec["url"] != url
+            or rec["payload"].decode("utf-8") != js
+        ):
+            raise ValueError(f"WAT round-trip mismatch: {url}")
+        return [("wat", doc_id, f"{n}|{hashlib.md5(js.encode()).hexdigest()}")]
 
-        for pdf in batches:
-            ks, vs = [], []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                doc_id = url.rsplit("/", 1)[1]
-                n, js = _page_wat(url, bytes(blob).decode("utf-8"))
-                member = wat_record(
-                    url, "2026-01-01T00:00:00Z", js, int(doc_id)
-                )
-                (rec,) = list(warc_iter_records(member))
-                if (
-                    rec["type"] != "metadata"
-                    or rec["url"] != url
-                    or rec["payload"].decode("utf-8") != js
-                ):
-                    raise ValueError(f"WAT round-trip mismatch: {url}")
-                ks.append(doc_id)
-                vs.append(f"{n}|{hashlib.md5(js.encode()).hexdigest()}")
-            yield pd.DataFrame({"k": ks, "v": vs})
-
-    return pages.mapInPandas(run, schema="k string, v string").select(
-        F.lit("wat").alias("op"), "k", "v"
+    return map_rows(
+        pages, wat, "op string, k string, v string", cols=["url", "html"]
     )
 
 

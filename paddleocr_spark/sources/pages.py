@@ -28,6 +28,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from paddleocr_spark.frames import map_rows
 from paddleocr_spark.sources.scan import scan_parquet
 
 PAGE_CHARS = 120
@@ -67,49 +68,37 @@ def doc_ts(doc_id: int) -> datetime.datetime:
     return base + datetime.timedelta(seconds=int(doc_id) * 37 % 2_592_000)
 
 
-def _render_batches(
-    batches: Iterator[pd.DataFrame],
-    multipage: bool,
-    rotate180: bool = False,
-    wrap: int = WRAP,
-) -> Iterator[pd.DataFrame]:
-    # Imports kept inside the UDF body: executors only pay for them once
-    # per python worker, and the kernels stay Spark-free.
+def _render_rows(multipage: bool, rotate180: bool = False, wrap: int = WRAP):
+    """The row function of `pages_from_documents`: (doc_id, text,
+    source, lang) -> one pages row with the rendered payload."""
+    # Imported here, not at module level, so the kernels stay out of
+    # this module's import (they are Spark-free and need no session).
     from paddleocr_spark.kernels.font import render_page
     from paddleocr_spark.kernels.imageops import rotate180 as _rot180
     from paddleocr_spark.kernels.pdf import pdf_encode_gray_pages
     from paddleocr_spark.kernels.png import encode_gray_png
 
-    for pdf in batches:
-        payloads, urls, tss = [], [], []
-        for doc_id, text, source in zip(pdf["doc_id"], pdf["text"], pdf["source"]):
-            if multipage:
-                norm = normalize_text(text, MULTI_CHARS)
-                chunks = [
-                    norm[i : i + PAGE_CHARS] for i in range(0, len(norm), PAGE_CHARS)
-                ] or [""]
-                imgs = [render_page(wrap_lines(c, wrap)) for c in chunks]
-                # REAL PDF container (kernels/pdf.py): one lossless
-                # FlateDecode gray XObject per page — the byte-identity
-                # contract forbids a lossy page codec
-                payloads.append(pdf_encode_gray_pages(imgs))
-            else:
-                norm = normalize_text(text)
-                page = render_page(wrap_lines(norm, wrap))
-                if rotate180:
-                    page = _rot180(page)
-                payloads.append(encode_gray_png(page))
-            urls.append(doc_url(int(doc_id), str(source)))
-            tss.append(doc_ts(int(doc_id)))
-        yield pd.DataFrame(
-            {
-                "url": urls,
-                "warc_ts": tss,
-                "html": payloads,
-                "text": pdf["text"].astype(str),
-                "lang": pdf["lang"].astype(str),
-            }
-        )
+    def render(doc_id, text, source, lang):
+        if multipage:
+            norm = normalize_text(text, MULTI_CHARS)
+            chunks = [
+                norm[i : i + PAGE_CHARS]
+                for i in range(0, len(norm), PAGE_CHARS)
+            ] or [""]
+            imgs = [render_page(wrap_lines(c, wrap)) for c in chunks]
+            # REAL PDF container (kernels/pdf.py): one lossless
+            # FlateDecode gray XObject per page — the byte-identity
+            # contract forbids a lossy page codec
+            payload = pdf_encode_gray_pages(imgs)
+        else:
+            page = render_page(wrap_lines(normalize_text(text), wrap))
+            if rotate180:
+                page = _rot180(page)
+            payload = encode_gray_png(page)
+        return [(doc_url(int(doc_id), str(source)), doc_ts(int(doc_id)),
+                 payload, str(text), str(lang))]
+
+    return render
 
 
 def pages_from_documents(
@@ -152,9 +141,8 @@ def pages_from_documents(
     # operator time. The exchange moves only tiny text rows; the PNG
     # payloads are created after it.
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    return docs.mapInPandas(
-        lambda it: _render_batches(it, multipage, rotate180, wrap),
-        schema=PAGES_SCHEMA,
+    return map_rows(
+        docs, _render_rows(multipage, rotate180, wrap), PAGES_SCHEMA
     )
 
 
@@ -169,25 +157,12 @@ def html_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source", "lang"
     ).repartition(spark.sparkContext.defaultParallelism)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        doc_url(int(d), str(s))
-                        for d, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": [doc_ts(int(d)) for d in pdf["doc_id"]],
-                    "html": [
-                        synthesize_html(str(t), int(d)).encode("utf-8")
-                        for t, d in zip(pdf["text"], pdf["doc_id"])
-                    ],
-                    "text": pdf["text"].astype(str),
-                    "lang": pdf["lang"].astype(str),
-                }
-            )
+    def page(d, text, source, lang):
+        return [(doc_url(int(d), str(source)), doc_ts(int(d)),
+                 synthesize_html(str(text), int(d)).encode("utf-8"),
+                 str(text), str(lang))]
 
-    return docs.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(docs, page, PAGES_SCHEMA)
 
 
 def text_pdf_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,26 +176,13 @@ def text_pdf_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame
         "doc_id", "text", "source", "lang"
     ).repartition(spark.sparkContext.defaultParallelism)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.operators.media import synth_text_pdf
+    from paddleocr_spark.operators.media import synth_text_pdf
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        doc_url(int(d), str(s))
-                        for d, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": [doc_ts(int(d)) for d in pdf["doc_id"]],
-                    "html": [
-                        synth_text_pdf(int(d))[0] for d in pdf["doc_id"]
-                    ],
-                    "text": pdf["text"].astype(str),
-                    "lang": pdf["lang"].astype(str),
-                }
-            )
+    def page(d, text, source, lang):
+        return [(doc_url(int(d), str(source)), doc_ts(int(d)),
+                 synth_text_pdf(int(d))[0], str(text), str(lang))]
 
-    return docs.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(docs, page, PAGES_SCHEMA)
 
 
 def ic_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,28 +198,18 @@ def ic_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_transcript(True)).alias("transcript"),
     ).repartition(spark.sparkContext.defaultParallelism)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.kernels.font import render_page
-        from paddleocr_spark.kernels.png import encode_gray_png
+    return map_rows(docs, transcript_page, PAGES_SCHEMA)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": [
-                        doc_url(int(d), str(s))
-                        for d, s in zip(pdf["doc_id"], pdf["source"])
-                    ],
-                    "warc_ts": [doc_ts(int(d)) for d in pdf["doc_id"]],
-                    "html": [
-                        encode_gray_png(render_page(t.split("\n")))
-                        for t in pdf["transcript"]
-                    ],
-                    "text": pdf["transcript"].astype(str),
-                    "lang": ["ms"] * len(pdf),
-                }
-            )
 
-    return docs.mapInPandas(gen, schema=PAGES_SCHEMA)
+def transcript_page(doc_id, source, transcript):
+    """The row function of the IC-card page sources: one pages row whose
+    payload is the transcript rendered line by line as a page image."""
+    from paddleocr_spark.kernels.font import render_page
+    from paddleocr_spark.kernels.png import encode_gray_png
+
+    return [(doc_url(int(doc_id), str(source)), doc_ts(int(doc_id)),
+             encode_gray_png(render_page(transcript.split("\n"))),
+             str(transcript), "ms")]
 
 
 def pages_from_warc(spark: SparkSession, warc_path: str) -> DataFrame:
@@ -385,27 +337,18 @@ def cdx_rows(archives: DataFrame) -> DataFrame:
     blob_col = "wet" if "wet" in archives.columns else "content"
     name_col = "name" if "name" in archives.columns else "path"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from paddleocr_spark.sources.warc import cdx_index
+    from paddleocr_spark.sources.warc import cdx_index
 
-        for pdf in batches:
-            rows = {
-                "archive": [], "url": [], "date": [], "offset": [],
-                "length": [], "digest": [], "rec_type": [],
-            }
-            for name, blob in zip(pdf[name_col], pdf[blob_col]):
-                for e in cdx_index(bytes(blob)):
-                    rows["archive"].append(str(name))
-                    rows["url"].append(e["url"])
-                    rows["date"].append(e["date"])
-                    rows["offset"].append(e["offset"])
-                    rows["length"].append(e["length"])
-                    rows["digest"].append(e["digest"])
-                    rows["rec_type"].append(e["type"])
-            yield pd.DataFrame(rows)
+    def index(name, blob):
+        return [
+            (str(name), e["url"], e["date"], e["offset"], e["length"],
+             e["digest"], e["type"])
+            for e in cdx_index(bytes(blob))
+        ]
 
-    return archives.mapInPandas(
-        gen,
-        schema="archive string, url string, date string, offset long, "
-               "length long, digest string, rec_type string",
+    return map_rows(
+        archives, index,
+        "archive string, url string, date string, offset long, "
+        "length long, digest string, rec_type string",
+        cols=[name_col, blob_col],
     )

@@ -479,24 +479,6 @@ def test_cls_probs_sum_to_one(cls_model):
     np.testing.assert_allclose(probs.sum(), 1.0, atol=1e-6)
 
 
-def test_cls_classify_threshold_semantics(cls_model):
-    """Reference predict_cls.py:133-136: rotate ONLY when the 180 score
-    clears cls_thresh."""
-    from paddleocr_spark.kernels.imageops import rotate180
-
-    crop = _probe_crop("ROTATE ME PLEASE NOW")
-    label, score, out = cls_model.classify(crop)
-    assert label == "0"
-    assert np.array_equal(out, crop)
-    down = rotate180(crop)
-    label2, score2, out2 = cls_model.classify(down)
-    assert label2 == "180"
-    if score2 > cls_model.thresh:
-        assert np.array_equal(out2, rotate180(down))
-    else:
-        assert np.array_equal(out2, down)
-
-
 def test_orient_page_with_cls_model_picks_180(cls_model):
     from paddleocr_spark.kernels.cls import orient_page
     from paddleocr_spark.kernels.imageops import rotate180

@@ -21,11 +21,12 @@ def _write_batch(spark, out_dir, lo, hi):
     )
     n = docs.count()
     # reuse the normal source rendering, dumped to files for the stream
+    from paddleocr_spark.frames import map_rows
     from paddleocr_spark.sources import pages as pages_mod
 
-    df = docs.mapInPandas(
-        lambda it: pages_mod._render_batches(it, False),
-        schema=pages_mod.PAGES_SCHEMA,
+    df = map_rows(
+        docs, pages_mod._render_rows(False), pages_mod.PAGES_SCHEMA,
+        cols=["doc_id", "text", "source", "lang"],
     )
     df.coalesce(1).write.mode("append").parquet(out_dir)
     return n
