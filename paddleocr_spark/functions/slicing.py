@@ -27,25 +27,22 @@ POSTER_WRAP = 9
 
 def _extract_with(pages: DataFrame, detect) -> DataFrame:
     """pages -> per-url joined text via a custom detection strategy
-    (boxes = detect(img, det_model)), then the standard crop+rec tail.
+    (boxes = detect(img, det_model)), then the engine's page chain
+    (`OcrEngine.ocr_page`: reading order, crop, rec, drop_score).
 
-    Same deployment discipline as the flagship plans/pipeline path: the
-    engine is the per-python-worker singleton (a real model session must
-    never be rebuilt per task), and the input takes the same salted
+    Each task unpickles its own engine (the default models) with
+    `extract`, and the input takes the flagship path's salted
     repartition so host-skewed url prefixes cannot pin one executor."""
-    from paddleocr_spark.kernels.geometry import sorted_boxes
-    from paddleocr_spark.kernels.ocr import get_rotate_crop_image
+    from paddleocr_spark.kernels.ocr import OcrEngine
     from paddleocr_spark.kernels.png import decode_gray_png
-    from paddleocr_spark.kernels.rec import recognize_crops
-    from paddleocr_spark.plans.pipeline import _get_engine, salted_repartition
+    from paddleocr_spark.plans.pipeline import salted_repartition
+
+    engine = OcrEngine()
 
     def extract(url, payload):
-        eng = _get_engine()
         img = decode_gray_png(bytes(payload))
-        boxes = sorted_boxes(detect(img, eng.det_model))
-        crops = [get_rotate_crop_image(img, b) for b in boxes]
-        rec = recognize_crops(crops, eng.rec_model)
-        return [(url, "".join(t for t, _ in rec))]
+        spans = engine.ocr_page(img, detect(img, engine.det_model))
+        return [(url, "".join(s["text"] for s in spans))]
 
     ncpu = pages.sparkSession.sparkContext.defaultParallelism
     return map_rows(

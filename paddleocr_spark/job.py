@@ -13,7 +13,7 @@ table (or synthesize it from a documents table for fixtures), anti-join
 already-committed urls (idempotent resume), salted repartition, OCR UDF,
 write results + per-partition audit rows. Model weights ship as a Spark
 broadcast (kernels/font.export_weights by default; --weights swaps in a
-caller blob, e.g. ONNX bytes) and install once per task. --stream runs
+caller blob, e.g. ONNX bytes); each task builds its engine from them. --stream runs
 the same plan as a checkpointed Structured Streaming job instead
 (incremental: only unprocessed landing files per run). --snapshot turns
 the results sink into an Iceberg-style snapshot table (plans/

@@ -34,59 +34,6 @@ from .geometry import (
 )
 
 
-def _filled_component_score(prob: np.ndarray, pts: np.ndarray) -> float:
-    """Mean probability over fillPoly(outer contour of the component)
-    (the reference's box_score_slow region, db_postprocess.py:206-225):
-    the component's own pixels PLUS fully-enclosed holes, while concave
-    cavities open to the outside stay excluded — where a convex hull
-    would wrongly pull their low-probability pixels into the mean.
-
-    cv2-free construction: pad the component's bbox mask by one
-    background pixel, flood-fill the background from the border
-    (scanline BFS over background runs, 4-connected — the dual of the
-    8-connected foreground findContours walks), and take the complement.
-    O(runs) regardless of component area."""
-    p = np.asarray(pts, dtype=np.int64)
-    x0, y0 = p[:, 0].min(), p[:, 1].min()
-    x1, y1 = p[:, 0].max(), p[:, 1].max()
-    bw, bh = int(x1 - x0 + 3), int(y1 - y0 + 3)  # +1 px pad all around
-    mask = np.zeros((bh, bw), dtype=bool)
-    mask[p[:, 1] - y0 + 1, p[:, 0] - x0 + 1] = True
-
-    bg = ~mask
-    runs: list[list[tuple[int, int, bool]]] = []  # per row: (lo, hi, seen)
-    for r in range(bh):
-        row = bg[r]
-        d = np.flatnonzero(np.diff(np.concatenate(([False], row, [False]))))
-        runs.append([(int(d[i]), int(d[i + 1]), False) for i in range(0, len(d), 2)])
-
-    stack = [(0, 0)]  # the padded border row is one background run
-    runs[0][0] = (runs[0][0][0], runs[0][0][1], True)
-    while stack:
-        r, i = stack.pop()
-        lo, hi, _ = runs[r][i]
-        for nr in (r - 1, r + 1):
-            if not 0 <= nr < bh:
-                continue
-            for j, (nlo, nhi, seen) in enumerate(runs[nr]):
-                if not seen and nlo < hi and lo < nhi:
-                    runs[nr][j] = (nlo, nhi, True)
-                    stack.append((nr, j))
-
-    filled = np.ones((bh, bw), dtype=bool)
-    for r in range(bh):
-        for lo, hi, seen in runs[r]:
-            if seen:
-                filled[r, lo:hi] = False
-    region = np.zeros((bh, bw), dtype=prob.dtype)
-    ry0, ry1 = y0 - 1, y1 + 2
-    rx0, rx1 = x0 - 1, x1 + 2
-    cy0, cx0 = max(ry0, 0), max(rx0, 0)
-    cy1, cx1 = min(ry1, prob.shape[0]), min(rx1, prob.shape[1])
-    region[cy0 - ry0 : cy1 - ry0, cx0 - rx0 : cx1 - rx0] = prob[cy0:cy1, cx0:cx1]
-    return float(region[filled].mean()) if filled.any() else 0.0
-
-
 def bitmap_runs(bitmap: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """All ink runs of a bool/0-1 map, sorted by (row, start): (rows,
     starts, ends_exclusive)."""
@@ -507,19 +454,13 @@ def db_postprocess(
     max_candidates: int = 1000,
     unclip_ratio: float = 1.5,
     min_size: int = 3,
-    score_mode: str = "fast",
 ) -> tuple[np.ndarray, list[float]]:
     """prob [h,w] in [0,1] at det scale -> (boxes [N,4,2] float32 in source
-    coords, scores). Defaults mirror tools/infer/utility.py:66-70;
-    score_mode='slow' scores the component's own pixel polygon instead
-    of the min-area rect (the det_box_type poly path)."""
+    coords, scores). Defaults mirror tools/infer/utility.py:66-70."""
     map_h, map_w = prob.shape
-    comps, rects, sides = _component_rects(*bitmap_runs(prob > thresh), max_candidates)
+    _, rects, sides = _component_rects(*bitmap_runs(prob > thresh), max_candidates)
     big = np.flatnonzero(~(sides < min_size))
-    if score_mode == "slow":
-        scores = [_filled_component_score(prob, comps[i]) for i in big]
-    else:
-        scores = [box_score_fast(prob, rects[i]) for i in big]
+    scores = [box_score_fast(prob, rects[i]) for i in big]
     return _finish_boxes(
         rects[big], np.array(scores, dtype=np.float64), map_h, map_w, src_h, src_w,
         box_thresh, unclip_ratio, min_size,

@@ -157,7 +157,7 @@ def match_glyph(cell: np.ndarray) -> tuple[str, float]:
 def export_weights() -> bytes:
     """Serialize the recognition head's 'model weights' — the normalized
     glyph templates and their label order. The driver broadcasts this
-    blob and every executor installs it before inference
+    blob and every extraction task builds its engine from it
     (plans/pipeline.extract_pages), the same ship-weights-once pattern
     the reference's spark-ready deployment describes for ONNX payloads
     (north_star: 'broadcast model weights'); a real model swap replaces
@@ -173,11 +173,11 @@ def export_weights() -> bytes:
     return buf.getvalue()
 
 
-def load_weights(blob: bytes) -> None:
-    """Install broadcast weights into the recognition head. Validates the
-    label space; template values come from the blob, so a driver-side
-    weight change genuinely propagates to every worker."""
-    global TEMPLATES
+def load_weights(blob: bytes) -> np.ndarray:
+    """The recognition head's templates from a broadcast weights blob
+    (`export_weights`). Validates the label space; template values come
+    from the blob, so a driver-side weight change genuinely propagates
+    to every worker (`ocr.OcrEngine.from_weights`)."""
     import io
 
     z = np.load(io.BytesIO(blob))
@@ -187,4 +187,4 @@ def load_weights(blob: bytes) -> None:
     t = np.asarray(z["templates"], dtype=np.float32)
     if t.shape != (len(CHARSET), GLYPH_H * GLYPH_W):
         raise ValueError(f"bad template shape {t.shape}")
-    TEMPLATES = t
+    return t

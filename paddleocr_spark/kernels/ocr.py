@@ -18,8 +18,16 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .det import DetConfig, DetModel
+from .font import load_weights
 from .geometry import sorted_boxes
 from .imageops import warp_perspective
+from .onnx_models import (
+    OnnxClsModel,
+    is_onnx_bundle,
+    onnx_engine_models,
+    split_onnx_bundle,
+)
+from .onnx_rt import session_for
 from .rec import RecConfig, RecModel, recognize_crops
 
 DROP_SCORE = 0.5
@@ -64,17 +72,37 @@ class OcrConfig:
 
 @dataclass
 class OcrEngine:
-    """Holds the (stub) model instances; one per executor process, cached
-    by plans/pipeline.py the way the reference caches predictors."""
+    """Holds the model instances: the stub models by default, or those
+    of a broadcast weights blob (`from_weights`)."""
 
     cfg: OcrConfig = field(default_factory=OcrConfig)
 
     def __post_init__(self):
         self.det_model = DetModel(self.cfg.det)
         self.rec_model = RecModel(self.cfg.rec)
-        # orientation probe scorer: an onnx_models.OnnxClsModel while a
-        # three-model bundle is installed, else rec confidence scores
+        # orientation probe scorer: an onnx_models.OnnxClsModel from a
+        # three-model bundle, else rec confidence scores
         self.cls_model = None
+
+    @classmethod
+    def from_weights(cls, blob: bytes) -> OcrEngine:
+        """The engine of a broadcast weights blob: an ONNX bundle's det
+        and rec (plus cls when the bundle has a third part), on sessions
+        cached per process (onnx_rt.session_for, the reference's
+        create_predictor), or else font templates for the stub rec
+        head. Each extraction task builds its own, so no task sees
+        another's weights."""
+        engine = cls()
+        if is_onnx_bundle(blob):
+            parts = split_onnx_bundle(blob)
+            engine.det_model, engine.rec_model = onnx_engine_models(
+                parts[0], parts[1], engine.cfg.det, engine.cfg.rec
+            )
+            if len(parts) > 2:
+                engine.cls_model = OnnxClsModel(session_for(parts[2]))
+        else:
+            engine.rec_model = RecModel(engine.cfg.rec, load_weights(blob))
+        return engine
 
     def ocr_page(self, gray: np.ndarray, boxes: np.ndarray) -> list[dict]:
         """uint8 grayscale page and its detected boxes -> reading-ordered,

@@ -557,14 +557,11 @@ class OnnxRecModel(RecModel):
 
 
 class OnnxClsModel:
-    """0/180 classifier driven by the cls ONNX session. `prob0` is the
-    orientation-probe score (p of label "0" = upright)."""
+    """0/180 classifier driven by the cls ONNX session. `prob0_batch`
+    is the orientation-probe score (p of label "0" = upright)."""
 
     def __init__(self, session: OnnxSession):
         self.session = session
-
-    def prob0(self, crop: np.ndarray) -> float:
-        return self.prob0_batch([crop])[0]
 
     def prob0_batch(self, crops) -> list[float]:
         """p("0") for several crops in ONE session run — the graph is

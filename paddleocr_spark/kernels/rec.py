@@ -32,8 +32,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from . import font as _font
-from .font import CHARSET, GLYPH_H, GLYPH_W, REC_CHARSET
+from .font import CHARSET, GLYPH_H, GLYPH_W, REC_CHARSET, TEMPLATES
 from .imageops import pool_bins_batch, resize_bilinear
 
 REC_H = 48
@@ -86,10 +85,15 @@ _SCRATCH_MAX_BYTES = 8 << 20
 
 
 class RecModel:
-    """Deterministic recognition head emitting CTC-style [T, C] probs."""
+    """Deterministic recognition head emitting CTC-style [T, C] probs.
+    `templates` are its classifier weights (`font.load_weights` of a
+    broadcast blob); the font's own by default."""
 
-    def __init__(self, cfg: RecConfig | None = None):
+    def __init__(
+        self, cfg: RecConfig | None = None, templates: np.ndarray | None = None
+    ):
         self.cfg = cfg or RecConfig()
+        self.templates = TEMPLATES if templates is None else templates
         self.num_classes = len(REC_CHARSET) + 1  # + blank at 0, space at 1
         self._buffers: dict[str, np.ndarray] = {}
 
@@ -303,12 +307,10 @@ class RecModel:
         """Pooled glyph cells [K, 35] -> (correlation scores [K, C],
         centered-cell norms [K]). This is the classifier head — the seam
         where kernels/onnx_models.OnnxRecModel swaps in an ONNX session
-        (reference: the rec net behind predict_rec.py). Module-attribute
-        read of TEMPLATES (NOT an import-time binding): broadcast weight
-        installs (font.load_weights) must reach this matmul."""
+        (reference: the rec net behind predict_rec.py)."""
         v = v - v.mean(axis=1, keepdims=True)
         n = np.linalg.norm(v, axis=1, keepdims=True)
-        scores = (v / np.maximum(n, 1e-9)) @ _font.TEMPLATES.T
+        scores = (v / np.maximum(n, 1e-9)) @ self.templates.T
         return scores, n.ravel()
 
     def _merge_cells(self, cells: list[tuple[int, int]]) -> list[tuple[int, int]]:

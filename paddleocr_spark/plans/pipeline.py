@@ -14,12 +14,11 @@ Scale notes (the parts that matter at 10^12 docs / 1000 executors):
   kernels, so one fat PDF can't serialize a task (the per-page loop is
   the unit of work, and pages of one doc stay in one task only because
   they share a payload row — acceptable because page count is capped).
-- Engine (model) instances are process-level singletons per python
-  worker — the reference caches predictors the same way
-  (tools/infer/utility.py create_predictor called once per process).
-  With real ONNX weights this is where the broadcast bytes get
-  materialized into a session. Each task installs the broadcast weights
-  and restores the worker's models when it ends (`_ocr_batches`); the
+- The model weights ship once as a broadcast. Each task turns them into
+  its own engine (`OcrEngine.from_weights` in `_ocr_batches`); ONNX
+  sessions are cached per process by content (onnx_rt.session_for), as
+  the reference's create_predictor (tools/infer/utility.py) builds one
+  predictor per process, so a task's engine costs no model load. The
   worker itself is tuned once, when a task first imports the package
   (paddleocr_spark._tune_worker), so the stage carries no per-task
   worker fix of its own.
@@ -67,8 +66,6 @@ AUDIT_SCHEMA = (
 )
 _TALLIED = ["url", "img_idx", "decode_ms", "det_ms", "rec_ms"]
 
-_ENGINE = None  # per-python-worker singleton
-
 
 class _TaskAudit(AccumulatorParam):
     """Driver accumulator of extraction-task audit rows,
@@ -108,15 +105,6 @@ def _tally_task(frames: list[pd.DataFrame], wall_ms: float) -> dict:
     }
 
 
-def _get_engine():
-    global _ENGINE
-    if _ENGINE is None:
-        from paddleocr_spark.kernels.ocr import OcrEngine
-
-        _ENGINE = OcrEngine()
-    return _ENGINE
-
-
 def _ocr_batches(
     batches: Iterator[pd.DataFrame],
     page_limit: int,
@@ -124,63 +112,27 @@ def _ocr_batches(
     weights_bc,
     tally: Accumulator | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """One extraction task: install the broadcast model weights, run the
-    OCR loop, then restore the worker's models.
-
-    Install-and-restore (not install-forever): python workers are reused
-    across queries, and a task must not leak its weights into later
-    tasks that bypass extract_pages. This is the ship-weights-once
-    deployment pattern (north_star 'broadcast model weights'). An ONNX
-    bundle becomes per-process cached sessions (onnx_rt.session_for, the
-    create_predictor analogue) swapped into the worker's engine
-    singleton; any other blob is font templates.
+    """One extraction task: build the engine of the broadcast model
+    weights (`OcrEngine.from_weights`, the ship-weights-once pattern of
+    north_star's 'broadcast model weights') and run the OCR loop with
+    it. The engine lives as long as the task, so nothing is installed
+    into the python worker that a later task could see.
 
     With a `tally` (from `task_audit`), a task that runs to the end adds
     its audit row, keyed by its partition; its wall_ms is the task's
     wall time in this worker."""
-    from paddleocr_spark.kernels import font
-    from paddleocr_spark.kernels.onnx_models import (
-        OnnxClsModel,
-        is_onnx_bundle,
-        onnx_engine_models,
-        split_onnx_bundle,
-    )
-    from paddleocr_spark.kernels.onnx_rt import session_for
+    from paddleocr_spark.kernels.ocr import OcrEngine
 
     t0 = time.perf_counter()
-    blob = weights_bc.value
-    engine = _get_engine()
-    saved = (
-        engine.det_model,
-        engine.rec_model,
-        engine.cls_model,
-        font.TEMPLATES,
-    )
+    engine = OcrEngine.from_weights(weights_bc.value)
     counted: list[pd.DataFrame] = []
-    try:
-        if is_onnx_bundle(blob):
-            parts = split_onnx_bundle(blob)
-            engine.det_model, engine.rec_model = onnx_engine_models(
-                parts[0], parts[1], engine.cfg.det, engine.cfg.rec
-            )
-            if len(parts) > 2:  # three-model bundle: det + rec + cls
-                engine.cls_model = OnnxClsModel(session_for(parts[2]))
-        else:
-            font.load_weights(blob)
-        for frame in _ocr_batches_run(batches, page_limit, orient):
-            if tally is not None:
-                counted.append(frame[_TALLIED])
-            yield frame
+    for frame in _ocr_batches_run(batches, engine, page_limit, orient):
         if tally is not None:
-            wall_ms = (time.perf_counter() - t0) * 1000.0
-            tally.add(_tally_task(counted, wall_ms))
-    finally:
-        (
-            engine.det_model,
-            engine.rec_model,
-            engine.cls_model,
-            font.TEMPLATES,
-        ) = saved
+            counted.append(frame[_TALLIED])
+        yield frame
+    if tally is not None:
+        wall_ms = (time.perf_counter() - t0) * 1000.0
+        tally.add(_tally_task(counted, wall_ms))
 
 
 def _sniff_html(payload: bytes) -> bool:
@@ -192,7 +144,10 @@ def _sniff_html(payload: bytes) -> bool:
 
 
 def _ocr_batches_run(
-    batches: Iterator[pd.DataFrame], page_limit: int, orient: bool = False
+    batches: Iterator[pd.DataFrame],
+    engine,
+    page_limit: int,
+    orient: bool = False,
 ) -> Iterator[pd.DataFrame]:
     from paddleocr_spark.kernels.cls import orient_page
     from paddleocr_spark.kernels.det import detect_lines
@@ -202,7 +157,6 @@ def _ocr_batches_run(
 
     from paddleocr_spark.operators.html_extract import extract_main_text
 
-    engine = _get_engine()
     for pdf in batches:
         rows: list[dict] = []
         for url, payload in zip(pdf["url"], pdf["html"]):
@@ -237,6 +191,8 @@ def _ocr_batches_run(
                         texts = texts[:page_limit]
                 if texts is None:
                     pages = decode_pages(payload, kind, offset, page_limit)
+                    if not pages:  # an error row still commits the url
+                        raise ValueError("payload decodes to no page")
             except Exception:
                 rows.append(
                     dict(
@@ -330,10 +286,10 @@ def extract_pages(
     The recognition weights ship as a Spark broadcast: serialized once
     on the driver (kernels/font.export_weights, a caller-supplied blob,
     or — backend='onnx' — a genuine ONNX model bundle exported by
-    kernels/onnx_models.build_onnx_bundle), installed per executor
-    before inference — so a driver-side weight change genuinely
-    propagates (tests/test_pipeline_spark.py pins this with perturbed
-    weights on BOTH backends).
+    kernels/onnx_models.build_onnx_bundle), and each task builds its
+    engine from them (`OcrEngine.from_weights`) — so a driver-side
+    weight change genuinely propagates (tests/test_pipeline_spark.py
+    pins this with perturbed weights on BOTH backends).
 
     `_tally`, an accumulator from `task_audit`, collects each finished task's
     audit row (every writer that records an audit passes one)."""

@@ -26,7 +26,7 @@ SCHEMA = "tag string, n long, half double, blob binary, ts timestamp"
 KEEP = {
     "frames.py:map_rows": "the helper itself",
     "plans/pipeline.py:extract_pages":
-        "per-task weight install, audit tally and timings (_ocr_batches)",
+        "per-task engine of the broadcast weights, audit tally and timings (_ocr_batches)",
     "functions/unigram.py:train_unigram":
         "the E-step is a map-side combine: one row per piece per task",
     "operators/wat.py:wat_archives":

@@ -382,88 +382,6 @@ class TestBoxScoreSlow:
         fast = box_score_fast(prob, np.array([[3, 4], [8, 4], [8, 7], [3, 7]]))
         assert abs(slow - fast) < 1e-9
 
-    def test_db_postprocess_slow_mode_detects_lines(self):
-        import numpy as np
-
-        from paddleocr_spark.kernels.db_postprocess import db_postprocess
-        from paddleocr_spark.kernels.font import render_page
-
-        page = render_page(["HELLO WORLD"])
-        prob = 1.0 - page.astype(np.float64) / 255.0
-        fast_boxes, fast_scores = db_postprocess(
-            prob, *page.shape[:2][::-1][::-1], box_thresh=0.2
-        )
-        slow_boxes, slow_scores = db_postprocess(
-            prob, page.shape[0], page.shape[1], box_thresh=0.2,
-            score_mode="slow",
-        )
-        assert len(slow_boxes) == len(fast_boxes) > 0
-        # slow scores the filled component contour, a subset of the
-        # bbox that is pure ink on a binary map -> exactly 1.0 per
-        # component (enclosed counters like O would dilute slightly,
-        # but these glyph components are contiguous strokes), always
-        # >= the ink-fraction bbox mean the fast path reports
-        assert all(s == 1.0 for s in slow_scores)
-        assert all(s >= f - 1e-12 for s, f in zip(slow_scores, fast_scores))
-
-
-class TestFilledComponentScore:
-    """Slow-score region semantics (db_postprocess.py:206-225 fillPoly
-    of the OUTER contour): concave open cavities excluded, enclosed
-    holes included — a convex hull gets the first one wrong."""
-
-    def test_u_shape_cavity_excluded(self):
-        import numpy as np
-
-        from paddleocr_spark.kernels.db_postprocess import (
-            _filled_component_score,
-        )
-
-        prob = np.zeros((10, 10))
-        comp = []
-        for y in range(2, 8):
-            for x in (2, 3, 6, 7):
-                comp.append((x, y))
-                prob[y, x] = 1.0
-        for x in range(2, 8):
-            comp.append((x, 8))
-            prob[8, x] = 1.0
-        # the cavity (x 4..5) holds prob 0: hull scoring would dilute
-        assert _filled_component_score(prob, np.array(comp)) == 1.0
-
-    def test_donut_hole_included(self):
-        import numpy as np
-
-        from paddleocr_spark.kernels.db_postprocess import (
-            _filled_component_score,
-        )
-
-        prob = np.zeros((10, 10))
-        comp = []
-        for y in range(2, 8):
-            for x in range(2, 8):
-                if 4 <= x <= 5 and 4 <= y <= 5:
-                    continue
-                comp.append((x, y))
-                prob[y, x] = 1.0
-        prob[4:6, 4:6] = 0.5
-        n = len(comp)
-        got = _filled_component_score(prob, np.array(comp))
-        assert abs(got - (n + 4 * 0.5) / (n + 4)) < 1e-12
-
-    def test_solid_rect_equals_pixel_mean(self):
-        import numpy as np
-
-        from paddleocr_spark.kernels.db_postprocess import (
-            _filled_component_score,
-        )
-
-        rng = np.random.default_rng(1)
-        prob = rng.random((12, 12))
-        comp = [(x, y) for y in range(3, 9) for x in range(2, 10)]
-        exp = float(np.mean([prob[y, x] for x, y in comp]))
-        assert abs(_filled_component_score(prob, np.array(comp)) - exp) < 1e-12
-
 
 class TestDhash64:
     """dhash64: determinism, signed packing, and the locality bound that

@@ -4,10 +4,12 @@ About 200 deterministic pages, upright and rotated, go through
 `detect_lines` -> `sorted_boxes` -> crop -> `recognize_crops` on the stub
 engine and on the `build_onnx_bundle()` engine. The digest covers the
 box bytes, the det score bits, the texts and the rec score bits, plus
-the results rows of the extraction task (`_ocr_batches`, with
-orientation) for the rotated pages. The pinned digests were computed
-from the kernels before they were vectorized; a kernel rewrite must
-reproduce them bit for bit, never regenerate them.
+the results rows of the extraction task (`_ocr_batches`): with
+orientation for the rotated pages, without it for the upright ones. The
+pinned digests were computed from the kernels before they were
+vectorized (the upright rows' before the task built its engine with
+`OcrEngine.from_weights`); a rewrite must reproduce them bit for bit,
+never regenerate them.
 
 Recompute (prints the digests, asserts nothing):
 
@@ -49,6 +51,8 @@ GOLDEN = {
     "onnx": "a09b4129c3427619b1c786a70d0726ada0c4321b9b16992f1948f34330427de2",
     "rows_stub": "77e420e408a4eab9910b1f556263f23a63f9f884e9c76f837100c21c38415250",
     "rows_onnx": "23306e4c1d70c0d4b04f306cfaf0b0a7ed9c6c711cc7f70ede9e9763a2ae214a",
+    "rows_upright_stub": "077a5ed859278faae0f41725b6807f05b64a3fee6f14a125a0f961e215e88c24",
+    "rows_upright_onnx": "1b8d87920965eab03f1cc18272d891e9d88f24e628b79a53bd50d89a54f2c78f",
 }
 
 _SPECIAL = [
@@ -145,21 +149,22 @@ class _Broadcast:
         self.value = value
 
 
-def rows_digest(backend: str) -> str:
-    """Results rows of the extraction task over the rotated pages, with
-    the orientation sweep on."""
+def rows_digest(backend: str, orient: bool = True) -> str:
+    """Results rows of the extraction task: over the rotated pages with
+    the orientation sweep on, or over the upright pages with it off."""
     from paddleocr_spark.plans.pipeline import _ocr_batches
 
     blob = build_onnx_bundle() if backend == "onnx" else font.export_weights()
-    _, rotated = golden_pages()
+    upright, rotated = golden_pages()
+    pages = rotated if orient else upright
     batch = pd.DataFrame(
         {
-            "url": [f"golden/{i}" for i in range(len(rotated))],
-            "html": [encode_gray_png(p) for p in rotated],
+            "url": [f"golden/{i}" for i in range(len(pages))],
+            "html": [encode_gray_png(p) for p in pages],
         }
     )
     h = hashlib.sha256()
-    for frame in _ocr_batches(iter([batch]), 0, True, _Broadcast(blob)):
+    for frame in _ocr_batches(iter([batch]), 0, orient, _Broadcast(blob)):
         for url, idx, spans, text, n in zip(
             frame["url"], frame["img_idx"], frame["spans"],
             frame["extracted_text"], frame["n_spans"],
@@ -179,6 +184,11 @@ def test_kernel_outputs_match_golden(backend):
 @pytest.mark.parametrize("backend", ["stub", "onnx"])
 def test_oriented_rows_match_golden(backend):
     assert rows_digest(backend) == GOLDEN[f"rows_{backend}"]
+
+
+@pytest.mark.parametrize("backend", ["stub", "onnx"])
+def test_upright_rows_match_golden(backend):
+    assert rows_digest(backend, orient=False) == GOLDEN[f"rows_upright_{backend}"]
 
 
 _crop_line = st.text(alphabet=CHARSET + " ", min_size=1, max_size=24).filter(str.strip)
@@ -229,3 +239,4 @@ if __name__ == "__main__":
     for name in ("stub", "onnx"):
         print(name, kernel_digest(name))
         print(f"rows_{name}", rows_digest(name))
+        print(f"rows_upright_{name}", rows_digest(name, orient=False))

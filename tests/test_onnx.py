@@ -450,8 +450,9 @@ def _probe_crop(text, upside_down=False):
              "JABATAN PENDAFTARAN", "THEFASTKEYORDERSORTTABLE"]
 )
 def test_cls_separates_orientations(cls_model, text):
-    up = cls_model.prob0(_probe_crop(text))
-    down = cls_model.prob0(_probe_crop(text, upside_down=True))
+    up, down = cls_model.prob0_batch(
+        [_probe_crop(text), _probe_crop(text, upside_down=True)]
+    )
     assert up > 0.5, (text, up)
     assert down < 0.5, (text, down)
     assert up > down + 0.05
@@ -463,8 +464,9 @@ def test_cls_symmetric_line_is_near_half(cls_model):
     answer ~0.5 rather than a confident wrong label — page-level
     orientation then comes from averaging several probe lines (0/5,500
     corpus pages resolve wrong, see the sweep test + cls.py constants)."""
-    up = cls_model.prob0(_probe_crop("NOON 0808 OXO"))
-    down = cls_model.prob0(_probe_crop("NOON 0808 OXO", upside_down=True))
+    up, down = cls_model.prob0_batch(
+        [_probe_crop("NOON 0808 OXO"), _probe_crop("NOON 0808 OXO", upside_down=True)]
+    )
     assert 0.4 < up < 0.6
     assert 0.4 < down < 0.6
 

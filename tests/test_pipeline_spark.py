@@ -145,15 +145,21 @@ def test_resume_over_sink_without_data_files(spark, tmp_path):
 
 
 def _pages_with_errors(spark):
-    """Multi-page scans plus two undecodable payloads: pages differ from
-    urls, and some rows are error rows."""
+    """Multi-page scans plus two undecodable payloads and a PDF of no
+    page: pages differ from urls, and some rows are error rows."""
     import pandas as pd
+
+    from paddleocr_spark.kernels.pdf import pdf_encode_gray_pages
 
     broken = spark.createDataFrame(
         pd.DataFrame(
             {
-                "url": ["https://x.test/broken1", "https://x.test/broken2"],
-                "html": [b"not a png at all", b"\x00\x01"],
+                "url": [
+                    "https://x.test/broken1",
+                    "https://x.test/broken2",
+                    "https://x.test/no-pages",
+                ],
+                "html": [b"not a png at all", b"\x00\x01", pdf_encode_gray_pages([])],
             }
         )
     )
@@ -207,7 +213,8 @@ def test_run_job_task_audit_matches_committed_rows(spark, tmp_path):
     ).first()
     got = tallied.agg(*[F.sum(k).alias(k) for k in want.asDict()]).first()
     assert got == want
-    assert got.err_count == 2 and got.page_count > got.url_count
+    # every error url, the PDF of no page too, commits one error row
+    assert got.err_count == 3 and got.page_count > got.url_count
 
     rows = tallied.collect()
     pids = [r.partition_id for r in rows]

@@ -93,7 +93,7 @@ def test_oriented_page_runs_det_once_per_probe(monkeypatch):
     ):
         calls = {"det": 0, "probe": 0}
         batch = pd.DataFrame({"url": ["u"], "html": [encode_gray_png(page)]})
-        (out,) = list(_ocr_batches_run(iter([batch]), 0, orient))
+        (out,) = list(_ocr_batches_run(iter([batch]), OcrEngine(), 0, orient))
         assert out["extracted_text"][0] == "\n".join(LINES)
         assert calls["probe"] == probes
         assert calls["det"] == max(probes, 1)

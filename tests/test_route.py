@@ -9,7 +9,8 @@ import pytest
 from paddleocr_spark.kernels.font import render_page
 from paddleocr_spark.kernels.jpeg import ZIGZAG, _IDCT, jpeg_encode_blocks
 from paddleocr_spark.kernels.multipage import route
-from paddleocr_spark.kernels.pdf import pdf_encode_text_pages
+from paddleocr_spark.kernels.ocr import OcrEngine
+from paddleocr_spark.kernels.pdf import pdf_encode_gray_pages, pdf_encode_text_pages
 from paddleocr_spark.kernels.png import encode_gray_png
 from paddleocr_spark.operators.html_extract import synthesize_html
 from paddleocr_spark.operators.media import gif_encode, tiff_encode
@@ -81,6 +82,7 @@ TABLE = [
     ("pdf-after-200-junk-bytes",
      lambda: bytes(range(200)) + _text_pdf(), ("pdf", 200), PDF_ROWS),
     ("pdf-past-1kib", lambda: b" " * 1100 + _text_pdf(), ("error", 0), ERROR),
+    ("pdf-of-no-page", lambda: pdf_encode_gray_pages([]), ("pdf", 0), ERROR),
     ("gzip", lambda: b"\x1f\x8b\x08\x00" + bytes(60), ("error", 0), ERROR),
 ] + [
     (kind, lambda enc=enc: enc(render_page(LINES)), (kind, 0), OCR)
@@ -90,7 +92,7 @@ TABLE = [
 
 def _rows(payload: bytes) -> list[tuple[int, str]]:
     batch = pd.DataFrame({"url": ["u"], "html": [payload]})
-    (out,) = list(_ocr_batches_run(iter([batch]), page_limit=0))
+    (out,) = list(_ocr_batches_run(iter([batch]), OcrEngine(), page_limit=0))
     return list(zip(out["img_idx"], out["extracted_text"]))
 
 
